@@ -573,9 +573,8 @@ def make_fetch_extract_kernel(timeout_sec: float = 30.0,
             from datetime import datetime, timedelta
 
             from jsonextract_spark.datapipe.html_text import page_hrefs
-            from jsonextract_spark.functions.udfs import (
-                _budget, _links_from_objs)
-            from jsonextract_spark.kernel.scanner import extract_objects_str
+            from jsonextract_spark.functions.udfs import _links_from_objs
+            from jsonextract_spark.kernel.scanner import extract_budgeted
 
             writer = None
             if archive_dir is not None:
@@ -635,8 +634,7 @@ def make_fetch_extract_kernel(timeout_sec: float = 30.0,
                         # (integer µs, matching the warc_ts cast below)
                         writer.add(url, datetime(1970, 1, 1) + timedelta(
                             microseconds=int(stamps[-1] * 1e6)), body)
-                objs = [extract_objects_str(t, work_budget=_budget(len(t)))
-                        for t in texts]
+                objs = [extract_budgeted(t) for t in texts]
                 if discover_hrefs:
                     all_links = []
                     for u, t, o in zip(bases, texts, objs):

@@ -19,6 +19,7 @@ import argparse
 import os
 import shutil
 import time
+import uuid
 
 from pyspark.sql import (DataFrame, Observation, SparkSession,
                          functions as F, types as T)
@@ -812,7 +813,9 @@ def run_round(spark: SparkSession, wh: Warehouse, round_no: int,
     four actions amortize over millions of URLs."""
     t0 = time.time()
     sc = spark.sparkContext
-    job_group = f"crawl-round-{round_no}"
+    # unique per call: a second crawl in the same session must not count
+    # the jobs an earlier crawl ran under the same round number
+    job_group = f"crawl-round-{round_no}-{uuid.uuid4().hex[:8]}"
     sc.setJobGroup(job_group, f"crawl round {round_no}")
     prev = round_no - 1
     # a failed earlier attempt of THIS round may have left state-table

@@ -125,9 +125,8 @@ def make_fetch_extract(archive_dir: str | None = None):
     every archival-capable kernel exposes.
     """
     def kernel(rows: Iterable[pd.DataFrame]):
-        from jsonextract_spark.kernel.scanner import extract_objects_str
-        from jsonextract_spark.functions.udfs import (_budget,
-                                                      _links_from_objs)
+        from jsonextract_spark.kernel.scanner import extract_budgeted
+        from jsonextract_spark.functions.udfs import _links_from_objs
 
         writer = None
         if archive_dir is not None:
@@ -136,9 +135,7 @@ def make_fetch_extract(archive_dir: str | None = None):
         for pdf in rows:
             ids = pdf["url"].map(page_id_from_url)
             texts = ids.map(page_text)
-            objs = texts.map(
-                lambda t: extract_objects_str(
-                    t, work_budget=_budget(len(t))))
+            objs = texts.map(extract_budgeted)
             links = objs.map(_links_from_objs)
             warc_ts = pd.to_datetime(EPOCH + ids, unit="s")
             if writer is not None:

@@ -25,7 +25,10 @@ from pyspark.sql.types import (
     StructType,
 )
 
-from jsonextract_spark.kernel.scanner import extract_objects, extract_objects_str
+from jsonextract_spark.kernel.scanner import (
+    extract_budgeted,
+    page_work_budget as _budget,  # noqa: F401 (perfbench imports it)
+)
 from jsonextract_spark.kernel.objects import (
     ObjectOption,
     CallbackNeverCalled,
@@ -37,25 +40,12 @@ from jsonextract_spark.functions.urlhash import (
     url_host,
 )
 
-# Safety valve for the documented O(n²) unclosed-bracket pathology
-# (reference README.md:95): bound total tokenized bytes per document.
-# 64x the document length, floor 1 MiB — unreachable for normal pages.
-WORK_BUDGET_FACTOR = 64
-WORK_BUDGET_FLOOR = 1 << 20
-
-
-def _budget(n: int) -> int:
-    return max(n * WORK_BUDGET_FACTOR, WORK_BUDGET_FLOOR)
-
-
 # -- extraction ------------------------------------------------------------
 
 @F.pandas_udf(ArrayType(StringType()))
 def extract_objects_udf(texts: pd.Series) -> pd.Series:
     """text -> array of normalized JSON strings (callback order)."""
-    return texts.map(
-        lambda s: None if s is None
-        else extract_objects_str(s, work_budget=_budget(len(s))))
+    return texts.map(lambda s: None if s is None else extract_budgeted(s))
 
 
 @F.pandas_udf(ArrayType(StringType()))
@@ -64,9 +54,8 @@ def extract_objects_bin_udf(blobs: pd.Series) -> pd.Series:
     def one(b):
         if b is None:
             return None
-        data = bytes(b)
         return [m.decode("utf-8", "replace")
-                for m in extract_objects(data, work_budget=_budget(len(data)))]
+                for m in extract_budgeted(bytes(b))]
     return blobs.map(one)
 
 
@@ -252,8 +241,7 @@ def _links_from_objs(objs: list[str]) -> list[str]:
 def _links_from_text(text: str) -> list[str]:
     """Discover outlinks via the extraction kernel itself, so link
     discovery exercises the exact same code path as payload extraction."""
-    return _links_from_objs(
-        extract_objects_str(text, work_budget=_budget(len(text))))
+    return _links_from_objs(extract_budgeted(text))
 
 
 def _collect_links(v, out: list[str]):

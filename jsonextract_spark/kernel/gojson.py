@@ -21,6 +21,7 @@ of the Go standard library — no reference code is copied.
 from __future__ import annotations
 
 import json
+import re
 
 _U64_MAX = (1 << 64) - 1
 
@@ -39,8 +40,14 @@ _GO_STR_ESCAPES = {
 }
 
 
+# Any character marshal_string does not copy through verbatim.
+_NEEDS_ESCAPE = re.compile(r'[\x00-\x1f"\\<>&\u2028\u2029]')
+
+
 def marshal_string(s: str) -> str:
     """Compact Go ``json.Marshal`` of a Python string (HTML escaping on)."""
+    if _NEEDS_ESCAPE.search(s) is None:
+        return '"' + s + '"'
     parts = ['"']
     append = parts.append
     esc = _GO_STR_ESCAPES
@@ -117,7 +124,15 @@ def _underscore_ok(s: str) -> bool:
     return saw != "_"
 
 
-_DIGITS = "0123456789abcdefghijklmnopqrstuvwxyz"
+# Exactly the digits of each base, ASCII only: ``int()`` would also
+# accept signs, whitespace, underscores, a base prefix and non-ASCII
+# digits.
+_BASE_DIGITS = {
+    2: re.compile("[01]+"),
+    8: re.compile("[0-7]+"),
+    10: re.compile("[0-9]+"),
+    16: re.compile("[0-9a-fA-F]+"),
+}
 
 
 def parse_uint_base0(s: str):
@@ -140,14 +155,12 @@ def parse_uint_base0(s: str):
         else:
             base, digits = 8, s[1:]
     digits = digits.replace("_", "")
-    if not digits:
+    if _BASE_DIGITS[base].fullmatch(digits) is None:
         return None
-    val = 0
-    for ch in digits:
-        d = _DIGITS.find(ch.lower())
-        if d < 0 or d >= base:
-            return None
-        val = val * base + d
-        if val > _U64_MAX:
-            return None
-    return val
+    # base-10 digits never start with '0' (that selects legacy octal),
+    # so more than 20 of them overflow; the check also keeps int() below
+    # its decimal-digit limit
+    if base == 10 and len(digits) > 20:
+        return None
+    val = int(digits, base)
+    return val if val <= _U64_MAX else None

@@ -326,6 +326,20 @@ def test_crawl_with_explicit_empty_seed_list(spark, tmp_path):
     assert wh.last_committed_round() == 2
 
 
+def test_spark_jobs_do_not_accumulate_across_crawls(spark, tmp_path):
+    """Each round counts only its own jobs: running the same crawl again
+    in the same session reports the same per-round ``spark_jobs``
+    instead of adding the earlier crawl's jobs for that round number."""
+    from jsonextract_spark.crawl.pipeline import run_crawl
+
+    kw = dict(rounds=2, n_seeds=10, host_budget=3, batch_size=20)
+    first = run_crawl(spark, str(tmp_path / "a"), **kw)
+    second = run_crawl(spark, str(tmp_path / "b"), **kw)
+    jobs = [[s["spark_jobs"] for s in crawl] for crawl in (first, second)]
+    assert all(n > 0 for n in jobs[0]), jobs
+    assert jobs[1] == jobs[0], jobs
+
+
 def test_empty_round_carries_state_without_writes(spark, tmp_path):
     """An empty round writes NO frontier state at all (the delta-layout
     loaders read a round RANGE and skip rounds without a delta) —
