@@ -319,7 +319,7 @@ def make_robots_provider(user_agent: str | None = None,
 
     def _clean_cache_dir(path):
         """WRITE-side housekeeping (r7, was inside ``_load_cache``):
-        clear pre-delta legacy layouts and crashed ``.tmp-`` debris.
+        clear crashed ``.tmp-`` debris.
         Called once per round by the provider — the cache's owning
         writer — so a pure read can never race another reader with a
         delete (two crawls sharing a cache dir would otherwise have
@@ -328,9 +328,7 @@ def make_robots_provider(user_agent: str | None = None,
         import shutil
 
         for e in (os.listdir(path) if os.path.isdir(path) else []):
-            if e.endswith(".parquet") or e == "_SUCCESS":
-                os.remove(os.path.join(path, e))   # pre-delta layout
-            elif e.startswith(".tmp-"):            # crashed half-write
+            if e.startswith(".tmp-"):              # crashed half-write
                 shutil.rmtree(os.path.join(path, e),
                               ignore_errors=True)
 
@@ -338,8 +336,8 @@ def make_robots_provider(user_agent: str | None = None,
         """Newest row per host across all deltas, or None if no
         readable delta layout exists. PURE READ (r7): only the
         ``delta=`` dirs are listed explicitly (basePath keeps the
-        hive ``delta`` column), so legacy bare part files or foreign
-        tmp dirs are simply ignored — cleanup belongs to the write
+        hive ``delta`` column), so stray files or foreign tmp dirs
+        are simply ignored — cleanup belongs to the write
         path (``_clean_cache_dir``).
 
         ``hosts`` (DataFrame with a ``host`` column) restricts the

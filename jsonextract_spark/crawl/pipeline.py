@@ -129,10 +129,10 @@ def _candidate_identity_kernel(batches):
 def _seen_delta_path(wh: Warehouse, round_no: int) -> str:
     """The per-round seen delta IS the ``is_new=1`` partition of the
     round's frontier DELTA — written in the same job as the frontier
-    update itself (one write job instead of two per round). Round 0's
-    seeds live in the initial full frontier (same partition layout),
-    as do all rounds of pre-r6 warehouses that rewrote the full
-    frontier per round — the fallback keeps their deltas readable."""
+    update itself (one write job instead of two per round). Rounds
+    that write a full frontier base instead of a delta — init (the
+    round-0 seeds) and sitemap rounds — keep their seen delta in the
+    base's ``is_new=1`` partition, which the fallback reads."""
     import os
 
     p = os.path.join(wh._path("frontier_delta", round_no), "is_new=1")
@@ -166,11 +166,6 @@ def load_seen(spark: SparkSession, wh: Warehouse, upto_round: int):
         p = _seen_delta_path(wh, r)
         if os.path.exists(p):
             paths.append(p)
-        elif wh.exists("seen", r):
-            # warehouse written before the is_new layout: its deltas
-            # live in the legacy per-round `seen` table — resuming must
-            # not drop them (they'd be re-crawled)
-            paths.append(wh._path("seen", r))
     if not paths:
         # empty crawl (explicit seeds=[]): nothing seen yet
         return spark.createDataFrame([], "url_hash long")
@@ -178,23 +173,18 @@ def load_seen(spark: SparkSession, wh: Warehouse, upto_round: int):
 
 
 def _host_stats_sources(wh: Warehouse, upto_round: int):
-    """(base (round, table) | None, delta paths) for the host_stats
-    fold — shared by ``load_host_stats`` and the pop-side broadcast
-    size estimate."""
+    """(checkpoint round | None, delta paths) for the host_stats fold
+    — shared by ``load_host_stats`` and the pop-side broadcast size
+    estimate."""
     base = None
     for r in range(upto_round, -1, -1):
         # bounded scan: once compaction has run, a checkpoint exists
         # within COMPACT_EVERY rounds of ``upto_round``; before that,
-        # upto_round itself is < COMPACT_EVERY (except the one-time
-        # legacy-resume window, where the legacy table sits at the
-        # resume round)
+        # upto_round itself is < COMPACT_EVERY
         if wh.exists("host_stats_compact", r):
-            base = (r, "host_stats_compact")
+            base = r
             break
-        if wh.exists("host_stats", r):   # legacy cumulative layout
-            base = (r, "host_stats")
-            break
-    start = base[0] + 1 if base is not None else 1
+    start = base + 1 if base is not None else 1
     delta_paths = [wh._path("host_stats_delta", r)
                    for r in range(start, upto_round + 1)
                    if wh.exists("host_stats_delta", r)]
@@ -206,26 +196,19 @@ def load_host_stats(spark: SparkSession, wh: Warehouse,
     """Cumulative per-host (crawled count, newest fetch ts) up to
     ``upto_round``, or None when nothing has been fetched yet.
 
-    Stored as append-only per-round DELTAS since r6 (the same
-    discipline as the seen set and the robots cache): each fetching
-    round writes only ITS hosts' increments as ``host_stats_delta``,
-    and every COMPACT_EVERY rounds the running totals are folded into
-    a ``host_stats_compact`` checkpoint. The pre-r6 layout rewrote the
-    full cumulative table every round — O(total hosts ever crawled)
-    write I/O per round even when the round touched 50 hosts, which at
-    the 10^6-10^7-host design point dwarfs the round's real output.
-    Reading is a bounded union: the newest checkpoint (or a legacy
-    cumulative ``host_stats`` table when resuming a pre-r6 warehouse)
-    plus the deltas after it — at most COMPACT_EVERY+1 sources once
-    the first checkpoint exists, regardless of crawl age."""
+    Stored as append-only per-round DELTAS (the same discipline as the
+    seen set and the robots cache): each fetching round writes only ITS
+    hosts' increments as ``host_stats_delta``, and every COMPACT_EVERY
+    rounds the running totals are folded into a ``host_stats_compact``
+    checkpoint — a full cumulative rewrite per round would be O(total
+    hosts ever crawled) write I/O even when the round touched 50 hosts.
+    Reading is a bounded union: the newest checkpoint plus the deltas
+    after it — at most COMPACT_EVERY+1 sources once the first
+    checkpoint exists, regardless of crawl age."""
     base, delta_paths = _host_stats_sources(wh, upto_round)
     parts = []
     if base is not None:
-        b = wh.load(spark, base[1], base[0])
-        if "last_fetch_ts" not in b.columns:
-            # pre-column warehouses: all-null timestamps, never gated
-            b = b.withColumn("last_fetch_ts",
-                             F.lit(None).cast("double"))
+        b = wh.load(spark, "host_stats_compact", base)
         parts.append(b.select("host",
                               F.col("crawled").cast("double")
                               .alias("crawled"), "last_fetch_ts"))
@@ -235,8 +218,7 @@ def load_host_stats(spark: SparkSession, wh: Warehouse,
     if not parts:
         return None
     if len(parts) == 1 and len(delta_paths) <= 1:
-        # single source = a checkpoint, a legacy cumulative table, or
-        # ONE round's delta — all written host-distinct (their writers
+        # single source = a checkpoint or ONE round's delta — all written host-distinct (their writers
         # aggregate) — so the re-aggregation would be a no-op exchange
         # + agg per round (r10: this is every round immediately after
         # a compaction, and the first fetching round of a crawl)
@@ -387,8 +369,7 @@ def _parquet_rows(paths) -> int:
     """Total row count across parquet files/dirs from FOOTER metadata
     only — no data pages are read. O(#files) driver-side footer reads
     via the local filesystem (``os.walk``); the ledger-first estimates
-    are the primary path and this is their legacy-warehouse fallback.
-    A PRESENT path that lists NO parquet files — missing, empty, or a
+    use it only for the host_stats checkpoint dir. A PRESENT path that lists NO parquet files — missing, empty, or a
     non-local URI this walker can't see — is treated exactly like an
     unreadable footer (unbounded), because "found nothing" must drop
     the broadcast hint, not prove the table small and force a
@@ -441,14 +422,13 @@ def _committed_info(wh: Warehouse) -> dict:
 def _est_replay_events(wh: Warehouse, base_round, upto_round: int,
                        add_paths, rm_paths, info=None) -> int:
     """Event-window row estimate for the replay broadcast switch —
-    LEDGER-FIRST: each committed round already records its additions
+    from the LEDGER: each committed round records its additions
     (``new`` + ``deferred``) and its removal count (``batch``, the
-    round's total ledger rows, recorded since r7), so the estimate is
-    O(rounds) dict reads from the already-loaded ledger. Parquet
-    footer reads are only the fallback for pre-``batch`` warehouses —
-    at the design point (COMPACT_EVERY rounds × ~32 part files × 3
-    tables on object storage) per-round footer scans would cost
-    seconds of driver latency that the ledger gives for free."""
+    round's total ledger rows), so the estimate is O(rounds) dict
+    reads from the already-loaded ledger — at the design point
+    (COMPACT_EVERY rounds × ~32 part files × 3 tables on object
+    storage) per-round footer scans would cost seconds of driver
+    latency that the ledger gives for free."""
     if base_round is None:
         return 0
     if info is None:
@@ -462,38 +442,18 @@ def _est_replay_events(wh: Warehouse, base_round, upto_round: int,
             # these write a BASE, never deltas/removals (and a base at
             # r would have been picked as base_round anyway)
             continue
-        if "batch" not in ri:
-            return _parquet_rows(add_paths) + _parquet_rows(rm_paths)
         est += ri.get("new", 0) + ri.get("deferred", 0) + ri["batch"]
     return est
-
-
-# round-0 seed-count floors by warehouse root (one footer scan of the
-# single round-0 frontier dir per warehouse per process)
-_SEED_FLOOR_CACHE: dict = {}
 
 
 def _est_frontier_upper(wh: Warehouse, info=None) -> int:
     """Monotone upper bound on the pending-frontier row count (and so
     on its distinct hosts): every row ever added — seeds at init plus
-    per-round fresh discoveries. O(rounds) ledger reads.
-
-    The init round's ``seeds`` field is trusted only as a LOWER
-    component: pre-r7 warehouses recorded the ``n_seeds`` parameter
-    (default 100) even when an explicit multi-million-URL seed list
-    was passed, so the recorded value is floored by a one-time footer
-    count of the round-0 frontier dir (one bounded directory; cached
-    per warehouse) — an UNDERestimate here would wrongly 'prove' the
-    robots table broadcastable."""
+    per-round fresh discoveries. O(rounds) ledger reads: init and
+    sitemap rounds record their seed-list length as ``seeds``."""
     if info is None:
         info = _committed_info(wh)
     seeds = sum(r.get("seeds", 0) for r in info.values())
-    if 0 in info and wh.exists("frontier", 0):
-        floor = _SEED_FLOOR_CACHE.get(wh.root)
-        if floor is None:
-            floor = _parquet_rows([wh._path("frontier", 0)])
-            _SEED_FLOOR_CACHE[wh.root] = floor
-        seeds = max(seeds, floor)
     return seeds + sum(r.get("new", 0) for r in info.values())
 
 
@@ -503,23 +463,19 @@ def _est_host_stats_rows(wh: Warehouse, upto_round: int,
     the single checkpoint dir (a handful of part files by
     construction) plus, per delta round, the round's ``batch`` from
     the ledger (a round's delta rows = its distinct fetched hosts ≤
-    its batch). Footer fallback over the delta dirs only for
-    pre-``batch`` warehouses (the partial ledger sum is discarded —
-    the delta dirs cover those same rounds)."""
-    base, delta_paths = _host_stats_sources(wh, upto_round)
-    base_est = (_parquet_rows([wh._path(base[1], base[0])])
+    its batch)."""
+    base, _ = _host_stats_sources(wh, upto_round)
+    base_est = (_parquet_rows([wh._path("host_stats_compact", base)])
                 if base is not None else 0)
     if info is None:
         info = _committed_info(wh)
-    start = base[0] + 1 if base is not None else 1
+    start = base + 1 if base is not None else 1
     est = 0
     for r in range(start, upto_round + 1):
         ri = info.get(r)
         if ri is None or ri.get("empty") or \
                 ri.get("phase") in ("init", "recrawl", "sitemap"):
             continue
-        if "batch" not in ri:
-            return base_est + _parquet_rows(delta_paths)
         est += ri["batch"]
     return base_est + est
 
@@ -537,10 +493,8 @@ def _frontier_sources(spark: SparkSession, wh: Warehouse,
             break
     if base_round is None:
         return None, [], [], None
-    base = wh.load(spark, "frontier", base_round).drop("is_new")
-    if "attempts" not in base.columns:   # pre-column warehouses
-        base = base.withColumn("attempts", F.lit(0))
-    base = base.select(*_FRONTIER_COLS)
+    base = (wh.load(spark, "frontier", base_round).drop("is_new")
+            .select(*_FRONTIER_COLS))
 
     def _nonempty_delta(r):
         # a round with a non-empty batch but ZERO additions wrote the
@@ -564,19 +518,17 @@ def load_frontier(spark: SparkSession, wh: Warehouse,
                   upto_round: int) -> DataFrame:
     """The pending-URL frontier as of ``upto_round``, reconstructed
     from a BASE plus per-round deltas — the frontier is the biggest
-    state table of all (10^10 rows at the design point), and the
-    pre-r6 layout rewrote it in full every round, an O(frontier) write
-    even for a round that popped 1k URLs (the fourth and largest
-    instance of the per-round full-rewrite disease the seen set /
-    robots cache / host_stats delta layouts cured).
+    state table of all (10^10 rows at the design point), so rewriting
+    it in full every round would be an O(frontier) write even for a
+    round that popped 1k URLs.
 
     Per round the crawl records only:
     * additions — ``frontier_delta`` (deferred re-adds ``is_new=0`` +
       fresh discoveries ``is_new=1``, the same write that serves as
       the seen delta);
     * removals — the popped rows, which ARE the round's ``fetched``
-      ledger (it carries ``url_hash`` since r6): a column-pruned
-      parquet scan, no extra write at all.
+      ledger (it carries ``url_hash``): a column-pruned parquet scan,
+      no extra write at all.
 
     Reconstruction: the newest event per url_hash wins. Within a
     round a pop (removal) precedes a deferral re-add, so adds rank
@@ -588,8 +540,7 @@ def load_frontier(spark: SparkSession, wh: Warehouse,
     point note as robots/host_stats: PLANS.md 100x audit.)
 
     A full ``frontier`` table at a round (init, recrawl reopen,
-    compaction checkpoint, or every round of a pre-r6 warehouse) is a
-    base; resuming legacy warehouses therefore needs no migration."""
+    sitemap seeding or compaction checkpoint) is a base."""
     base, add_paths, rm_paths, base_round = _frontier_sources(
         spark, wh, upto_round)
     if base is None:
@@ -658,7 +609,7 @@ def maybe_compact_frontier(spark: SparkSession, wh: Warehouse,
     """Every COMPACT_EVERY rounds, materialize the reconstructed
     frontier as a new full ``frontier`` base so ``load_frontier``'s
     event window stays bounded — the one amortized O(frontier) write
-    that replaces the pre-r6 every-round full rewrite. Runs AFTER the
+    (never an every-round full rewrite). Runs AFTER the
     round's delta write (the view must include this round's events).
     All rows are written ``is_new=0``: their seen-delta rows were
     already recorded by the round that discovered them, and a base
@@ -691,7 +642,6 @@ def maybe_compact_seen(spark: SparkSession, wh: Warehouse, round_no: int):
 
 
 def init_state(spark: SparkSession, wh: Warehouse, n_seeds: int,
-               filter_kind: str = "bloom",
                seed_list: list[str] | None = None):
     # `is not None`: an explicitly-empty seed list means an empty crawl,
     # not a silent fallback to the synthetic seeds
@@ -732,16 +682,14 @@ def init_state(spark: SparkSession, wh: Warehouse, n_seeds: int,
     th = InheritableThread(target=_save_frontier, name="init-frontier")
     th.start()
     try:
-        wh.save(seen_mod.build_filters(frontier.select("url_hash"),
-                                       kind=filter_kind),
+        wh.save(seen_mod.build_filters(frontier.select("url_hash")),
                 "seen_filter", 0)
     finally:
         th.join()
         frontier.unpersist()
     if errs:
         raise errs[0]
-    wh.commit_round(0, {"phase": "init", "seeds": len(urls),
-                        "filter_kind": filter_kind})
+    wh.commit_round(0, {"phase": "init", "seeds": len(urls)})
 
 
 def _resolve_politeness(fetch_kernel, default_delay_sec, hot_hosts):
@@ -768,7 +716,6 @@ def run_round(spark: SparkSession, wh: Warehouse, round_no: int,
               host_budget: int = DEFAULT_HOST_BUDGET,
               batch_size: int = DEFAULT_BATCH_SIZE,
               use_bloom: bool = True,
-              filter_kind: str = "bloom",
               fetch_kernel=None,
               robots_provider=None,
               default_delay_sec: float | None = None,
@@ -808,7 +755,10 @@ def run_round(spark: SparkSession, wh: Warehouse, round_no: int,
     re-read (the pre-r5 DuckDB form). The separate ``spark_jobs``
     metric is what the Spark scheduler counted for the round's job
     group — with AQE enabled that is one job per materialized query
-    stage, NOT the action count. Driver-side action latency is what
+    stage, NOT the action count. The ``sec_*`` metrics split the
+    round's wall clock at its action boundaries; the seen gate runs
+    inside the frontier-delta write (A2), so ``sec_frontier_seen``
+    covers gate + frontier delta. Driver-side action latency is what
     bounds small-round throughput; at production batch sizes the same
     four actions amortize over millions of URLs."""
     t0 = time.time()
@@ -963,14 +913,9 @@ def run_round(spark: SparkSession, wh: Warehouse, round_no: int,
     if n_batch == 0:
         # nothing fetched: no state to write — the frontier/host_stats
         # loaders read a round RANGE and simply skip rounds without a
-        # delta, so an empty round carries state forward for free (the
-        # pre-r6 layout had to copy the full frontier dir per empty
-        # round)
+        # delta, so an empty round carries state forward for free
         if filters is not None:
             wh.copy_forward("seen_filter", prev, round_no)
-        if wh.exists("host_stats", prev):
-            # legacy cumulative layout only
-            wh.copy_forward("host_stats", prev, round_no)
         # keep the compaction cadences even through empty stretches so
         # the loaders' source lists stay bounded
         maybe_compact_frontier(spark, wh, round_no)
@@ -1114,7 +1059,6 @@ def run_round(spark: SparkSession, wh: Warehouse, round_no: int,
     n_actions += 1
 
     t_links = time.time()
-    t_gate = time.time()
     # ONE write job runs the whole gate pipeline and publishes the
     # frontier; n_new and n_deferred ride the SAME action as
     # CollectMetrics observations (no separate materializing count(),
@@ -1159,8 +1103,7 @@ def run_round(spark: SparkSession, wh: Warehouse, round_no: int,
             # cache, different output table) — runs alongside it.
             def _merge_filters():
                 sc.setJobDescription(f"r{round_no} A4 filter merge")
-                wh.save(seen_mod.merge_filters(filters, fresh,
-                                               kind=filter_kind),
+                wh.save(seen_mod.merge_filters(filters, fresh),
                         "seen_filter", round_no)
             _spawn(_merge_filters, f"filter-merge-r{round_no}")
             n_actions += 1
@@ -1215,8 +1158,7 @@ def run_round(spark: SparkSession, wh: Warehouse, round_no: int,
         "spark_jobs": float(n_jobs),
         "sec_pop_fetch_extract": t_fetch - t0,
         "sec_links_dedup": t_links - t_fetch,
-        "sec_gate_seen": t_gate - t_links,
-        "sec_frontier_seen": t_frontier - t_gate,
+        "sec_frontier_seen": t_frontier - t_links,
         "sec_filter": t_filter - t_frontier})
     # ``batch`` = this round's TOTAL ledger rows (popped URLs incl.
     # blocked/retry) — the replay removal count, recorded so later
@@ -1248,11 +1190,36 @@ def run_round(spark: SparkSession, wh: Warehouse, round_no: int,
             "spark_jobs": n_jobs}
 
 
+def _check_layout(wh: Warehouse):
+    """Refuse to resume a warehouse in a layout this code does not
+    read. There is one layout: Bloom ``seen_filter`` rows, seen deltas
+    in the frontier tables' ``is_new=1`` partitions, host_stats as
+    deltas plus checkpoints, and a ``batch`` count in the ledger entry
+    of every committed fetch round. Reading anything else would go
+    wrong silently — cuckoo bytes read as a Bloom bitset give false
+    negatives, so seen URLs would be re-crawled."""
+    problems = []
+    for r in wh.ledger()["rounds"]:
+        if r.get("status") != "committed":
+            continue
+        if r["round"] == 0 and r.get("filter_kind", "bloom") != "bloom":
+            problems.append(f"round 0 seen_filter codec "
+                            f"{r['filter_kind']!r}")
+        elif (r["round"] > 0 and "phase" not in r
+              and not r.get("empty") and "batch" not in r):
+            problems.append(f"round {r['round']} records no batch")
+    problems += [f"legacy {t!r} table" for t in ("seen", "host_stats")
+                 if wh.exists(t)]
+    if problems:
+        raise ValueError("unsupported warehouse layout: "
+                         + "; ".join(problems))
+
+
 def run_crawl(spark: SparkSession, warehouse: str, rounds: int,
               n_seeds: int = 100, host_budget: int = DEFAULT_HOST_BUDGET,
               batch_size: int = DEFAULT_BATCH_SIZE,
               use_bloom: bool = True, resume: bool = False,
-              filter_kind: str = "bloom", fetch_kernel=None,
+              fetch_kernel=None,
               seeds: list[str] | None = None,
               robots_provider=None,
               default_delay_sec: float | None = None,
@@ -1287,13 +1254,10 @@ def run_crawl(spark: SparkSession, warehouse: str, rounds: int,
         wh = Warehouse(warehouse)
     start = wh.last_committed_round()
     if start < 0:
-        init_state(spark, wh, n_seeds, filter_kind, seed_list=seeds)
+        init_state(spark, wh, n_seeds, seed_list=seeds)
         start = 0
     else:
-        # a resumed crawl keeps the filter codec it started with
-        round0 = [r for r in wh.ledger()["rounds"] if r["round"] == 0]
-        if round0 and round0[0].get("filter_kind"):
-            filter_kind = round0[0]["filter_kind"]
+        _check_layout(wh)
     static_robots = None
     if robots_provider is None and rounds > start + 1:
         # The synthetic robots table is static per crawl — build (and
@@ -1308,7 +1272,6 @@ def run_crawl(spark: SparkSession, warehouse: str, rounds: int,
         for r in range(start + 1, rounds + 1):
             s = run_round(spark, wh, r, host_budget, batch_size,
                           use_bloom,
-                          filter_kind=filter_kind,
                           fetch_kernel=fetch_kernel,
                           robots_provider=robots_provider,
                           default_delay_sec=default_delay_sec,
@@ -1325,7 +1288,7 @@ def run_crawl(spark: SparkSession, warehouse: str, rounds: int,
 def crawl_order(spark: SparkSession, warehouse: str) -> DataFrame:
     """The reproducible crawl ledger: (batch_id, rank, url). Robots-
     blocked ledger rows are excluded — the ordering is of actual
-    fetches (pre-``blocked``-column warehouses had no such rows).
+    fetches.
 
     ONE scan relation over every committed round dir: the previous
     per-round Python union loop built an O(rounds) logical plan, so at
@@ -1333,18 +1296,15 @@ def crawl_order(spark: SparkSession, warehouse: str) -> DataFrame:
     Passing the committed leaf dirs (rather than the bare table root)
     both skips crashed ``.tmp-`` dirs and uncommitted rounds, and
     keeps the plan a single relation whose node count is independent
-    of round count. ``mergeSchema`` covers warehouses whose early
-    rounds predate the ``blocked`` column."""
+    of round count."""
     wh = Warehouse(warehouse)
     last = wh.last_committed_round()
     paths = [wh._path("fetched", r) for r in range(1, last + 1)
              if wh.exists("fetched", r)]
     if not paths:
         return spark.createDataFrame([], "batch_id int, rank long, url string")
-    df = spark.read.option("mergeSchema", "true").parquet(*paths)
-    if "blocked" in df.columns:
-        # null for pre-column rounds in a mixed warehouse = not blocked
-        df = df.filter(~F.coalesce(F.col("blocked"), F.lit(False)))
+    df = (spark.read.parquet(*paths)
+          .filter(~F.coalesce(F.col("blocked"), F.lit(False))))
     return df.select("batch_id", "rank", "url").orderBy("batch_id", "rank")
 
 
@@ -1358,8 +1318,6 @@ def main():
     ap.add_argument("--host-budget", type=int, default=DEFAULT_HOST_BUDGET)
     ap.add_argument("--batch-size", type=int, default=DEFAULT_BATCH_SIZE)
     ap.add_argument("--resume", action="store_true")
-    ap.add_argument("--filter-kind", default="bloom",
-                    choices=["bloom", "cuckoo"])
     ap.add_argument("--default-delay-sec", type=float, default=None,
                     help="politeness floor for hosts whose robots.txt "
                          "is silent about rate (default: inherit the "
@@ -1434,7 +1392,7 @@ def main():
         seed_list = args.seeds_url
     stats = run_crawl(spark, args.warehouse, args.rounds, args.seeds,
                       args.host_budget, args.batch_size,
-                      resume=args.resume, filter_kind=args.filter_kind,
+                      resume=args.resume,
                       seeds=seed_list, fetch_kernel=fetch_kernel,
                       robots_provider=robots_provider,
                       default_delay_sec=args.default_delay_sec,

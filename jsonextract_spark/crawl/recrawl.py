@@ -6,15 +6,8 @@ selects refresh candidates by age and re-opens them in the frontier.
 Exactness note: the exact ``seen`` table keeps the hash (history is
 append-only); re-opening works by inserting the URL back into the
 frontier directly, bypassing the seen gate — the gate only filters
-*newly discovered* links. The prune filters are deliberately NOT
-touched: the gate treats a filter miss as *definitely new* and skips
-the exact anti-join for that row (seen.new_urls fast path), so deleting
-reopened hashes from a cuckoo bucket would turn links to those URLs —
-still present in the exact seen set — into spurious re-enqueues (and
-``delete_many`` can evict fingerprint-collision victims, breaking the
-no-false-negative invariant for unrelated URLs). ``delete_from_filters``
-remains available for flows that also retire the keys from the exact
-set (true forget, e.g. GDPR purge), where filter and set stay in sync.
+*newly discovered* links. The Bloom prune filters carry forward
+unchanged, because reopened URLs stay in the exact seen set.
 """
 
 from __future__ import annotations
@@ -46,8 +39,9 @@ def refresh_candidates(fetched: DataFrame, now_ts: float,
 def reopen_in_frontier(frontier: DataFrame,
                        refresh: DataFrame) -> DataFrame:
     """Union refresh rows into the frontier, newest priority wins for
-    duplicates already pending."""
-    for col in ("attempts",):            # pre-column callers/warehouses
+    duplicates already pending. Either frame may lack ``attempts``
+    (a caller-built frontier); it then counts as 0."""
+    for col in ("attempts",):
         if col not in frontier.columns:
             frontier = frontier.withColumn(col, F.lit(0))
         if col not in refresh.columns:
@@ -96,17 +90,11 @@ def schedule_recrawl(spark, wh, after_round: int, max_age_sec: float,
     # Python union loop builds an O(rounds) plan — analysis time grows
     # with crawl age); ``basePath`` surfaces the hive ``round``
     # partition column, which a tiny broadcast-joined map turns into
-    # the per-round commit timestamp. mergeSchema covers warehouses
-    # whose early rounds predate the ``blocked`` column.
-    fetched = (spark.read.option("mergeSchema", "true")
-               .option("basePath", wh._path("fetched"))
-               .parquet(*[wh._path("fetched", r) for r in committed]))
-    if "blocked" in fetched.columns:
-        # robots-blocked ledger rows were never fetched — nothing to
-        # refresh (they'd only be re-blocked); null for pre-column
-        # rounds in a mixed warehouse = not blocked
-        fetched = fetched.filter(
-            ~F.coalesce(F.col("blocked"), F.lit(False)))
+    # the per-round commit timestamp. Robots-blocked ledger rows were
+    # never fetched — nothing to refresh (they'd only be re-blocked).
+    fetched = (spark.read.option("basePath", wh._path("fetched"))
+               .parquet(*[wh._path("fetched", r) for r in committed])
+               .filter(~F.coalesce(F.col("blocked"), F.lit(False))))
     ts_df = spark.createDataFrame(
         [(r, round_ts[r]) for r in committed],
         "round int, fetched_ts double")
@@ -163,14 +151,10 @@ def schedule_recrawl(spark, wh, after_round: int, max_age_sec: float,
         # filters carry forward UNCHANGED: reopened URLs stay in the
         # prune layer because they stay in the exact seen set — a
         # filter miss short-circuits the anti-join as definitely-new,
-        # so a deletion here would re-enqueue links to reopened URLs
-        # and duplicate their seen-delta rows (see module docstring)
+        # so dropping them would re-enqueue links to reopened URLs
+        # and duplicate their seen-delta rows. host_stats needs no
+        # carry: its loader reads a round RANGE of deltas.
         wh.copy_forward("seen_filter", after_round, rn)
-    if wh.exists("host_stats", after_round):
-        # legacy cumulative layout only — delta-layout host_stats needs
-        # no carry (load_host_stats reads a round RANGE and skips
-        # rounds without a delta, so the maintenance round is a no-op)
-        wh.copy_forward("host_stats", after_round, rn)
     wh.commit_round(rn, {"phase": "recrawl", "reopened": n})
     refresh.unpersist()
     return n

@@ -18,6 +18,11 @@ Scale design (10^10 URLs):
   shuffle; definitely-new rows bypass it. The false-positive rate (~1%)
   is the only extra anti-join traffic.
 
+One codec: every ``seen_filter`` row is a Bloom bitset
+(bucket, bits, m, k, n). Bloom cannot forget a key, which is fine — the
+exact seen set is append-only (recrawl re-opens URLs, it never forgets
+them), so filter and set never disagree on a present key.
+
 Local scale uses 64 buckets / 2^17 bits; both are knobs.
 """
 
@@ -34,10 +39,9 @@ K_PROBES = 7
 
 _FILTER_SCHEMA = T.StructType([
     T.StructField("bucket", T.IntegerType()),
-    T.StructField("kind", T.StringType()),      # 'bloom' | 'cuckoo'
     T.StructField("bits", T.BinaryType()),
-    T.StructField("m", T.IntegerType()),        # bloom bits / cuckoo buckets
-    T.StructField("k", T.IntegerType()),        # bloom probes / cuckoo overflow
+    T.StructField("m", T.IntegerType()),        # bits per bucket
+    T.StructField("k", T.IntegerType()),        # probes per key
     T.StructField("n", T.LongType()),
 ])
 
@@ -70,30 +74,25 @@ def _test_bits(bits: np.ndarray, hashes: np.ndarray, m: int,
     return hit.all(axis=1)
 
 
-def _build_cuckoo(hashes: np.ndarray):
-    from jsonextract_spark.crawl import cuckoo
+def _maybe_seen(hashes: np.ndarray, filt_pdf: pd.DataFrame) -> np.ndarray:
+    """Bloom membership of ``hashes`` against one bucket's filter rows
+    (the cogroup's right side); a bucket with no filter yet has seen
+    nothing."""
+    if len(filt_pdf) == 0 or filt_pdf["bits"].iloc[0] is None:
+        return np.zeros(len(hashes), dtype=bool)
+    row = filt_pdf.iloc[0]
+    bits = np.frombuffer(row["bits"], dtype=np.uint8)
+    return _test_bits(bits, hashes, int(row["m"]), int(row["k"]))
 
-    f = cuckoo.CuckooFilter(cuckoo.sized_for(max(len(hashes), 1) * 4))
-    overflow = f.insert_many(hashes)
-    return f.to_bytes(), f.nb, overflow, f.n
 
-
-def build_filters(seen: DataFrame, m: int = M_BITS, k: int = K_PROBES,
-                  kind: str = "bloom") -> DataFrame:
-    """seen(url_hash) -> one filter row per bucket via grouped-map (the
-    'UDAF' of the seen set). kind='cuckoo' uses the deletion-capable
-    cuckoo codec; its `k` column counts insert overflows — a bucket with
-    overflow>0 degrades to 'prune nothing' (still exact, never lossy)."""
+def build_filters(seen: DataFrame, m: int = M_BITS,
+                  k: int = K_PROBES) -> DataFrame:
+    """seen(url_hash) -> one Bloom row per bucket via grouped-map (the
+    'UDAF' of the seen set)."""
     def build(pdf: pd.DataFrame) -> pd.DataFrame:
         hashes = pdf["url_hash"].to_numpy()
-        if kind == "cuckoo":
-            bits, nb, overflow, n = _build_cuckoo(hashes)
-            return pd.DataFrame({
-                "bucket": [int(pdf["bucket"].iloc[0])], "kind": ["cuckoo"],
-                "bits": [bits], "m": [nb], "k": [overflow], "n": [n],
-            })
         return pd.DataFrame({
-            "bucket": [int(pdf["bucket"].iloc[0])], "kind": ["bloom"],
+            "bucket": [int(pdf["bucket"].iloc[0])],
             "bits": [_build_bits(hashes, m, k)],
             "m": [m], "k": [k], "n": [len(hashes)],
         })
@@ -103,8 +102,7 @@ def build_filters(seen: DataFrame, m: int = M_BITS, k: int = K_PROBES,
 
 
 def merge_filters(filters: DataFrame, fresh: DataFrame,
-                  m: int = M_BITS, k: int = K_PROBES,
-                  kind: str = "bloom") -> DataFrame:
+                  m: int = M_BITS, k: int = K_PROBES) -> DataFrame:
     """Incremental filter update: OR the bits of new keys into each
     touched bucket; untouched buckets pass through. O(fresh) + one small
     shuffle on bucket — never rescans the historical seen set (at 10^10
@@ -113,12 +111,7 @@ def merge_filters(filters: DataFrame, fresh: DataFrame,
     One COGROUP joins each bucket's filter row with its fresh keys
     (r10: the previous form first packed the keys via a separate
     groupBy-applyInPandas stage and re-grouped the union — a whole
-    extra Python stage + exchange per round for the same result).
-
-    ``kind`` decides the codec for buckets that appear for the first time
-    in this merge (existing buckets keep their own codec). Callers pass
-    their configured filter kind — inferring it from the filter table
-    would cost a driver-side action per round."""
+    extra Python stage + exchange per round for the same result)."""
     delta = (fresh.select("url_hash")
              .withColumn("bucket", bucket_col(F.col("url_hash"))))
 
@@ -128,27 +121,11 @@ def merge_filters(filters: DataFrame, fresh: DataFrame,
                    if len(delta_pdf) else np.array([], dtype=np.int64))
         if len(filt_pdf) == 0:
             # bucket had no filter yet: build from the delta alone
-            if kind == "cuckoo":
-                bits, nb, overflow, n = _build_cuckoo(fresh_h)
-                return pd.DataFrame({
-                    "bucket": [int(key[0])], "kind": ["cuckoo"],
-                    "bits": [bits], "m": [nb], "k": [overflow],
-                    "n": [n]})
             return pd.DataFrame({
-                "bucket": [int(key[0])], "kind": ["bloom"],
+                "bucket": [int(key[0])],
                 "bits": [_build_bits(fresh_h, m, k)],
                 "m": [m], "k": [k], "n": [len(fresh_h)]})
         row = filt_pdf.iloc[0]
-        if row["kind"] == "cuckoo":
-            from jsonextract_spark.crawl import cuckoo
-
-            f = cuckoo.CuckooFilter.from_bytes(bytes(row["bits"]),
-                                               int(row["n"]))
-            overflow = int(row["k"]) + f.insert_many(fresh_h)
-            return pd.DataFrame({
-                "bucket": [int(key[0])], "kind": ["cuckoo"],
-                "bits": [f.to_bytes()], "m": [f.nb], "k": [overflow],
-                "n": [f.n]})
         acc = np.frombuffer(row["bits"], dtype=np.uint8).copy()
         if len(fresh_h):
             add = np.frombuffer(
@@ -156,67 +133,13 @@ def merge_filters(filters: DataFrame, fresh: DataFrame,
                 dtype=np.uint8)
             acc |= add
         return pd.DataFrame({
-            "bucket": [int(key[0])], "kind": ["bloom"],
+            "bucket": [int(key[0])],
             "bits": [acc.tobytes()], "m": [int(row["m"])],
             "k": [int(row["k"])], "n": [int(row["n"]) + len(fresh_h)]})
 
     return (filters.groupBy("bucket")
             .cogroup(delta.groupBy("bucket"))
             .applyInPandas(merge, _FILTER_SCHEMA))
-
-
-def delete_from_filters(filters: DataFrame,
-                        stale: DataFrame) -> DataFrame:
-    """Remove keys from the prune layer — ONLY for flows that also
-    retire the same keys from the exact seen set (true forget, e.g. a
-    purge), keeping filter and set in sync.
-
-    The gate treats a filter miss as definitely-new and SKIPS the exact
-    anti-join for that row (``new_urls`` fast path), so deleting a key
-    that remains in the exact set would spuriously re-enqueue links to
-    it — which is why recrawl does NOT call this (reopened URLs stay
-    seen; they re-enter via the frontier directly). Cuckoo buckets
-    support true deletion (``CuckooFilter.delete_many``); bloom buckets
-    pass through unchanged (bloom cannot delete — callers purging from
-    a bloom-coded set must rebuild with ``build_filters``). Same
-    bucket-grouped shape as ``merge_filters``: O(stale) + one small
-    shuffle."""
-    delta = (stale.select("url_hash")
-             .withColumn("bucket", bucket_col(F.col("url_hash"))))
-
-    def pack(key, pdf):
-        hashes = pdf["url_hash"].to_numpy()
-        return pd.DataFrame({
-            "bucket": [int(key[0])], "kind": ["del"],
-            "bits": [hashes.astype(np.int64).tobytes()],
-            "m": [0], "k": [0], "n": [len(hashes)],
-        })
-
-    partial = delta.groupBy("bucket").applyInPandas(pack, _FILTER_SCHEMA)
-    both = filters.unionByName(partial)
-
-    def apply_delete(key, pdf):
-        base = pdf[pdf["kind"] != "del"]
-        dels = pdf[pdf["kind"] == "del"]
-        if len(base) == 0:
-            return pd.DataFrame(columns=pdf.columns)  # nothing to edit
-        row = base.iloc[0]
-        if len(dels) == 0 or row["kind"] != "cuckoo":
-            return base.iloc[:1]
-        from jsonextract_spark.crawl import cuckoo
-
-        hashes = np.concatenate([np.frombuffer(b, dtype=np.int64)
-                                 for b in dels["bits"]])
-        f = cuckoo.CuckooFilter.from_bytes(bytes(row["bits"]),
-                                           int(row["n"]))
-        f.delete_many(hashes)
-        return pd.DataFrame({
-            "bucket": [int(key[0])], "kind": ["cuckoo"],
-            "bits": [f.to_bytes()], "m": [f.nb], "k": [int(row["k"])],
-            "n": [f.n]})
-
-    return both.groupBy("bucket").applyInPandas(apply_delete,
-                                                _FILTER_SCHEMA)
 
 
 def prune_candidates(candidates: DataFrame,
@@ -235,27 +158,8 @@ def prune_candidates(candidates: DataFrame,
 
     def test(cand_pdf: pd.DataFrame, filt_pdf: pd.DataFrame) -> pd.DataFrame:
         out = cand_pdf[keep].copy()
-        if len(cand_pdf) == 0:
-            out["maybe_seen"] = pd.Series([], dtype=bool)
-            return out
-        if len(filt_pdf) == 0 or filt_pdf["bits"].iloc[0] is None:
-            out["maybe_seen"] = False
-            return out
-        row = filt_pdf.iloc[0]
-        hashes = cand_pdf["url_hash"].to_numpy()
-        if row["kind"] == "cuckoo":
-            from jsonextract_spark.crawl import cuckoo
-
-            if int(row["k"]) > 0:
-                # saturated bucket: degrade to no pruning (stay exact)
-                out["maybe_seen"] = True
-                return out
-            f = cuckoo.CuckooFilter.from_bytes(bytes(row["bits"]))
-            out["maybe_seen"] = f.contains_many(hashes)
-            return out
-        bits = np.frombuffer(row["bits"], dtype=np.uint8)
-        out["maybe_seen"] = _test_bits(bits, hashes,
-                                       int(row["m"]), int(row["k"]))
+        out["maybe_seen"] = _maybe_seen(cand_pdf["url_hash"].to_numpy(),
+                                        filt_pdf)
         return out
 
     return (cand.groupBy("bucket")
@@ -335,24 +239,8 @@ def gate_new_urls(candidates: DataFrame, seen: DataFrame,
             out["maybe_seen"] = pd.Series([], dtype=bool)
             return out
         out = min_by_url_hash(cand_pdf)
-        if len(filt_pdf) == 0 or filt_pdf["bits"].iloc[0] is None:
-            out["maybe_seen"] = False
-            return out
-        row = filt_pdf.iloc[0]
-        hashes = out["url_hash"].to_numpy()
-        if row["kind"] == "cuckoo":
-            from jsonextract_spark.crawl import cuckoo
-
-            if int(row["k"]) > 0:
-                # saturated bucket: degrade to no pruning (stay exact)
-                out["maybe_seen"] = True
-                return out
-            f = cuckoo.CuckooFilter.from_bytes(bytes(row["bits"]))
-            out["maybe_seen"] = f.contains_many(hashes)
-            return out
-        bits = np.frombuffer(row["bits"], dtype=np.uint8)
-        out["maybe_seen"] = _test_bits(bits, hashes,
-                                       int(row["m"]), int(row["k"]))
+        out["maybe_seen"] = _maybe_seen(out["url_hash"].to_numpy(),
+                                        filt_pdf)
         return out
 
     flagged = (cand.groupBy("bucket")

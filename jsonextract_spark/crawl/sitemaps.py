@@ -255,14 +255,9 @@ def seed_from_sitemaps(spark, wh, after_round: int,
         # also enter the prune filter: a filter miss short-circuits
         # the fresh-link gate as definitely-new, and later links to
         # these urls would re-crawl them (the r3 recrawl lesson)
-        round0 = [r for r in wh.ledger()["rounds"] if r["round"] == 0]
-        kind = (round0[0].get("filter_kind", "bloom")
-                if round0 else "bloom")
         filters = wh.load(spark, "seen_filter", after_round)
-        wh.save(seen_mod.merge_filters(filters, fresh, kind=kind),
+        wh.save(seen_mod.merge_filters(filters, fresh),
                 "seen_filter", rn)
-    if wh.exists("host_stats", after_round):
-        wh.copy_forward("host_stats", after_round, rn)
     wh.commit_round(rn, {"phase": "sitemap", "seeds": n})
     fresh.unpersist()
     return n

@@ -20,10 +20,11 @@ frontier     FULL frontier BASE: url, url_hash, host, depth, priority,
              attempts (deferral count, bounded by pipeline.MAX_DEFERS),
              hive-partitioned on is_new. Written only at init (round
              0, where is_new=1 seeds double as the first seen delta),
-             at recrawl reopen rounds, and as the amortized
-             COMPACT_EVERY re-materialization (all is_new=0) — never
-             per round. Pre-r6 warehouses have one per round; the
-             loader treats any of these as a base.
+             at recrawl and sitemap maintenance rounds (a sitemap
+             round's is_new=1 URLs are its seen delta), and as the
+             amortized COMPACT_EVERY re-materialization (all
+             is_new=0) — never per round. The loader treats any of
+             these as a base.
 frontier_delta
              the round's frontier ADDITIONS only (same columns),
              partitioned on is_new: 0 = deferred re-adds, 1 = fresh
@@ -38,10 +39,11 @@ seen_compact url_hash — periodic compaction of the deltas (the
              IcebergLite analogue of rewrite_data_files), written every
              pipeline.COMPACT_EVERY rounds so load_seen unions a
              bounded source list
-seen_filter  bucket, kind, bits (binary), m, k, n
+seen_filter  bucket, bits (binary Bloom bitset), m (bits), k (probes),
+             n (keys inserted) — one row per bucket that holds keys
 fetched      batch_id, rank, url, url_hash (the frontier key — the
              round's popped rows double as the frontier-delta removal
-             list, see load_frontier; pre-r6 rounds lack the column),
+             list, see load_frontier),
              host, depth, warc_ts, n_objects,
              n_links, bytes, partition_id (lineage), blocked (popped
              but stopped by the robots per-path check — never GET'd),
@@ -59,9 +61,7 @@ host_stats_delta
              pipeline.COMPACT_EVERY rounds; a full cumulative rewrite
              per round would be O(total hosts ever) write I/O — the
              same disease the seen-set/robots-cache delta layouts
-             cure. (Pre-r6 warehouses carry a legacy cumulative
-             ``host_stats`` table, which load_host_stats accepts as
-             the base.)
+             cure.
 metrics      batch_id, key, value (incl. per-phase secs + spark_jobs)
 """
 

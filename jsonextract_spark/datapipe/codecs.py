@@ -558,7 +558,13 @@ def encode_ico_bmp(img: np.ndarray) -> bytes:
 def image_features(img: np.ndarray) -> np.ndarray:
     """32 deterministic features from real pixels: 8-bin normalized
     histogram per channel (24) + per-channel mean/std (6) + log-area +
-    aspect ratio."""
+    aspect ratio. ``img`` is an (h, w, >=3) uint8 array, as every
+    decoder here returns; other dtypes raise TypeError (the ``>> 5``
+    histogram and the /255 scaling are only right for uint8)."""
+    if not isinstance(img, np.ndarray) or img.dtype != np.uint8:
+        raise TypeError(
+            f"image_features expects a uint8 array, got "
+            f"{getattr(img, 'dtype', type(img).__name__)}")
     out = np.zeros(FEAT_DIM, dtype=np.float64)
     n = max(img.shape[0] * img.shape[1], 1)
     for c in range(3):

@@ -1,8 +1,7 @@
 """URL canonicalization and MurmurHash3 fingerprints.
 
-The seen-set stores ``murmur3_64(canonicalize_url(url))`` (BASELINE.json
-north_star: "partitioned cuckoo-filter URL-seen set with canonicalized
-murmur3 URL hashes"). Both functions are deterministic, dependency-free
+The crawl's partitioned URL-seen set stores
+``murmur3_64(canonicalize_url(url))``. Both functions are deterministic, dependency-free
 and safe to call inside Arrow-batched pandas UDFs.
 
 MurmurHash3 x64 128-bit is implemented from Austin Appleby's public

@@ -22,8 +22,6 @@ def main():
     ap.add_argument("--seeds", type=int, default=100)
     ap.add_argument("--host-budget", type=int, default=5)
     ap.add_argument("--batch-size", type=int, default=512)
-    ap.add_argument("--filter-kind", default="bloom",
-                    choices=["bloom", "cuckoo"])
     ap.add_argument("--resume", action="store_true")
     ap.add_argument("--default-delay-sec", type=float, default=None,
                     help="politeness floor for hosts whose robots.txt "
@@ -50,7 +48,7 @@ def main():
         pipeline.BROADCAST_MAX_EST_ROWS = args.broadcast_max_est_rows
     stats = run_crawl(spark, args.warehouse, args.rounds, args.seeds,
                       args.host_budget, args.batch_size,
-                      resume=args.resume, filter_kind=args.filter_kind,
+                      resume=args.resume,
                       default_delay_sec=args.default_delay_sec,
                       hot_hosts=args.hot_host)
     for s in stats:

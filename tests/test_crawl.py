@@ -340,6 +340,72 @@ def test_spark_jobs_do_not_accumulate_across_crawls(spark, tmp_path):
     assert jobs[1] == jobs[0], jobs
 
 
+@pytest.fixture(scope="module")
+def one_round_crawl(spark, tmp_path_factory):
+    """A committed one-round crawl, shared read-only by the tests
+    below (copy it before mutating)."""
+    from jsonextract_spark.crawl.pipeline import run_crawl
+
+    wdir = str(tmp_path_factory.mktemp("one_round") / "wh")
+    stats = run_crawl(spark, wdir, rounds=1, n_seeds=10, host_budget=3,
+                      batch_size=20)
+    assert stats[0]["fetched"] > 0
+    return wdir
+
+
+def test_round_sec_metrics_are_never_zero(one_round_crawl):
+    """Every ``sec_*`` key of a non-empty round measures a real span of
+    the round (an always-0.0 key would be a stamp of two adjacent
+    clock reads, not a measurement)."""
+    import pyarrow.parquet as pq
+
+    from jsonextract_spark.crawl.tables import Warehouse
+
+    t = pq.read_table(Warehouse(one_round_crawl)._path("metrics", 1))
+    secs = {k: v for k, v in zip(t.column("key").to_pylist(),
+                                 t.column("value").to_pylist())
+            if k.startswith("sec_")}
+    assert len(secs) >= 4, secs
+    assert all(v > 0.0 for v in secs.values()), secs
+
+
+def _plant_legacy_marker(wh, marker):
+    import json
+    import os
+
+    if marker in ("seen", "host_stats"):
+        os.makedirs(wh._path(marker, 1))
+        return
+    led = wh.ledger()
+    if marker == "cuckoo":
+        led["rounds"][0]["filter_kind"] = "cuckoo"
+    else:
+        for r in led["rounds"]:
+            r.pop("batch", None)
+    with open(wh._ledger_path, "w") as f:
+        json.dump(led, f)
+
+
+@pytest.mark.parametrize("marker", ["cuckoo", "seen", "host_stats",
+                                    "no_batch"])
+def test_resume_rejects_unsupported_layout(spark, one_round_crawl,
+                                           tmp_path, marker):
+    """A warehouse in a layout this code no longer reads fails the
+    resume loudly instead of being read wrongly (cuckoo bytes read as
+    a Bloom bitset would re-crawl seen URLs)."""
+    import shutil
+
+    from jsonextract_spark.crawl.pipeline import run_crawl
+    from jsonextract_spark.crawl.tables import Warehouse
+
+    wdir = str(tmp_path / "wh")
+    shutil.copytree(one_round_crawl, wdir)
+    _plant_legacy_marker(Warehouse(wdir), marker)
+    with pytest.raises(ValueError, match="unsupported warehouse layout"):
+        run_crawl(spark, wdir, rounds=2, resume=True, n_seeds=10,
+                  host_budget=3, batch_size=20)
+
+
 def test_empty_round_carries_state_without_writes(spark, tmp_path):
     """An empty round writes NO frontier state at all (the delta-layout
     loaders read a round RANGE and skip rounds without a delta) —
@@ -1077,20 +1143,6 @@ def test_host_stats_delta_is_o_round_hosts(spark, tmp_path, monkeypatch):
         f"FROM '{wh_dir}/fetched/round=*/*.parquet' "
         f"WHERE NOT blocked GROUP BY host").fetchall()}
     assert got == want and len(got) > 3
-
-    # legacy back-compat: a pre-r6 cumulative table is accepted as the
-    # loader's base, with deltas after it summed on top
-    legacy = spark.createDataFrame(
-        [("legacyhost.example", 7.0, 123.5)],
-        "host string, crawled double, last_fetch_ts double")
-    wh.save(legacy, "host_stats", 0)
-    import shutil
-    shutil.rmtree(wh._path("host_stats_compact", 2))
-    merged = {r["host"]: r["crawled"]
-              for r in P.load_host_stats(spark, wh, 3).collect()}
-    assert merged["legacyhost.example"] == 7.0
-    for h, (c, _ts) in want.items():
-        assert merged[h] == c
 
 
 def test_empty_round_keeps_host_stats_compaction_cadence(
@@ -1882,9 +1934,8 @@ def test_replay_broadcast_hint_on_small_windows(spark, tmp_path):
 
 def test_robots_cache_read_is_pure(spark, tmp_path):
     """ADVICE r6: the cache read must not mutate the cache dir —
-    legacy bare part files and crashed .tmp- debris are ignored by
-    ``_load_cache`` (explicit delta-dir listing) and cleared only by
-    the WRITE path (``_clean_cache_dir``, run by the provider, the
+    crashed .tmp- debris is ignored by ``_load_cache`` (explicit
+    delta-dir listing) and cleared only by the WRITE path (``_clean_cache_dir``, run by the provider, the
     cache's owning writer). Two crawls sharing a cache dir can then
     never have a reader deleting under another reader."""
     import os
@@ -1903,24 +1954,17 @@ def test_robots_cache_read_is_pure(spark, tmp_path):
     rows.write.mode("overwrite").parquet(tmpdir)
     os.replace(tmpdir, os.path.join(cache, "delta=good"))
 
-    # plant debris: a legacy bare part file + a crashed half-write
-    with open(os.path.join(cache, "part-0000-legacy.parquet"),
-              "wb") as f:
-        f.write(b"not really parquet")
+    # plant debris: a crashed half-write
     rows.write.mode("overwrite").parquet(
         os.path.join(cache, ".tmp-crashed"))
 
     # pure read: returns the delta rows, ignores and PRESERVES debris
     got = provider._load_cache(spark, cache)
     assert [r["host"] for r in got.collect()] == ["cached.example"]
-    assert os.path.exists(os.path.join(cache,
-                                       "part-0000-legacy.parquet"))
     assert os.path.isdir(os.path.join(cache, ".tmp-crashed"))
 
-    # the write path clears both
+    # the write path clears it
     provider._clean_cache_dir(cache)
-    assert not os.path.exists(os.path.join(cache,
-                                           "part-0000-legacy.parquet"))
     assert not os.path.exists(os.path.join(cache, ".tmp-crashed"))
     assert os.path.isdir(os.path.join(cache, "delta=good"))
     got2 = provider._load_cache(spark, cache)
@@ -1935,7 +1979,7 @@ def test_ledger_event_estimate_matches_footer_truth(spark, tmp_path):
     frontier_delta rows and ``batch`` is precisely the ledger rows —
     so any drift between the metrics and the written state is a
     correctness signal, not an estimation error. Also pins the
-    pre-``batch``/legacy fallback path and the frontier upper bound."""
+    frontier upper bound."""
     from jsonextract_spark.crawl import pipeline as P
     from jsonextract_spark.crawl.tables import Warehouse
 
@@ -1951,17 +1995,6 @@ def test_ledger_event_estimate_matches_footer_truth(spark, tmp_path):
     footer_truth = (P._parquet_rows(add_paths)
                     + P._parquet_rows(rm_paths))
     assert ledger_est == footer_truth > 0
-
-    # legacy fallback: strip `batch` from one round's commit — the
-    # estimator must fall back to the footer scan, same answer
-    led = wh.ledger()
-    for r in led["rounds"]:
-        r.pop("batch", None)
-    import json as _json
-    with open(wh._ledger_path, "w") as f:
-        _json.dump(led, f)
-    assert P._est_replay_events(wh, base_round, last, add_paths,
-                                rm_paths) == footer_truth
 
     # the frontier bound is an upper bound on the actual pending rows
     pending = P.load_frontier(spark, wh, last).count()
@@ -2188,10 +2221,13 @@ def test_live_crawl_resolves_links_after_redirect(spark, tmp_path):
     threading.Thread(target=srv.serve_forever, daemon=True).start()
     try:
         port = srv.server_port
+        # zero politeness floor: round 2 must not depend on round 1
+        # taking longer than the default 1 s per-host delay
         run_crawl(spark, str(tmp_path / "wredir"), rounds=2,
                   seeds=[f"http://127.0.0.1:{port}/start"],
                   host_budget=10, batch_size=10,
-                  fetch_kernel=make_fetch_extract_kernel())
+                  fetch_kernel=make_fetch_extract_kernel(
+                      default_delay_sec=0.0))
         # the child GET went to /blog/post/next (post-redirect base),
         # NOT to /next (the requested URL's root)
         assert "/blog/post/next" in hits

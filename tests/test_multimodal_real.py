@@ -98,6 +98,13 @@ def test_image_features_bincount_matches_float_histogram():
         assert a.tobytes() == b.tobytes()
 
 
+@pytest.mark.parametrize("dtype", [np.float64, np.uint16])
+def test_image_features_rejects_non_uint8(dtype):
+    img = np.zeros((2, 2, 3), dtype=dtype)
+    with pytest.raises(TypeError, match="uint8"):
+        codecs.image_features(img)
+
+
 def test_wav_parse_and_features():
     x, rate = codecs.parse_wav(wav([0, 16384, -16384, 0], rate=8000))
     assert rate == 8000

@@ -79,26 +79,25 @@ def test_schedule_recrawl_roundtrip(spark, tmp_path):
     assert seen_set() >= seen_before            # history never shrinks
 
 
-def test_recrawl_keeps_cuckoo_gate_exact(spark, tmp_path):
-    """Regression (ADVICE r2): with filter_kind='cuckoo', the recrawl
-    maintenance round must NOT delete reopened hashes from the prune
-    layer — a filter miss short-circuits the exact anti-join as
-    definitely-new, so deletion would re-enqueue links to still-seen
-    URLs and duplicate their seen-delta rows. Pinned invariant: every
-    url_hash appears at most once across all seen deltas of the whole
-    resumed crawl."""
+def test_recrawl_keeps_seen_deltas_unique(spark, tmp_path):
+    """Regression (ADVICE r2): the recrawl maintenance round must keep
+    reopened hashes in the prune layer — a filter miss short-circuits
+    the exact anti-join as definitely-new, so dropping them would
+    re-enqueue links to still-seen URLs and duplicate their seen-delta
+    rows. Pinned invariant: every url_hash appears at most once across
+    all seen deltas of the whole resumed crawl."""
     import duckdb as _duck
 
     from jsonextract_spark.crawl.pipeline import run_crawl
     from jsonextract_spark.crawl.recrawl import schedule_recrawl
     from jsonextract_spark.crawl.tables import Warehouse
 
-    wdir = str(tmp_path / "wrc_cuckoo")
+    wdir = str(tmp_path / "wrc_dedup")
     # config chosen to reproduce the original bug: the reopened URLs
     # must be refetched (round 4) and then RE-linked by later rounds'
     # link discovery once they are no longer pending in the frontier
     run_crawl(spark, wdir, rounds=2, n_seeds=12, host_budget=8,
-              batch_size=60, filter_kind="cuckoo")
+              batch_size=60)
     wh = Warehouse(wdir)
     n = schedule_recrawl(spark, wh, after_round=2, max_age_sec=0)
     assert n > 0
