@@ -69,10 +69,14 @@ def _write_metrics(wh: Warehouse, round_no: int, kv: dict):
 
 
 def make_robots(spark: SparkSession) -> DataFrame:
-    """Synthetic robots table: host -> allowed (tiny; broadcast)."""
+    """Synthetic robots table: host -> allowed, one row per synthetic
+    host. A table built from a local list carries no size statistics,
+    so Spark would plan its join as a shuffle; its size is the
+    constant ``synth.HOSTS``, so it is broadcast unconditionally."""
     rows = [(f"host{h}.example", not synth.robots_disallowed_host(h))
             for h in range(synth.HOSTS)]
-    return spark.createDataFrame(rows, "host string, allowed boolean")
+    return F.broadcast(
+        spark.createDataFrame(rows, "host string, allowed boolean"))
 
 
 def _with_url_identity(df: DataFrame, url_col: str = "url") -> DataFrame:
@@ -172,25 +176,6 @@ def load_seen(spark: SparkSession, wh: Warehouse, upto_round: int):
     return spark.read.parquet(*paths).select("url_hash")
 
 
-def _host_stats_sources(wh: Warehouse, upto_round: int):
-    """(checkpoint round | None, delta paths) for the host_stats fold
-    — shared by ``load_host_stats`` and the pop-side broadcast size
-    estimate."""
-    base = None
-    for r in range(upto_round, -1, -1):
-        # bounded scan: once compaction has run, a checkpoint exists
-        # within COMPACT_EVERY rounds of ``upto_round``; before that,
-        # upto_round itself is < COMPACT_EVERY
-        if wh.exists("host_stats_compact", r):
-            base = r
-            break
-    start = base + 1 if base is not None else 1
-    delta_paths = [wh._path("host_stats_delta", r)
-                   for r in range(start, upto_round + 1)
-                   if wh.exists("host_stats_delta", r)]
-    return base, delta_paths
-
-
 def load_host_stats(spark: SparkSession, wh: Warehouse,
                     upto_round: int) -> DataFrame | None:
     """Cumulative per-host (crawled count, newest fetch ts) up to
@@ -205,7 +190,18 @@ def load_host_stats(spark: SparkSession, wh: Warehouse,
     Reading is a bounded union: the newest checkpoint plus the deltas
     after it — at most COMPACT_EVERY+1 sources once the first
     checkpoint exists, regardless of crawl age."""
-    base, delta_paths = _host_stats_sources(wh, upto_round)
+    base = None
+    for r in range(upto_round, -1, -1):
+        # bounded scan: once compaction has run, a checkpoint exists
+        # within COMPACT_EVERY rounds of ``upto_round``; before that,
+        # upto_round itself is < COMPACT_EVERY
+        if wh.exists("host_stats_compact", r):
+            base = r
+            break
+    start = base + 1 if base is not None else 1
+    delta_paths = [wh._path("host_stats_delta", r)
+                   for r in range(start, upto_round + 1)
+                   if wh.exists("host_stats_delta", r)]
     parts = []
     if base is not None:
         b = wh.load(spark, "host_stats_compact", base)
@@ -352,168 +348,6 @@ def maybe_compact_host_stats(spark: SparkSession, wh: Warehouse,
 _FRONTIER_COLS = ["url", "url_hash", "host", "depth", "priority",
                   "attempts"]
 
-# Broadcast switch point for the replay/aux joins: a broadcast hint is
-# only emitted when a FOOTER-ONLY parquet row-count estimate proves the
-# small side is actually small. 4M rows of (url_hash, ev) ≈ 64 MB raw —
-# comfortably under executor/driver broadcast budgets; past it the hint
-# is dropped and the join planned as a shuffle, where AQE's RUNTIME
-# size statistics still convert it to broadcast whenever the actual
-# build side turns out small (the estimate is deliberately an
-# overestimate — deltas repeat keys). At the 10^6-10^7-adds-per-round
-# design point the event window is GBs, which a forced broadcast would
-# OOM on the driver; tests force the shuffled path and pin equality.
-BROADCAST_MAX_EST_ROWS = 4_000_000
-
-
-def _parquet_rows(paths) -> int:
-    """Total row count across parquet files/dirs from FOOTER metadata
-    only — no data pages are read. O(#files) driver-side footer reads
-    via the local filesystem (``os.walk``); the ledger-first estimates
-    use it only for the host_stats checkpoint dir. A PRESENT path that lists NO parquet files — missing, empty, or a
-    non-local URI this walker can't see — is treated exactly like an
-    unreadable footer (unbounded), because "found nothing" must drop
-    the broadcast hint, not prove the table small and force a
-    broadcast of a table whose true size is unknown. An EMPTY ``paths``
-    list is different: the caller itself determined there are no
-    sources (e.g. every delta in a replay window was the schema-only
-    empty fallback), which is a KNOWN zero — returning the unbounded
-    sentinel there would unconditionally kill hints whose other
-    addends prove the table tiny (review r8)."""
-    import pyarrow.parquet as pq
-
-    if not paths:
-        return 0
-    total = 0
-    found_any = False
-    for p in paths:
-        if os.path.isfile(p):
-            files = [p]
-        else:
-            files = [os.path.join(root, f)
-                     for root, _, fs in os.walk(p)
-                     for f in fs if f.endswith(".parquet")]
-        for f in files:
-            found_any = True
-            try:
-                total += pq.ParquetFile(f).metadata.num_rows
-            except Exception:
-                # unreadable footer → treat as unbounded: the only
-                # consequence is a dropped hint, which AQE recovers
-                return BROADCAST_MAX_EST_ROWS + 1
-    if not found_any:
-        return BROADCAST_MAX_EST_ROWS + 1
-    return total
-
-
-def _hint_small(df: DataFrame, est_rows: int) -> DataFrame:
-    """Broadcast hint iff the row estimate proves smallness."""
-    return F.broadcast(df) if est_rows <= BROADCAST_MAX_EST_ROWS else df
-
-
-def _committed_info(wh: Warehouse) -> dict:
-    """{round: commit info} for committed rounds — load ONCE per
-    round and share across the three estimators (the ledger JSON is
-    O(rounds); re-reading it per estimator would reintroduce the
-    driver-latency class the ledger-first design removes)."""
-    return {r["round"]: r for r in wh.ledger()["rounds"]
-            if r.get("status") == "committed"}
-
-
-def _est_replay_events(wh: Warehouse, base_round, upto_round: int,
-                       add_paths, rm_paths, info=None) -> int:
-    """Event-window row estimate for the replay broadcast switch —
-    from the LEDGER: each committed round records its additions
-    (``new`` + ``deferred``) and its removal count (``batch``, the
-    round's total ledger rows), so the estimate is O(rounds) dict
-    reads from the already-loaded ledger — at the design point
-    (COMPACT_EVERY rounds × ~32 part files × 3 tables on object
-    storage) per-round footer scans would cost seconds of driver
-    latency that the ledger gives for free."""
-    if base_round is None:
-        return 0
-    if info is None:
-        info = _committed_info(wh)
-    est = 0
-    for r in range(base_round + 1, upto_round + 1):
-        ri = info.get(r)
-        if ri is None or ri.get("empty"):
-            continue
-        if ri.get("phase") in ("init", "recrawl", "sitemap"):
-            # these write a BASE, never deltas/removals (and a base at
-            # r would have been picked as base_round anyway)
-            continue
-        est += ri.get("new", 0) + ri.get("deferred", 0) + ri["batch"]
-    return est
-
-
-def _est_frontier_upper(wh: Warehouse, info=None) -> int:
-    """Monotone upper bound on the pending-frontier row count (and so
-    on its distinct hosts): every row ever added — seeds at init plus
-    per-round fresh discoveries. O(rounds) ledger reads: init and
-    sitemap rounds record their seed-list length as ``seeds``."""
-    if info is None:
-        info = _committed_info(wh)
-    seeds = sum(r.get("seeds", 0) for r in info.values())
-    return seeds + sum(r.get("new", 0) for r in info.values())
-
-
-def _est_host_stats_rows(wh: Warehouse, upto_round: int,
-                         info=None) -> int:
-    """Row estimate for the folded host_stats table: footer count of
-    the single checkpoint dir (a handful of part files by
-    construction) plus, per delta round, the round's ``batch`` from
-    the ledger (a round's delta rows = its distinct fetched hosts ≤
-    its batch)."""
-    base, _ = _host_stats_sources(wh, upto_round)
-    base_est = (_parquet_rows([wh._path("host_stats_compact", base)])
-                if base is not None else 0)
-    if info is None:
-        info = _committed_info(wh)
-    start = base + 1 if base is not None else 1
-    est = 0
-    for r in range(start, upto_round + 1):
-        ri = info.get(r)
-        if ri is None or ri.get("empty") or \
-                ri.get("phase") in ("init", "recrawl", "sitemap"):
-            continue
-        est += ri["batch"]
-    return base_est + est
-
-
-def _frontier_sources(spark: SparkSession, wh: Warehouse,
-                      upto_round: int):
-    """(normalized base df | None, addition delta paths, removal
-    ledger paths, base round | None) for the frontier reconstruction —
-    shared by the full replay (``load_frontier``) and the pop-side
-    broadcast size estimates."""
-    base_round = None
-    for r in range(upto_round, -1, -1):
-        if wh.exists("frontier", r):
-            base_round = r
-            break
-    if base_round is None:
-        return None, [], [], None
-    base = (wh.load(spark, "frontier", base_round).drop("is_new")
-            .select(*_FRONTIER_COLS))
-
-    def _nonempty_delta(r):
-        # a round with a non-empty batch but ZERO additions wrote the
-        # Warehouse's schema-only empty fallback (no is_new= subdirs);
-        # mixing such flat dirs with hive-partitioned ones breaks
-        # partition discovery, and they contribute no events anyway
-        p = wh._path("frontier_delta", r)
-        return any(os.path.isdir(os.path.join(p, f"is_new={v}"))
-                   for v in (0, 1))
-
-    add_paths = [wh._path("frontier_delta", r)
-                 for r in range(base_round + 1, upto_round + 1)
-                 if wh.exists("frontier_delta", r) and _nonempty_delta(r)]
-    rm_paths = [wh._path("fetched", r)
-                for r in range(base_round + 1, upto_round + 1)
-                if wh.exists("fetched", r)]
-    return base, add_paths, rm_paths, base_round
-
-
 def load_frontier(spark: SparkSession, wh: Warehouse,
                   upto_round: int) -> DataFrame:
     """The pending-URL frontier as of ``upto_round``, reconstructed
@@ -535,18 +369,38 @@ def load_frontier(spark: SparkSession, wh: Warehouse,
     above removals of the same round (ev = 2*round+1 vs 2*round). The
     event set spans at most COMPACT_EVERY rounds (the base
     re-materializes on that cadence), so ``touched`` is O(rounds ×
-    batch) — broadcast-joined against the base, which is never
-    shuffled and never rewritten off-cadence. (Same broadcast switch
-    point note as robots/host_stats: PLANS.md 100x audit.)
+    batch) — anti-joined against the base, which is never rewritten
+    off-cadence.
 
     A full ``frontier`` table at a round (init, recrawl reopen,
     sitemap seeding or compaction checkpoint) is a base."""
-    base, add_paths, rm_paths, base_round = _frontier_sources(
-        spark, wh, upto_round)
-    if base is None:
+    base_round = None
+    for r in range(upto_round, -1, -1):
+        if wh.exists("frontier", r):
+            base_round = r
+            break
+    if base_round is None:
         return spark.createDataFrame(
             [], "url string, url_hash long, host string, depth int,"
                 " priority double, attempts int")
+    base = (wh.load(spark, "frontier", base_round).drop("is_new")
+            .select(*_FRONTIER_COLS))
+
+    def _nonempty_delta(r):
+        # a round with a non-empty batch but ZERO additions wrote the
+        # Warehouse's schema-only empty fallback (no is_new= subdirs);
+        # mixing such flat dirs with hive-partitioned ones breaks
+        # partition discovery, and they contribute no events anyway
+        p = wh._path("frontier_delta", r)
+        return any(os.path.isdir(os.path.join(p, f"is_new={v}"))
+                   for v in (0, 1))
+
+    add_paths = [wh._path("frontier_delta", r)
+                 for r in range(base_round + 1, upto_round + 1)
+                 if wh.exists("frontier_delta", r) and _nonempty_delta(r)]
+    rm_paths = [wh._path("fetched", r)
+                for r in range(base_round + 1, upto_round + 1)
+                if wh.exists("fetched", r)]
     if not add_paths and not rm_paths:
         return base
 
@@ -587,20 +441,12 @@ def load_frontier(spark: SparkSession, wh: Warehouse,
              .filter(F.col("_last_ev") % 2 == 1)
              .select("_row.*")
              if adds is not None else None)
-    # The anti-join hint-broadcasts the touched key set only when the
-    # ledger/footers prove the event window small (≤
-    # BROADCAST_MAX_EST_ROWS events since the last base) — then the
-    # base is never shuffled by reconstruction. Past the threshold
-    # (production-scale rounds: 10^6-10^7 adds × up to COMPACT_EVERY
-    # rounds is a GB-scale build side that must not be forced onto the
-    # driver) the hint is dropped: the join plans as a shuffle on
-    # url_hash and AQE still converts it to broadcast at runtime if
-    # the actual window is small. Equality of both paths is
-    # test-pinned.
-    est_events = _est_replay_events(wh, base_round, upto_round,
-                                    add_paths, rm_paths)
-    out = base.join(_hint_small(events.select("url_hash"), est_events),
-                    "url_hash", "left_anti").select(*_FRONTIER_COLS)
+    # No hint on the anti-join: Spark's size-based planner broadcasts
+    # the touched key set while the event window is small (the base
+    # is then never shuffled by reconstruction) and plans a shuffle on
+    # url_hash when it is not. Equality of both paths is test-pinned.
+    out = (base.join(events.select("url_hash"), "url_hash", "left_anti")
+           .select(*_FRONTIER_COLS))
     return out if alive is None else out.unionByName(alive)
 
 
@@ -756,9 +602,14 @@ def run_round(spark: SparkSession, wh: Warehouse, round_no: int,
     metric is what the Spark scheduler counted for the round's job
     group — with AQE enabled that is one job per materialized query
     stage, NOT the action count. The ``sec_*`` metrics split the
-    round's wall clock at its action boundaries; the seen gate runs
-    inside the frontier-delta write (A2), so ``sec_frontier_seen``
-    covers gate + frontier delta. Driver-side action latency is what
+    round's wall clock at its action boundaries:
+    ``sec_pop_fetch_extract`` is the ledger write (A1);
+    ``sec_driver_plan`` is the driver building the link-discovery,
+    gate and delta plans and starting the host_stats thread (no
+    Spark action runs in it); ``sec_frontier_seen`` is the
+    frontier-delta write (A2), which runs the seen gate; and
+    ``sec_filter`` is the wait for the side writes (host_stats, filter
+    merge, compactions). Driver-side action latency is what
     bounds small-round throughput; at production batch sizes the same
     four actions amortize over millions of URLs."""
     t0 = time.time()
@@ -794,20 +645,10 @@ def run_round(spark: SparkSession, wh: Warehouse, round_no: int,
     #    bench cadence with nothing to be polite to.
     default_delay_sec, hot_hosts = _resolve_politeness(
         fetch_kernel, default_delay_sec, hot_hosts)
-    # Broadcast the pop's aux tables only when ledger-derived row
-    # bounds PROVE them small (see BROADCAST_MAX_EST_ROWS): host_stats
-    # grows with hosts-ever-crawled, the robots table with the
-    # frontier's distinct hosts — both unbounded at the design point.
-    # The robots gate uses the frontier row bound directly (hosts ≤
-    # rows — a proof, not the r7-draft ≥100:1 URL:host heuristic,
-    # which a wildcard-subdomain-spam frontier with ratio ~1:1 would
-    # have defeated into a forced multi-GB broadcast). When unprovable
-    # the hint is dropped and AQE's runtime sizes still pick broadcast
-    # for genuinely small sides — measured cliff-free at bench scale
-    # (PLANS.md r7).
-    lg = _committed_info(wh)
-    est_hosts = _est_host_stats_rows(wh, prev, info=lg)
-    est_frontier = _est_frontier_upper(wh, info=lg)
+    # The pop adds no hints to its robots and host_stats joins: both
+    # tables grow with hosts (unbounded at the design point), and Spark
+    # sizes them — broadcast while small, shuffle past the engine
+    # threshold.
     batch = pop_batch(frontier, robots, host_budget, batch_size,
                       host_stats=host_stats, now_ts=time.time(),
                       default_delay_sec=default_delay_sec,
@@ -815,11 +656,7 @@ def run_round(spark: SparkSession, wh: Warehouse, round_no: int,
                       auto_hot_min_pending=(
                           auto_hot_min_pending
                           if auto_hot_min_pending is not None
-                          else AUTO_HOT_MIN_PENDING),
-                      broadcast_robots=(
-                          est_frontier <= BROADCAST_MAX_EST_ROWS),
-                      broadcast_host_stats=(
-                          est_hosts <= BROADCAST_MAX_EST_ROWS))
+                          else AUTO_HOT_MIN_PENDING))
     batch = batch.withColumn("batch_id", F.lit(round_no)).cache()
 
     # 2. politeness repartition: salted host key spreads an operator-
@@ -1157,13 +994,11 @@ def run_round(spark: SparkSession, wh: Warehouse, round_no: int,
         "spark_actions": float(n_actions),
         "spark_jobs": float(n_jobs),
         "sec_pop_fetch_extract": t_fetch - t0,
-        "sec_links_dedup": t_links - t_fetch,
+        "sec_driver_plan": t_links - t_fetch,
         "sec_frontier_seen": t_frontier - t_links,
         "sec_filter": t_filter - t_frontier})
     # ``batch`` = this round's TOTAL ledger rows (popped URLs incl.
-    # blocked/retry) — the replay removal count, recorded so later
-    # rounds' broadcast-size estimates read the ledger instead of
-    # touching parquet footers (see _est_replay_events)
+    # blocked/retry), the replay removal count
     commit_info = {"fetched": n_fetched, "new": n_new,
                    "blocked": n_blocked,
                    "deferred": n_deferred,
@@ -1193,21 +1028,14 @@ def run_round(spark: SparkSession, wh: Warehouse, round_no: int,
 def _check_layout(wh: Warehouse):
     """Refuse to resume a warehouse in a layout this code does not
     read. There is one layout: Bloom ``seen_filter`` rows, seen deltas
-    in the frontier tables' ``is_new=1`` partitions, host_stats as
-    deltas plus checkpoints, and a ``batch`` count in the ledger entry
-    of every committed fetch round. Reading anything else would go
+    in the frontier tables' ``is_new=1`` partitions, and host_stats as
+    deltas plus checkpoints. Reading anything else would go
     wrong silently — cuckoo bytes read as a Bloom bitset give false
     negatives, so seen URLs would be re-crawled."""
-    problems = []
-    for r in wh.ledger()["rounds"]:
-        if r.get("status") != "committed":
-            continue
-        if r["round"] == 0 and r.get("filter_kind", "bloom") != "bloom":
-            problems.append(f"round 0 seen_filter codec "
-                            f"{r['filter_kind']!r}")
-        elif (r["round"] > 0 and "phase" not in r
-              and not r.get("empty") and "batch" not in r):
-            problems.append(f"round {r['round']} records no batch")
+    problems = [f"round 0 seen_filter codec {r['filter_kind']!r}"
+                for r in wh.ledger()["rounds"]
+                if r.get("status") == "committed" and r["round"] == 0
+                and r.get("filter_kind", "bloom") != "bloom"]
     problems += [f"legacy {t!r} table" for t in ("seen", "host_stats")
                  if wh.exists(t)]
     if problems:
@@ -1309,8 +1137,6 @@ def crawl_order(spark: SparkSession, warehouse: str) -> DataFrame:
 
 
 def main():
-    global BROADCAST_MAX_EST_ROWS
-
     ap = argparse.ArgumentParser()
     ap.add_argument("--rounds", type=int, default=3)
     ap.add_argument("--warehouse", default="/tmp/jsx_warehouse")
@@ -1343,12 +1169,6 @@ def main():
                          "ones as a maintenance round; requires "
                          "--live (the synthetic corpus has no real "
                          "hosts to fetch sitemaps from)")
-    ap.add_argument("--broadcast-max-est-rows", type=int, default=None,
-                    help="row-estimate bound above which the replay/"
-                         "aux joins drop their broadcast hints and "
-                         "plan as shuffles (default "
-                         f"{BROADCAST_MAX_EST_ROWS}; size to the "
-                         "cluster's driver/executor broadcast budget)")
     ap.add_argument("--auto-hot-min-pending", type=int, default=None,
                     help="pending-frontier row count at which a host "
                          "is auto-treated as hot for the round (salted"
@@ -1362,8 +1182,6 @@ def main():
                          "ledger records each round's shard manifest")
     ap.add_argument("--master", default=None)
     args = ap.parse_args()
-    if args.broadcast_max_est_rows is not None:
-        BROADCAST_MAX_EST_ROWS = args.broadcast_max_est_rows
 
     if args.seed_sitemaps and not args.live:
         ap.error("--seed-sitemaps requires --live (synthetic hosts "

@@ -3,8 +3,10 @@
 A crawl is never done: pages expire and must be refetched. This module
 selects refresh candidates by age and re-opens them in the frontier.
 
-Exactness note: the exact ``seen`` table keeps the hash (history is
-append-only); re-opening works by inserting the URL back into the
+Exactness note: the exact seen set (the frontier tables' ``is_new=1``
+partitions plus ``seen_compact`` checkpoints, read by
+``pipeline.load_seen``) keeps the hash, because its history is
+append-only. Re-opening works by inserting the URL back into the
 frontier directly, bypassing the seen gate — the gate only filters
 *newly discovered* links. The Bloom prune filters carry forward
 unchanged, because reopened URLs stay in the exact seen set.

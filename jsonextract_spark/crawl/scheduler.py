@@ -2,8 +2,12 @@
 
 Scale notes
 -----------
-* robots is a tiny per-host table → **broadcast join** (hint dropped by
-  the pipeline when footer estimates can't prove it small).
+* robots and host_stats are per-host tables, and the pop joins them on
+  ``host`` without hints: Spark's size-based planner
+  (``autoBroadcastJoinThreshold`` plus AQE's runtime sizes) broadcasts
+  them while they are small and falls back to a shuffle join when they
+  are not. (The pipeline's synthetic robots table, whose size is a
+  constant, carries its own broadcast hint.)
 * per-host budget is a top-k per group. A bare window over ``host``
   sorts each host's rows inside one task — with 10^9 URLs on one hot
   host that task is the straggler. Since r7 the primary path is the
@@ -116,16 +120,15 @@ def pop_batch(frontier: DataFrame, robots: DataFrame, host_budget: int,
               politeness_budget_sec: float = 15.0,
               default_delay_sec: float = 0.0,
               hot_hosts=None,
-              auto_hot_min_pending: int | None = AUTO_HOT_MIN_PENDING,
-              broadcast_robots: bool = True,
-              broadcast_host_stats: bool = True) -> DataFrame:
+              auto_hot_min_pending: int | None = AUTO_HOT_MIN_PENDING
+              ) -> DataFrame:
     """Select this round's fetch set.
 
     frontier:   url, url_hash, host, depth, priority
-    robots:     host, allowed (small; broadcast), optionally crawl_delay
+    robots:     host, allowed, optionally crawl_delay
                 (the host's robots Crawl-delay ask in seconds, null when
                 unspecified — carried onto the batch)
-    host_stats: host, crawled (cumulative fetch count; small; broadcast),
+    host_stats: host, crawled (cumulative fetch count),
                 optionally last_fetch_ts (epoch seconds of the host's
                 newest fetch). When given, effective priority is
                 discounted by how much of the host's budget history is
@@ -152,21 +155,13 @@ def pop_batch(frontier: DataFrame, robots: DataFrame, host_budget: int,
                 explicit robots ask still wins, and the count window
                 shares the top-k's host partitioning, so detection
                 costs no extra exchange. ``None`` disables.
-    broadcast_robots / broadcast_host_stats: emit the broadcast hint
-                for the aux join (default). The pipeline clears a flag
-                when its footer-based row estimate can NOT prove the
-                table small (host_stats grows with hosts-ever-crawled;
-                robots with frontier hosts) — the join then plans as a
-                shuffle and AQE's runtime statistics still convert it
-                to broadcast whenever the actual build side is small.
+    The aux joins add no hints; the engine picks broadcast or shuffle
+    from the tables' sizes.
     Returns the batch with a deterministic global ``rank`` and the
     ``eff_delay`` politeness column.
     """
-    def _hint(df, want):
-        return F.broadcast(df) if want else df
-
     allowed = (frontier
-               .join(_hint(robots, broadcast_robots), "host", "left")
+               .join(robots, "host", "left")
                .filter(F.coalesce(F.col("allowed"), F.lit(True)))
                .drop("allowed"))
     ask = (F.col("crawl_delay") if "crawl_delay" in robots.columns
@@ -189,8 +184,7 @@ def pop_batch(frontier: DataFrame, robots: DataFrame, host_budget: int,
     allowed = allowed.withColumn("eff_delay", F.coalesce(ask, floor))
     if host_stats is not None:
         allowed = (allowed
-                   .join(_hint(host_stats, broadcast_host_stats),
-                         "host", "left")
+                   .join(host_stats, "host", "left")
                    .withColumn(
                        "priority",
                        F.col("priority") /

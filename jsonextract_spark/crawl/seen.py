@@ -23,7 +23,8 @@ One codec: every ``seen_filter`` row is a Bloom bitset
 exact seen set is append-only (recrawl re-opens URLs, it never forgets
 them), so filter and set never disagree on a present key.
 
-Local scale uses 64 buckets / 2^17 bits; both are knobs.
+Local scale uses 64 buckets / 2^17 bits per bucket: the module
+constants ``N_BUCKETS`` and ``M_BITS``.
 """
 
 from __future__ import annotations

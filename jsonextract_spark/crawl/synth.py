@@ -83,32 +83,6 @@ def page_text(i: int) -> str:
     )
 
 
-def fetch_partition(rows: Iterable[pd.DataFrame]):
-    """mapInPandas kernel: frontier rows -> pages rows. Pure function of
-    url; yields the input_hint page shape (url, warc_ts, html, text, lang)
-    plus the lineage columns carried through."""
-    for pdf in rows:
-        ids = pdf["url"].map(page_id_from_url)
-        texts = ids.map(page_text)
-        out = pd.DataFrame({
-            "url": pdf["url"],
-            "warc_ts": pd.to_datetime(EPOCH + ids, unit="s"),
-            "html": texts.map(lambda t: t.encode("utf-8")),
-            "text": texts,
-            "lang": "en",
-            "depth": pdf["depth"],
-            "batch_id": pdf["batch_id"],
-            "rank": pdf["rank"],
-        })
-        yield out
-
-
-FETCH_OUTPUT_SCHEMA = (
-    "url string, warc_ts timestamp, html binary, text string, lang string,"
-    " depth int, batch_id int, rank long"
-)
-
-
 def make_fetch_extract(archive_dir: str | None = None):
     """Build the fused fetch + extract + link-discovery kernel (ONE
     Arrow stage).
@@ -116,7 +90,7 @@ def make_fetch_extract(archive_dir: str | None = None):
     Chaining fetch -> extract -> links as three Python stages runs three
     workers per core (oversubscription measured at ~0.55 scaling
     efficiency); fusing restores one worker per core (~0.85+,
-    BENCH/BASELINE.md). The unfused stages remain for the operator API.
+    BENCH/BASELINE.md).
 
     ``archive_dir`` tees every page's fetched bytes into per-task WARC
     shards inside the same pass (fetch-time archival — no second fetch,

@@ -155,7 +155,6 @@ class Warehouse:
         return p
 
     def save(self, df: DataFrame, table: str, round_no: int | None = None,
-             partitions: int | None = None,
              partition_by: str | None = None,
              rebalance: bool = False):
         """Write to a temp dir then atomically rename into place, so a
@@ -178,10 +177,7 @@ class Warehouse:
         advisory-sized files rather than coalescing to one."""
         final = self._path(table, round_no)
         tmp = _tmp_dir_name(final)
-        if rebalance:
-            w = df.hint("rebalance")
-        else:
-            w = df if partitions is None else df.repartition(partitions)
+        w = df.hint("rebalance") if rebalance else df
         writer = w.write.mode("overwrite")
         if partition_by is not None:
             writer = writer.partitionBy(partition_by)

@@ -30,10 +30,6 @@ def main():
     ap.add_argument("--hot-host", action="append", default=None,
                     help="host cleared for full-rate salted fetching "
                          "(repeatable)")
-    ap.add_argument("--broadcast-max-est-rows", type=int, default=None,
-                    help="row-estimate bound above which the replay/"
-                         "aux joins drop their broadcast hints; size "
-                         "to the cluster's broadcast budget")
     args = ap.parse_args()
 
     spark = (SparkSession.builder.appName("jsx-crawl")
@@ -41,11 +37,8 @@ def main():
              .config("spark.sql.execution.arrow.pyspark.enabled", "true")
              .getOrCreate())
 
-    from jsonextract_spark.crawl import pipeline
     from jsonextract_spark.crawl.pipeline import run_crawl
 
-    if args.broadcast_max_est_rows is not None:
-        pipeline.BROADCAST_MAX_EST_ROWS = args.broadcast_max_est_rows
     stats = run_crawl(spark, args.warehouse, args.rounds, args.seeds,
                       args.host_budget, args.batch_size,
                       resume=args.resume,

@@ -354,9 +354,9 @@ def one_round_crawl(spark, tmp_path_factory):
 
 
 def test_round_sec_metrics_are_never_zero(one_round_crawl):
-    """Every ``sec_*`` key of a non-empty round measures a real span of
-    the round (an always-0.0 key would be a stamp of two adjacent
-    clock reads, not a measurement)."""
+    """A non-empty round records exactly the four ``sec_*`` spans, and
+    each measures a real span of the round (an always-0.0 key would be
+    a stamp of two adjacent clock reads, not a measurement)."""
     import pyarrow.parquet as pq
 
     from jsonextract_spark.crawl.tables import Warehouse
@@ -365,7 +365,8 @@ def test_round_sec_metrics_are_never_zero(one_round_crawl):
     secs = {k: v for k, v in zip(t.column("key").to_pylist(),
                                  t.column("value").to_pylist())
             if k.startswith("sec_")}
-    assert len(secs) >= 4, secs
+    assert set(secs) == {"sec_pop_fetch_extract", "sec_driver_plan",
+                         "sec_frontier_seen", "sec_filter"}, secs
     assert all(v > 0.0 for v in secs.values()), secs
 
 
@@ -377,17 +378,12 @@ def _plant_legacy_marker(wh, marker):
         os.makedirs(wh._path(marker, 1))
         return
     led = wh.ledger()
-    if marker == "cuckoo":
-        led["rounds"][0]["filter_kind"] = "cuckoo"
-    else:
-        for r in led["rounds"]:
-            r.pop("batch", None)
+    led["rounds"][0]["filter_kind"] = "cuckoo"
     with open(wh._ledger_path, "w") as f:
         json.dump(led, f)
 
 
-@pytest.mark.parametrize("marker", ["cuckoo", "seen", "host_stats",
-                                    "no_batch"])
+@pytest.mark.parametrize("marker", ["cuckoo", "seen", "host_stats"])
 def test_resume_rejects_unsupported_layout(spark, one_round_crawl,
                                            tmp_path, marker):
     """A warehouse in a layout this code no longer reads fails the
@@ -404,6 +400,32 @@ def test_resume_rejects_unsupported_layout(spark, one_round_crawl,
     with pytest.raises(ValueError, match="unsupported warehouse layout"):
         run_crawl(spark, wdir, rounds=2, resume=True, n_seeds=10,
                   host_budget=3, batch_size=20)
+
+
+def test_resume_accepts_ledger_without_batch(spark, one_round_crawl,
+                                             tmp_path):
+    """The ledger's per-round ``batch`` count is written but no longer
+    read: a warehouse whose ledger lacks it resumes and runs its next
+    round."""
+    import json
+    import shutil
+
+    from jsonextract_spark.crawl.pipeline import run_crawl
+    from jsonextract_spark.crawl.tables import Warehouse
+
+    wdir = str(tmp_path / "wh")
+    shutil.copytree(one_round_crawl, wdir)
+    wh = Warehouse(wdir)
+    led = wh.ledger()
+    for r in led["rounds"]:
+        r.pop("batch", None)
+    with open(wh._ledger_path, "w") as f:
+        json.dump(led, f)
+    stats = run_crawl(spark, wdir, rounds=2, resume=True, n_seeds=10,
+                      host_budget=3, batch_size=20)
+    assert [s["round"] for s in stats] == [2]
+    assert wh.last_committed_round() == 2
+    assert "batch" in wh.ledger()["rounds"][-1]
 
 
 def test_empty_round_carries_state_without_writes(spark, tmp_path):
@@ -888,13 +910,22 @@ def test_pop_batch_crawl_delay_gates_hosts_across_rounds(spark):
     assert hosts(105.0, hs2) == {"a.example", "b.example"}
 
 
-def test_pop_batch_plan_broadcasts_side_tables(spark):
+def test_pop_batch_plan_broadcasts_side_tables(spark, tmp_path):
     """The pop's robots and host_stats joins must stay broadcast hash
     joins (both sides are per-host tables, tiny next to a 10^10-row
     frontier) — a sort-merge join here would shuffle the whole frontier
     twice per round. The crawl-delay eligibility filter rides those
-    joins and must not change the join strategy."""
+    joins and must not change the join strategy. ``pop_batch`` adds no
+    hints: side tables Spark has sizes for (parquet-backed, as the
+    pipeline's host_stats and the live robots provider are) plan as
+    broadcasts up front, and side tables built from a local list (no
+    size statistics) end as broadcasts in the final adaptive plan."""
     from jsonextract_spark.crawl.scheduler import pop_batch
+
+    def parquet_backed(df, name):
+        path = str(tmp_path / name)
+        df.write.parquet(path)
+        return spark.read.parquet(path)
 
     frontier = spark.createDataFrame(
         [(f"http://h{i % 7}.example/{i}", i, f"h{i % 7}.example",
@@ -907,12 +938,21 @@ def test_pop_batch_plan_broadcasts_side_tables(spark):
     host_stats = spark.createDataFrame(
         [(f"h{i}.example", 2.0, 50.0) for i in range(7)],
         "host string, crawled double, last_fetch_ts double")
-    batch = pop_batch(frontier, robots, 5, 50, host_stats=host_stats,
+    batch = pop_batch(frontier, parquet_backed(robots, "robots"), 5, 50,
+                      host_stats=parquet_backed(host_stats, "host_stats"),
                       now_ts=100.0)
     plan = batch._jdf.queryExecution().executedPlan().toString()
     assert plan.count("BroadcastHashJoin") >= 2
     assert "SortMergeJoin" not in plan
     assert len(batch.collect()) > 0
+
+    batch = pop_batch(frontier, robots, 5, 50, host_stats=host_stats,
+                      now_ts=100.0)
+    assert len(batch.collect()) > 0
+    final = (batch._jdf.queryExecution().executedPlan()
+             .finalPhysicalPlan().toString())
+    assert final.count("BroadcastHashJoin") >= 2, final
+    assert "SortMergeJoin" not in final, final
 
 
 def test_fetch_kernel_paces_same_host_by_crawl_delay():
@@ -1860,17 +1900,15 @@ def test_validated_kernel_counts_unread_input():
     assert sum(len(p) for p in out) == 3
 
 
-def test_replay_shuffle_path_equals_broadcast(spark, tmp_path,
-                                              monkeypatch):
-    """The broadcast→shuffle switch point (VERDICT r6 #3): when the
-    footer row estimate cannot prove the replay event window / aux
-    tables small, every hint is dropped and the joins plan as shuffles
-    — results must be identical to the broadcast path. Forces the
-    shuffled path via BROADCAST_MAX_EST_ROWS=0 plus
-    autoBroadcastJoinThreshold=-1 (which also stops AQE re-converting
-    to broadcast), runs a FULL crawl on each path, and pins equality
-    of the fetched ledger (crawl order), the reconstructed frontier,
-    and the folded host_stats."""
+def test_replay_shuffle_path_equals_broadcast(spark, tmp_path):
+    """The replay and host_stats joins carry no hints, so the engine's
+    size thresholds alone pick broadcast or shuffle. Past them both
+    plan as shuffles, and the results must be identical to the
+    broadcast path. Forces the shuffled path with Spark conf only
+    (static and AQE autoBroadcastJoinThreshold=-1, so AQE cannot
+    re-convert to broadcast), runs a FULL crawl on each path, and
+    pins equality of the fetched ledger (crawl order), the
+    reconstructed frontier, and the folded host_stats."""
     from jsonextract_spark.crawl import pipeline as P
     from jsonextract_spark.crawl.pipeline import (crawl_order,
                                                   run_crawl)
@@ -1880,9 +1918,11 @@ def test_replay_shuffle_path_equals_broadcast(spark, tmp_path,
     wa = str(tmp_path / "wh_bcast")
     run_crawl(spark, wa, **kw)
 
-    monkeypatch.setattr(P, "BROADCAST_MAX_EST_ROWS", 0)
-    thr = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    keys = ("spark.sql.autoBroadcastJoinThreshold",
+            "spark.sql.adaptive.autoBroadcastJoinThreshold")
+    saved = {k: spark.conf.get(k, None) for k in keys}
+    for k in keys:
+        spark.conf.set(k, "-1")
     try:
         wb = str(tmp_path / "wh_shuffle")
         run_crawl(spark, wb, **kw)
@@ -1904,32 +1944,62 @@ def test_replay_shuffle_path_equals_broadcast(spark, tmp_path,
         assert orows(P.load_host_stats(spark, whb, last), hcols) == \
             orows(P.load_host_stats(spark, wha, last), hcols)
 
-        # plan pin: with the hint off and auto-broadcast disabled the
-        # replay join really is a shuffle join, not a broadcast
+        # plan pin: with auto-broadcast disabled the replay join
+        # really is a shuffle join, not a broadcast
         plan = (P.load_frontier(spark, whb, last)
                 ._jdf.queryExecution().sparkPlan().toString())
         assert "BroadcastHashJoin" not in plan, plan
         assert "SortMergeJoin" in plan or "ShuffledHashJoin" in plan, \
             plan
     finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", thr)
+        for k, v in saved.items():
+            if v is None:
+                spark.conf.unset(k)
+            else:
+                spark.conf.set(k, v)
 
 
 def test_replay_broadcast_hint_on_small_windows(spark, tmp_path):
-    """Default path: at test scale the footer estimate proves the
-    event window small, so the replay joins carry the broadcast hint
-    (no frontier shuffle during reconstruction)."""
+    """Default path: the replay and pop joins carry no hints (only the
+    synthetic robots table broadcasts itself), and at test scale
+    Spark's size-based planner broadcasts the small sides on its own.
+    The replay anti-join plans as a broadcast up front (no frontier
+    shuffle during reconstruction), and in the FINAL adaptive plan of
+    the pop (read after an action) the replay anti-join and the pop's
+    robots and host_stats joins are all broadcast hash joins, with no
+    sort-merge join anywhere."""
+    import re
+    import time
+
     from jsonextract_spark.crawl import pipeline as P
     from jsonextract_spark.crawl.pipeline import run_crawl
+    from jsonextract_spark.crawl.scheduler import pop_batch
     from jsonextract_spark.crawl.tables import Warehouse
 
     wdir = str(tmp_path / "wh_hint")
     run_crawl(spark, wdir, rounds=2, n_seeds=20, host_budget=3,
               batch_size=60)
     wh = Warehouse(wdir)
-    plan = (P.load_frontier(spark, wh, wh.last_committed_round())
+    last = wh.last_committed_round()
+    plan = (P.load_frontier(spark, wh, last)
             ._jdf.queryExecution().sparkPlan().toString())
     assert "BroadcastHashJoin" in plan, plan
+
+    batch = pop_batch(P.load_frontier(spark, wh, last),
+                      P.make_robots(spark), 3, 60,
+                      host_stats=P.load_host_stats(spark, wh, last),
+                      now_ts=time.time())
+    assert batch.collect()
+    adaptive = batch._jdf.queryExecution().executedPlan()
+    assert adaptive.toString().startswith(
+        "AdaptiveSparkPlan isFinalPlan=true"), adaptive.toString()
+    final = adaptive.finalPhysicalPlan().toString()
+    assert "SortMergeJoin" not in final, final
+    joins = re.findall(r"BroadcastHashJoin \[(\w+)#\d+L?\], "
+                       r"\[\w+#\d+L?\], (\w+)", final)
+    assert sorted(joins) == [("host", "LeftOuter"),
+                             ("host", "LeftOuter"),
+                             ("url_hash", "LeftAnti")], final
 
 
 def test_robots_cache_read_is_pure(spark, tmp_path):
@@ -1969,56 +2039,6 @@ def test_robots_cache_read_is_pure(spark, tmp_path):
     assert os.path.isdir(os.path.join(cache, "delta=good"))
     got2 = provider._load_cache(spark, cache)
     assert [r["host"] for r in got2.collect()] == ["cached.example"]
-
-
-def test_ledger_event_estimate_matches_footer_truth(spark, tmp_path):
-    """The broadcast-switch row estimates read the round LEDGER
-    (additions = new + deferred, removals = the r7 ``batch`` field)
-    instead of scanning parquet footers every round. On a post-r7
-    warehouse the two must agree EXACTLY — additions are precisely the
-    frontier_delta rows and ``batch`` is precisely the ledger rows —
-    so any drift between the metrics and the written state is a
-    correctness signal, not an estimation error. Also pins the
-    frontier upper bound."""
-    from jsonextract_spark.crawl import pipeline as P
-    from jsonextract_spark.crawl.tables import Warehouse
-
-    wdir = str(tmp_path / "w_est")
-    P.run_crawl(spark, wdir, rounds=3, n_seeds=25, host_budget=3,
-                batch_size=60)
-    wh = Warehouse(wdir)
-    last = wh.last_committed_round()
-    _, add_paths, rm_paths, base_round = P._frontier_sources(
-        spark, wh, last)
-    ledger_est = P._est_replay_events(wh, base_round, last,
-                                      add_paths, rm_paths)
-    footer_truth = (P._parquet_rows(add_paths)
-                    + P._parquet_rows(rm_paths))
-    assert ledger_est == footer_truth > 0
-
-    # the frontier bound is an upper bound on the actual pending rows
-    pending = P.load_frontier(spark, wh, last).count()
-    assert P._est_frontier_upper(wh) >= pending
-
-
-def test_parquet_rows_empty_listing_is_unbounded(tmp_path):
-    """ADVICE r8: a path listing NO parquet files (missing dir, or a
-    non-local URI os.walk can't see) must estimate UNBOUNDED — "found
-    nothing" dropping the broadcast hint is safe (AQE recovers), while
-    returning 0 would force-broadcast a table of unknown true size,
-    the exact OOM the estimate exists to prevent."""
-    from jsonextract_spark.crawl import pipeline as P
-
-    assert P._parquet_rows([str(tmp_path / "missing")]) \
-        > P.BROADCAST_MAX_EST_ROWS
-    empty = tmp_path / "empty"
-    empty.mkdir()
-    assert P._parquet_rows([str(empty)]) > P.BROADCAST_MAX_EST_ROWS
-    # a dir with a real parquet file still counts exactly
-    import pyarrow as pa, pyarrow.parquet as pq
-    pq.write_table(pa.table({"x": [1, 2, 3]}),
-                   str(empty / "part-0.parquet"))
-    assert P._parquet_rows([str(empty)]) == 3
 
 
 def test_drop_uncommitted_refuses_committed_round(tmp_path):
@@ -2075,6 +2095,8 @@ def test_long_horizon_replay_and_resume(spark, tmp_path):
     an interrupted crawl at round 31 — crossing the round-32
     compaction inside the resumed portion — produces a byte-identical
     crawl ledger and frontier/seen state to the uninterrupted run."""
+    import re
+
     from jsonextract_spark.crawl import pipeline as P
     from jsonextract_spark.crawl.pipeline import crawl_order, run_crawl
     from jsonextract_spark.crawl.tables import Warehouse
@@ -2085,20 +2107,31 @@ def test_long_horizon_replay_and_resume(spark, tmp_path):
     run_crawl(spark, wa, rounds=33, **cfg)
     wha = Warehouse(wa)
 
+    def replay_sources(upto):
+        # {table: rounds} the frontier replay scans, from its plan's
+        # input files: the base, addition deltas and removal ledgers
+        src = {}
+        for f in P.load_frontier(spark, wha, upto).inputFiles():
+            m = re.search(r"/(frontier|frontier_delta|fetched)/round=(\d+)/",
+                          f)
+            src.setdefault(m.group(1), set()).add(int(m.group(2)))
+        return src
+
     # (a) bounded replay window across generations
     for upto, max_deltas in ((15, 15), (24, 8), (31, 15), (33, 1)):
-        base, adds, rms, base_round = P._frontier_sources(
-            spark, wha, upto)
-        assert base is not None
+        src = replay_sources(upto)
+        assert len(src.get("frontier", ())) == 1, (upto, src)
+        adds = src.get("frontier_delta", set())
+        rms = src.get("fetched", set())
         assert len(adds) <= max_deltas, (upto, len(adds))
         assert len(rms) <= max_deltas + 1, (upto, len(rms))
         # the base is always the newest generation boundary
+        (base_round,) = src["frontier"]
         assert base_round == (upto // 16) * 16 or base_round == 0
     # generation 2 (upto=24) reads FEWER sources than the
     # pre-compaction peak (upto=15) even though 9 more rounds ran
-    _, adds15, _, _ = P._frontier_sources(spark, wha, 15)
-    _, adds24, _, _ = P._frontier_sources(spark, wha, 24)
-    assert len(adds24) < len(adds15)
+    assert len(replay_sources(24)["frontier_delta"]) \
+        < len(replay_sources(15)["frontier_delta"])
 
     # (b) interrupted-at-31 + resume == uninterrupted
     wb = str(tmp_path / "w_resume")
@@ -2120,17 +2153,6 @@ def test_long_horizon_replay_and_resume(spark, tmp_path):
     sb = sorted(r["url_hash"]
                 for r in P.load_seen(spark, whb, 33).collect())
     assert sa == sb and len(sa) > len(fa) == len(set(fa))
-
-
-def test_parquet_rows_empty_list_is_known_zero(tmp_path):
-    """Review r8: an empty PATHS LIST is the caller's own 'no sources'
-    determination (known 0) — only a present path that lists no files
-    is unknown (unbounded)."""
-    from jsonextract_spark.crawl import pipeline as P
-
-    assert P._parquet_rows([]) == 0
-    assert P._parquet_rows([str(tmp_path / "gone")]) \
-        > P.BROADCAST_MAX_EST_ROWS
 
 
 def test_live_crawl_follows_real_anchors(spark, tmp_path):
