@@ -16,6 +16,9 @@ crawl/      frontier, seen-set, robots, scheduler, batch pipeline, synth corpus.
 datapipe/   dedup (exact/minhash/simhash), ANN similarity, text stats,
             multimodal column plumbing.
 session.py  tuned SparkSession builder.
+worker_daemon.py
+            Python worker daemon for local masters: zipimporters re-read
+            their archive only when it changed, not before every task.
 """
 
 __version__ = "0.1.0"

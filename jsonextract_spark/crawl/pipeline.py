@@ -901,18 +901,17 @@ def run_round(spark: SparkSession, wh: Warehouse, round_no: int,
     # CollectMetrics observations (no separate materializing count(),
     # no driver re-read of the written is_new=1 partition). ``fresh``
     # stays cached: both the frontier write and the filter merge read
-    # it, and since r10 they run CONCURRENTLY — the filter merge
-    # depends only on ``fresh``, whose cache blocks are computed once
-    # whichever job asks first (per-block cache locks make the other
-    # job wait for, then reuse, the same block; the gate's internal
-    # shuffle stages are shared across the two jobs because both plans
-    # reference the same InMemoryRelation lineage). The round's wall
-    # clock then pays max(frontier write, filter merge), not their
-    # sum. try/finally: a failed write must not leak still-running
-    # background writes for a round that will never commit, nor the
-    # round's cached RDD blocks — every side thread is joined and the
-    # caches dropped on the error path before the exception
-    # propagates.
+    # it, and since r10 they run CONCURRENTLY, so the round's wall
+    # clock pays max(frontier write, filter merge), not their sum. The
+    # cache does NOT share the gate's work between the two jobs: each
+    # job runs the gate's shuffle stages on its own (the
+    # candidate-identity mapInPandas and the Bloom cogroup, both Python
+    # stages), so every round computes the gate twice; only deleting
+    # the filter merge removes the second copy. try/finally: a failed
+    # write must not leak still-running background writes for a round
+    # that will never commit, nor the round's cached RDD blocks — every
+    # side thread is joined and the caches dropped on the error path
+    # before the exception propagates.
     side_err: list[BaseException] = []
     side_threads: list = []
     side_actions: list[int] = []

@@ -82,20 +82,6 @@ def _tmp_dir_name(final: str) -> str:
     return f"{final}.tmp-{uuid.uuid4().hex[:12]}"
 
 
-def atomic_parquet_overwrite(df: DataFrame, final: str):
-    """Publish ``df`` at ``final`` with the warehouse's tmp-write +
-    atomic-rename discipline — for side tables that live outside the
-    round-versioned layout (e.g. the robots cross-round cache), so every
-    persisted state table shares one publish mechanism. NOTE: directory
-    rename is atomic on POSIX filesystems, not on object stores — the
-    production swap point is an Iceberg table commit, same as
-    ``Warehouse.save``."""
-    tmp = _tmp_dir_name(final)
-    df.write.mode("overwrite").parquet(tmp)
-    if os.path.exists(final):
-        shutil.rmtree(final)
-    os.replace(tmp, final)
-
 FRONTIER_SCHEMA = T.StructType([
     T.StructField("url", T.StringType()),
     T.StructField("url_hash", T.LongType()),

@@ -367,10 +367,6 @@ def _decode_image_stream(bits: _Bits, xsize: int, ysize: int,
     return img
 
 
-def _avg2(a, b):
-    return (a + b) >> 1
-
-
 def _channels(px: int):
     return ((px >> 24) & 0xFF, (px >> 16) & 0xFF, (px >> 8) & 0xFF,
             px & 0xFF)
@@ -449,14 +445,6 @@ def _add_px(residual: int, pred: int) -> int:
         out |= ((((residual >> sh) & 0xFF) + ((pred >> sh) & 0xFF))
                 & 0xFF) << sh
     return out
-
-
-def _ct_delta(t: int, c: int) -> int:
-    """Cross-color transform delta: (int8(t) * int8(c)) >> 5, both
-    operands sign-extended, arithmetic shift (spec)."""
-    ts = t - 256 if t >= 128 else t
-    cs = c - 256 if c >= 128 else c
-    return (ts * cs) >> 5
 
 
 def _apply_inverse(tr: tuple, img: np.ndarray) -> np.ndarray:

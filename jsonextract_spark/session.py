@@ -4,6 +4,14 @@ Defaults are sized for the sandbox (local[N], 32 cores) but every knob is
 the one you'd set on a real cluster: AQE on (skew joins, coalesced
 shuffle), Arrow on (all our extraction UDFs are Arrow-batched), and a
 shuffle partition count that tracks parallelism instead of the static 200.
+
+Local masters (``local``, ``local[N]``) also start Python workers from
+``jsonextract_spark.worker_daemon``, which stops every task from
+re-reading ``pyspark.zip``'s directory (see that module). Other masters
+keep PySpark's daemon: there the package reaches workers through
+``--py-files`` only after the daemon has started. A cluster that has the
+package importable when the daemon starts can set the same
+``spark.python.daemon.module``.
 """
 
 from __future__ import annotations
@@ -49,6 +57,11 @@ def build_session(app: str = "jsonextract_spark",
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.ui.enabled", "false")
     )
+    if master == "local" or master.startswith("local["):
+        # the package root is on PYTHONPATH (above), so the daemon
+        # process can import it
+        b = b.config("spark.python.daemon.module",
+                     "jsonextract_spark.worker_daemon")
     for k, v in (extra_conf or {}).items():
         b = b.config(k, v)
     return b.getOrCreate()
