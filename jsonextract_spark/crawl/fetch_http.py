@@ -266,8 +266,9 @@ def make_robots_provider(user_agent: str | None = None,
     production behavior. Without ``cache_path`` the per-round fetch
     set is still only the distinct frontier hosts (executor-side,
     never a driver loop), with a per-worker-process parser cache.
-    (Caches from the pre-delta single-dir layouts are cleared and
-    rebuilt — one extra robots round, no stale reads.)"""
+    (Files of the pre-delta single-dir layouts are ignored, not
+    cleared: only ``delta=`` dirs are read, so such a cache starts
+    empty — one extra robots round, no stale reads.)"""
     ua = user_agent or _HEADERS["User-Agent"]
 
     def make_kernel(refresh: bool):
@@ -488,13 +489,11 @@ def _make_pacer():
 
 
 def make_fetch_extract_kernel(timeout_sec: float = 30.0,
-                              delay_sec: float = 0.0,
                               max_bytes: int = 4 << 20,
                               respect_robots: bool = True,
                               user_agent: str | None = None,
                               default_delay_sec: float = DEFAULT_POLITENESS_FLOOR_SEC,
-                              hot_hosts=None,
-                              discover_hrefs: bool = True):
+                              hot_hosts=None):
     """Compose the real HTTP fetcher with extraction + link discovery
     into the pipeline's fused kernel shape (synth.FETCH_EXTRACT_SCHEMA),
     so ``run_crawl(..., fetch_kernel=make_fetch_extract_kernel(...))``
@@ -502,12 +501,12 @@ def make_fetch_extract_kernel(timeout_sec: float = 30.0,
     yield a row with n_objects=0 and no links (the crawl keeps going;
     the error detail lives in the fetched bytes=0 signal).
 
-    Link discovery (``discover_hrefs``, default ON) is the union of
-    the extracted JSON objects' ``links``/``href`` values (the
-    reference-shaped channel the synthetic corpus uses) and every real
-    ``<a href>`` on the page (datapipe/html_text.extract_links —
-    resolved against the page URL, fragments stripped, non-
-    navigational schemes dropped), order-preserving first-seen dedup.
+    Link discovery is the union of the extracted JSON objects'
+    ``links``/``href`` values (the reference-shaped channel the
+    synthetic corpus uses) and every real ``<a href>`` on the page
+    (datapipe/html_text.extract_links — resolved against the page URL,
+    fragments stripped, non-navigational schemes dropped),
+    order-preserving first-seen dedup.
 
     ``respect_robots`` (default ON) checks each URL against its host's
     robots.txt per-path rules immediately before the GET; disallowed
@@ -621,8 +620,6 @@ def make_fetch_extract_kernel(timeout_sec: float = 30.0,
                         # pipeline re-frontiers them with a bounded
                         # attempts count; 4xx is a definitive answer
                         retry.append(_status == 0 or _status >= 500)
-                        if delay_sec:
-                            time.sleep(delay_sec)
                     sizes.append(len(body))  # bytes fetched, not chars
                     texts.append(body.decode("utf-8", "replace"))
                     stamps.append(time.time())
@@ -633,18 +630,15 @@ def make_fetch_extract_kernel(timeout_sec: float = 30.0,
                         writer.add(url, datetime(1970, 1, 1) + timedelta(
                             microseconds=int(stamps[-1] * 1e6)), body)
                 objs = [extract_budgeted(t) for t in texts]
-                if discover_hrefs:
-                    all_links = []
-                    for u, t, o in zip(bases, texts, objs):
-                        merged = _links_from_objs(o)
-                        seen_l = set(merged)
-                        for h in page_hrefs(t, u):
-                            if h not in seen_l:
-                                seen_l.add(h)
-                                merged.append(h)
-                        all_links.append(merged)
-                else:
-                    all_links = [_links_from_objs(o) for o in objs]
+                all_links = []
+                for u, t, o in zip(bases, texts, objs):
+                    merged = _links_from_objs(o)
+                    seen_l = set(merged)
+                    for h in page_hrefs(t, u):
+                        if h not in seen_l:
+                            seen_l.add(h)
+                            merged.append(h)
+                    all_links.append(merged)
                 yield pd.DataFrame({
                     "url": pdf["url"],
                     # ledger carries the frontier key: the popped rows
@@ -682,17 +676,18 @@ def make_fetch_extract_kernel(timeout_sec: float = 30.0,
     return _build()
 
 
-def make_fetcher(timeout_sec: float = 60.0, delay_sec: float = 0.0,
+def make_fetcher(timeout_sec: float = 60.0,
                  max_bytes: int = 4 << 20,
                  respect_robots: bool = True,
                  user_agent: str | None = None,
                  default_delay_sec: float = DEFAULT_POLITENESS_FLOOR_SEC,
                  hot_hosts=None):
-    """Build the mapInPandas kernel. ``delay_sec`` spaces requests inside
-    a task (politeness within the host bucket). ``respect_robots``
-    (default ON) checks per-path robots rules before each GET; blocked
-    URLs yield a status-0 row with err='robots' (this surface reports
-    per-URL outcomes, unlike the fused crawl kernel which drops them).
+    """Build the mapInPandas kernel. ``respect_robots`` (default ON)
+    checks per-path robots rules before each GET; blocked URLs yield a
+    status-0 row with err='robots' (this surface reports per-URL status
+    and error, where the fused crawl kernel records only its
+    ``blocked``/``retry`` flags). Requests are spaced only by the
+    per-origin pacer.
     ``default_delay_sec``/``hot_hosts``: per-origin pacing floor when
     robots.txt is silent about rate (an explicit ask wins; hot hosts
     are exempt) — same contract as ``make_fetch_extract_kernel``.
@@ -734,8 +729,6 @@ def make_fetcher(timeout_sec: float = 60.0, delay_sec: float = 0.0,
                 rows["html"].append(body)
                 rows["text"].append(body.decode("utf-8", "replace"))
                 rows["err"].append(err)
-                if delay_sec:
-                    time.sleep(delay_sec)
             yield pd.DataFrame(rows)
 
     return fetch

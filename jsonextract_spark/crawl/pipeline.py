@@ -21,6 +21,7 @@ import shutil
 import time
 import uuid
 
+from pyspark import InheritableThread
 from pyspark.sql import (DataFrame, Observation, SparkSession,
                          functions as F, types as T)
 
@@ -181,15 +182,13 @@ def load_host_stats(spark: SparkSession, wh: Warehouse,
     """Cumulative per-host (crawled count, newest fetch ts) up to
     ``upto_round``, or None when nothing has been fetched yet.
 
-    Stored as append-only per-round DELTAS (the same discipline as the
-    seen set and the robots cache): each fetching round writes only ITS
-    hosts' increments as ``host_stats_delta``, and every COMPACT_EVERY
-    rounds the running totals are folded into a ``host_stats_compact``
-    checkpoint — a full cumulative rewrite per round would be O(total
-    hosts ever crawled) write I/O even when the round touched 50 hosts.
-    Reading is a bounded union: the newest checkpoint plus the deltas
-    after it — at most COMPACT_EVERY+1 sources once the first
-    checkpoint exists, regardless of crawl age."""
+    Derived from the ``fetched`` ledger every round already writes:
+    per host, the count and newest ``warc_ts`` of its non-blocked
+    rows — no second copy of the same facts is stored per round.
+    Every COMPACT_EVERY rounds the running totals are folded into a
+    ``host_stats_compact`` checkpoint, so a read aggregates the newest
+    checkpoint plus at most COMPACT_EVERY ledger rounds after it,
+    regardless of crawl age."""
     base = None
     for r in range(upto_round, -1, -1):
         # bounded scan: once compaction has run, a checkpoint exists
@@ -199,30 +198,27 @@ def load_host_stats(spark: SparkSession, wh: Warehouse,
             base = r
             break
     start = base + 1 if base is not None else 1
-    delta_paths = [wh._path("host_stats_delta", r)
-                   for r in range(start, upto_round + 1)
-                   if wh.exists("host_stats_delta", r)]
-    parts = []
-    if base is not None:
-        b = wh.load(spark, "host_stats_compact", base)
-        parts.append(b.select("host",
-                              F.col("crawled").cast("double")
-                              .alias("crawled"), "last_fetch_ts"))
-    if delta_paths:
-        parts.append(spark.read.parquet(*delta_paths)
-                     .select("host", "crawled", "last_fetch_ts"))
-    if not parts:
-        return None
-    if len(parts) == 1 and len(delta_paths) <= 1:
-        # single source = a checkpoint or ONE round's delta — all written host-distinct (their writers
-        # aggregate) — so the re-aggregation would be a no-op exchange
-        # + agg per round (r10: this is every round immediately after
-        # a compaction, and the first fetching round of a crawl)
-        return parts[0]
-    df = parts[0]
-    for p in parts[1:]:
-        df = df.unionByName(p)
-    return (df.groupBy("host")
+    ledger_paths = [wh._path("fetched", r)
+                    for r in range(start, upto_round + 1)
+                    if wh.exists("fetched", r)]
+    ckpt = (wh.load(spark, "host_stats_compact", base)
+            .select("host", F.col("crawled").cast("double")
+                    .alias("crawled"), "last_fetch_ts")
+            if base is not None else None)
+    if not ledger_paths:
+        # None, or a checkpoint alone (already host-distinct)
+        return ckpt
+    # one row per fetch, weighted 1.0: the sum below counts them
+    # (integer-valued doubles, so the sum is exact) and folds them
+    # into the checkpoint's totals in the same aggregate
+    rows = (spark.read.parquet(*ledger_paths)
+            .filter(~F.col("blocked"))
+            .select("host", F.lit(1.0).alias("crawled"),
+                    F.col("warc_ts").cast("double")
+                    .alias("last_fetch_ts")))
+    if ckpt is not None:
+        rows = ckpt.unionByName(rows)
+    return (rows.groupBy("host")
             .agg(F.sum("crawled").alias("crawled"),
                  F.max("last_fetch_ts").alias("last_fetch_ts")))
 
@@ -231,9 +227,9 @@ def _drop_uncommitted_round_state(wh: Warehouse, round_no: int):
     """Delete state-table debris a FAILED earlier attempt of
     ``round_no`` may have left (the round died after some writes but
     before its ledger commit — a committed round is never re-entered).
-    The non-empty path overwrites ``fetched``/``frontier_delta``/
-    ``host_stats_delta`` atomically anyway, but the EMPTY path writes
-    none of them, and the loaders consult directory existence: a
+    The non-empty path overwrites ``fetched``/``frontier_delta``
+    atomically anyway, but the EMPTY path writes no
+    ``frontier_delta``, and the loaders consult directory existence: a
     surviving ``frontier_delta`` would commit phantom additions (and
     phantom seen entries) with the crashed attempt's removals erased,
     and a surviving full ``frontier`` base from a crashed
@@ -242,7 +238,8 @@ def _drop_uncommitted_round_state(wh: Warehouse, round_no: int):
     debris matters too: if the re-run pops a DIFFERENT batch (the
     crawl-delay eligibility gate is clock-dependent) or commits empty,
     the crashed attempt's ledger rows become phantom removals in later
-    rounds' frontier replay and phantom pages in crawl_order/recrawl —
+    rounds' frontier replay, phantom fetches in ``load_host_stats``
+    and phantom pages in crawl_order/recrawl —
     the non-empty path overwrites it atomically, but only with the
     same-shape write. Compaction checkpoints get the same treatment at
     their own write sites (``_drop_stale_compact``), and
@@ -263,8 +260,7 @@ def _drop_uncommitted_round_state(wh: Warehouse, round_no: int):
         raise ValueError(
             f"refusing to drop state for round {round_no}: the ledger "
             f"shows it committed (stale round number at the call site?)")
-    for table in ("frontier", "frontier_delta", "host_stats_delta",
-                  "fetched"):
+    for table in ("frontier", "frontier_delta", "fetched"):
         if wh.exists(table, round_no):
             shutil.rmtree(wh._path(table, round_no))
 
@@ -328,13 +324,12 @@ def _drop_stale_compact(wh: Warehouse, table: str, round_no: int):
 
 def maybe_compact_host_stats(spark: SparkSession, wh: Warehouse,
                              round_no: int) -> bool:
-    """Every COMPACT_EVERY rounds, fold the host_stats base + deltas
-    into one ``host_stats_compact`` checkpoint (amortized 1/16 extra
-    write per round) so ``load_host_stats`` unions a bounded source
-    list no matter how old the crawl is. Deltas before the checkpoint
-    are left in place — the loader never reads past the newest
-    checkpoint, and keeping them preserves resume-to-earlier-round
-    semantics."""
+    """Every COMPACT_EVERY rounds, fold the previous checkpoint + the
+    ledger rounds since into one ``host_stats_compact`` checkpoint
+    (amortized 1/16 extra write per round) so ``load_host_stats``
+    reads a bounded round range no matter how old the crawl is.
+    Reads the ledger only, so it can run once this round's ``fetched``
+    write (A1) has landed."""
     if round_no <= 0 or round_no % COMPACT_EVERY != 0:
         return False
     _drop_stale_compact(wh, "host_stats_compact", round_no)
@@ -514,8 +509,6 @@ def init_state(spark: SparkSession, wh: Warehouse, n_seeds: int,
     # cached plan instead of the filter build waiting to re-read the
     # just-written parquet (r10; same overlap pattern as run_round's
     # side writes).
-    from pyspark import InheritableThread
-
     errs: list[BaseException] = []
 
     def _save_frontier():
@@ -579,39 +572,34 @@ def run_round(spark: SparkSession, wh: Warehouse, round_no: int,
     kernel exposing ``bind_archive`` (both built-in kernels do).
 
     Fixed Spark-ACTION budget per non-empty round (recorded as the
-    ``spark_actions`` metric, counted at the call sites): FOUR — the
-    fused pop+fetch+extract ledger write, the frontier DELTA save
-    (this round's additions only, whose ``is_new=1`` slice doubles as
-    the seen delta; removals ride the ledger's url_hash column — see
-    ``load_frontier``), the host_stats DELTA save (this round's
-    per-host increments only — see ``load_host_stats``), and the
-    filter merge save — plus amortized compaction writes (frontier
-    base + seen + host_stats checkpoints) every COMPACT_EVERY rounds.
+    ``spark_actions`` metric, counted at the call sites): THREE — the
+    fused pop+fetch+extract ledger write (A1), the frontier DELTA save
+    (A2: this round's additions only, whose ``is_new=1`` slice doubles
+    as the seen delta; removals ride the ledger's url_hash column —
+    see ``load_frontier``), and the filter merge save (A4) — plus
+    amortized compaction writes (frontier base + seen + host_stats
+    checkpoints) every COMPACT_EVERY rounds. Host stats need no write
+    of their own: ``load_host_stats`` derives them from the ledger.
     Every per-round write is O(round output); the only O(total-state)
     writes are the amortized re-materializations. All scalar
     round metrics (batch size, objects, fetched/blocked/deferred
     splits, n_new) ride the first two writes for FREE via
     ``Dataset.observe`` — CollectMetrics nodes aggregate inside the
     write job itself, so there are no counting actions and no
-    driver-side re-reads of just-written parquet. host_stats is the
-    one grouped aggregate ``observe`` cannot express (observations are
-    scalar); it is a distributed groupBy over the round's CACHED fetch
-    output — at 10^10-URL scale the host table is millions of rows,
-    which is exactly why it must not be a driver-side single-node
-    re-read (the pre-r5 DuckDB form). The separate ``spark_jobs``
-    metric is what the Spark scheduler counted for the round's job
-    group — with AQE enabled that is one job per materialized query
-    stage, NOT the action count. The ``sec_*`` metrics split the
-    round's wall clock at its action boundaries:
+    driver-side re-reads of just-written parquet. The separate
+    ``spark_jobs`` metric is what the Spark scheduler counted for the
+    round's job group — with AQE enabled that is one job per
+    materialized query stage, NOT the action count. The ``sec_*``
+    metrics split the round's wall clock at its action boundaries:
     ``sec_pop_fetch_extract`` is the ledger write (A1);
     ``sec_driver_plan`` is the driver building the link-discovery,
-    gate and delta plans and starting the host_stats thread (no
-    Spark action runs in it); ``sec_frontier_seen`` is the
-    frontier-delta write (A2), which runs the seen gate; and
-    ``sec_filter`` is the wait for the side writes (host_stats, filter
-    merge, compactions). Driver-side action latency is what
-    bounds small-round throughput; at production batch sizes the same
-    four actions amortize over millions of URLs."""
+    gate and delta plans (no Spark action runs in it);
+    ``sec_frontier_seen`` is the frontier-delta write (A2), which runs
+    the seen gate; and ``sec_filter`` is the wait for the filter merge
+    and, on compaction rounds, the compactions. Driver-side action
+    latency is what bounds small-round throughput; at production
+    batch sizes the same three actions amortize over millions of
+    URLs."""
     t0 = time.time()
     sc = spark.sparkContext
     # unique per call: a second crawl in the same session must not count
@@ -749,8 +737,8 @@ def run_round(spark: SparkSession, wh: Warehouse, round_no: int,
     t_fetch = time.time()
     if n_batch == 0:
         # nothing fetched: no state to write — the frontier/host_stats
-        # loaders read a round RANGE and simply skip rounds without a
-        # delta, so an empty round carries state forward for free
+        # loaders read a round RANGE, and an empty round adds no delta
+        # and no ledger rows, so it carries state forward for free
         if filters is not None:
             wh.copy_forward("seen_filter", prev, round_no)
         # keep the compaction cadences even through empty stretches so
@@ -848,53 +836,6 @@ def run_round(spark: SparkSession, wh: Warehouse, round_no: int,
                       .repartition(max(
                           spark.sparkContext.defaultParallelism // 8, 1)))
 
-    # per-host fetch counts + newest fetch timestamp drive next
-    # round's budget scoring and crawl-delay gate. This is a grouped
-    # aggregate (``observe`` is scalar-only), computed as a DISTRIBUTED
-    # groupBy over the round's cached fetch output — at 10^10-URL scale
-    # the host table is millions of rows, so a driver-side single-node
-    # aggregation (the pre-r5 DuckDB form) would be the round's scale
-    # bottleneck. Since r6 the round writes ONLY ITS OWN hosts'
-    # increments as an append-only ``host_stats_delta`` (the pre-r6
-    # form rewrote the full cumulative table every round — O(total
-    # hosts ever) write I/O per round); running totals are folded into
-    # a checkpoint every COMPACT_EVERY rounds (load_host_stats sums
-    # checkpoint+deltas on read). The write depends ONLY on the
-    # already-cached `enriched`, so it runs on a side thread
-    # CONCURRENTLY with the frontier and filter writes below: the
-    # round's wall clock pays max(), not sum(), of the independent
-    # actions. InheritableThread, not threading.Thread: under
-    # PySpark's pinned-thread mode (the default here) a raw Python
-    # thread neither inherits the round's job-group local property
-    # (its jobs would escape the spark_jobs counter and any group
-    # cancellation) nor cleans up its paired JVM thread.
-    from pyspark import InheritableThread
-
-    host_delta = (enriched.filter(~F.col("blocked"))
-                  .groupBy("host")
-                  .agg(F.count(F.lit(1)).cast("double").alias("crawled"),
-                       F.max(F.col("warc_ts").cast("double"))
-                       .alias("last_fetch_ts")))
-    host_err: list[BaseException] = []
-    host_extra_actions: list[int] = []
-
-    def _save_host_stats():
-        try:
-            sc.setJobDescription(f"r{round_no} A3 host_stats delta")
-            wh.save(host_delta, "host_stats_delta", round_no,
-                    rebalance=True)
-            # amortized checkpoint fold (reads the just-written delta
-            # from disk, so it must follow the save)
-            if maybe_compact_host_stats(spark, wh, round_no):
-                host_extra_actions.append(1)
-        except BaseException as e:  # re-raised on the round thread
-            host_err.append(e)
-
-    host_thread = InheritableThread(target=_save_host_stats,
-                                    name=f"host-stats-r{round_no}")
-    host_thread.start()
-    n_actions += 1
-
     t_links = time.time()
     # ONE write job runs the whole gate pipeline and publishes the
     # frontier; n_new and n_deferred ride the SAME action as
@@ -911,7 +852,11 @@ def run_round(spark: SparkSession, wh: Warehouse, round_no: int,
     # write must not leak still-running background writes for a round
     # that will never commit, nor the round's cached RDD blocks — every
     # side thread is joined and the caches dropped on the error path
-    # before the exception propagates.
+    # before the exception propagates. InheritableThread, not
+    # threading.Thread: under PySpark's pinned-thread mode (the default
+    # here) a raw Python thread neither inherits the round's job-group
+    # local property (its jobs would escape the spark_jobs counter and
+    # any group cancellation) nor cleans up its paired JVM thread.
     side_err: list[BaseException] = []
     side_threads: list = []
     side_actions: list[int] = []
@@ -952,31 +897,31 @@ def run_round(spark: SparkSession, wh: Warehouse, round_no: int,
         t_frontier = time.time()
 
         # base re-materializations must follow the delta write (the
-        # reconstructed views include this round's events); the seen
-        # and frontier compactions read/write disjoint tables, so on
-        # compact rounds they run concurrently with each other (and
-        # with the still-running filter merge / host_stats threads)
+        # reconstructed views include this round's events); the seen,
+        # host_stats and frontier compactions read/write disjoint
+        # tables, so on compact rounds they run concurrently with each
+        # other (and with the still-running filter merge)
         if round_no > 0 and round_no % COMPACT_EVERY == 0:
             _spawn(lambda: side_actions.append(
                 1 if maybe_compact_seen(spark, wh, round_no) else 0),
                 f"seen-compact-r{round_no}")
+            _spawn(lambda: side_actions.append(
+                1 if maybe_compact_host_stats(spark, wh, round_no)
+                else 0), f"host-stats-compact-r{round_no}")
             if maybe_compact_frontier(spark, wh, round_no):
                 n_actions += 1
     finally:
-        # all side writes (host_stats, filter merge, compactions) must
-        # be on disk before the ledger commit makes the round visible
-        # (resume loads them for the next round's gate)
-        host_thread.join()
+        # all side writes (filter merge, compactions) must be on disk
+        # before the ledger commit makes the round visible (resume
+        # loads them for the next round's gate)
         for th in side_threads:
             th.join()
         batch.unpersist()
         enriched.unpersist()
         fresh.unpersist()
-    if host_err:
-        raise host_err[0]
     if side_err:
         raise side_err[0]
-    n_actions += sum(host_extra_actions) + sum(side_actions)
+    n_actions += sum(side_actions)
     t_filter = time.time()
 
     n_jobs = len(sc.statusTracker().getJobIdsForGroup(job_group))
@@ -1027,8 +972,8 @@ def run_round(spark: SparkSession, wh: Warehouse, round_no: int,
 def _check_layout(wh: Warehouse):
     """Refuse to resume a warehouse in a layout this code does not
     read. There is one layout: Bloom ``seen_filter`` rows, seen deltas
-    in the frontier tables' ``is_new=1`` partitions, and host_stats as
-    deltas plus checkpoints. Reading anything else would go
+    in the frontier tables' ``is_new=1`` partitions, and host_stats
+    checkpoints plus the ledger. Reading anything else would go
     wrong silently — cuckoo bytes read as a Bloom bitset give false
     negatives, so seen URLs would be re-crawled."""
     problems = [f"round 0 seen_filter codec {r['filter_kind']!r}"

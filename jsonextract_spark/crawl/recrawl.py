@@ -78,7 +78,9 @@ def schedule_recrawl(spark, wh, after_round: int, max_age_sec: float,
     """
     import time as _time
 
-    from jsonextract_spark.functions.udfs import url_identity_udf
+    from jsonextract_spark.crawl.pipeline import (
+        _drop_stale_compact, _drop_uncommitted_round_state,
+        _with_url_identity, load_frontier)
 
     now_ts = _time.time() if now_ts is None else now_ts
     round_ts = {r["round"]: float(r["ts"])
@@ -107,33 +109,23 @@ def schedule_recrawl(spark, wh, after_round: int, max_age_sec: float,
     latest = (fetched.groupBy("url")
               .agg(F.max("fetched_ts").alias("fetched_ts"),
                    F.min("depth").alias("depth")))
-    stale = (latest
-             .withColumn("_uid", url_identity_udf(F.col("url")))
-             .filter(F.col("_uid.url").isNotNull())
-             .withColumn("url", F.col("_uid.url"))
-             .withColumn("url_hash", F.col("_uid.url_hash"))
-             .withColumn("host", F.col("_uid.host"))
-             .drop("_uid"))
-    refresh = refresh_candidates(stale, now_ts, max_age_sec,
-                                 refresh_boost).cache()
+    refresh = refresh_candidates(_with_url_identity(latest), now_ts,
+                                 max_age_sec, refresh_boost).cache()
     n = refresh.count()
     if n == 0:
         # nothing stale: no frontier rewrite, no round consumed
         refresh.unpersist()
         return 0
     rn = after_round + 1
-    from jsonextract_spark.crawl.pipeline import (
-        _drop_stale_compact, _drop_uncommitted_round_state, load_frontier)
-
     # if run_round(rn) crashed after some writes and the operator
     # resumes via schedule_recrawl instead of re-running the round,
     # committing rn would adopt the crashed attempt's debris: its
     # frontier_delta becomes the round's seen delta (URLs marked seen
-    # but absent from the reopened frontier — never crawled), its
-    # host_stats_delta double-counts into politeness stats, and its
-    # fetched rows surface in crawl_order / later recrawl ages. Same
-    # cleanup run_round performs at entry, plus the compaction
-    # checkpoints a crashed attempt of rn may have written.
+    # but absent from the reopened frontier — never crawled), and its
+    # fetched rows double-count into host stats and surface in
+    # crawl_order / later recrawl ages. Same cleanup run_round
+    # performs at entry, plus the compaction checkpoints a crashed
+    # attempt of rn may have written.
     _drop_uncommitted_round_state(wh, rn)
     for tbl in ("seen_compact", "host_stats_compact"):
         _drop_stale_compact(wh, tbl, rn)
@@ -155,7 +147,7 @@ def schedule_recrawl(spark, wh, after_round: int, max_age_sec: float,
         # filter miss short-circuits the anti-join as definitely-new,
         # so dropping them would re-enqueue links to reopened URLs
         # and duplicate their seen-delta rows. host_stats needs no
-        # carry: its loader reads a round RANGE of deltas.
+        # carry: its loader reads a round RANGE of the ledger.
         wh.copy_forward("seen_filter", after_round, rn)
     wh.commit_round(rn, {"phase": "recrawl", "reopened": n})
     refresh.unpersist()

@@ -196,9 +196,8 @@ def seed_from_sitemaps(spark, wh, after_round: int,
     from jsonextract_spark.crawl import seen as seen_mod
     from jsonextract_spark.crawl.pipeline import (
         _drop_stale_compact, _drop_uncommitted_round_state,
-        load_frontier, load_seen)
+        _with_url_identity, load_frontier, load_seen)
     from jsonextract_spark.crawl.scheduler import priority_of
-    from jsonextract_spark.functions.udfs import url_identity_udf
 
     if source_kernel is None:
         source_kernel = make_sitemap_source()
@@ -220,11 +219,8 @@ def seed_from_sitemaps(spark, wh, after_round: int,
             cand = cand.unionByName(led)
         hosts = cand.groupBy("host").agg(F.min("url").alias("url"))
     raw = hosts.mapInPandas(source_kernel, "host string, url string")
-    ident = (raw.withColumn("_uid", url_identity_udf(F.col("url")))
-             .filter(F.col("_uid.url").isNotNull())
-             .select(F.col("_uid.url").alias("url"),
-                     F.col("_uid.url_hash").alias("url_hash"),
-                     F.col("_uid.host").alias("host"))
+    ident = (_with_url_identity(raw)
+             .select("url", "url_hash", "host")
              .dropDuplicates(["url_hash"]))
     seen = load_seen(spark, wh, after_round)
     fresh = (ident.join(seen, "url_hash", "left_anti")

@@ -49,19 +49,15 @@ fetched      batch_id, rank, url, url_hash (the frontier key — the
              but stopped by the robots per-path check — never GET'd),
              retry (blocked by a NON-definitive verdict, i.e. robots
              5xx/unreachable: returned to the frontier, not consumed)
-host_stats_delta
-             host, crawled (THIS round's fetch count), last_fetch_ts
-             (epoch seconds of the host's newest real fetch this
-             round) — append-only per-round increments, a distributed
-             groupBy over the round's fetch output (millions of hosts
-             at 10^10-URL scale, so never a driver-side aggregate).
-             Cumulative totals are derived on read
-             (pipeline.load_host_stats: checkpoint + sum/max over the
-             deltas since) and folded into host_stats_compact every
-             pipeline.COMPACT_EVERY rounds; a full cumulative rewrite
-             per round would be O(total hosts ever) write I/O — the
-             same disease the seen-set/robots-cache delta layouts
-             cure.
+host_stats_compact
+             host, crawled (cumulative fetch count), last_fetch_ts
+             (epoch seconds of the host's newest real fetch) — a
+             checkpoint written every pipeline.COMPACT_EVERY rounds.
+             No per-round host table exists: the fetched ledger
+             already holds every fetch, so pipeline.load_host_stats
+             derives the cumulative totals as the newest checkpoint
+             plus count/max(warc_ts) over the non-blocked ledger rows
+             of the rounds after it.
 metrics      batch_id, key, value (incl. per-phase secs + spark_jobs)
 """
 

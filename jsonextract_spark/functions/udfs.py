@@ -108,9 +108,10 @@ def make_match_objects_udf(options: list[dict]):
 #
 # Most crawl URLs are ALREADY canonical (lowercase scheme+host, no port/
 # userinfo/fragment/percent-escapes/dot-segments) — for those,
-# canonicalize is the identity and the host is one regex group, so both
-# UDFs pre-screen the whole Arrow batch with vectorized pandas .str ops
-# and fall back to the per-row urlsplit path only for irregular rows.
+# canonicalize is the identity and the host is one regex group, so
+# url_identity_frame pre-screens the whole Arrow batch with vectorized
+# pandas .str ops and falls back to the per-row urlsplit path only for
+# irregular rows.
 # The fast-path predicate is deliberately CONSERVATIVE: it only accepts
 # URLs where identity is provable from the shape (any '%', '#', '?'
 # with empty query, port, userinfo, uppercase host, '//' or '/.' inside
@@ -133,17 +134,6 @@ def _fast_url_parts(urls: pd.Series) -> tuple[pd.Series, pd.DataFrame]:
     return (ext[0].notna() & ok_path), ext
 
 
-@F.pandas_udf(StringType())
-def canonicalize_url_udf(urls: pd.Series) -> pd.Series:
-    fast, _ext = _fast_url_parts(urls)
-    out = urls.where(fast)
-    slow = ~fast
-    if slow.any():
-        out[slow] = urls[slow].map(
-            lambda u: None if u is None else canonicalize_url(u))
-    return out
-
-
 def _murmur3_series(texts: pd.Series) -> pd.Series:
     """Batch-vectorized murmur3 over a string Series (null-preserving):
     one numpy pass per Arrow batch, no per-row Python hashing."""
@@ -155,22 +145,6 @@ def _murmur3_series(texts: pd.Series) -> pd.Series:
     if valid.any():
         vals = murmur3_64_batch(texts[valid].tolist())
         out.iloc[valid.nonzero()[0]] = [int(v) for v in vals]
-    return out
-
-
-@F.pandas_udf(LongType())
-def murmur3_64_udf(texts: pd.Series) -> pd.Series:
-    return _murmur3_series(texts)
-
-
-@F.pandas_udf(StringType())
-def url_host_udf(urls: pd.Series) -> pd.Series:
-    fast, ext = _fast_url_parts(urls)
-    out = ext[1].where(fast)
-    slow = ~fast
-    if slow.any():
-        out[slow] = urls[slow].map(
-            lambda u: None if u is None else url_host(u))
     return out
 
 

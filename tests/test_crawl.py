@@ -1141,55 +1141,67 @@ def test_seen_compaction_preserves_set(spark, tmp_path, monkeypatch):
     assert got == raw and len(got) > 10
 
 
-def test_host_stats_delta_is_o_round_hosts(spark, tmp_path, monkeypatch):
-    """host_stats is append-only per-round deltas (r6): each round's
-    write contains EXACTLY the hosts fetched that round (O(round
-    hosts), never O(total hosts ever) — the pre-r6 cumulative rewrite),
-    the read-side aggregation reproduces the cumulative recompute from
-    the full fetched ledger, and the COMPACT_EVERY checkpoint bounds
-    the loader's source list without changing the result."""
+def test_host_stats_derive_from_ledger(spark, tmp_path, monkeypatch):
+    """host_stats has no per-round table: ``load_host_stats`` derives
+    the cumulative per-host totals from the fetched ledger (plus the
+    COMPACT_EVERY checkpoint), so for every round it equals a DuckDB
+    recompute over the ledger rounds up to it — covering both the
+    ledger-only read and the checkpoint-plus-ledger fold. A non-empty,
+    non-compaction round runs three write actions (ledger, frontier
+    delta, filter merge), and ``host_stats_delta`` dirs such as
+    earlier code wrote are ignored, also across a resumed round."""
     import duckdb as _duck
 
     from jsonextract_spark.crawl import pipeline as P
 
     monkeypatch.setattr(P, "COMPACT_EVERY", 2)
     wh_dir = str(tmp_path / "whs")
-    P.run_crawl(spark, wh_dir, rounds=3, n_seeds=10, host_budget=3,
-                batch_size=20)
+    stats = P.run_crawl(spark, wh_dir, rounds=3, n_seeds=10,
+                        host_budget=3, batch_size=20)
     wh = P.Warehouse(wh_dir)
-
-    # write I/O pin: delta rows == distinct non-blocked hosts fetched
-    # that round (the cumulative table would grow every round instead)
-    for r in (1, 2, 3):
-        assert wh.exists("host_stats_delta", r)
-        assert not wh.exists("host_stats", r)   # no cumulative rewrite
-        delta_n = spark.read.parquet(
-            wh._path("host_stats_delta", r)).count()
-        round_hosts = _duck.sql(
-            f"SELECT count(DISTINCT host) FROM "
-            f"'{wh_dir}/fetched/round={r}/*.parquet' "
-            f"WHERE NOT blocked").fetchone()[0]
-        assert delta_n == round_hosts > 0
-
-    # checkpoint written on the compaction cadence
+    assert not wh.exists("host_stats_delta")
     assert wh.exists("host_stats_compact", 2)
+    # rounds 1 and 3 are non-empty and off the compaction cadence
+    assert [stats[r - 1]["spark_actions"] for r in (1, 3)] == [3, 3]
 
-    # read-side correctness: loader (checkpoint + deltas) equals the
-    # cumulative recompute from the whole fetched ledger
-    got = {r["host"]: (r["crawled"], r["last_fetch_ts"])
-           for r in P.load_host_stats(spark, wh, 3).collect()}
-    want = {h: (float(c), ts) for h, c, ts in _duck.sql(
-        f"SELECT host, count(*) , max(epoch_us(warc_ts)/1000000.0) "
-        f"FROM '{wh_dir}/fetched/round=*/*.parquet' "
-        f"WHERE NOT blocked GROUP BY host").fetchall()}
-    assert got == want and len(got) > 3
+    def want(r):
+        return {h: (float(c), ts) for h, c, ts in _duck.sql(
+            f"SELECT host, count(*), max(epoch_us(warc_ts)/1000000.0) "
+            f"FROM '{wh_dir}/fetched/round=*/*.parquet' "
+            f"WHERE NOT blocked AND batch_id <= {r} "
+            f"GROUP BY host").fetchall()}
+
+    def got(r):
+        return {row["host"]: (row["crawled"], row["last_fetch_ts"])
+                for row in P.load_host_stats(spark, wh, r).collect()}
+
+    before = {r: got(r) for r in (1, 2, 3)}
+    for r in (1, 2, 3):
+        assert before[r] == want(r) and len(before[r]) > 3, r
+    assert before[1] != before[3]
+
+    # bogus host_stats_delta dirs, as earlier code wrote them per
+    # round, change nothing: not the loader, not the next round
+    real_host = next(iter(before[3]))
+    for r in (1, 2, 3):
+        wh.save(spark.createDataFrame(
+            [("bogus.example", 99.0, 1.0), (real_host, 1000.0, 2e9)],
+            "host string, crawled double, last_fetch_ts double"),
+            "host_stats_delta", r)
+    for r in (1, 2, 3):
+        assert got(r) == before[r], r
+    P.run_crawl(spark, wh_dir, rounds=4, resume=True, n_seeds=10,
+                host_budget=3, batch_size=20)
+    assert wh.last_committed_round() == 4
+    assert got(3) == before[3]
+    assert got(4) == want(4)
 
 
 def test_empty_round_keeps_host_stats_compaction_cadence(
         spark, tmp_path, monkeypatch):
     """An EMPTY round on the compaction boundary still writes the
-    host_stats checkpoint (no delta to write, but the cadence must
-    hold so the loader's source list stays bounded through empty
+    host_stats checkpoint (nothing fetched, but the cadence must
+    hold so the loader's round range stays bounded through empty
     stretches), and the loader's totals are unchanged by empty
     rounds."""
     from pyspark.sql import functions as F
@@ -1213,7 +1225,6 @@ def test_empty_round_keeps_host_stats_compaction_cadence(
     wh = P.Warehouse(wh_dir)
     led = {r["round"]: r for r in wh.ledger()["rounds"]}
     assert led[3].get("empty")
-    assert not wh.exists("host_stats_delta", 3)   # nothing fetched
     assert wh.exists("host_stats_compact", 3)     # cadence held
     before = {(r["host"], r["crawled"])
               for r in P.load_host_stats(spark, wh, 2).collect()}
@@ -1830,9 +1841,9 @@ def test_recrawl_drops_crashed_round_debris(spark, tmp_path):
     round) instead of re-running rn, the recrawl commit must not adopt
     the crashed attempt's debris: its frontier_delta would become the
     round's seen delta (URLs marked seen but absent from the reopened
-    frontier — never crawled), its host_stats_delta would double-count
-    politeness stats, and its fetched rows would surface in
-    crawl_order and later recrawl age computations."""
+    frontier — never crawled), and its fetched rows would
+    double-count into host stats and surface in crawl_order and later
+    recrawl age computations."""
     from jsonextract_spark.crawl import pipeline as P
     from jsonextract_spark.crawl.recrawl import schedule_recrawl
 
@@ -1842,19 +1853,18 @@ def test_recrawl_drops_crashed_round_debris(spark, tmp_path):
     wh = P.Warehouse(wh_dir)
 
     # debris from a crashed round-3 attempt: delta (-777 would become
-    # a phantom seen entry), host stats, and a fetched ledger row
+    # a phantom seen entry) and a fetched ledger row (a phantom fetch
+    # of debris.example in host stats)
     wh.save(spark.createDataFrame(
         [("https://debris.example/d", -777, "debris.example", 1,
           0.5, 0, 1)],
         "url string, url_hash long, host string, depth int,"
         " priority double, attempts int, is_new int"),
         "frontier_delta", 3, partition_by="is_new")
-    wh.save(spark.createDataFrame(
-        [("debris.example", 99.0, 1.0)],
-        "host string, crawled double, last_fetch_ts double"),
-        "host_stats_delta", 3)
-    wh.save(spark.read.parquet(wh._path("fetched", 1)).limit(1)
-            .withColumn("url", F.lit("https://debris.example/f")),
+    wh.save(spark.read.parquet(wh._path("fetched", 1))
+            .filter(~F.col("blocked")).limit(1)
+            .withColumn("url", F.lit("https://debris.example/f"))
+            .withColumn("host", F.lit("debris.example")),
             "fetched", 3)
 
     import time as _time

@@ -70,26 +70,19 @@ def test_match_objects_udf(spark):
 
 
 def test_url_functions(spark):
-    from jsonextract_spark.functions.udfs import (
-        canonicalize_url_udf,
-        murmur3_64_udf,
-        url_host_udf,
-    )
+    from jsonextract_spark.functions.udfs import url_identity_udf
     from jsonextract_spark.functions.urlhash import murmur3_64
 
     df = spark.createDataFrame(
         [("HTTP://Example.COM:80/a/../b/?q=1#f",),
          ("https://h2.io/x",), (None,), ("not a url",)],
         "url STRING")
-    rows = (df.select(
-        canonicalize_url_udf("url").alias("canon"),
-        url_host_udf("url").alias("host"))
-        .withColumn("h", murmur3_64_udf("canon"))
-        .collect())
-    assert rows[0]["canon"] == "http://example.com/b/?q=1"
+    rows = (df.select(url_identity_udf("url").alias("id"))
+            .select("id.*").collect())
+    assert rows[0]["url"] == "http://example.com/b/?q=1"
     assert rows[0]["host"] == "example.com"
-    assert rows[0]["h"] == murmur3_64("http://example.com/b/?q=1")
-    assert rows[2]["canon"] is None and rows[3]["canon"] is None
+    assert rows[0]["url_hash"] == murmur3_64("http://example.com/b/?q=1")
+    assert rows[2]["url"] is None and rows[3]["url"] is None
 
 
 def test_extract_over_driver_documents(spark, sf_dir):
@@ -143,7 +136,7 @@ def test_murmur3_mmh3_bitcompat():
 
 
 def test_murmur3_batch_parity():
-    """The numpy batch path (the LIVE path under murmur3_64_udf and
+    """The numpy batch path (the LIVE path under url_identity_udf and
     fingerprint_udf) is bit-identical to the scalar implementation on
     reference vectors plus random strings covering every tail length
     (0..15 mod 16) and multi-block inputs. Always runs — this is the
@@ -231,7 +224,7 @@ def test_murmur3_batch_length_skew():
 
 
 def test_murmur3_batch_null_handling():
-    """The pandas helper under murmur3_64_udf preserves nulls and hashes
+    """The pandas helper under url_identity_udf preserves nulls and hashes
     the rest identically to the scalar function."""
     import pandas as pd
 
@@ -265,11 +258,12 @@ _URL_EDGE_CASES = [
 
 
 def test_url_fast_path_agrees_with_slow_path():
-    """The vectorized fast path inside canonicalize_url_udf/url_host_udf
-    must be EXACTLY the identity/extract that the per-row slow path
-    would compute — for every URL it accepts. Adversarial shapes (ports,
-    userinfo, dot segments, escapes, fragments, uppercase, IDN) must be
-    routed to the slow path."""
+    """The vectorized fast path inside url_identity_frame (the body of
+    url_identity_udf and the crawl's candidate kernel) must be EXACTLY
+    the identity/extract that the per-row slow path would compute —
+    for every URL it accepts. Adversarial shapes (ports, userinfo, dot
+    segments, escapes, fragments, uppercase, IDN) must be routed to
+    the slow path."""
     import pandas as pd
 
     from jsonextract_spark.functions.udfs import _fast_url_parts
