@@ -94,43 +94,6 @@ def _with_url_identity(df: DataFrame, url_col: str = "url") -> DataFrame:
             .drop("_uid"))
 
 
-_CAND_SCHEMA = "url string, url_hash long, host string, depth int"
-
-
-def _candidate_identity_kernel(batches):
-    """Fused link-candidate identity + per-task pre-dedup (r10): one
-    mapInPandas pass canonicalizes/hashes the exploded hrefs
-    (url_identity_frame — the same vectorized body as
-    url_identity_udf) and folds them into a running per-task min
-    (url, host, depth) per url_hash. The previous chain paid a
-    separate ArrowEvalPython node plus a url_hash Exchange + aggregate
-    before the bucket-cogroup prune; here the global aggregate moves
-    into the prune's own cogroup (seen.gate_new_urls) and this kernel
-    keeps the map-side reduction the removed partial aggregate
-    provided. Memory is O(distinct candidates per task) — the same
-    envelope as the hash-aggregate buffer it replaces. Depth is
-    already the CANDIDATE depth (parent + 1): min(parent)+1 ==
-    min(parent+1)."""
-    import pandas as pd
-
-    from jsonextract_spark.crawl.seen import min_by_url_hash
-    from jsonextract_spark.functions.udfs import url_identity_frame
-
-    acc = None
-    for pdf in batches:
-        idf = url_identity_frame(pdf["raw_url"])
-        idf["depth"] = (pdf["depth"] + 1).to_numpy()
-        idf = idf[idf["url"].notna()]
-        if len(idf) == 0:
-            continue
-        if acc is not None:
-            idf = pd.concat((acc, idf), ignore_index=True)
-        acc = min_by_url_hash(idf)
-    if acc is not None:
-        yield acc[["url", "url_hash", "host", "depth"]].astype(
-            {"depth": "int32"})
-
-
 def _seen_delta_path(wh: Warehouse, round_no: int) -> str:
     """The per-round seen delta IS the ``is_new=1`` partition of the
     round's frontier DELTA — written in the same job as the frontier
@@ -761,18 +724,17 @@ def run_round(spark: SparkSession, wh: Warehouse, round_no: int,
         return {"fetched": 0, "new": 0, "blocked": 0, "deferred": 0,
                 "retry_marked": 0, "sec": time.time() - t0}
 
-    # 5. link discovery -> candidate identity: one fused mapInPandas
-    #    pass (canonicalize + hash + host + per-task pre-dedup, see
-    #    _candidate_identity_kernel); the global per-hash min rides
-    #    the gate's bucket cogroup below (seen.gate_new_urls), so the
-    #    r9 chain's separate ArrowEvalPython node and url_hash
-    #    Exchange + aggregate are gone.
-    discovered = (enriched
-                  .select("depth", F.explode("links").alias("raw_url")))
-    cand = discovered.mapInPandas(_candidate_identity_kernel,
-                                  _CAND_SCHEMA)
+    # 5. link discovery -> candidate identity: canonical url, hash and
+    #    host in one ArrowEvalPython node (_with_url_identity, which
+    #    drops non-crawlable hrefs); depth is already the CANDIDATE
+    #    depth (parent + 1). Duplicate hashes are resolved by the
+    #    gate's JVM aggregate below.
+    cand = _with_url_identity(
+        enriched.select((F.col("depth") + 1).alias("depth"),
+                        F.explode("links").alias("raw_url")), "raw_url")
 
-    # 6. seen-set gate: bloom prune + exact anti-join backstop. The
+    # 6. seen-set gate: JVM per-hash min aggregate, bloom prune and
+    #    exact anti-join backstop (seen.gate_new_urls). The
     #    gate ALSO excludes URLs already pending in the frontier, for
     #    free: every pending row entered the frontier either through
     #    an is_new=1 seen-delta write (round-0 seeds, fresh
@@ -845,10 +807,10 @@ def run_round(spark: SparkSession, wh: Warehouse, round_no: int,
     # it, and since r10 they run CONCURRENTLY, so the round's wall
     # clock pays max(frontier write, filter merge), not their sum. The
     # cache does NOT share the gate's work between the two jobs: each
-    # job runs the gate's shuffle stages on its own (the
-    # candidate-identity mapInPandas and the Bloom cogroup, both Python
-    # stages), so every round computes the gate twice; only deleting
-    # the filter merge removes the second copy. try/finally: a failed
+    # job runs the gate on its own (url_identity_udf, the url_hash
+    # aggregate and the Bloom cogroup, two of them Python stages), so
+    # every round computes the gate twice; only deleting the filter
+    # merge removes the second copy. try/finally: a failed
     # write must not leak still-running background writes for a round
     # that will never commit, nor the round's cached RDD blocks — every
     # side thread is joined and the caches dropped on the error path

@@ -13,7 +13,8 @@ Scale design (10^10 URLs):
   *keys*, but the bitsets are ~3 GB total — droppable to executors as a
   co-partitioned join (NOT a broadcast), which is why the filter table is
   keyed by the same bucket function as the candidate stream.
-* Probe: candidates → bucket → join filters on bucket → vectorized
+* Probe (``gate_new_urls``): candidates → JVM per-``url_hash`` min
+  aggregate → bucket → cogroup with filters on bucket → vectorized
   membership test → only ``maybe_seen`` rows take the expensive anti-join
   shuffle; definitely-new rows bypass it. The false-positive rate (~1%)
   is the only extra anti-join traffic.
@@ -168,85 +169,24 @@ def prune_candidates(candidates: DataFrame,
             .applyInPandas(test, out_schema))
 
 
-def new_urls(candidates: DataFrame, seen: DataFrame,
-             filters: DataFrame | None) -> DataFrame:
-    """Exact set of candidates not in ``seen``: bloom prune (optional) +
-    anti-join backstop on only the maybe-seen slice."""
-    if filters is None:
-        return candidates.join(seen, "url_hash", "left_anti")
-    flagged = prune_candidates(candidates, filters)
-    fresh = flagged.filter(~F.col("maybe_seen")).drop("maybe_seen")
-    maybe = flagged.filter(F.col("maybe_seen")).drop("maybe_seen")
-    survived = maybe.join(seen, "url_hash", "left_anti")
-    return fresh.unionByName(survived)
-
-
-def min_by_url_hash(pdf: pd.DataFrame) -> pd.DataFrame:
-    """Per-url_hash independent mins of (url, host, depth), fully
-    vectorized. pandas ``groupby.agg(min)`` over OBJECT (string)
-    columns falls back to a per-group Python reduction — measured 19 s
-    for 200k rows, which made the r10 fused gate slower than the JVM
-    aggregate it replaced — while sort + drop_duplicates("first") is
-    the same min in C (~0.5 s at 200k). Mins are taken per column
-    independently (exactly the previous Spark ``min(url), min(host),
-    min(depth)`` aggregate, which matters only under a murmur3
-    collision where a hash group holds two distinct urls)."""
-    o = pdf.sort_values(["url_hash", "url"], kind="mergesort")
-    urls = o.drop_duplicates("url_hash")[["url_hash", "url"]]
-    o2 = pdf.sort_values(["url_hash", "host"], kind="mergesort")
-    hosts = o2.drop_duplicates("url_hash")[["url_hash", "host"]]
-    depths = pdf.groupby("url_hash", as_index=False)["depth"].min()
-    return (urls.merge(hosts, on="url_hash")
-            .merge(depths, on="url_hash")
-            [["url", "url_hash", "host", "depth"]])
-
-
-_GATE_SCHEMA = T.StructType([
-    T.StructField("url", T.StringType()),
-    T.StructField("url_hash", T.LongType()),
-    T.StructField("host", T.StringType()),
-    T.StructField("depth", T.IntegerType()),
-    T.StructField("maybe_seen", T.BooleanType()),
-])
-
-
 def gate_new_urls(candidates: DataFrame, seen: DataFrame,
                   filters: DataFrame | None) -> DataFrame:
-    """The crawl gate's fused dedup + prune (r10): ``candidates``
-    (url, url_hash, host, depth) may repeat a ``url_hash`` (the fetch
-    side pre-dedups only per task), and the global per-hash resolution
-    — min url, min host, min depth, the same aggregate the gate
-    previously paid a separate url_hash Exchange for — happens INSIDE
-    the bucket cogroup, riding the prune's own exchange: every copy of
-    a url_hash lands in the same bucket partition because bucket is a
-    function of url_hash, and a pandas groupby min is associative over
-    the per-task pre-dedup. One exchange + one Python stage replaces
-    the previous exchange(url_hash) + agg + exchange(bucket) + cogroup
-    chain; output and semantics are identical to
-    ``new_urls(exact-dedup(candidates), seen, filters)``."""
+    """The crawl gate: the exact set of ``candidates`` (url, url_hash,
+    host, depth, a ``url_hash`` may repeat) not in ``seen``, one row
+    per hash. Duplicates resolve in ONE JVM aggregate — independent
+    per-column mins of url, host and depth, which differ from a
+    row-wise min only under a murmur3 collision — whose partial
+    aggregate is the map-side pre-dedup. With ``filters`` the Bloom
+    prune flags the deduplicated rows and only the maybe-seen slice
+    takes the exact anti-join backstop; without, the anti-join alone."""
+    cand = (candidates.groupBy("url_hash")
+            .agg(F.min("url").alias("url"),
+                 F.min("host").alias("host"),
+                 F.min("depth").alias("depth"))
+            .select("url", "url_hash", "host", "depth"))
     if filters is None:
-        agg = (candidates.groupBy("url_hash")
-               .agg(F.min("url").alias("url"),
-                    F.min("host").alias("host"),
-                    F.min("depth").alias("depth"))
-               .select("url", "url_hash", "host", "depth"))
-        return agg.join(seen, "url_hash", "left_anti")
-
-    cand = candidates.withColumn("bucket", bucket_col(F.col("url_hash")))
-
-    def test(cand_pdf: pd.DataFrame, filt_pdf: pd.DataFrame) -> pd.DataFrame:
-        if len(cand_pdf) == 0:
-            out = cand_pdf[["url", "url_hash", "host", "depth"]].copy()
-            out["maybe_seen"] = pd.Series([], dtype=bool)
-            return out
-        out = min_by_url_hash(cand_pdf)
-        out["maybe_seen"] = _maybe_seen(out["url_hash"].to_numpy(),
-                                        filt_pdf)
-        return out
-
-    flagged = (cand.groupBy("bucket")
-               .cogroup(filters.groupBy("bucket"))
-               .applyInPandas(test, _GATE_SCHEMA))
+        return cand.join(seen, "url_hash", "left_anti")
+    flagged = prune_candidates(cand, filters)
     fresh = flagged.filter(~F.col("maybe_seen")).drop("maybe_seen")
     maybe = flagged.filter(F.col("maybe_seen")).drop("maybe_seen")
     survived = maybe.join(seen, "url_hash", "left_anti")

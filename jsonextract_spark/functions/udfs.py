@@ -109,7 +109,7 @@ def make_match_objects_udf(options: list[dict]):
 # Most crawl URLs are ALREADY canonical (lowercase scheme+host, no port/
 # userinfo/fragment/percent-escapes/dot-segments) — for those,
 # canonicalize is the identity and the host is one regex group, so
-# url_identity_frame pre-screens the whole Arrow batch with vectorized
+# url_identity_udf pre-screens the whole Arrow batch with vectorized
 # pandas .str ops and falls back to the per-row urlsplit path only for
 # irregular rows.
 # The fast-path predicate is deliberately CONSERVATIVE: it only accepts
@@ -155,13 +155,17 @@ _URL_IDENTITY_TYPE = StructType([
 ])
 
 
-def url_identity_frame(urls: pd.Series) -> pd.DataFrame:
-    """Vectorized canonicalize + murmur3 + host over a URL batch — the
-    shared body of ``url_identity_udf`` and the crawl's fused candidate
-    kernel (pipeline._candidate_identity_kernel): vectorized already-
-    canonical screen, per-row urlsplit only for irregular rows, batch
-    murmur3 over the canonical strings. url=NULL marks non-crawlable
-    input (callers filter), matching canonicalize_url's contract."""
+@F.pandas_udf(_URL_IDENTITY_TYPE)
+def _url_identity(urls: pd.Series) -> pd.DataFrame:
+    """Fused canonicalize + murmur3 + host in ONE Python crossing.
+
+    The link gate needs all three per candidate URL every round; as
+    three chained scalar UDFs they are three ArrowEvalPython round
+    trips (dependent UDFs cannot fuse). One struct-returning UDF makes
+    it a single round trip: vectorized already-canonical screen,
+    per-row urlsplit only for irregular rows, batch murmur3 over the
+    canonical strings. url=NULL marks non-crawlable input (callers
+    filter), matching canonicalize_url's contract."""
     fast, ext = _fast_url_parts(urls)
     canon = urls.where(fast)
     host = ext[1].where(fast)
@@ -176,17 +180,6 @@ def url_identity_frame(urls: pd.Series) -> pd.DataFrame:
     return pd.DataFrame({"url": canon,
                          "url_hash": _murmur3_series(canon),
                          "host": host})
-
-
-@F.pandas_udf(_URL_IDENTITY_TYPE)
-def _url_identity(urls: pd.Series) -> pd.DataFrame:
-    """Fused canonicalize + murmur3 + host in ONE Python crossing.
-
-    The link gate needs all three per candidate URL every round; as
-    three chained scalar UDFs they are three ArrowEvalPython round
-    trips (dependent UDFs cannot fuse). One struct-returning UDF makes
-    it a single round trip (body shared as ``url_identity_frame``)."""
-    return url_identity_frame(urls)
 
 
 # The function IS deterministic — the nondeterministic mark is purely

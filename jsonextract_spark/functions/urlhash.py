@@ -1,21 +1,19 @@
 """URL canonicalization and MurmurHash3 fingerprints.
 
-The crawl's partitioned URL-seen set stores
-``murmur3_64(canonicalize_url(url))``. Both functions are deterministic, dependency-free
-and safe to call inside Arrow-batched pandas UDFs.
+The crawl's partitioned URL-seen set stores the murmur3-64 of
+``canonicalize_url(url)``. Both functions are deterministic,
+dependency-free and safe to call inside Arrow-batched pandas UDFs.
 
 MurmurHash3 x64 128-bit is implemented from Austin Appleby's public
 domain algorithm; we return the low 64 bits as a signed int64 (Spark
-LongType). Three implementations, all bit-identical:
+LongType). Two implementations, bit-identical:
 
 * ``murmur3_64_batch`` — numpy-vectorized over a padded byte matrix;
   the LIVE path inside every Arrow UDF (one vector pass per batch, no
   per-row Python hashing).
 * ``murmur3_64_py`` — scalar pure Python; the parity reference the
-  batch path is pinned against (tests always run this cross-check).
-* ``mmh3.hash64`` — used for ``murmur3_64`` scalar calls when the C
-  wheel is importable (bit-compatible: seed 0, x64 variant, signed low
-  word).
+  batch path is pinned against (tests always run this cross-check, and
+  check it against the C ``mmh3`` wheel whenever that is installed).
 """
 
 from __future__ import annotations
@@ -23,11 +21,6 @@ from __future__ import annotations
 from urllib.parse import urlsplit, urlunsplit
 
 import numpy as np
-
-try:
-    import mmh3 as _mmh3
-except ImportError:          # pure-Python fallback below
-    _mmh3 = None
 
 _MASK = (1 << 64) - 1
 
@@ -105,15 +98,6 @@ def murmur3_64_py(s: str, seed: int = 0) -> int:
     """Low 64 bits of murmur3_x64_128 as signed int64 (Spark LongType)."""
     h1, _ = murmur3_x64_128(s.encode("utf-8"), seed)
     return h1 - (1 << 64) if h1 >= (1 << 63) else h1
-
-
-if _mmh3 is not None:
-    def murmur3_64(s: str, seed: int = 0) -> int:
-        """C fast path: mmh3.hash64 is MurmurHash3_x64_128's (h1, h2) as
-        signed int64 — identical bits to murmur3_64_py."""
-        return _mmh3.hash64(s.encode("utf-8"), seed, True)[0]
-else:
-    murmur3_64 = murmur3_64_py
 
 
 # -- vectorized batch path ---------------------------------------------------
@@ -275,7 +259,7 @@ def _murmur3_batch_core(datas: list[bytes], lens: np.ndarray,
 
 def murmur3_64_batch(strs: list[str], seed: int = 0) -> np.ndarray:
     """Low 64 bits of murmur3_x64_128 for each string, as int64 (Spark
-    LongType) — the vectorized twin of ``murmur3_64``."""
+    LongType) — the vectorized twin of ``murmur3_64_py``."""
     h1, _ = murmur3_x64_128_batch([s.encode("utf-8") for s in strs], seed)
     return h1.view(np.int64)
 

@@ -16,34 +16,6 @@ pytestmark = pytest.mark.spark
 
 # -- seen-set ----------------------------------------------------------------
 
-def test_min_by_url_hash_matches_groupby_agg():
-    """r10 unit pin: the vectorized sort+drop_duplicates min
-    (seen.min_by_url_hash) equals pandas groupby independent mins —
-    including a planted hash collision where min(url) and min(host)
-    come from DIFFERENT rows."""
-    import pandas as pd
-
-    from jsonextract_spark.crawl.seen import min_by_url_hash
-
-    pdf = pd.DataFrame({
-        "url_hash": [1, 1, 2, 2, 2, 3],
-        "url": ["b", "a", "z", "x", "y", "q"],
-        "host": ["hb", "hz", "h3", "h9", "h1", "hq"],
-        "depth": [5, 7, 4, 2, 9, 1],
-    })
-    ref = (pdf.groupby("url_hash", as_index=False)
-           .agg(url=("url", "min"), host=("host", "min"),
-                depth=("depth", "min"))
-           [["url", "url_hash", "host", "depth"]])
-    got = (min_by_url_hash(pdf).sort_values("url_hash")
-           .reset_index(drop=True))
-    assert got.equals(ref.sort_values("url_hash")
-                      .reset_index(drop=True))
-    # collision row: url min 'a' pairs with host min 'hb' (row-mixed)
-    r = got[got.url_hash == 1].iloc[0]
-    assert (r["url"], r["host"], r["depth"]) == ("a", "hb", 5)
-
-
 def test_bloom_no_false_negatives_and_exactness(spark):
     from jsonextract_spark.crawl import seen as sm
 
@@ -53,12 +25,12 @@ def test_bloom_no_false_negatives_and_exactness(spark):
     seen_df = spark.createDataFrame([(int(h),) for h in seen_hashes],
                                     "url_hash long")
     cand_df = spark.createDataFrame(
-        [(int(h), f"u{i}") for i, h in
+        [(int(h), f"u{i}", f"h{i % 5}", 1) for i, h in
          enumerate(seen_hashes[:1000] + cand_new)],
-        "url_hash long, url string")
+        "url_hash long, url string, host string, depth int")
 
     filters = sm.build_filters(seen_df)
-    out = sm.new_urls(cand_df, seen_df, filters)
+    out = sm.gate_new_urls(cand_df, seen_df, filters)
     got = {r["url_hash"] for r in out.collect()}
     want = set(cand_new) - set(seen_hashes)
     assert got == want  # exact: bloom may only prune, never drop/add
@@ -70,15 +42,14 @@ def test_bloom_no_false_negatives_and_exactness(spark):
     assert n_maybe <= 1000 + 0.05 * len(cand_new)  # few false positives
 
 
-def test_gate_new_urls_fused_dedup_equals_reference(spark):
-    """r10: the fused gate (gate_new_urls — per-url_hash min resolved
-    INSIDE the bucket cogroup over possibly-duplicated candidates)
-    must equal the reference form: exact per-hash min aggregate first,
-    then new_urls. Exercises duplicated hashes with differing url/
-    host/depth (independent per-column mins), bloom false-positive
-    survivors, empty buckets, and the filters=None path."""
-    from pyspark.sql import functions as F
-
+def test_gate_new_urls_matches_python_oracle(spark):
+    """gate_new_urls over candidates that repeat a url_hash equals a
+    Python recomputation from the input rows: for every hash not in
+    ``seen``, the min url, min host and min depth, taken per column.
+    Covers duplicated hashes with differing url/host/depth, a planted
+    collision whose min url and min host come from DIFFERENT rows,
+    bloom false-positive survivors, empty buckets, and both the bloom
+    and the filters=None path."""
     from jsonextract_spark.crawl import seen as sm
 
     rng = np.random.default_rng(11)
@@ -90,29 +61,32 @@ def test_gate_new_urls_fused_dedup_equals_reference(spark):
         # independent mins matter
         rows.append((int(h), f"u{i:06d}b", f"h{i % 7}x", 3))
         rows.append((int(h), f"u{i:06d}a", f"h{i % 7}w", 2 + (i % 3)))
+    collision = 2**62 + 1          # outside the random draws' range
+    rows += [(collision, "zz-b", "ha", 9), (collision, "zz-a", "hz", 4)]
     cand = spark.createDataFrame(
         rows, "url_hash long, url string, host string, depth int")
     seen_df = spark.createDataFrame([(int(h),) for h in seen_hashes],
                                     "url_hash long")
     filters = sm.build_filters(seen_df)
 
-    ref_dedup = (cand.groupBy("url_hash")
-                 .agg(F.min("url").alias("url"),
-                      F.min("host").alias("host"),
-                      F.min("depth").alias("depth"))
-                 .select("url", "url_hash", "host", "depth"))
+    seen_set = set(seen_hashes)
+    mins: dict = {}
+    for h, url, host, depth in rows:
+        if h in seen_set:
+            continue
+        m = mins.get(h)
+        mins[h] = ((url, host, depth) if m is None else
+                   (min(m[0], url), min(m[1], host), min(m[2], depth)))
+    want = {(h, *m) for h, m in mins.items()}
+    assert (collision, "zz-a", "ha", 4) in want   # row-mixed mins
+    assert len(want) == len(set(cand_new)) + 1
 
     def rowset(df):
         return {(r["url_hash"], r["url"], r["host"], r["depth"])
                 for r in df.collect()}
 
-    want = rowset(sm.new_urls(ref_dedup, seen_df, filters))
-    got = rowset(sm.gate_new_urls(cand, seen_df, filters))
-    assert got == want and len(got) == len(set(cand_new))
-
-    # filters=None path (pure aggregate + anti-join)
-    got_nf = rowset(sm.gate_new_urls(cand, seen_df, None))
-    assert got_nf == want
+    assert rowset(sm.gate_new_urls(cand, seen_df, filters)) == want
+    assert rowset(sm.gate_new_urls(cand, seen_df, None)) == want
 
 
 # -- scheduler ----------------------------------------------------------------
@@ -220,8 +194,8 @@ def test_pop_respects_robots_and_budget(spark):
     from jsonextract_spark.crawl.scheduler import pop_batch, priority_of
 
     urls = [synth.url_of(i) for i in range(0, 4000, 7)]
-    from jsonextract_spark.functions.urlhash import murmur3_64, url_host
-    rows = [(u, murmur3_64(u), url_host(u), 0) for u in urls]
+    from jsonextract_spark.functions.urlhash import murmur3_64_py, url_host
+    rows = [(u, murmur3_64_py(u), url_host(u), 0) for u in urls]
     frontier = (spark.createDataFrame(
         rows, "url string, url_hash long, host string, depth int")
         .withColumn("priority", priority_of(F.col("depth"))))

@@ -125,7 +125,7 @@ def test_seed_from_sitemaps_round(spark, tmp_path):
     from jsonextract_spark.crawl.pipeline import run_crawl, run_round
     from jsonextract_spark.crawl.tables import Warehouse
     from jsonextract_spark.functions.urlhash import canonicalize_url, \
-        murmur3_64
+        murmur3_64_py
 
     wdir = str(tmp_path / "wsm")
     run_crawl(spark, wdir, rounds=2, n_seeds=10, host_budget=3,
@@ -156,7 +156,7 @@ def test_seed_from_sitemaps_round(spark, tmp_path):
     got = {r["url"] for r in after.collect()}
     assert set(fresh_urls) <= got
     seen = {r["url_hash"] for r in P.load_seen(spark, wh, 3).collect()}
-    hashes = {murmur3_64(canonicalize_url(u)) for u in fresh_urls}
+    hashes = {murmur3_64_py(canonicalize_url(u)) for u in fresh_urls}
     assert hashes <= seen
     assert wh.exists("seen_filter", 3)
 

@@ -71,7 +71,7 @@ def test_match_objects_udf(spark):
 
 def test_url_functions(spark):
     from jsonextract_spark.functions.udfs import url_identity_udf
-    from jsonextract_spark.functions.urlhash import murmur3_64
+    from jsonextract_spark.functions.urlhash import murmur3_64_py
 
     df = spark.createDataFrame(
         [("HTTP://Example.COM:80/a/../b/?q=1#f",),
@@ -81,7 +81,7 @@ def test_url_functions(spark):
             .select("id.*").collect())
     assert rows[0]["url"] == "http://example.com/b/?q=1"
     assert rows[0]["host"] == "example.com"
-    assert rows[0]["url_hash"] == murmur3_64("http://example.com/b/?q=1")
+    assert rows[0]["url_hash"] == murmur3_64_py("http://example.com/b/?q=1")
     assert rows[2]["url"] is None and rows[3]["url"] is None
 
 
@@ -114,16 +114,6 @@ _MURMUR_SAMPLES = ["", "a", "ab", "hello world",
                    "0123456789abcdef" * 3 + "tail"]
 
 
-def test_murmur3_dispatch_consistency():
-    """The dispatched murmur3_64 (C fast path when mmh3 is importable,
-    else pure Python) always agrees with the pure implementation."""
-    from jsonextract_spark.functions import urlhash
-
-    assert urlhash.murmur3_x64_128(b"") == (0, 0)  # seed-0 empty input
-    for s in _MURMUR_SAMPLES:
-        assert urlhash.murmur3_64(s) == urlhash.murmur3_64_py(s)
-
-
 def test_murmur3_mmh3_bitcompat():
     """When the C mmh3 wheel is present, it must be bit-identical to the
     pure-Python MurmurHash3_x64_128."""
@@ -146,6 +136,7 @@ def test_murmur3_batch_parity():
 
     from jsonextract_spark.functions import urlhash
 
+    assert urlhash.murmur3_x64_128(b"") == (0, 0)  # seed-0 empty input
     rng = random.Random(20260816)
     strs = list(_MURMUR_SAMPLES)
     for length in list(range(0, 36)) + [100, 255, 1000, 4097]:
@@ -258,8 +249,7 @@ _URL_EDGE_CASES = [
 
 
 def test_url_fast_path_agrees_with_slow_path():
-    """The vectorized fast path inside url_identity_frame (the body of
-    url_identity_udf and the crawl's candidate kernel) must be EXACTLY
+    """The vectorized fast path inside url_identity_udf must be EXACTLY
     the identity/extract that the per-row slow path would compute —
     for every URL it accepts. Adversarial shapes (ports, userinfo, dot
     segments, escapes, fragments, uppercase, IDN) must be routed to
