@@ -464,33 +464,11 @@ def init_state(spark: SparkSession, wh: Warehouse, n_seeds: int,
                 .withColumn("depth", F.lit(0))
                 .withColumn("priority", priority_of(F.lit(0)))
                 .withColumn("attempts", F.lit(0))
-                .withColumn("is_new", F.lit(1))
-                .cache())
-    # The filter build reads the SAME rows the frontier write persists
-    # (at init every frontier row is is_new=1, i.e. the whole table IS
-    # the round-0 seen delta), so both writes run concurrently off one
-    # cached plan instead of the filter build waiting to re-read the
-    # just-written parquet (r10; same overlap pattern as run_round's
-    # side writes).
-    errs: list[BaseException] = []
-
-    def _save_frontier():
-        try:
-            wh.save(frontier, "frontier", 0, partition_by="is_new",
-                    rebalance=True)
-        except BaseException as e:
-            errs.append(e)
-
-    th = InheritableThread(target=_save_frontier, name="init-frontier")
-    th.start()
-    try:
-        wh.save(seen_mod.build_filters(frontier.select("url_hash")),
-                "seen_filter", 0)
-    finally:
-        th.join()
-        frontier.unpersist()
-    if errs:
-        raise errs[0]
+                .withColumn("is_new", F.lit(1)))
+    # at init every frontier row is is_new=1: the whole table IS the
+    # round-0 seen delta
+    wh.save(frontier, "frontier", 0, partition_by="is_new",
+            rebalance=True)
     wh.commit_round(0, {"phase": "init", "seeds": len(urls)})
 
 
@@ -517,7 +495,6 @@ def _resolve_politeness(fetch_kernel, default_delay_sec, hot_hosts):
 def run_round(spark: SparkSession, wh: Warehouse, round_no: int,
               host_budget: int = DEFAULT_HOST_BUDGET,
               batch_size: int = DEFAULT_BATCH_SIZE,
-              use_bloom: bool = True,
               fetch_kernel=None,
               robots_provider=None,
               default_delay_sec: float | None = None,
@@ -535,13 +512,13 @@ def run_round(spark: SparkSession, wh: Warehouse, round_no: int,
     kernel exposing ``bind_archive`` (both built-in kernels do).
 
     Fixed Spark-ACTION budget per non-empty round (recorded as the
-    ``spark_actions`` metric, counted at the call sites): THREE — the
-    fused pop+fetch+extract ledger write (A1), the frontier DELTA save
-    (A2: this round's additions only, whose ``is_new=1`` slice doubles
-    as the seen delta; removals ride the ledger's url_hash column —
-    see ``load_frontier``), and the filter merge save (A4) — plus
-    amortized compaction writes (frontier base + seen + host_stats
-    checkpoints) every COMPACT_EVERY rounds. Host stats need no write
+    ``spark_actions`` metric, counted at the call sites): TWO — the
+    fused pop+fetch+extract ledger write (A1) and the frontier DELTA
+    save (A2: this round's additions only, whose ``is_new=1`` slice
+    doubles as the seen delta; removals ride the ledger's url_hash
+    column — see ``load_frontier``) — plus amortized compaction writes
+    (frontier base + seen + host_stats checkpoints) every
+    COMPACT_EVERY rounds. Host stats need no write
     of their own: ``load_host_stats`` derives them from the ledger.
     Every per-round write is O(round output); the only O(total-state)
     writes are the amortized re-materializations. All scalar
@@ -558,11 +535,10 @@ def run_round(spark: SparkSession, wh: Warehouse, round_no: int,
     ``sec_driver_plan`` is the driver building the link-discovery,
     gate and delta plans (no Spark action runs in it);
     ``sec_frontier_seen`` is the frontier-delta write (A2), which runs
-    the seen gate; and ``sec_filter`` is the wait for the filter merge
-    and, on compaction rounds, the compactions. Driver-side action
-    latency is what bounds small-round throughput; at production
-    batch sizes the same three actions amortize over millions of
-    URLs."""
+    the seen gate; and, on compaction rounds only, ``sec_compact`` is
+    the wait for the compactions. Driver-side action latency is what
+    bounds small-round throughput; at production batch sizes the same
+    two actions amortize over millions of URLs."""
     t0 = time.time()
     sc = spark.sparkContext
     # unique per call: a second crawl in the same session must not count
@@ -575,7 +551,6 @@ def run_round(spark: SparkSession, wh: Warehouse, round_no: int,
     _drop_uncommitted_round_state(wh, round_no)
     frontier = load_frontier(spark, wh, prev)
     seen = load_seen(spark, wh, prev)
-    filters = wh.load(spark, "seen_filter", prev) if use_bloom else None
     # robots: synthetic table by default; live crawls pass
     # fetch_http.make_robots_provider() so the host gate uses real
     # robots.txt (the fetch kernel additionally enforces per-path rules)
@@ -702,8 +677,6 @@ def run_round(spark: SparkSession, wh: Warehouse, round_no: int,
         # nothing fetched: no state to write — the frontier/host_stats
         # loaders read a round RANGE, and an empty round adds no delta
         # and no ledger rows, so it carries state forward for free
-        if filters is not None:
-            wh.copy_forward("seen_filter", prev, round_no)
         # keep the compaction cadences even through empty stretches so
         # the loaders' source lists stay bounded
         maybe_compact_frontier(spark, wh, round_no)
@@ -733,23 +706,21 @@ def run_round(spark: SparkSession, wh: Warehouse, round_no: int,
         enriched.select((F.col("depth") + 1).alias("depth"),
                         F.explode("links").alias("raw_url")), "raw_url")
 
-    # 6. seen-set gate: JVM per-hash min aggregate, bloom prune and
-    #    exact anti-join backstop (seen.gate_new_urls). The
-    #    gate ALSO excludes URLs already pending in the frontier, for
-    #    free: every pending row entered the frontier either through
-    #    an is_new=1 seen-delta write (round-0 seeds, fresh
-    #    discoveries) or while already seen (deferred re-adds, recrawl
-    #    reopens), so pending ⊆ seen and the exact seen anti-join
-    #    covers both. The pre-r6 code carried a second anti-join
+    # 6. seen-set gate: JVM per-hash min aggregate and exact anti-join
+    #    (seen.gate_new_urls). The gate ALSO excludes URLs already
+    #    pending in the frontier, for free: every pending row entered
+    #    the frontier either through an is_new=1 seen-delta write
+    #    (round-0 seeds, fresh discoveries) or while already seen
+    #    (deferred re-adds, recrawl reopens), so pending ⊆ seen and the
+    #    exact seen anti-join covers both. The pre-r6 code carried a second anti-join
     #    against the full frontier here — provably a no-op by the same
     #    argument, and an O(frontier) scan per round at the design
     #    point.
-    fresh = seen_mod.gate_new_urls(cand, seen, filters)
+    fresh = seen_mod.gate_new_urls(cand, seen)
     fresh = (fresh.withColumn("priority", priority_of(F.col("depth")))
                   .withColumn("attempts", F.lit(0))
                   .select("url", "url_hash", "host", "depth", "priority",
-                          "attempts")
-                  .cache())
+                          "attempts"))
 
     # 7. frontier DELTA in ONE write job: only this round's additions
     #    (deferred re-adds + fresh discoveries), hive-partitioned on
@@ -803,22 +774,16 @@ def run_round(spark: SparkSession, wh: Warehouse, round_no: int,
     # frontier; n_new and n_deferred ride the SAME action as
     # CollectMetrics observations (no separate materializing count(),
     # no driver re-read of the written is_new=1 partition). ``fresh``
-    # stays cached: both the frontier write and the filter merge read
-    # it, and since r10 they run CONCURRENTLY, so the round's wall
-    # clock pays max(frontier write, filter merge), not their sum. The
-    # cache does NOT share the gate's work between the two jobs: each
-    # job runs the gate on its own (url_identity_udf, the url_hash
-    # aggregate and the Bloom cogroup, two of them Python stages), so
-    # every round computes the gate twice; only deleting the filter
-    # merge removes the second copy. try/finally: a failed
-    # write must not leak still-running background writes for a round
-    # that will never commit, nor the round's cached RDD blocks — every
-    # side thread is joined and the caches dropped on the error path
-    # before the exception propagates. InheritableThread, not
-    # threading.Thread: under PySpark's pinned-thread mode (the default
-    # here) a raw Python thread neither inherits the round's job-group
-    # local property (its jobs would escape the spark_jobs counter and
-    # any group cancellation) nor cleans up its paired JVM thread.
+    # is not cached: this write is its only reader. try/finally: a
+    # failed write must not leak still-running background compactions
+    # for a round that will never commit, nor the round's cached RDD
+    # blocks — every side thread is joined and the caches dropped on
+    # the error path before the exception propagates.
+    # InheritableThread, not threading.Thread: under PySpark's
+    # pinned-thread mode (the default here) a raw Python thread neither
+    # inherits the round's job-group local property (its jobs would
+    # escape the spark_jobs counter and any group cancellation) nor
+    # cleans up its paired JVM thread.
     side_err: list[BaseException] = []
     side_threads: list = []
     side_actions: list[int] = []
@@ -840,16 +805,6 @@ def run_round(spark: SparkSession, wh: Warehouse, round_no: int,
             F.coalesce(F.sum("is_new"), F.lit(0)).alias("n_new"),
             F.coalesce(F.sum((F.col("is_new") == 0).cast("long")),
                        F.lit(0)).alias("n_deferred"))
-        if filters is not None:
-            # Incremental OR-merge: touches only buckets that gained
-            # keys. Independent of the frontier write (same ``fresh``
-            # cache, different output table) — runs alongside it.
-            def _merge_filters():
-                sc.setJobDescription(f"r{round_no} A4 filter merge")
-                wh.save(seen_mod.merge_filters(filters, fresh),
-                        "seen_filter", round_no)
-            _spawn(_merge_filters, f"filter-merge-r{round_no}")
-            n_actions += 1
         sc.setJobDescription(f"r{round_no} A2 gate+frontier delta")
         wh.save(frontier_delta, "frontier_delta", round_no,
                 partition_by="is_new")
@@ -861,9 +816,9 @@ def run_round(spark: SparkSession, wh: Warehouse, round_no: int,
         # base re-materializations must follow the delta write (the
         # reconstructed views include this round's events); the seen,
         # host_stats and frontier compactions read/write disjoint
-        # tables, so on compact rounds they run concurrently with each
-        # other (and with the still-running filter merge)
-        if round_no > 0 and round_no % COMPACT_EVERY == 0:
+        # tables, so on compact rounds they run concurrently
+        compact = round_no > 0 and round_no % COMPACT_EVERY == 0
+        if compact:
             _spawn(lambda: side_actions.append(
                 1 if maybe_compact_seen(spark, wh, round_no) else 0),
                 f"seen-compact-r{round_no}")
@@ -873,22 +828,26 @@ def run_round(spark: SparkSession, wh: Warehouse, round_no: int,
             if maybe_compact_frontier(spark, wh, round_no):
                 n_actions += 1
     finally:
-        # all side writes (filter merge, compactions) must be on disk
-        # before the ledger commit makes the round visible (resume
-        # loads them for the next round's gate)
+        # all compactions must be on disk before the ledger commit
+        # makes the round visible (resume loads them for the next
+        # round's gate)
         for th in side_threads:
             th.join()
         batch.unpersist()
         enriched.unpersist()
-        fresh.unpersist()
     if side_err:
         raise side_err[0]
     n_actions += sum(side_actions)
-    t_filter = time.time()
+    t_compact = time.time()
 
     n_jobs = len(sc.statusTracker().getJobIdsForGroup(job_group))
     sc.setLocalProperty("spark.jobGroup.id", None)
     sec = time.time() - t0
+    secs = {"sec_pop_fetch_extract": t_fetch - t0,
+            "sec_driver_plan": t_links - t_fetch,
+            "sec_frontier_seen": t_frontier - t_links}
+    if compact:
+        secs["sec_compact"] = t_compact - t_frontier
     _write_metrics(wh, round_no, {
         "fetched": float(n_fetched), "objects": float(n_objects),
         "robots_blocked": float(n_blocked),
@@ -898,11 +857,7 @@ def run_round(spark: SparkSession, wh: Warehouse, round_no: int,
         "robots_deferred": float(n_deferred),
         "new_urls": float(n_new), "sec": sec,
         "spark_actions": float(n_actions),
-        "spark_jobs": float(n_jobs),
-        "sec_pop_fetch_extract": t_fetch - t0,
-        "sec_driver_plan": t_links - t_fetch,
-        "sec_frontier_seen": t_frontier - t_links,
-        "sec_filter": t_filter - t_frontier})
+        "spark_jobs": float(n_jobs), **secs})
     # ``batch`` = this round's TOTAL ledger rows (popped URLs incl.
     # blocked/retry), the replay removal count
     commit_info = {"fetched": n_fetched, "new": n_new,
@@ -933,17 +888,13 @@ def run_round(spark: SparkSession, wh: Warehouse, round_no: int,
 
 def _check_layout(wh: Warehouse):
     """Refuse to resume a warehouse in a layout this code does not
-    read. There is one layout: Bloom ``seen_filter`` rows, seen deltas
-    in the frontier tables' ``is_new=1`` partitions, and host_stats
-    checkpoints plus the ledger. Reading anything else would go
-    wrong silently — cuckoo bytes read as a Bloom bitset give false
-    negatives, so seen URLs would be re-crawled."""
-    problems = [f"round 0 seen_filter codec {r['filter_kind']!r}"
-                for r in wh.ledger()["rounds"]
-                if r.get("status") == "committed" and r["round"] == 0
-                and r.get("filter_kind", "bloom") != "bloom"]
-    problems += [f"legacy {t!r} table" for t in ("seen", "host_stats")
-                 if wh.exists(t)]
+    read. There is one layout: seen deltas in the frontier tables'
+    ``is_new=1`` partitions, and host_stats checkpoints plus the
+    ledger. A legacy single ``seen`` or ``host_stats`` table would be
+    ignored silently, losing its state. Old ``seen_filter`` dirs (of
+    any codec) are harmless: nothing reads them."""
+    problems = [f"legacy {t!r} table" for t in ("seen", "host_stats")
+                if wh.exists(t)]
     if problems:
         raise ValueError("unsupported warehouse layout: "
                          + "; ".join(problems))
@@ -952,7 +903,7 @@ def _check_layout(wh: Warehouse):
 def run_crawl(spark: SparkSession, warehouse: str, rounds: int,
               n_seeds: int = 100, host_budget: int = DEFAULT_HOST_BUDGET,
               batch_size: int = DEFAULT_BATCH_SIZE,
-              use_bloom: bool = True, resume: bool = False,
+              resume: bool = False,
               fetch_kernel=None,
               seeds: list[str] | None = None,
               robots_provider=None,
@@ -1005,7 +956,6 @@ def run_crawl(spark: SparkSession, warehouse: str, rounds: int,
     try:
         for r in range(start + 1, rounds + 1):
             s = run_round(spark, wh, r, host_budget, batch_size,
-                          use_bloom,
                           fetch_kernel=fetch_kernel,
                           robots_provider=robots_provider,
                           default_delay_sec=default_delay_sec,

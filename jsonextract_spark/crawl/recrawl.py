@@ -8,8 +8,8 @@ partitions plus ``seen_compact`` checkpoints, read by
 ``pipeline.load_seen``) keeps the hash, because its history is
 append-only. Re-opening works by inserting the URL back into the
 frontier directly, bypassing the seen gate — the gate only filters
-*newly discovered* links. The Bloom prune filters carry forward
-unchanged, because reopened URLs stay in the exact seen set.
+*newly discovered* links. Reopened URLs stay in the exact seen set, so
+later links to them are still gated away.
 """
 
 from __future__ import annotations
@@ -70,9 +70,9 @@ def schedule_recrawl(spark, wh, after_round: int, max_age_sec: float,
     it (ledger-side; the hot fetched table carries no extra column), and
     the newest fetch wins per URL. The refreshed frontier is written as
     a new round version with an EMPTY seen delta (``is_new=0``
-    everywhere — recrawl re-opens URLs, it never forgets them), with
-    filter/host state carried forward, and its own ledger entry — the
-    original rounds' deltas, stats and resume points stay intact.
+    everywhere — recrawl re-opens URLs, it never forgets them) and its
+    own ledger entry — the original rounds' deltas, stats and resume
+    points stay intact.
     Intended to run every N rounds like seen compaction, not per round.
     Returns the number of re-opened URLs.
     """
@@ -141,14 +141,9 @@ def schedule_recrawl(spark, wh, after_round: int, max_age_sec: float,
     # REBALANCE form is safe here)
     wh.save(merged, "frontier", rn, partition_by="is_new",
             rebalance=True)
-    if wh.exists("seen_filter", after_round):
-        # filters carry forward UNCHANGED: reopened URLs stay in the
-        # prune layer because they stay in the exact seen set — a
-        # filter miss short-circuits the anti-join as definitely-new,
-        # so dropping them would re-enqueue links to reopened URLs
-        # and duplicate their seen-delta rows. host_stats needs no
-        # carry: its loader reads a round RANGE of the ledger.
-        wh.copy_forward("seen_filter", after_round, rn)
+    # nothing else to carry: reopened URLs stay in the exact seen set
+    # (the gate's only input), and host_stats' loader reads a round
+    # RANGE of the ledger
     wh.commit_round(rn, {"phase": "recrawl", "reopened": n})
     refresh.unpersist()
     return n

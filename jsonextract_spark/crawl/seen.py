@@ -1,31 +1,24 @@
-"""Partitioned URL-seen set: exact hash table + per-bucket Bloom filters.
+"""URL-seen set: the exact gate over murmur3-64 URL hashes.
 
-Scale design (10^10 URLs):
+* ``seen`` is the exact set of URL hashes: the frontier tables'
+  ``is_new=1`` partitions plus ``seen_compact`` checkpoints, read by
+  ``pipeline.load_seen`` (hash-bucket partitioned, Iceberg
+  ``bucket(url_hash)``, in prod).
+* The gate (``gate_new_urls``) is two engine operators and no Python:
+  a JVM per-``url_hash`` min aggregate, whose partial aggregate is the
+  map-side pre-dedup, then a ``left_anti`` join against ``seen``. Its
+  width is Spark's shuffle parallelism; no constant caps it.
 
-* ``seen`` is the exact set of murmur3-64 URL hashes, hash-bucket
-  partitioned (Iceberg ``bucket(url_hash)`` in prod). Exactness backstop:
-  the final dedup is ALWAYS a left-anti join on ``url_hash`` — the filter
-  layer only prunes the probe side.
-* ``seen_filter`` holds one Bloom bitset per bucket, built and merged
-  with ``applyInPandas`` (our "UDAF"): each bucket's rows are hashed into
-  an ``m``-bit numpy array with ``k`` double-hashing probes. At 10^10
-  URLs / 4096 buckets / 10 bits-per-key this is ~1.2 GB per bucket of
-  *keys*, but the bitsets are ~3 GB total — droppable to executors as a
-  co-partitioned join (NOT a broadcast), which is why the filter table is
-  keyed by the same bucket function as the candidate stream.
-* Probe (``gate_new_urls``): candidates → JVM per-``url_hash`` min
-  aggregate → bucket → cogroup with filters on bucket → vectorized
-  membership test → only ``maybe_seen`` rows take the expensive anti-join
-  shuffle; definitely-new rows bypass it. The false-positive rate (~1%)
-  is the only extra anti-join traffic.
+Earlier code pruned the probe side with per-bucket Bloom bitsets (the
+``seen_filter`` table). The anti-join scans all of ``seen`` either
+way, so the prune only spared definitely-new rows one shuffle, at the
+price of two Python cogroup stages and a filter write per round. It is
+gone; a warehouse's old ``seen_filter`` directories are never read.
 
-One codec: every ``seen_filter`` row is a Bloom bitset
-(bucket, bits, m, k, n). Bloom cannot forget a key, which is fine — the
-exact seen set is append-only (recrawl re-opens URLs, it never forgets
-them), so filter and set never disagree on a present key.
-
-Local scale uses 64 buckets / 2^17 bits per bucket: the module
-constants ``N_BUCKETS`` and ``M_BITS``.
+``build_filters`` and ``merge_filters`` (with ``N_BUCKETS``,
+``M_BITS``, ``K_PROBES`` and the bit helpers) remain only because
+``perfbench/tracing.py`` wraps them by name: nothing in the package
+calls them. They go once a change to the benchmark unhooks them.
 """
 
 from __future__ import annotations
@@ -67,24 +60,6 @@ def _build_bits(hashes: np.ndarray, m: int, k: int) -> bytes:
     pos = _probe_positions(hashes, m, k).ravel()
     np.bitwise_or.at(bits, pos >> 3, (1 << (pos & 7)).astype(np.uint8))
     return bits.tobytes()
-
-
-def _test_bits(bits: np.ndarray, hashes: np.ndarray, m: int,
-               k: int) -> np.ndarray:
-    pos = _probe_positions(hashes, m, k)
-    hit = (bits[pos >> 3] >> (pos & 7)) & 1
-    return hit.all(axis=1)
-
-
-def _maybe_seen(hashes: np.ndarray, filt_pdf: pd.DataFrame) -> np.ndarray:
-    """Bloom membership of ``hashes`` against one bucket's filter rows
-    (the cogroup's right side); a bucket with no filter yet has seen
-    nothing."""
-    if len(filt_pdf) == 0 or filt_pdf["bits"].iloc[0] is None:
-        return np.zeros(len(hashes), dtype=bool)
-    row = filt_pdf.iloc[0]
-    bits = np.frombuffer(row["bits"], dtype=np.uint8)
-    return _test_bits(bits, hashes, int(row["m"]), int(row["k"]))
 
 
 def build_filters(seen: DataFrame, m: int = M_BITS,
@@ -144,50 +119,17 @@ def merge_filters(filters: DataFrame, fresh: DataFrame,
             .applyInPandas(merge, _FILTER_SCHEMA))
 
 
-def prune_candidates(candidates: DataFrame,
-                     filters: DataFrame) -> DataFrame:
-    """Add ``maybe_seen`` to candidates(url_hash, ...) using the bloom
-    layer. Cogrouped on bucket so each bucket's bitset crosses the
-    shuffle ONCE per bucket — a plain join would replicate the blob onto
-    every candidate row, multiplying shuffle bytes by the filter size.
-    Buckets with no filter yet are definitely new."""
-    cand = candidates.withColumn("bucket", bucket_col(F.col("url_hash")))
-
-    fields = [f for f in cand.schema.fields if f.name != "bucket"]
-    out_schema = T.StructType(fields + [T.StructField("maybe_seen",
-                                                      T.BooleanType())])
-    keep = [f.name for f in fields]
-
-    def test(cand_pdf: pd.DataFrame, filt_pdf: pd.DataFrame) -> pd.DataFrame:
-        out = cand_pdf[keep].copy()
-        out["maybe_seen"] = _maybe_seen(cand_pdf["url_hash"].to_numpy(),
-                                        filt_pdf)
-        return out
-
-    return (cand.groupBy("bucket")
-            .cogroup(filters.groupBy("bucket"))
-            .applyInPandas(test, out_schema))
-
-
-def gate_new_urls(candidates: DataFrame, seen: DataFrame,
-                  filters: DataFrame | None) -> DataFrame:
+def gate_new_urls(candidates: DataFrame, seen: DataFrame) -> DataFrame:
     """The crawl gate: the exact set of ``candidates`` (url, url_hash,
     host, depth, a ``url_hash`` may repeat) not in ``seen``, one row
     per hash. Duplicates resolve in ONE JVM aggregate — independent
     per-column mins of url, host and depth, which differ from a
     row-wise min only under a murmur3 collision — whose partial
-    aggregate is the map-side pre-dedup. With ``filters`` the Bloom
-    prune flags the deduplicated rows and only the maybe-seen slice
-    takes the exact anti-join backstop; without, the anti-join alone."""
+    aggregate is the map-side pre-dedup; a ``left_anti`` join on
+    ``url_hash`` then drops every seen hash."""
     cand = (candidates.groupBy("url_hash")
             .agg(F.min("url").alias("url"),
                  F.min("host").alias("host"),
                  F.min("depth").alias("depth"))
             .select("url", "url_hash", "host", "depth"))
-    if filters is None:
-        return cand.join(seen, "url_hash", "left_anti")
-    flagged = prune_candidates(cand, filters)
-    fresh = flagged.filter(~F.col("maybe_seen")).drop("maybe_seen")
-    maybe = flagged.filter(F.col("maybe_seen")).drop("maybe_seen")
-    survived = maybe.join(seen, "url_hash", "left_anti")
-    return fresh.unionByName(survived)
+    return cand.join(seen, "url_hash", "left_anti")

@@ -8,12 +8,8 @@ executor-side, never on the driver), and seeding is a maintenance
 ROUND in the ``schedule_recrawl`` mold: the new URLs are written as a
 fresh full frontier base at ``after_round + 1`` with ``is_new=1`` (so
 the same write doubles as their seen delta, exactly like round-0
-seeds), the prune filter is OR-merged with their hashes (a seen entry
-WITHOUT a filter entry would let later links to the same URL
-short-circuit the anti-join as definitely-new and re-crawl it — the
-r3 recrawl-filter lesson), and the ledger records ``phase="sitemap"``
-with a ``seeds`` count so the broadcast estimators keep their upper
-bounds.
+seeds, so later links to them are gated away), and the ledger records
+``phase="sitemap"`` with a ``seeds`` count.
 
 Parsing is crawl-grade: a bounded regex scan for ``<loc>`` values
 inside ``<sitemap>`` (index entries) vs elsewhere (page URLs) — no XML
@@ -187,13 +183,12 @@ def seed_from_sitemaps(spark, wh, after_round: int,
     """Maintenance round: discover sitemap URLs for the frontier's
     hosts (or an explicit (host, url) origin table), seen-gate them,
     and append the survivors to the frontier as a new full base at
-    ``after_round + 1`` with ``is_new=1`` (seen delta) plus a filter
-    merge. ``hosts`` is an optional SPARK DataFrame of (host, url)
-    origin rows replacing the frontier-derived host set. Returns the
-    number of NEW urls added (0 = no round consumed)."""
+    ``after_round + 1`` with ``is_new=1`` (seen delta). ``hosts`` is
+    an optional SPARK DataFrame of (host, url) origin rows replacing
+    the frontier-derived host set. Returns the number of NEW urls
+    added (0 = no round consumed)."""
     from pyspark.sql import functions as F
 
-    from jsonextract_spark.crawl import seen as seen_mod
     from jsonextract_spark.crawl.pipeline import (
         _drop_stale_compact, _drop_uncommitted_round_state,
         _with_url_identity, load_frontier, load_seen)
@@ -246,14 +241,6 @@ def seed_from_sitemaps(spark, wh, after_round: int,
     # REBALANCE form is safe here)
     wh.save(merged, "frontier", rn, partition_by="is_new",
             rebalance=True)
-    if wh.exists("seen_filter", after_round):
-        # the new urls are now in the exact seen set, so they MUST
-        # also enter the prune filter: a filter miss short-circuits
-        # the fresh-link gate as definitely-new, and later links to
-        # these urls would re-crawl them (the r3 recrawl lesson)
-        filters = wh.load(spark, "seen_filter", after_round)
-        wh.save(seen_mod.merge_filters(filters, fresh),
-                "seen_filter", rn)
     wh.commit_round(rn, {"phase": "sitemap", "seeds": n})
     fresh.unpersist()
     return n

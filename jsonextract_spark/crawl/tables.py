@@ -39,8 +39,9 @@ seen_compact url_hash — periodic compaction of the deltas (the
              IcebergLite analogue of rewrite_data_files), written every
              pipeline.COMPACT_EVERY rounds so load_seen unions a
              bounded source list
-seen_filter  bucket, bits (binary Bloom bitset), m (bits), k (probes),
-             n (keys inserted) — one row per bucket that holds keys
+seen_filter  per-bucket Bloom bitsets written by earlier code; the
+             exact seen gate never reads them, so an old warehouse's
+             dirs are ignored
 fetched      batch_id, rank, url, url_hash (the frontier key — the
              round's popped rows double as the frontier-delta removal
              list, see load_frontier),
@@ -180,16 +181,6 @@ class Warehouse:
         if os.path.exists(final):
             shutil.rmtree(final)
         os.replace(tmp, final)
-
-    def copy_forward(self, table: str, from_round: int, to_round: int):
-        """Driver-side carry-over of an unchanged table version (no Spark
-        job — an empty crawl round must not pay write jobs to republish
-        identical state)."""
-        src = self._path(table, from_round)
-        dst = self._path(table, to_round)
-        if os.path.exists(dst):
-            shutil.rmtree(dst)
-        shutil.copytree(src, dst)
 
     def load(self, spark: SparkSession, table: str,
              round_no: int | None = None) -> DataFrame:

@@ -3,7 +3,8 @@
 Reimplements the reference ``Objects`` semantics
 (/root/reference/objects.go:59-169):
 
-* every extracted top-level value is walked recursively;
+* every extracted top-level value is walked depth-first (with explicit
+  stacks, so any nesting depth works at any caller stack depth);
 * arrays recurse into elements but never match themselves (objects.go:69);
 * objects are dispatched to the FIRST unsatisfied option whose ``keys``
   are all present (objects.go:104-131), then recursion descends into the
@@ -71,53 +72,66 @@ def _scan_string(s: str, i: int) -> int:
             i += 1
 
 
+def _scan_key(s: str, i: int):
+    """i before an object member's key → (key, index past its ':')."""
+    i = _skip_ws(s, i)
+    kend = _scan_string(s, i)
+    return _json.loads(s[i:kend]), _skip_ws(s, kend) + 1
+
+
 def _scan_value(s: str, i: int):
     """Parse the value at i → (node, end). node is
     ('obj', start, end, {key: child}) | ('arr', start, end, [children]) |
-    ('scalar', start, end, None)."""
-    i = _skip_ws(s, i)
-    start = i
-    c = s[i]
-    if c == "{":
-        members = {}
-        i = _skip_ws(s, i + 1)
-        if s[i] == "}":
-            return ("obj", start, i + 1, members), i + 1
-        while True:
-            i = _skip_ws(s, i)
-            kend = _scan_string(s, i)
-            key = _json.loads(s[i:kend])
-            i = _skip_ws(s, kend)
-            i += 1  # ':'
-            child, i = _scan_value(s, i)
-            members[key] = child  # duplicate keys: last wins
+    ('scalar', start, end, None).
+
+    Iterative: open containers live on an explicit stack of
+    [kind, start, payload, pending key] frames, so nesting depth is
+    bounded by memory, not by the interpreter's recursion limit."""
+    stack: list = []
+    while True:
+        i = _skip_ws(s, i)
+        start = i
+        c = s[i]
+        if c == "{" or c == "[":
+            kind, close = ("obj", "}") if c == "{" else ("arr", "]")
+            i = _skip_ws(s, i + 1)
+            if s[i] == close:
+                i += 1
+                node = (kind, start, i, {} if kind == "obj" else [])
+            else:
+                frame = [kind, start, {} if kind == "obj" else [], None]
+                if kind == "obj":
+                    frame[3], i = _scan_key(s, i)
+                stack.append(frame)
+                continue  # parse the first child
+        elif c == '"':
+            i = _scan_string(s, i)
+            node = ("scalar", start, i, None)
+        else:
+            # number / true / false / null
+            n = len(s)
+            while i < n and s[i] not in ",}] \t\n\r":
+                i += 1
+            node = ("scalar", start, i, None)
+        # ``node`` ends at i: attach it to its parent, closing every
+        # container that ends right after it
+        while stack:
+            frame = stack[-1]
+            if frame[0] == "obj":
+                frame[2][frame[3]] = node  # duplicate keys: last wins
+            else:
+                frame[2].append(node)
             i = _skip_ws(s, i)
             if s[i] == ",":
                 i += 1
-                continue
-            return ("obj", start, i + 1, members), i + 1  # '}'
-    if c == "[":
-        elems = []
-        i = _skip_ws(s, i + 1)
-        if s[i] == "]":
-            return ("arr", start, i + 1, elems), i + 1
-        while True:
-            child, i = _scan_value(s, i)
-            elems.append(child)
-            i = _skip_ws(s, i)
-            if s[i] == ",":
-                i += 1
-                continue
-            return ("arr", start, i + 1, elems), i + 1  # ']'
-    if c == '"':
-        end = _scan_string(s, i)
-        return ("scalar", start, end, None), end
-    # number / true / false / null
-    end = i
-    n = len(s)
-    while end < n and s[end] not in ",}] \t\n\r":
-        end += 1
-    return ("scalar", start, end, None), end
+                if frame[0] == "obj":
+                    frame[3], i = _scan_key(s, i)
+                break  # parse the next child
+            stack.pop()
+            i += 1  # '}' or ']'
+            node = (frame[0], frame[1], i, frame[2])
+        else:
+            return node, i
 
 
 class _Stop(Exception):
@@ -129,35 +143,40 @@ class _Abort(Exception):
         self.err = err
 
 
-def _walk(node, s: str, options: Sequence[ObjectOption], satisfied: set):
-    kind, start, end, payload = node
-    if kind == "arr":
-        for child in payload:
-            _walk(child, s, options, satisfied)
-    elif kind == "obj":
-        for idx, opt in enumerate(options):
-            if idx in satisfied:
-                continue
-            if all(k in payload for k in opt.keys):
-                raw = s[start:end]
-                stop = False
-                if opt.callback is not None:
-                    res = opt.callback(raw)
-                    if res is ERR_STOP:
-                        stop = True
-                    elif res is not None:
-                        raise _Abort(res)
-                else:
-                    opt.matches.append(raw)
-                    if opt.limit is not None and len(opt.matches) >= opt.limit:
-                        stop = True
-                if stop:
-                    satisfied.add(idx)
-                    if len(satisfied) == len(options):
-                        raise _Stop()
-                break  # first matching option only (objects.go:128-130)
-        for key in sorted(payload):
-            _walk(payload[key], s, options, satisfied)
+def _walk(root, s: str, options: Sequence[ObjectOption], satisfied: set):
+    """Pre-order walk with an explicit stack: array elements in order,
+    object values in sorted-key order, each subtree finished before its
+    next sibling — the recursive reference order at any depth."""
+    stack = [root]
+    while stack:
+        kind, start, end, payload = stack.pop()
+        if kind == "arr":
+            stack.extend(reversed(payload))
+        elif kind == "obj":
+            for idx, opt in enumerate(options):
+                if idx in satisfied:
+                    continue
+                if all(k in payload for k in opt.keys):
+                    raw = s[start:end]
+                    stop = False
+                    if opt.callback is not None:
+                        res = opt.callback(raw)
+                        if res is ERR_STOP:
+                            stop = True
+                        elif res is not None:
+                            raise _Abort(res)
+                    else:
+                        opt.matches.append(raw)
+                        if (opt.limit is not None
+                                and len(opt.matches) >= opt.limit):
+                            stop = True
+                    if stop:
+                        satisfied.add(idx)
+                        if len(satisfied) == len(options):
+                            raise _Stop()
+                    break  # first matching option only (objects.go:128-130)
+            stack.extend(payload[key]
+                         for key in sorted(payload, reverse=True))
 
 
 def match_objects(values: Sequence[str], options: Sequence[ObjectOption]):

@@ -16,30 +16,36 @@ pytestmark = pytest.mark.spark
 
 # -- seen-set ----------------------------------------------------------------
 
-def test_bloom_no_false_negatives_and_exactness(spark):
+def test_merge_filters_equals_build_of_union(spark):
+    """The kept Bloom helpers stay consistent (nothing in the package
+    calls them; the benchmark's tracer wraps them by name): OR-merging
+    B's keys into ``build_filters(A)`` gives, bucket for bucket, the
+    bitset and key count of ``build_filters(A ∪ B)`` — covering buckets
+    only A fills (passed through), buckets only B fills (built from the
+    delta alone) and buckets both fill."""
     from jsonextract_spark.crawl import seen as sm
 
     rng = np.random.default_rng(7)
-    seen_hashes = rng.integers(-2**62, 2**62, size=5000).tolist()
-    cand_new = rng.integers(-2**62, 2**62, size=3000).tolist()
-    seen_df = spark.createDataFrame([(int(h),) for h in seen_hashes],
-                                    "url_hash long")
-    cand_df = spark.createDataFrame(
-        [(int(h), f"u{i}", f"h{i % 5}", 1) for i, h in
-         enumerate(seen_hashes[:1000] + cand_new)],
-        "url_hash long, url string, host string, depth int")
+    draws = rng.integers(-2**62, 2**62, size=6000)
+    # A only fills the lower half of the buckets
+    a = [int(h) for h in draws[:4000]
+         if h % sm.N_BUCKETS < sm.N_BUCKETS // 2]
+    b = [int(h) for h in draws[4000:]]
+    assert not set(a) & set(b)
 
-    filters = sm.build_filters(seen_df)
-    out = sm.gate_new_urls(cand_df, seen_df, filters)
-    got = {r["url_hash"] for r in out.collect()}
-    want = set(cand_new) - set(seen_hashes)
-    assert got == want  # exact: bloom may only prune, never drop/add
+    def frame(hashes):
+        return spark.createDataFrame([(h,) for h in hashes],
+                                     "url_hash long")
 
-    # bloom actually prunes: definitely-new slice should be large
-    flagged = sm.prune_candidates(cand_df, filters)
-    n_maybe = flagged.filter("maybe_seen").count()
-    assert n_maybe >= 1000            # all truly-seen are flagged
-    assert n_maybe <= 1000 + 0.05 * len(cand_new)  # few false positives
+    def by_bucket(filters):
+        return {r["bucket"]: (bytes(r["bits"]), r["m"], r["k"], r["n"])
+                for r in filters.collect()}
+
+    merged = by_bucket(sm.merge_filters(sm.build_filters(frame(a)),
+                                        frame(b)))
+    built = by_bucket(sm.build_filters(frame(a + b)))
+    assert merged == built
+    assert len(built) == sm.N_BUCKETS
 
 
 def test_gate_new_urls_matches_python_oracle(spark):
@@ -47,9 +53,8 @@ def test_gate_new_urls_matches_python_oracle(spark):
     Python recomputation from the input rows: for every hash not in
     ``seen``, the min url, min host and min depth, taken per column.
     Covers duplicated hashes with differing url/host/depth, a planted
-    collision whose min url and min host come from DIFFERENT rows,
-    bloom false-positive survivors, empty buckets, and both the bloom
-    and the filters=None path."""
+    collision whose min url and min host come from DIFFERENT rows, and
+    seen hashes among the candidates."""
     from jsonextract_spark.crawl import seen as sm
 
     rng = np.random.default_rng(11)
@@ -67,7 +72,6 @@ def test_gate_new_urls_matches_python_oracle(spark):
         rows, "url_hash long, url string, host string, depth int")
     seen_df = spark.createDataFrame([(int(h),) for h in seen_hashes],
                                     "url_hash long")
-    filters = sm.build_filters(seen_df)
 
     seen_set = set(seen_hashes)
     mins: dict = {}
@@ -85,8 +89,7 @@ def test_gate_new_urls_matches_python_oracle(spark):
         return {(r["url_hash"], r["url"], r["host"], r["depth"])
                 for r in df.collect()}
 
-    assert rowset(sm.gate_new_urls(cand, seen_df, filters)) == want
-    assert rowset(sm.gate_new_urls(cand, seen_df, None)) == want
+    assert rowset(sm.gate_new_urls(cand, seen_df)) == want
 
 
 # -- scheduler ----------------------------------------------------------------
@@ -327,42 +330,35 @@ def one_round_crawl(spark, tmp_path_factory):
     return wdir
 
 
-def test_round_sec_metrics_are_never_zero(one_round_crawl):
-    """A non-empty round records exactly the four ``sec_*`` spans, and
-    each measures a real span of the round (an always-0.0 key would be
-    a stamp of two adjacent clock reads, not a measurement)."""
+def _round_secs(wdir, round_no):
     import pyarrow.parquet as pq
 
     from jsonextract_spark.crawl.tables import Warehouse
 
-    t = pq.read_table(Warehouse(one_round_crawl)._path("metrics", 1))
-    secs = {k: v for k, v in zip(t.column("key").to_pylist(),
+    t = pq.read_table(Warehouse(wdir)._path("metrics", round_no))
+    return {k: v for k, v in zip(t.column("key").to_pylist(),
                                  t.column("value").to_pylist())
             if k.startswith("sec_")}
+
+
+def test_round_sec_metrics_are_never_zero(one_round_crawl):
+    """A non-empty round off the compaction cadence records exactly the
+    three ``sec_*`` spans, and each measures a real span of the round
+    (an always-0.0 key would be a stamp of two adjacent clock reads,
+    not a measurement)."""
+    secs = _round_secs(one_round_crawl, 1)
     assert set(secs) == {"sec_pop_fetch_extract", "sec_driver_plan",
-                         "sec_frontier_seen", "sec_filter"}, secs
+                         "sec_frontier_seen"}, secs
     assert all(v > 0.0 for v in secs.values()), secs
 
 
-def _plant_legacy_marker(wh, marker):
-    import json
-    import os
-
-    if marker in ("seen", "host_stats"):
-        os.makedirs(wh._path(marker, 1))
-        return
-    led = wh.ledger()
-    led["rounds"][0]["filter_kind"] = "cuckoo"
-    with open(wh._ledger_path, "w") as f:
-        json.dump(led, f)
-
-
-@pytest.mark.parametrize("marker", ["cuckoo", "seen", "host_stats"])
+@pytest.mark.parametrize("table", ["seen", "host_stats"])
 def test_resume_rejects_unsupported_layout(spark, one_round_crawl,
-                                           tmp_path, marker):
-    """A warehouse in a layout this code no longer reads fails the
-    resume loudly instead of being read wrongly (cuckoo bytes read as
-    a Bloom bitset would re-crawl seen URLs)."""
+                                           tmp_path, table):
+    """A warehouse with a legacy single ``seen`` or ``host_stats``
+    table fails the resume loudly instead of having that state ignored
+    silently."""
+    import os
     import shutil
 
     from jsonextract_spark.crawl.pipeline import run_crawl
@@ -370,10 +366,49 @@ def test_resume_rejects_unsupported_layout(spark, one_round_crawl,
 
     wdir = str(tmp_path / "wh")
     shutil.copytree(one_round_crawl, wdir)
-    _plant_legacy_marker(Warehouse(wdir), marker)
+    os.makedirs(Warehouse(wdir)._path(table, 1))
     with pytest.raises(ValueError, match="unsupported warehouse layout"):
         run_crawl(spark, wdir, rounds=2, resume=True, n_seeds=10,
                   host_budget=3, batch_size=20)
+
+
+def test_resume_ignores_old_seen_filter(spark, one_round_crawl,
+                                        tmp_path):
+    """A warehouse written by earlier code — ``seen_filter`` dirs and a
+    round-0 ``filter_kind`` of another codec in the ledger — resumes,
+    and its crawl ledger equals an uninterrupted crawl's: the exact
+    gate never reads the filter rows, whatever their bytes."""
+    import json
+    import shutil
+
+    from jsonextract_spark.crawl.pipeline import crawl_order, run_crawl
+    from jsonextract_spark.crawl.tables import Warehouse
+
+    kw = dict(n_seeds=10, host_budget=3, batch_size=20)
+    wdir = str(tmp_path / "wh")
+    shutil.copytree(one_round_crawl, wdir)
+    wh = Warehouse(wdir)
+    for r in (0, 1):
+        # all-ones bitsets: a Bloom prune reading them would flag
+        # every candidate as maybe-seen
+        wh.save(spark.createDataFrame(
+            [(b, b"\xff" * 64, 512, 7, 1) for b in range(4)],
+            "bucket int, bits binary, m int, k int, n long"),
+            "seen_filter", r)
+    led = wh.ledger()
+    led["rounds"][0]["filter_kind"] = "cuckoo"
+    with open(wh._ledger_path, "w") as f:
+        json.dump(led, f)
+    stats = run_crawl(spark, wdir, rounds=3, resume=True, **kw)
+    assert [s["round"] for s in stats] == [2, 3]
+    assert not wh.exists("seen_filter", 2)
+    assert not wh.exists("seen_filter", 3)
+
+    full = str(tmp_path / "full")
+    run_crawl(spark, full, rounds=3, **kw)
+    got = crawl_order(spark, wdir).collect()
+    assert got == crawl_order(spark, full).collect()
+    assert {r["batch_id"] for r in got} == {1, 2, 3}
 
 
 def test_resume_accepts_ledger_without_batch(spark, one_round_crawl,
@@ -1121,9 +1156,10 @@ def test_host_stats_derive_from_ledger(spark, tmp_path, monkeypatch):
     COMPACT_EVERY checkpoint), so for every round it equals a DuckDB
     recompute over the ledger rounds up to it — covering both the
     ledger-only read and the checkpoint-plus-ledger fold. A non-empty,
-    non-compaction round runs three write actions (ledger, frontier
-    delta, filter merge), and ``host_stats_delta`` dirs such as
-    earlier code wrote are ignored, also across a resumed round."""
+    non-compaction round runs two write actions (ledger and frontier
+    delta), only the compaction round records ``sec_compact``, and
+    ``host_stats_delta`` dirs such as earlier code wrote are ignored,
+    also across a resumed round."""
     import duckdb as _duck
 
     from jsonextract_spark.crawl import pipeline as P
@@ -1136,7 +1172,10 @@ def test_host_stats_derive_from_ledger(spark, tmp_path, monkeypatch):
     assert not wh.exists("host_stats_delta")
     assert wh.exists("host_stats_compact", 2)
     # rounds 1 and 3 are non-empty and off the compaction cadence
-    assert [stats[r - 1]["spark_actions"] for r in (1, 3)] == [3, 3]
+    assert [stats[r - 1]["spark_actions"] for r in (1, 3)] == [2, 2]
+    assert ["sec_compact" in _round_secs(wh_dir, r)
+            for r in (1, 2, 3)] == [False, True, False]
+    assert _round_secs(wh_dir, 2)["sec_compact"] > 0.0
 
     def want(r):
         return {h: (float(c), ts) for h, c, ts in _duck.sql(

@@ -168,3 +168,48 @@ def test_arrays_never_match():
     o = ObjectOption(keys=["k"])
     extract_and_match(data, [o])
     assert o.matches == ['{"k":1}', '{"k":3}']
+
+
+def _deep_value(depth):
+    """``depth`` nested containers, alternating ``{"x":`` and ``[``,
+    around a ``{"k":1}`` leaf; every object also carries a sibling
+    ``"a"`` key that sorts before ``"x"``."""
+    opens, closes = [], []
+    for level in range(depth):
+        if level % 2 == 0:
+            opens.append('{"x":')
+            closes.append(',"a":[{"k":%d}]}' % level)
+        else:
+            opens.append("[")
+            closes.append("]")
+    return "".join(opens) + '{"k":-1}' + "".join(reversed(closes))
+
+
+def _under_frames(n, fn):
+    return fn() if n == 0 else _under_frames(n - 1, fn)
+
+
+@pytest.mark.parametrize("depth", [500, 960, 5000])
+def test_deep_values_match_at_any_stack_depth(depth):
+    """The walker needs no Python stack per nesting level: a value
+    ``depth`` containers deep gives the same matches whether it is
+    matched at the top of the stack or under 200 extra frames, in the
+    reference visit order (first unsatisfied option, then values in
+    sorted-key order, each subtree before the next sibling)."""
+    value = _deep_value(depth)
+
+    def run():
+        opts = [ObjectOption(keys=["x"], limit=2), ObjectOption(keys=["k"])]
+        match_objects([value], opts)
+        return [list(o.matches) for o in opts]
+
+    outer, inner = [_under_frames(n, run) for n in (0, 200)]
+    assert outer == inner
+    xs, ks = outer
+    # pre-order: the two outermost objects, each as its full raw span
+    tail = len(']' + ',"a":[{"k":0}]}')
+    assert xs == [value, value[len('{"x":['):-tail]]
+    # each object's "a" value sorts before its "x" subtree, so the
+    # leaves come outermost first and the innermost leaf last
+    assert ks == (['{"k":%d}' % level for level in range(0, depth, 2)]
+                  + ['{"k":-1}'])

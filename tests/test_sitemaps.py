@@ -1,6 +1,6 @@
 """Sitemap ingestion (r8): loc extraction, robots Sitemap directives,
 the live-HTTP discovery kernel, and the seed_from_sitemaps maintenance
-round (seen-gated, filter-merged, resume-compatible)."""
+round (seen-gated, resume-compatible)."""
 
 import gzip
 import http.server
@@ -117,10 +117,10 @@ def test_discovery_kernel_live_http():
 
 def test_seed_from_sitemaps_round(spark, tmp_path):
     """Maintenance round over a synthetic crawl: new urls enter the
-    frontier AND the seen set AND the prune filter (a seen entry
-    without a filter entry would let later links re-crawl them), known
-    urls are gated away, a second run is a no-op, and the crawl
-    resumes cleanly past the maintenance round."""
+    frontier AND the exact seen set (so later links to them are gated
+    away), no ``seen_filter`` is written, known urls are gated away, a
+    second run is a no-op, and the crawl resumes cleanly past the
+    maintenance round."""
     from jsonextract_spark.crawl import pipeline as P
     from jsonextract_spark.crawl.pipeline import run_crawl, run_round
     from jsonextract_spark.crawl.tables import Warehouse
@@ -158,7 +158,7 @@ def test_seed_from_sitemaps_round(spark, tmp_path):
     seen = {r["url_hash"] for r in P.load_seen(spark, wh, 3).collect()}
     hashes = {murmur3_64_py(canonicalize_url(u)) for u in fresh_urls}
     assert hashes <= seen
-    assert wh.exists("seen_filter", 3)
+    assert not wh.exists("seen_filter", 3)
 
     # idempotent: everything now seen -> no round consumed
     assert SM.seed_from_sitemaps(spark, wh, 3,

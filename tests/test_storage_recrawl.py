@@ -81,10 +81,9 @@ def test_schedule_recrawl_roundtrip(spark, tmp_path):
 
 def test_recrawl_keeps_seen_deltas_unique(spark, tmp_path):
     """Regression (ADVICE r2): the recrawl maintenance round must keep
-    reopened hashes in the prune layer — a filter miss short-circuits
-    the exact anti-join as definitely-new, so dropping them would
-    re-enqueue links to still-seen URLs and duplicate their seen-delta
-    rows. Pinned invariant: every url_hash appears at most once across
+    reopened hashes in the seen gate — dropping them would re-enqueue
+    links to still-seen URLs and duplicate their seen-delta rows.
+    Pinned invariant: every url_hash appears at most once across
     all seen deltas of the whole resumed crawl."""
     import duckdb as _duck
 
