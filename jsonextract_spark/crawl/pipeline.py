@@ -112,22 +112,24 @@ def _seen_delta_path(wh: Warehouse, round_no: int) -> str:
 COMPACT_EVERY = 16
 
 
+def _newest_round(wh: Warehouse, table: str, upto: int) -> int:
+    """The newest round <= ``upto`` at which ``table`` exists, or -1.
+    ``compact_state`` rewrites each checkpoint table and the frontier
+    base every COMPACT_EVERY rounds, so once one exists the backward
+    scan stops within that many rounds."""
+    return next((r for r in range(upto, -1, -1) if wh.exists(table, r)),
+                -1)
+
+
 def load_seen(spark: SparkSession, wh: Warehouse, upto_round: int):
     """The seen set is stored as per-round DELTAS (append-only, like an
     Iceberg partition append): loading unions the ``is_new=1`` frontier
     partitions since the last compaction checkpoint, plus that
     checkpoint. A full rewrite per round would be O(total-crawled) I/O
     every round; unbounded delta lists would make round latency grow
-    with crawl age — compaction (see ``maybe_compact_seen``) bounds the
+    with crawl age — compaction (see ``compact_state``) bounds the
     union at COMPACT_EVERY+1 sources."""
-    import os
-
-    base_round = -1
-    for r in range(upto_round - upto_round % COMPACT_EVERY,
-                   -1, -COMPACT_EVERY):
-        if wh.exists("seen_compact", r):
-            base_round = r
-            break
+    base_round = _newest_round(wh, "seen_compact", upto_round)
     paths = ([wh._path("seen_compact", base_round)]
              if base_round >= 0 else [])
     for r in range(base_round + 1, upto_round + 1):
@@ -152,22 +154,14 @@ def load_host_stats(spark: SparkSession, wh: Warehouse,
     ``host_stats_compact`` checkpoint, so a read aggregates the newest
     checkpoint plus at most COMPACT_EVERY ledger rounds after it,
     regardless of crawl age."""
-    base = None
-    for r in range(upto_round, -1, -1):
-        # bounded scan: once compaction has run, a checkpoint exists
-        # within COMPACT_EVERY rounds of ``upto_round``; before that,
-        # upto_round itself is < COMPACT_EVERY
-        if wh.exists("host_stats_compact", r):
-            base = r
-            break
-    start = base + 1 if base is not None else 1
+    base = _newest_round(wh, "host_stats_compact", upto_round)
     ledger_paths = [wh._path("fetched", r)
-                    for r in range(start, upto_round + 1)
+                    for r in range(base + 1, upto_round + 1)
                     if wh.exists("fetched", r)]
     ckpt = (wh.load(spark, "host_stats_compact", base)
             .select("host", F.col("crawled").cast("double")
                     .alias("crawled"), "last_fetch_ts")
-            if base is not None else None)
+            if base >= 0 else None)
     if not ledger_paths:
         # None, or a checkpoint alone (already host-distinct)
         return ckpt
@@ -190,24 +184,27 @@ def _drop_uncommitted_round_state(wh: Warehouse, round_no: int):
     """Delete state-table debris a FAILED earlier attempt of
     ``round_no`` may have left (the round died after some writes but
     before its ledger commit — a committed round is never re-entered).
-    The non-empty path overwrites ``fetched``/``frontier_delta``
-    atomically anyway, but the EMPTY path writes no
-    ``frontier_delta``, and the loaders consult directory existence: a
-    surviving ``frontier_delta`` would commit phantom additions (and
-    phantom seen entries) with the crashed attempt's removals erased,
-    and a surviving full ``frontier`` base from a crashed
-    ``schedule_recrawl`` would hijack the replay base, masking every
-    event of the re-run round (both reproduced in review). ``fetched``
-    debris matters too: if the re-run pops a DIFFERENT batch (the
-    crawl-delay eligibility gate is clock-dependent) or commits empty,
-    the crashed attempt's ledger rows become phantom removals in later
-    rounds' frontier replay, phantom fetches in ``load_host_stats``
-    and phantom pages in crawl_order/recrawl —
-    the non-empty path overwrites it atomically, but only with the
-    same-shape write. Compaction checkpoints get the same treatment at
-    their own write sites (``_drop_stale_compact``), and
-    ``schedule_recrawl`` runs both cleanups before committing its
-    maintenance round.
+    This is the one cleanup: ``run_round`` runs it at entry, and the
+    ``schedule_recrawl`` and ``seed_from_sitemaps`` maintenance rounds
+    run it before their own writes. The loaders consult directory
+    existence, so every per-round table a crashed attempt can leave
+    would be trusted:
+
+    * ``frontier_delta`` — an empty re-run writes none, so the
+      survivor would commit phantom additions (and phantom seen
+      entries) with the crashed attempt's removals erased;
+    * ``frontier`` — a full base from a crashed ``schedule_recrawl``
+      or compaction would hijack the replay base, masking every event
+      of the re-run round (both reproduced in review);
+    * ``fetched`` — if the re-run pops a DIFFERENT batch (the
+      crawl-delay eligibility gate is clock-dependent) or commits
+      empty, the crashed attempt's ledger rows become phantom removals
+      in later rounds' frontier replay, phantom fetches in
+      ``load_host_stats`` and phantom pages in crawl_order/recrawl;
+    * ``seen_compact`` and ``host_stats_compact`` — the loaders'
+      backward scan would take a checkpoint at the round being re-run
+      as its own base when the re-run recompacts, ignoring the
+      re-run's fresh delta and freezing first-attempt state.
 
     Guard: this deletes the round's ``fetched`` ledger rows, so it
     refuses to run on a round the ledger already shows COMMITTED — a
@@ -215,15 +212,14 @@ def _drop_uncommitted_round_state(wh: Warehouse, round_no: int):
     with an out-of-date ``after_round``) would otherwise silently
     erase a committed round's replay removals, re-opening
     already-crawled URLs in every later round's frontier."""
-    import shutil
-
     committed = {r["round"] for r in wh.ledger()["rounds"]
                  if r.get("status") == "committed"}
     if round_no in committed:
         raise ValueError(
             f"refusing to drop state for round {round_no}: the ledger "
             f"shows it committed (stale round number at the call site?)")
-    for table in ("frontier", "frontier_delta", "fetched"):
+    for table in ("frontier", "frontier_delta", "fetched",
+                  "seen_compact", "host_stats_compact"):
         if wh.exists(table, round_no):
             shutil.rmtree(wh._path(table, round_no))
 
@@ -269,40 +265,6 @@ def _validated_kernel(kernel):
     return run
 
 
-def _drop_stale_compact(wh: Warehouse, table: str, round_no: int):
-    """A compact checkpoint already present at the round BEING RUN can
-    only be debris from a failed earlier attempt of this same round
-    (a committed round is never re-entered): the round died between
-    the checkpoint write and the ledger commit. Left in place it would
-    become its own BASE when the re-run recompacts — the loader's
-    backward scan finds it first and ignores the re-run's fresh delta,
-    freezing first-attempt state forever. Delete it before building
-    the compaction read plan (the loaders assemble their source path
-    list eagerly, driver-side)."""
-    if wh.exists(table, round_no):
-        import shutil
-
-        shutil.rmtree(wh._path(table, round_no))
-
-
-def maybe_compact_host_stats(spark: SparkSession, wh: Warehouse,
-                             round_no: int) -> bool:
-    """Every COMPACT_EVERY rounds, fold the previous checkpoint + the
-    ledger rounds since into one ``host_stats_compact`` checkpoint
-    (amortized 1/16 extra write per round) so ``load_host_stats``
-    reads a bounded round range no matter how old the crawl is.
-    Reads the ledger only, so it can run once this round's ``fetched``
-    write (A1) has landed."""
-    if round_no <= 0 or round_no % COMPACT_EVERY != 0:
-        return False
-    _drop_stale_compact(wh, "host_stats_compact", round_no)
-    agg = load_host_stats(spark, wh, round_no)
-    if agg is None:
-        return False
-    wh.save(agg, "host_stats_compact", round_no, rebalance=True)
-    return True
-
-
 _FRONTIER_COLS = ["url", "url_hash", "host", "depth", "priority",
                   "attempts"]
 
@@ -332,12 +294,8 @@ def load_frontier(spark: SparkSession, wh: Warehouse,
 
     A full ``frontier`` table at a round (init, recrawl reopen,
     sitemap seeding or compaction checkpoint) is a base."""
-    base_round = None
-    for r in range(upto_round, -1, -1):
-        if wh.exists("frontier", r):
-            base_round = r
-            break
-    if base_round is None:
+    base_round = _newest_round(wh, "frontier", upto_round)
+    if base_round < 0:
         return spark.createDataFrame(
             [], "url string, url_hash long, host string, depth int,"
                 " priority double, attempts int")
@@ -408,41 +366,57 @@ def load_frontier(spark: SparkSession, wh: Warehouse,
     return out if alive is None else out.unionByName(alive)
 
 
-def maybe_compact_frontier(spark: SparkSession, wh: Warehouse,
-                           round_no: int) -> bool:
-    """Every COMPACT_EVERY rounds, materialize the reconstructed
-    frontier as a new full ``frontier`` base so ``load_frontier``'s
-    event window stays bounded — the one amortized O(frontier) write
-    (never an every-round full rewrite). Runs AFTER the
-    round's delta write (the view must include this round's events).
-    All rows are written ``is_new=0``: their seen-delta rows were
-    already recorded by the round that discovered them, and a base
-    must never be re-counted by load_seen's is_new=1 readers."""
-    if round_no <= 0 or round_no % COMPACT_EVERY != 0:
-        return False
-    _drop_stale_compact(wh, "frontier", round_no)
-    view = (load_frontier(spark, wh, round_no)
-            .withColumn("is_new", F.lit(0)))
-    wh.save(view, "frontier", round_no, partition_by="is_new",
-            rebalance=True)
-    return True
+def compact_state(spark: SparkSession, wh: Warehouse,
+                  round_no: int) -> int:
+    """Every COMPACT_EVERY rounds, re-materialize the delta-layout
+    states so their loaders read a bounded round range however old the
+    crawl is (the IcebergLite analogue of Iceberg's rewrite_data_files).
+    Returns the number of writes, 0 off the cadence:
 
+    * ``frontier`` — the reconstructed frontier as a new full base, the
+      one amortized O(frontier) write. Its rows are all ``is_new=0``:
+      the round that discovered them already wrote their seen delta;
+    * ``seen_compact`` — the seen set (checkpoint + deltas since);
+    * ``host_stats_compact`` — the previous checkpoint folded with the
+      ledger rounds since (none while nothing has been fetched).
 
-def maybe_compact_seen(spark: SparkSession, wh: Warehouse, round_no: int):
-    """Every COMPACT_EVERY rounds, rewrite the seen set (base + deltas
-    since) into one compact table version — the IcebergLite analogue of
-    Iceberg's rewrite_data_files maintenance. One extra write job per
-    COMPACT_EVERY rounds (amortized 1/16 action/round); load_seen then
-    unions a bounded number of sources no matter how old the crawl is."""
-    if round_no <= 0 or round_no % COMPACT_EVERY != 0:
-        return False
-    # same failed-attempt hazard as host_stats: a stale seen_compact
-    # at this round would be taken as load_seen's base, resurrecting
-    # the first attempt's seen set over the re-run's
-    _drop_stale_compact(wh, "seen_compact", round_no)
-    wh.save(load_seen(spark, wh, round_no), "seen_compact", round_no,
-            rebalance=True)
-    return True
+    Runs after the round's own writes, so the views include its
+    events. All three read plans are built before any checkpoint
+    lands; the writes touch disjoint tables, so seen and host_stats
+    save on side threads while the frontier saves on this one.
+    ``InheritableThread``: under PySpark's pinned-thread mode a raw
+    thread would not inherit the round's job group (its jobs would
+    escape ``spark_jobs`` and group cancellation) nor clean up its
+    paired JVM thread. Every side thread is joined before this returns
+    or raises, and the first side-thread error is re-raised here."""
+    if round_no <= 0 or round_no % COMPACT_EVERY:
+        return 0
+    frontier = (load_frontier(spark, wh, round_no)
+                .withColumn("is_new", F.lit(0)))
+    side = {"seen_compact": load_seen(spark, wh, round_no),
+            "host_stats_compact": load_host_stats(spark, wh, round_no)}
+    errors: list[BaseException] = []
+
+    def save(df, table):
+        try:
+            wh.save(df, table, round_no, rebalance=True)
+        except BaseException as e:  # re-raised on the round thread
+            errors.append(e)
+
+    threads = [InheritableThread(target=save, args=(df, table),
+                                 name=f"{table}-r{round_no}")
+               for table, df in side.items() if df is not None]
+    for th in threads:
+        th.start()
+    try:
+        wh.save(frontier, "frontier", round_no, partition_by="is_new",
+                rebalance=True)
+    finally:
+        for th in threads:
+            th.join()
+    if errors:
+        raise errors[0]
+    return 1 + len(threads)
 
 
 def init_state(spark: SparkSession, wh: Warehouse, n_seeds: int,
@@ -516,10 +490,14 @@ def run_round(spark: SparkSession, wh: Warehouse, round_no: int,
     fused pop+fetch+extract ledger write (A1) and the frontier DELTA
     save (A2: this round's additions only, whose ``is_new=1`` slice
     doubles as the seen delta; removals ride the ledger's url_hash
-    column — see ``load_frontier``) — plus amortized compaction writes
-    (frontier base + seen + host_stats checkpoints) every
-    COMPACT_EVERY rounds. Host stats need no write
+    column — see ``load_frontier``) — plus the amortized writes of
+    ``compact_state`` (frontier base + seen + host_stats checkpoints)
+    every COMPACT_EVERY rounds. Host stats need no write
     of their own: ``load_host_stats`` derives them from the ledger.
+    An EMPTY round (A1 popped nothing) runs A1 only, plus compaction
+    on the cadence: it writes no frontier state, and its metrics,
+    ledger entry (marked ``empty``) and job-group release go through
+    the same tail as any round.
     Every per-round write is O(round output); the only O(total-state)
     writes are the amortized re-materializations. All scalar
     round metrics (batch size, objects, fetched/blocked/deferred
@@ -531,14 +509,14 @@ def run_round(spark: SparkSession, wh: Warehouse, round_no: int,
     round's job group — with AQE enabled that is one job per
     materialized query stage, NOT the action count. The ``sec_*``
     metrics split the round's wall clock at its action boundaries:
-    ``sec_pop_fetch_extract`` is the ledger write (A1);
-    ``sec_driver_plan`` is the driver building the link-discovery,
-    gate and delta plans (no Spark action runs in it);
-    ``sec_frontier_seen`` is the frontier-delta write (A2), which runs
-    the seen gate; and, on compaction rounds only, ``sec_compact`` is
-    the wait for the compactions. Driver-side action latency is what
-    bounds small-round throughput; at production batch sizes the same
-    two actions amortize over millions of URLs."""
+    ``sec_pop_fetch_extract`` is the ledger write (A1); on non-empty
+    rounds, ``sec_driver_plan`` is the driver building the
+    link-discovery, gate and delta plans (no Spark action runs in it)
+    and ``sec_frontier_seen`` is the frontier-delta write (A2), which
+    runs the seen gate; and, on compaction rounds only,
+    ``sec_compact`` is ``compact_state``. Driver-side action latency
+    is what bounds small-round throughput; at production batch sizes
+    the same two actions amortize over millions of URLs."""
     t0 = time.time()
     sc = spark.sparkContext
     # unique per call: a second crawl in the same session must not count
@@ -673,181 +651,138 @@ def run_round(spark: SparkSession, wh: Warehouse, round_no: int,
     n_fetched, n_blocked = int(om["n_fetched"]), int(om["n_blocked"])
     n_retry_marked = int(om["n_retry_marked"])
     t_fetch = time.time()
-    if n_batch == 0:
-        # nothing fetched: no state to write — the frontier/host_stats
-        # loaders read a round RANGE, and an empty round adds no delta
-        # and no ledger rows, so it carries state forward for free
-        # keep the compaction cadences even through empty stretches so
-        # the loaders' source lists stay bounded
-        maybe_compact_frontier(spark, wh, round_no)
-        maybe_compact_seen(spark, wh, round_no)
-        maybe_compact_host_stats(spark, wh, round_no)
-        # empty rounds still record metrics and release the job group —
-        # otherwise later driver-side jobs (recrawl, the next caller on
-        # this thread) get attributed to this round's stale group
-        n_jobs = len(sc.statusTracker().getJobIdsForGroup(job_group))
-        sc.setLocalProperty("spark.jobGroup.id", None)
-        _write_metrics(wh, round_no, {
-            "fetched": 0.0, "objects": 0.0, "new_urls": 0.0,
-            "sec": time.time() - t0, "spark_actions": float(n_actions),
-            "spark_jobs": float(n_jobs)})
-        wh.commit_round(round_no, {"fetched": 0, "new": 0, "empty": True})
-        batch.unpersist()
-        enriched.unpersist()
-        return {"fetched": 0, "new": 0, "blocked": 0, "deferred": 0,
-                "retry_marked": 0, "sec": time.time() - t0}
-
-    # 5. link discovery -> candidate identity: canonical url, hash and
-    #    host in one ArrowEvalPython node (_with_url_identity, which
-    #    drops non-crawlable hrefs); depth is already the CANDIDATE
-    #    depth (parent + 1). Duplicate hashes are resolved by the
-    #    gate's JVM aggregate below.
-    cand = _with_url_identity(
-        enriched.select((F.col("depth") + 1).alias("depth"),
-                        F.explode("links").alias("raw_url")), "raw_url")
-
-    # 6. seen-set gate: JVM per-hash min aggregate and exact anti-join
-    #    (seen.gate_new_urls). The gate ALSO excludes URLs already
-    #    pending in the frontier, for free: every pending row entered
-    #    the frontier either through an is_new=1 seen-delta write
-    #    (round-0 seeds, fresh discoveries) or while already seen
-    #    (deferred re-adds, recrawl reopens), so pending ⊆ seen and the
-    #    exact seen anti-join covers both. The pre-r6 code carried a second anti-join
-    #    against the full frontier here — provably a no-op by the same
-    #    argument, and an O(frontier) scan per round at the design
-    #    point.
-    fresh = seen_mod.gate_new_urls(cand, seen)
-    fresh = (fresh.withColumn("priority", priority_of(F.col("depth")))
-                  .withColumn("attempts", F.lit(0))
-                  .select("url", "url_hash", "host", "depth", "priority",
-                          "attempts"))
-
-    # 7. frontier DELTA in ONE write job: only this round's additions
-    #    (deferred re-adds + fresh discoveries), hive-partitioned on
-    #    is_new so the fresh slice doubles as the round's append-only
-    #    seen delta (see _seen_delta_path). Removals need NO write at
-    #    all — the popped rows are already in the fetched ledger
-    #    (url_hash column), and ``load_frontier`` replays additions
-    #    against removals per url_hash. The pre-r6 form rewrote the
-    #    ENTIRE frontier here (remaining ∪ deferred ∪ fresh) —
-    #    O(frontier) write I/O per round, the largest state table of
-    #    all at 10^10-URL scale.
-    # temporarily-blocked URLs (robots unreachable / transient fetch
-    # failure) go BACK into the frontier for a later round — they were
-    # popped but not consumed. Bounded: at most MAX_DEFERS re-adds per
-    # URL (the ledger's retry rows past the cap stay consumed, like
-    # any popped URL). Priority is REBUILT from the depth base so the
-    # decay is exactly DEFER_PRIORITY_DECAY^attempts — the popped
-    # row's priority column already carries pop_batch's host-budget
-    # discount, and decaying that value would compound the discount
-    # into the decay on every retry.
-    deferred = (enriched.filter("retry").select("url")
-                .join(batch.select("url", "url_hash", "host", "depth",
-                                   "attempts"), "url")
-                .filter(F.col("attempts") < F.lit(MAX_DEFERS))
-                .select("url", "url_hash", "host", "depth",
-                        (priority_of(F.col("depth"))
-                         * F.pow(F.lit(DEFER_PRIORITY_DECAY),
-                                 F.col("attempts") + 1)).alias("priority"),
-                        (F.col("attempts") + 1).alias("attempts")))
-    # The repartition coalesces the delta write from one file per
-    # union-branch task (64+ tiny files, re-listed and re-scanned by
-    # every later replay — the r10 profile measured the replay's event
-    # scan as a 56-task stage driven purely by file count) to a
-    # parallelism-scaled handful. Both round metrics (n_new = fresh
-    # rows, n_deferred = URLs actually RE-FRONTIERED, i.e. retry rows
-    # under the attempts cap — counting every retry-marked ledger row
-    # would report a URL as deferred on the very round it is dropped)
-    # ride this one write as a single CollectMetrics over the is_new
-    # column, placed ABOVE the repartition: AQE's empty-relation
-    # propagation removes observation nodes that sit under a
-    # materialized-empty exchange (measured: the all-blocked round
-    # then loses its n_new/n_deferred row), so the observe must stay
-    # in the final write stage.
-    frontier_delta = (deferred.withColumn("is_new", F.lit(0))
-                      .unionByName(fresh.withColumn("is_new", F.lit(1)))
-                      .repartition(max(
-                          spark.sparkContext.defaultParallelism // 8, 1)))
-
-    t_links = time.time()
-    # ONE write job runs the whole gate pipeline and publishes the
-    # frontier; n_new and n_deferred ride the SAME action as
-    # CollectMetrics observations (no separate materializing count(),
-    # no driver re-read of the written is_new=1 partition). ``fresh``
-    # is not cached: this write is its only reader. try/finally: a
-    # failed write must not leak still-running background compactions
-    # for a round that will never commit, nor the round's cached RDD
-    # blocks — every side thread is joined and the caches dropped on
-    # the error path before the exception propagates.
-    # InheritableThread, not threading.Thread: under PySpark's
-    # pinned-thread mode (the default here) a raw Python thread neither
-    # inherits the round's job-group local property (its jobs would
-    # escape the spark_jobs counter and any group cancellation) nor
-    # cleans up its paired JVM thread.
-    side_err: list[BaseException] = []
-    side_threads: list = []
-    side_actions: list[int] = []
-
-    def _spawn(fn, name):
-        def run():
-            try:
-                fn()
-            except BaseException as e:  # re-raised on the round thread
-                side_err.append(e)
-        th = InheritableThread(target=run, name=name)
-        side_threads.append(th)
-        th.start()
-
+    secs = {"sec_pop_fetch_extract": t_fetch - t0}
+    n_new = n_deferred = 0
+    # try/finally: a failed write must not leak the round's cached RDD
+    # blocks — the caches are dropped on the error path before the
+    # exception propagates.
     try:
-        obs_front = Observation(f"frontier-r{round_no}")
-        frontier_delta = frontier_delta.observe(
-            obs_front,
-            F.coalesce(F.sum("is_new"), F.lit(0)).alias("n_new"),
-            F.coalesce(F.sum((F.col("is_new") == 0).cast("long")),
-                       F.lit(0)).alias("n_deferred"))
-        sc.setJobDescription(f"r{round_no} A2 gate+frontier delta")
-        wh.save(frontier_delta, "frontier_delta", round_no,
-                partition_by="is_new")
-        n_actions += 1
-        n_new = int(obs_front.get["n_new"])
-        n_deferred = int(obs_front.get["n_deferred"])
-        t_frontier = time.time()
+        if n_batch:
+            # 5. link discovery -> candidate identity: canonical url,
+            #    hash and host in one ArrowEvalPython node
+            #    (_with_url_identity, which drops non-crawlable hrefs);
+            #    depth is already the CANDIDATE depth (parent + 1).
+            #    Duplicate hashes are resolved by the gate's JVM
+            #    aggregate below.
+            cand = _with_url_identity(
+                enriched.select((F.col("depth") + 1).alias("depth"),
+                                F.explode("links").alias("raw_url")),
+                "raw_url")
 
-        # base re-materializations must follow the delta write (the
-        # reconstructed views include this round's events); the seen,
-        # host_stats and frontier compactions read/write disjoint
-        # tables, so on compact rounds they run concurrently
-        compact = round_no > 0 and round_no % COMPACT_EVERY == 0
-        if compact:
-            _spawn(lambda: side_actions.append(
-                1 if maybe_compact_seen(spark, wh, round_no) else 0),
-                f"seen-compact-r{round_no}")
-            _spawn(lambda: side_actions.append(
-                1 if maybe_compact_host_stats(spark, wh, round_no)
-                else 0), f"host-stats-compact-r{round_no}")
-            if maybe_compact_frontier(spark, wh, round_no):
-                n_actions += 1
+            # 6. seen-set gate: JVM per-hash min aggregate and exact
+            #    anti-join (seen.gate_new_urls). The gate ALSO excludes
+            #    URLs already pending in the frontier, for free: every
+            #    pending row entered the frontier either through an
+            #    is_new=1 seen-delta write (round-0 seeds, fresh
+            #    discoveries) or while already seen (deferred re-adds,
+            #    recrawl reopens), so pending ⊆ seen and the exact seen
+            #    anti-join covers both. The pre-r6 code carried a second
+            #    anti-join against the full frontier here — provably a
+            #    no-op by the same argument, and an O(frontier) scan per
+            #    round at the design point.
+            fresh = seen_mod.gate_new_urls(cand, seen)
+            fresh = (fresh
+                     .withColumn("priority", priority_of(F.col("depth")))
+                     .withColumn("attempts", F.lit(0))
+                     .select("url", "url_hash", "host", "depth",
+                             "priority", "attempts"))
+
+            # 7. frontier DELTA in ONE write job: only this round's
+            #    additions (deferred re-adds + fresh discoveries),
+            #    hive-partitioned on is_new so the fresh slice doubles
+            #    as the round's append-only seen delta (see
+            #    _seen_delta_path). Removals need NO write at all — the
+            #    popped rows are already in the fetched ledger (url_hash
+            #    column), and ``load_frontier`` replays additions
+            #    against removals per url_hash. The pre-r6 form
+            #    rewrote the ENTIRE frontier here (remaining ∪ deferred
+            #    ∪ fresh) — O(frontier) write I/O per round, the
+            #    largest state table of all at 10^10-URL scale.
+            # temporarily-blocked URLs (robots unreachable / transient
+            # fetch failure) go BACK into the frontier for a later round
+            # — they were popped but not consumed. Bounded: at most
+            # MAX_DEFERS re-adds per URL (the ledger's retry rows past
+            # the cap stay consumed, like any popped URL). Priority is
+            # REBUILT from the depth base so the decay is exactly
+            # DEFER_PRIORITY_DECAY^attempts — the popped row's priority
+            # column already carries pop_batch's host-budget discount,
+            # and decaying that value would compound the discount into
+            # the decay on every retry.
+            deferred = (enriched.filter("retry").select("url")
+                        .join(batch.select("url", "url_hash", "host",
+                                           "depth", "attempts"), "url")
+                        .filter(F.col("attempts") < F.lit(MAX_DEFERS))
+                        .select("url", "url_hash", "host", "depth",
+                                (priority_of(F.col("depth"))
+                                 * F.pow(F.lit(DEFER_PRIORITY_DECAY),
+                                         F.col("attempts") + 1))
+                                .alias("priority"),
+                                (F.col("attempts") + 1)
+                                .alias("attempts")))
+            # The repartition coalesces the delta write from one file
+            # per union-branch task (64+ tiny files, re-listed and
+            # re-scanned by every later replay — the r10 profile
+            # measured the replay's event scan as a 56-task stage
+            # driven purely by file count) to a parallelism-scaled
+            # handful. Both round metrics (n_new = fresh rows,
+            # n_deferred = URLs actually RE-FRONTIERED, i.e. retry rows
+            # under the attempts cap — counting every retry-marked
+            # ledger row would report a URL as deferred on the very
+            # round it is dropped) ride this one write as a single
+            # CollectMetrics over the is_new column, placed ABOVE the
+            # repartition: AQE's empty-relation propagation removes
+            # observation nodes that sit under a materialized-empty
+            # exchange (measured: the all-blocked round then loses its
+            # n_new/n_deferred row), so the observe must stay in the
+            # final write stage.
+            frontier_delta = (
+                deferred.withColumn("is_new", F.lit(0))
+                .unionByName(fresh.withColumn("is_new", F.lit(1)))
+                .repartition(max(
+                    spark.sparkContext.defaultParallelism // 8, 1)))
+
+            t_links = time.time()
+            # ONE write job runs the whole gate pipeline and publishes
+            # the frontier; n_new and n_deferred ride the SAME action
+            # as CollectMetrics observations (no separate materializing
+            # count(), no driver re-read of the written is_new=1
+            # partition). ``fresh`` is not cached: this write is its
+            # only reader.
+            obs_front = Observation(f"frontier-r{round_no}")
+            frontier_delta = frontier_delta.observe(
+                obs_front,
+                F.coalesce(F.sum("is_new"), F.lit(0)).alias("n_new"),
+                F.coalesce(F.sum((F.col("is_new") == 0).cast("long")),
+                           F.lit(0)).alias("n_deferred"))
+            sc.setJobDescription(f"r{round_no} A2 gate+frontier delta")
+            wh.save(frontier_delta, "frontier_delta", round_no,
+                    partition_by="is_new")
+            n_actions += 1
+            n_new = int(obs_front.get["n_new"])
+            n_deferred = int(obs_front.get["n_deferred"])
+            secs["sec_driver_plan"] = t_links - t_fetch
+            secs["sec_frontier_seen"] = time.time() - t_links
+        # An empty round writes no delta and no ledger rows: the
+        # loaders read a round RANGE, so it carries state forward for
+        # free. Compaction follows the round's own writes and keeps
+        # its cadence through empty stretches, so the loaders' source
+        # lists stay bounded; it must land before the ledger commit
+        # makes the round visible.
+        t_state = time.time()
+        n_compact = compact_state(spark, wh, round_no)
+        if n_compact:
+            n_actions += n_compact
+            secs["sec_compact"] = time.time() - t_state
     finally:
-        # all compactions must be on disk before the ledger commit
-        # makes the round visible (resume loads them for the next
-        # round's gate)
-        for th in side_threads:
-            th.join()
         batch.unpersist()
         enriched.unpersist()
-    if side_err:
-        raise side_err[0]
-    n_actions += sum(side_actions)
-    t_compact = time.time()
 
+    # release the job group — otherwise later driver-side jobs
+    # (recrawl, the next caller on this thread) get attributed to this
+    # round's stale group
     n_jobs = len(sc.statusTracker().getJobIdsForGroup(job_group))
     sc.setLocalProperty("spark.jobGroup.id", None)
     sec = time.time() - t0
-    secs = {"sec_pop_fetch_extract": t_fetch - t0,
-            "sec_driver_plan": t_links - t_fetch,
-            "sec_frontier_seen": t_frontier - t_links}
-    if compact:
-        secs["sec_compact"] = t_compact - t_frontier
     _write_metrics(wh, round_no, {
         "fetched": float(n_fetched), "objects": float(n_objects),
         "robots_blocked": float(n_blocked),
@@ -865,6 +800,8 @@ def run_round(spark: SparkSession, wh: Warehouse, round_no: int,
                    "deferred": n_deferred,
                    "batch": n_batch,
                    "sec": round(sec, 3)}
+    if not n_batch:
+        commit_info["empty"] = True
     if warc_round_dir is not None:
         # shard manifest: the archive write rode the ledger action
         # (executor-side, atomic per shard); the ledger records what

@@ -79,8 +79,7 @@ def schedule_recrawl(spark, wh, after_round: int, max_age_sec: float,
     import time as _time
 
     from jsonextract_spark.crawl.pipeline import (
-        _drop_stale_compact, _drop_uncommitted_round_state,
-        _with_url_identity, load_frontier)
+        _drop_uncommitted_round_state, _with_url_identity, load_frontier)
 
     now_ts = _time.time() if now_ts is None else now_ts
     round_ts = {r["round"]: float(r["ts"])
@@ -123,12 +122,10 @@ def schedule_recrawl(spark, wh, after_round: int, max_age_sec: float,
     # frontier_delta becomes the round's seen delta (URLs marked seen
     # but absent from the reopened frontier — never crawled), and its
     # fetched rows double-count into host stats and surface in
-    # crawl_order / later recrawl ages. Same cleanup run_round
-    # performs at entry, plus the compaction checkpoints a crashed
-    # attempt of rn may have written.
+    # crawl_order / later recrawl ages; its compaction checkpoints
+    # would become the loaders' bases. Same cleanup run_round
+    # performs at entry.
     _drop_uncommitted_round_state(wh, rn)
-    for tbl in ("seen_compact", "host_stats_compact"):
-        _drop_stale_compact(wh, tbl, rn)
     frontier = load_frontier(spark, wh, after_round)
     merged = (reopen_in_frontier(frontier, refresh)
               .withColumn("is_new", F.lit(0)))

@@ -236,12 +236,10 @@ def pop_batch(frontier: DataFrame, robots: DataFrame, host_budget: int,
     return capped.withColumn("rank", F.row_number().over(w))
 
 
-def priority_of(depth_col, host_crawled_col=None):
-    """Scoring per north_star: BFS-flavored depth decay, discounted by how
-    much of the host's budget has been consumed historically."""
+def priority_of(depth_col):
+    """Scoring per north_star: BFS-flavored depth decay. The discount by
+    how much of the host's budget has been consumed is applied at pop
+    time (``pop_batch``), from the round's host stats."""
     if isinstance(depth_col, str):
         depth_col = F.col(depth_col)
-    p = F.lit(1.0) / (F.lit(1.0) + depth_col)
-    if host_crawled_col is not None:
-        p = p / (F.lit(1.0) + F.log1p(host_crawled_col))
-    return p
+    return F.lit(1.0) / (F.lit(1.0) + depth_col)

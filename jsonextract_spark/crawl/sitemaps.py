@@ -189,9 +189,10 @@ def seed_from_sitemaps(spark, wh, after_round: int,
     added (0 = no round consumed)."""
     from pyspark.sql import functions as F
 
+    from jsonextract_spark.crawl import seen as seen_mod
     from jsonextract_spark.crawl.pipeline import (
-        _drop_stale_compact, _drop_uncommitted_round_state,
-        _with_url_identity, load_frontier, load_seen)
+        _drop_uncommitted_round_state, _with_url_identity, load_frontier,
+        load_seen)
     from jsonextract_spark.crawl.scheduler import priority_of
 
     if source_kernel is None:
@@ -214,12 +215,12 @@ def seed_from_sitemaps(spark, wh, after_round: int,
             cand = cand.unionByName(led)
         hosts = cand.groupBy("host").agg(F.min("url").alias("url"))
     raw = hosts.mapInPandas(source_kernel, "host string, url string")
-    ident = (_with_url_identity(raw)
-             .select("url", "url_hash", "host")
-             .dropDuplicates(["url_hash"]))
-    seen = load_seen(spark, wh, after_round)
-    fresh = (ident.join(seen, "url_hash", "left_anti")
-             .withColumn("depth", F.lit(0))
+    # the crawl round's gate: one row per unseen hash (per-hash mins,
+    # so a hash collision resolves the same way in both places)
+    found = (_with_url_identity(raw)
+             .select("url", "url_hash", "host", F.lit(0).alias("depth")))
+    fresh = (seen_mod.gate_new_urls(found,
+                                    load_seen(spark, wh, after_round))
              .withColumn("priority", priority_of(F.lit(0)))
              .withColumn("attempts", F.lit(0))
              .select("url", "url_hash", "host", "depth", "priority",
@@ -231,8 +232,6 @@ def seed_from_sitemaps(spark, wh, after_round: int,
         return 0
     rn = after_round + 1
     _drop_uncommitted_round_state(wh, rn)
-    for tbl in ("seen_compact", "host_stats_compact"):
-        _drop_stale_compact(wh, tbl, rn)
     merged = (frontier.withColumn("is_new", F.lit(0))
               .unionByName(fresh.withColumn("is_new", F.lit(1))))
     # rebalance: this base is re-read by EVERY later round's replay —

@@ -22,9 +22,10 @@ frontier     FULL frontier BASE: url, url_hash, host, depth, priority,
              0, where is_new=1 seeds double as the first seen delta),
              at recrawl and sitemap maintenance rounds (a sitemap
              round's is_new=1 URLs are its seen delta), and as the
-             amortized COMPACT_EVERY re-materialization (all
-             is_new=0) — never per round. The loader treats any of
-             these as a base.
+             amortized re-materialization every
+             pipeline.COMPACT_EVERY rounds (pipeline.compact_state,
+             all is_new=0) — never per round. The loader treats any
+             of these as a base.
 frontier_delta
              the round's frontier ADDITIONS only (same columns),
              partitioned on is_new: 0 = deferred re-adds, 1 = fresh
@@ -36,9 +37,9 @@ frontier_delta
              removals per url_hash, newest event wins — a round's
              frontier write is O(adds), never O(frontier).
 seen_compact url_hash — periodic compaction of the deltas (the
-             IcebergLite analogue of rewrite_data_files), written every
-             pipeline.COMPACT_EVERY rounds so load_seen unions a
-             bounded source list
+             IcebergLite analogue of rewrite_data_files), written by
+             pipeline.compact_state every pipeline.COMPACT_EVERY
+             rounds so load_seen unions a bounded source list
 seen_filter  per-bucket Bloom bitsets written by earlier code; the
              exact seen gate never reads them, so an old warehouse's
              dirs are ignored
@@ -53,13 +54,20 @@ fetched      batch_id, rank, url, url_hash (the frontier key — the
 host_stats_compact
              host, crawled (cumulative fetch count), last_fetch_ts
              (epoch seconds of the host's newest real fetch) — a
-             checkpoint written every pipeline.COMPACT_EVERY rounds.
+             checkpoint written by pipeline.compact_state every
+             pipeline.COMPACT_EVERY rounds.
              No per-round host table exists: the fetched ledger
              already holds every fetch, so pipeline.load_host_stats
              derives the cumulative totals as the newest checkpoint
              plus count/max(warc_ts) over the non-blocked ledger rows
              of the rounds after it.
 metrics      batch_id, key, value (incl. per-phase secs + spark_jobs)
+
+frontier, frontier_delta, fetched, seen_compact and host_stats_compact
+are the per-round state a crashed round attempt can leave behind;
+pipeline._drop_uncommitted_round_state deletes all five at a round
+that is not committed before the round (or a maintenance round at the
+same number) is run again.
 """
 
 from __future__ import annotations

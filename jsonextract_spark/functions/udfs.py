@@ -199,7 +199,9 @@ def _links_from_objs(objs: list[str]) -> list[str]:
     for obj in objs:
         try:
             v = json.loads(obj)
-        except ValueError:
+        except (ValueError, RecursionError):
+            # too deep for the decoder counts as a decode failure, the
+            # rule gojson.json_valid uses
             continue
         _collect_links(v, links)
     return links
@@ -211,20 +213,25 @@ def _links_from_text(text: str) -> list[str]:
     return _links_from_objs(extract_budgeted(text))
 
 
-def _collect_links(v, out: list[str]):
-    if isinstance(v, dict):
-        ls = v.get("links")
-        if isinstance(ls, list):
-            out.extend(x for x in ls if isinstance(x, str))
-        href = v.get("href")
-        if isinstance(href, str):
-            out.append(href)
-        for k in sorted(v):
-            if k not in ("links", "href"):
-                _collect_links(v[k], out)
-    elif isinstance(v, list):
-        for x in v:
-            _collect_links(x, out)
+def _collect_links(root, out: list[str]):
+    """Pre-order walk with an explicit stack, so any nesting depth fits:
+    per object its 'links' strings, then its 'href', then its other
+    values in sorted-key order; array elements in order; each subtree
+    finished before its next sibling."""
+    stack = [root]
+    while stack:
+        v = stack.pop()
+        if isinstance(v, dict):
+            ls = v.get("links")
+            if isinstance(ls, list):
+                out.extend(x for x in ls if isinstance(x, str))
+            href = v.get("href")
+            if isinstance(href, str):
+                out.append(href)
+            stack.extend(v[k] for k in sorted(v, reverse=True)
+                         if k not in ("links", "href"))
+        elif isinstance(v, list):
+            stack.extend(reversed(v))
 
 
 @F.pandas_udf(ArrayType(StringType()))

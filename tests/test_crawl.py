@@ -1440,6 +1440,145 @@ def test_stale_uncommitted_compact_ignored_on_resume(spark, tmp_path,
     assert seen == raw
 
 
+# The Warehouse.save tables and the commit of a non-empty compaction
+# round, in call order (seen_compact and host_stats_compact save on
+# side threads, concurrently with the frontier base).
+_COMPACTION_ROUND_CALLS = ["fetched", "frontier_delta", "seen_compact",
+                           "host_stats_compact", "frontier",
+                           "commit_round"]
+
+
+class _Crash(Exception):
+    pass
+
+
+def _after_round_calls(monkeypatch, round_no, hook):
+    """Run ``hook(call)`` after every Warehouse.save or commit_round of
+    ``round_no`` has landed; ``call`` is the saved table's name, or
+    "commit_round"."""
+    from jsonextract_spark.crawl.tables import Warehouse
+
+    save, commit = Warehouse.save, Warehouse.commit_round
+
+    def saving(wh, df, table, round_no_=None, **kw):
+        save(wh, df, table, round_no_, **kw)
+        if round_no_ == round_no:
+            hook(table)
+
+    def committing(wh, round_no_, info=None):
+        commit(wh, round_no_, info)
+        if round_no_ == round_no:
+            hook("commit_round")
+
+    monkeypatch.setattr(Warehouse, "save", saving)
+    monkeypatch.setattr(Warehouse, "commit_round", committing)
+
+
+def _crawl_state(spark, wdir, upto):
+    from jsonextract_spark.crawl import pipeline as P
+
+    wh = P.Warehouse(wdir)
+    return {
+        "crawl_order": P.crawl_order(spark, wdir).collect(),
+        "seen": sorted(r["url_hash"]
+                       for r in P.load_seen(spark, wh, upto).collect()),
+        "frontier": sorted(tuple(r) for r in
+                           P.load_frontier(spark, wh, upto).collect()),
+        "host_stats": sorted(tuple(r) for r in
+                             P.load_host_stats(spark, wh, upto).collect()),
+    }
+
+
+@pytest.fixture(scope="module")
+def compaction_reference(spark, tmp_path_factory):
+    """One uninterrupted 3-round crawl under COMPACT_EVERY = 2 (the
+    ``one_round_crawl`` arguments): its state at round 3, and the
+    calls its compaction round 2 made."""
+    from jsonextract_spark.crawl import pipeline as P
+
+    calls = []
+    wdir = str(tmp_path_factory.mktemp("compaction_ref") / "wh")
+    with pytest.MonkeyPatch.context() as mp:
+        mp.setattr(P, "COMPACT_EVERY", 2)
+        _after_round_calls(mp, 2, calls.append)
+        P.run_crawl(spark, wdir, rounds=3, n_seeds=10, host_budget=3,
+                    batch_size=20)
+    return calls, _crawl_state(spark, wdir, 3)
+
+
+@pytest.mark.parametrize("call", _COMPACTION_ROUND_CALLS)
+def test_compaction_round_crash_resumes_to_uninterrupted_state(
+        spark, one_round_crawl, compaction_reference, tmp_path,
+        monkeypatch, call):
+    """A crash right after any write of a compaction round — the
+    ledger, the frontier delta, each checkpoint (also those saved on
+    compaction's side threads) or the commit itself — then a resume
+    gives the state of the uninterrupted crawl: the crawl ledger and
+    the seen, frontier and host-stats views.
+
+    The crashed attempt pops a smaller batch than the re-run, as the
+    clock-dependent crawl-delay gate can make it do, so its debris
+    differs from what the re-run writes and a leftover table shows.
+    After a crash past the commit the attempt's round stands, so that
+    case pops the same batch."""
+    import shutil
+
+    from jsonextract_spark.crawl import pipeline as P
+
+    ref_calls, want = compaction_reference
+    assert sorted(ref_calls) == sorted(_COMPACTION_ROUND_CALLS)
+    kw = dict(n_seeds=10, host_budget=3, batch_size=20)
+    wdir = str(tmp_path / "wh")
+    shutil.copytree(one_round_crawl, wdir)
+    monkeypatch.setattr(P, "COMPACT_EVERY", 2)
+
+    def crash(c):
+        if c == call:
+            raise _Crash(c)
+
+    attempt = kw if call == "commit_round" else dict(kw, batch_size=8)
+    with monkeypatch.context() as mp:
+        _after_round_calls(mp, 2, crash)
+        with pytest.raises(_Crash):
+            P.run_crawl(spark, wdir, rounds=3, resume=True, **attempt)
+    assert (P.Warehouse(wdir).last_committed_round()
+            == (2 if call == "commit_round" else 1))
+    P.run_crawl(spark, wdir, rounds=3, resume=True, **kw)
+    assert _crawl_state(spark, wdir, 3) == want
+
+
+def test_link_discovery_at_any_stack_depth():
+    """Link discovery needs no Python stack per nesting level. A
+    depth-900 value yields its link at the top of the stack and, under
+    200 extra frames, where ``json.loads`` itself runs out of stack,
+    counts as a decode failure instead of raising. The walker takes
+    any depth, in the visit order of the recursive form: per object
+    its 'links' strings, its 'href', then its other values in
+    sorted-key order, each subtree before its next sibling."""
+    from jsonextract_spark.functions.udfs import (_collect_links,
+                                                  _links_from_objs)
+    from tests.test_objects_semantics import _under_frames
+
+    deep = '{"a":' * 899 + '{"links":["http://x/"]}' + "}" * 899
+    assert _links_from_objs([deep]) == ["http://x/"]
+    assert _under_frames(200, lambda: _links_from_objs([deep])) in (
+        [], ["http://x/"])
+
+    value = {"links": ["http://end/"]}
+    for level in range(5000):
+        value = {"a": value} if level % 2 else [value]
+    out = []
+    _under_frames(200, lambda: _collect_links(value, out))
+    assert out == ["http://end/"]
+
+    out = []
+    _collect_links({"b": {"href": "h4"}, "links": ["l1", 7, "l2"],
+                    "href": "h1",
+                    "a": [{"z": {"href": "h3"}, "links": ["l3"]},
+                          {"href": "h2"}]}, out)
+    assert out == ["l1", "l2", "h1", "l3", "h3", "h2", "h4"]
+
+
 @pytest.mark.slow
 def test_crawl_deterministic_across_parallelism(tmp_path):
     w2, w8 = str(tmp_path / "w2"), str(tmp_path / "w8")
