@@ -1,16 +1,13 @@
 """Real HTTP fetch stage (production path for crawl/synth.py's slot).
 
-`mapInPandas` batch fetcher: each task owns a politeness bucket of URLs
-(the pipeline repartitions by salted host before calling this), fetches
-sequentially within the task with a per-request delay — so per-host
-politeness is enforced structurally by partitioning, not by a global
-rate limiter. Browser-ish headers match the reference CLI
-(/root/reference/cmd/jsonx/main.go:19-32, 64-87).
-
-No external network exists in the sandbox; tests drive this against a
-local http.server. On a cluster this is the drop-in fetch stage:
-``pages = batch.repartition(N, host, salt).mapInPandas(
-make_fetcher(...), FETCH_HTTP_SCHEMA)``.
+``make_fetch_extract_kernel`` builds the fused fetch + extract +
+link-discovery ``mapInPandas`` kernel. Each task owns a politeness
+bucket of URLs (the pipeline repartitions by salted host before calling
+it) and fetches sequentially within the task, pacing each host on its
+robots ask or the scheduler's ``eff_delay`` — so per-host politeness is
+enforced structurally by partitioning, not by a global rate limiter.
+Browser-ish headers match the reference CLI (cmd/jsonx/main.go:19-32,
+64-87). Tests drive the kernel against a local http.server.
 """
 
 from __future__ import annotations
@@ -21,9 +18,6 @@ from typing import Iterable, Iterator
 import pandas as pd
 
 from jsonextract_spark.crawl.scheduler import DEFAULT_POLITENESS_FLOOR_SEC
-
-FETCH_HTTP_SCHEMA = ("url string, status int, fetched_ts double,"
-                     " html binary, text string, err string")
 
 _HEADERS = {
     "User-Agent": "Mozilla/5.0 (X11; Linux x86_64) AppleWebKit/537.36 "
@@ -36,7 +30,7 @@ _HEADERS = {
 
 def _fetch_one(url: str, timeout_sec: float, max_bytes: int
                ) -> tuple[int, bytes, str | None, str]:
-    """One isolated GET shared by both fetch stages: returns
+    """One isolated GET (page or robots.txt): returns
     (status, body, err, final_url); failures never raise. HTTP error
     statuses (4xx/5xx) return their REAL code — robots handling must
     tell 'no robots.txt' (4xx -> allow) from 'server broken' (5xx ->
@@ -220,11 +214,6 @@ def robots_verdict(url: str, user_agent: str,
     rp, definitive = _robots_for(org, timeout_sec)
     allowed = True if rp is None else rp.can_fetch(user_agent, url)
     return allowed, definitive
-
-
-def robots_allowed(url: str, user_agent: str,
-                   timeout_sec: float = 10.0) -> bool:
-    return robots_verdict(url, user_agent, timeout_sec)[0]
 
 
 ROBOTS_SCHEMA = ("host string, allowed boolean, crawl_delay double,"
@@ -468,7 +457,7 @@ def make_robots_provider(user_agent: str | None = None,
 
 def _make_pacer():
     """Per-task request pacer: ``pace(key, ask)`` sleeps so consecutive
-    requests with the same key (host/origin) are at least ``ask``
+    requests with the same key (host) are at least ``ask``
     seconds apart, then stamps the key. The pipeline routes a
     crawl-delay-asking host's URLs to ONE task (no salting for such
     hosts), so this per-task clock is the host's clock within a round;
@@ -476,8 +465,6 @@ def _make_pacer():
     last_hit: dict = {}
 
     def pace(key, ask):
-        if key is None:
-            return
         if ask and ask > 0:
             wait = last_hit.get(key, float("-inf")) + float(ask) \
                 - time.time()
@@ -523,46 +510,23 @@ def make_fetch_extract_kernel(timeout_sec: float = 30.0,
     ``run_crawl(robots_provider=make_robots_provider())`` so the
     scheduler's host-level gate uses real robots too.
 
+    Pacing: each URL waits on its host's robots Crawl-delay /
+    Request-rate ask (per-path, freshest), else on the row's
+    ``eff_delay`` — the delay ``scheduler.pop_batch`` resolved for the
+    host (floor, hot-host exemption, automatic hot-host detection; null
+    means full rate). The input batch must carry that column. Reading
+    the scheduler's value keeps the pacer and the scheduler's
+    single-task routing in lockstep by construction.
+
     ``default_delay_sec`` (default
-    ``scheduler.DEFAULT_POLITENESS_FLOOR_SEC`` — the ONE shared floor
-    constant; a crawler must be polite even to hosts that don't ask)
-    is the per-host pacing FLOOR applied when
-    robots.txt is silent about rate; an explicit Crawl-delay /
-    Request-rate ask always wins, and hosts in ``hot_hosts`` (an
-    operator-marked collection with clearance for full-rate fetching)
-    are exempt. The kernel ADVERTISES its floor config as attributes
-    on the returned callable (``default_delay_sec`` / ``hot_hosts``),
-    and ``run_crawl`` reads them when its own politeness arguments are
-    left at their defaults — so the scheduler's single-task routing,
-    pop cap, and cross-round gate automatically agree with the pacer
-    without the caller having to repeat the values (a kernel pacing
-    1 req/s while the scheduler salts the host over 8 tasks would
-    deliver 8x the promised rate)."""
+    ``scheduler.DEFAULT_POLITENESS_FLOOR_SEC``) and ``hot_hosts`` only
+    set the politeness config the kernel ADVERTISES as attributes on
+    the returned callable; ``run_crawl`` reads them as its floor and
+    hot-host list, so the scheduler resolves each host's delay from
+    them."""
     import pandas as pd  # noqa: F811 (executor-side import)
 
     ua = user_agent or _HEADERS["User-Agent"]
-    hot = frozenset(hot_hosts or ())
-    _NO_SCHED = object()
-
-    def _ask_for(url: str, host: str,
-                 sched_delay=_NO_SCHED) -> float | None:
-        """Per-URL pacing ask. Precedence: the host's explicit robots
-        Crawl-delay/Request-rate (per-path, freshest) > the operator
-        hot list > the SCHEDULER-RESOLVED ``eff_delay`` riding the
-        batch row (r9: carries automatic hot-host detection — null
-        means the scheduler cleared the host for full rate, a value is
-        the agreed floor; trusting it keeps pacer and salted routing
-        in lockstep by construction) > this kernel's own configured
-        floor (rows without the column: direct/unfused callers)."""
-        ask = (robots_crawl_delay(url, ua, timeout_sec)
-               if respect_robots else None)
-        if ask is not None:
-            return ask
-        if host in hot:
-            return None
-        if sched_delay is not _NO_SCHED:
-            return sched_delay
-        return default_delay_sec if default_delay_sec > 0 else None
 
     def _build(archive_dir: str | None = None):
         def kernel(batches: Iterable[pd.DataFrame]
@@ -583,13 +547,8 @@ def make_fetch_extract_kernel(timeout_sec: float = 30.0,
                     continue
                 texts, stamps, sizes = [], [], []
                 blocked, retry, bases = [], [], []
-                if "eff_delay" in pdf.columns:
-                    scheds = [None if pd.isna(v) else float(v)
-                              for v in pdf["eff_delay"]]
-                else:
-                    scheds = [_NO_SCHED] * len(pdf)
-                for url, host, sched in zip(pdf["url"], pdf["host"],
-                                            scheds):
+                for url, host, eff in zip(pdf["url"], pdf["host"],
+                                          pdf["eff_delay"]):
                     allowed, definitive = (robots_verdict(url, ua,
                                                           timeout_sec)
                                            if respect_robots
@@ -606,9 +565,13 @@ def make_fetch_extract_kernel(timeout_sec: float = 30.0,
                         retry.append(not definitive)
                     else:
                         # honor the host's Crawl-delay/Request-rate ask —
-                        # or the politeness floor when robots is silent —
-                        # between consecutive requests to it
-                        pace(host, _ask_for(url, host, sched))
+                        # or the scheduler's eff_delay when robots is
+                        # silent — between consecutive requests to it
+                        ask = (robots_crawl_delay(url, ua, timeout_sec)
+                               if respect_robots else None)
+                        if ask is None and not pd.isna(eff):
+                            ask = float(eff)
+                        pace(host, ask)
                         _status, body, _err, _furl = _fetch_one(
                             url, timeout_sec, max_bytes)
                         # relative links on a redirected page resolve
@@ -663,11 +626,10 @@ def make_fetch_extract_kernel(timeout_sec: float = 30.0,
             if writer is not None:
                 writer.close()
 
-        # advertised politeness config — run_crawl inherits these when
-        # its own default_delay_sec/hot_hosts are left unset, keeping
-        # the scheduler's routing/gating in lockstep with the pacer
+        # advertised politeness config: run_crawl's floor and hot-host
+        # list, from which pop_batch resolves each row's eff_delay
         kernel.default_delay_sec = default_delay_sec
-        kernel.hot_hosts = hot
+        kernel.hot_hosts = frozenset(hot_hosts or ())
         # fetch-time WARC archival: the pipeline rebinds per round via
         # this attribute (same config, round-specific shard dir)
         kernel.bind_archive = _build
@@ -675,60 +637,3 @@ def make_fetch_extract_kernel(timeout_sec: float = 30.0,
 
     return _build()
 
-
-def make_fetcher(timeout_sec: float = 60.0,
-                 max_bytes: int = 4 << 20,
-                 respect_robots: bool = True,
-                 user_agent: str | None = None,
-                 default_delay_sec: float = DEFAULT_POLITENESS_FLOOR_SEC,
-                 hot_hosts=None):
-    """Build the mapInPandas kernel. ``respect_robots`` (default ON)
-    checks per-path robots rules before each GET; blocked URLs yield a
-    status-0 row with err='robots' (this surface reports per-URL status
-    and error, where the fused crawl kernel records only its
-    ``blocked``/``retry`` flags). Requests are spaced only by the
-    per-origin pacer.
-    ``default_delay_sec``/``hot_hosts``: per-origin pacing floor when
-    robots.txt is silent about rate (an explicit ask wins; hot hosts
-    are exempt) — same contract as ``make_fetch_extract_kernel``.
-    ``hot_hosts`` entries match the URL's netloc (``host`` /
-    ``host:port``, the frontier's host column form) or the full origin
-    (``scheme://netloc``) — this surface has no host column, so both
-    spellings are accepted."""
-    ua = user_agent or _HEADERS["User-Agent"]
-    hot = frozenset(hot_hosts or ())
-
-    def fetch(batches: Iterable[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        pace = _make_pacer()
-        for pdf in batches:
-            rows = {"url": [], "status": [], "fetched_ts": [],
-                    "html": [], "text": [], "err": []}
-            for url in pdf["url"]:
-                allowed, definitive = (robots_verdict(url, ua,
-                                                      timeout_sec)
-                                       if respect_robots
-                                       else (True, True))
-                if not allowed:
-                    status, body = 0, b""
-                    err = "robots" if definitive else "robots_unreachable"
-                else:
-                    org = _origin_of(url)
-                    netloc = org.split("://", 1)[1] if org else None
-                    ask = (robots_crawl_delay(url, ua, timeout_sec)
-                           if respect_robots else None)
-                    if (ask is None and org not in hot
-                            and netloc not in hot
-                            and default_delay_sec > 0):
-                        ask = default_delay_sec
-                    pace(org, ask)
-                    status, body, err, _furl = _fetch_one(url, timeout_sec,
-                                                   max_bytes)
-                rows["url"].append(url)
-                rows["status"].append(status)
-                rows["fetched_ts"].append(time.time())
-                rows["html"].append(body)
-                rows["text"].append(body.decode("utf-8", "replace"))
-                rows["err"].append(err)
-            yield pd.DataFrame(rows)
-
-    return fetch

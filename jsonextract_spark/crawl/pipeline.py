@@ -446,24 +446,19 @@ def init_state(spark: SparkSession, wh: Warehouse, n_seeds: int,
     wh.commit_round(0, {"phase": "init", "seeds": len(urls)})
 
 
-def _resolve_politeness(fetch_kernel, default_delay_sec, hot_hosts):
-    """Resolve the effective politeness floor + hot-host set for a
-    round. Explicit arguments win; otherwise the kernel's advertised
-    attributes; a custom kernel that advertises nothing gets the ONE
-    shared ``scheduler.DEFAULT_POLITENESS_FLOOR_SEC`` (polite by
-    default — a previously-split 0.0-here/1.0-in-kernels default was
-    a foot-gun for custom kernels). The synthetic no-network corpus
-    (``fetch_kernel=None``) is the only zero-floor path."""
-    if default_delay_sec is None:
-        if fetch_kernel is None:
-            default_delay_sec = 0.0
-        else:
-            adv = getattr(fetch_kernel, "default_delay_sec", None)
-            default_delay_sec = (DEFAULT_POLITENESS_FLOOR_SEC
-                                 if adv is None else adv)
-    if hot_hosts is None:
-        hot_hosts = getattr(fetch_kernel, "hot_hosts", None)
-    return default_delay_sec, hot_hosts
+def _resolve_politeness(fetch_kernel):
+    """The politeness floor + hot-host set ``pop_batch`` resolves each
+    host's ``eff_delay`` from: the fetch kernel's advertised
+    ``default_delay_sec``/``hot_hosts`` attributes, the crawl's one
+    politeness config. A custom kernel that advertises no floor gets
+    the ONE shared ``scheduler.DEFAULT_POLITENESS_FLOOR_SEC`` (polite
+    by default). The synthetic no-network corpus (``fetch_kernel=None``)
+    is the only zero-floor path."""
+    if fetch_kernel is None:
+        return 0.0, None
+    adv = getattr(fetch_kernel, "default_delay_sec", None)
+    return ((DEFAULT_POLITENESS_FLOOR_SEC if adv is None else adv),
+            getattr(fetch_kernel, "hot_hosts", None))
 
 
 def run_round(spark: SparkSession, wh: Warehouse, round_no: int,
@@ -471,11 +466,14 @@ def run_round(spark: SparkSession, wh: Warehouse, round_no: int,
               batch_size: int = DEFAULT_BATCH_SIZE,
               fetch_kernel=None,
               robots_provider=None,
-              default_delay_sec: float | None = None,
-              hot_hosts=None,
               auto_hot_min_pending: int | None = None,
               archive_warc: str | None = None) -> dict:
     """Execute round ``round_no`` (requires round_no-1 committed).
+
+    Politeness comes from ``fetch_kernel``'s advertised config (see
+    ``run_crawl``): ``pop_batch`` turns it into each popped row's
+    ``eff_delay``, which routes a delayed host to one fetch task and
+    paces the kernel's requests to it.
 
     ``archive_warc`` (a directory) enables FETCH-TIME archival: the
     fetch kernel tees every fetched body into
@@ -537,18 +535,14 @@ def run_round(spark: SparkSession, wh: Warehouse, round_no: int,
     host_stats = load_host_stats(spark, wh, prev)
 
     # 1. pop (robots gate + delay eligibility + host-budget discount +
-    #    salted per-host top-k + global cap). ``default_delay_sec`` is
-    #    the politeness floor for hosts whose robots.txt is silent
-    #    about rate; ``hot_hosts`` opt out of the floor. Left unset,
-    #    both INHERIT the fetch kernel's advertised config so the
-    #    scheduler's routing and gating always agree with the kernel's
-    #    pacer. A custom kernel that advertises nothing gets the
-    #    shared DEFAULT_POLITENESS_FLOOR_SEC (polite by default) —
-    #    only the synthetic no-network corpus (fetch_kernel=None) pins
-    #    floor 0, where a floor would empty consecutive rounds at
+    #    salted per-host top-k + global cap). The pop decides each
+    #    host's delay once, as the batch's ``eff_delay`` column, from
+    #    the fetch kernel's advertised floor and hot-host list; the
+    #    routing below and the kernel's pacer both read that column.
+    #    Only the synthetic no-network corpus (fetch_kernel=None) runs
+    #    with floor 0, where a floor would empty consecutive rounds at
     #    bench cadence with nothing to be polite to.
-    default_delay_sec, hot_hosts = _resolve_politeness(
-        fetch_kernel, default_delay_sec, hot_hosts)
+    default_delay_sec, hot_hosts = _resolve_politeness(fetch_kernel)
     # The pop adds no hints to its robots and host_stats joins: both
     # tables grow with hosts (unbounded at the design point), and Spark
     # sizes them — broadcast while small, shuffle past the engine
@@ -571,9 +565,7 @@ def run_round(spark: SparkSession, wh: Warehouse, round_no: int,
     #    kernel's per-task pacer is the host's real clock (salting
     #    would let up to 8 tasks hit the host concurrently).
     salt = (F.when(F.col("eff_delay").isNotNull(), F.lit(0))
-            .otherwise(F.pmod(F.col("url_hash"), F.lit(8)))
-            if "eff_delay" in batch.columns
-            else F.pmod(F.col("url_hash"), F.lit(8)))
+            .otherwise(F.pmod(F.col("url_hash"), F.lit(8))))
     fetch_input = batch.repartition(
         max(spark.sparkContext.defaultParallelism, 4),
         F.col("host"), salt)
@@ -844,8 +836,6 @@ def run_crawl(spark: SparkSession, warehouse: str, rounds: int,
               fetch_kernel=None,
               seeds: list[str] | None = None,
               robots_provider=None,
-              default_delay_sec: float | None = None,
-              hot_hosts=None,
               auto_hot_min_pending: int | None = None,
               archive_warc: str | None = None) -> list[dict]:
     """Run (or resume) a crawl to ``rounds`` committed rounds.
@@ -856,18 +846,17 @@ def run_crawl(spark: SparkSession, warehouse: str, rounds: int,
     ``seeds`` overrides the synthetic seed list with explicit URLs;
     ``robots_provider`` swaps the synthetic robots table for a callable
     (spark, frontier) -> DataFrame(host, allowed) — live crawls pass
-    ``fetch_http.make_robots_provider()``. ``default_delay_sec`` is the
-    per-host politeness floor for hosts whose robots.txt does not ask
-    for a rate (scheduler gate + single-task routing); ``hot_hosts``
-    lists hosts with operator clearance for full-rate salted fetching.
-    Left at None, BOTH inherit the fetch kernel's advertised config
-    (``make_fetch_extract_kernel`` attaches its floor/hot-host values
-    to the kernel it returns), so the scheduler and the kernel's pacer
-    can't silently disagree; a custom kernel that advertises nothing
-    gets ``scheduler.DEFAULT_POLITENESS_FLOOR_SEC``, and only the
-    synthetic no-network corpus runs with floor 0 (see
-    ``_resolve_politeness``). ``archive_warc`` tees every fetched body
-    into per-round WARC shards inside the fetch pass (see
+    ``fetch_http.make_robots_provider()``. The politeness config is the
+    fetch kernel's advertised ``default_delay_sec`` (the per-host floor
+    for hosts whose robots.txt does not ask for a rate) and
+    ``hot_hosts`` (hosts with operator clearance for full-rate salted
+    fetching): ``make_fetch_extract_kernel`` attaches them to the
+    kernel it returns, and a synthetic kernel gets them set as
+    attributes (see ``main``). A custom kernel that advertises no
+    floor gets ``scheduler.DEFAULT_POLITENESS_FLOOR_SEC``, and only
+    the synthetic no-network corpus (``fetch_kernel=None``) runs with
+    floor 0 (see ``_resolve_politeness``). ``archive_warc`` tees every
+    fetched body into per-round WARC shards inside the fetch pass (see
     ``run_round``); each round's ledger entry records the shard
     manifest."""
     wh = Warehouse(warehouse)
@@ -895,8 +884,6 @@ def run_crawl(spark: SparkSession, warehouse: str, rounds: int,
             s = run_round(spark, wh, r, host_budget, batch_size,
                           fetch_kernel=fetch_kernel,
                           robots_provider=robots_provider,
-                          default_delay_sec=default_delay_sec,
-                          hot_hosts=hot_hosts,
                           auto_hot_min_pending=auto_hot_min_pending,
                           archive_warc=archive_warc)
             stats.append({"round": r, **s})
@@ -939,10 +926,8 @@ def main():
     ap.add_argument("--resume", action="store_true")
     ap.add_argument("--default-delay-sec", type=float, default=None,
                     help="politeness floor for hosts whose robots.txt "
-                         "is silent about rate (default: inherit the "
-                         "fetch kernel's advertised value; a "
-                         "kernel advertising nothing gets the shared "
-                         "1s floor; synthetic corpus -> 0)")
+                         "is silent about rate (default: 1s with "
+                         "--live, 0 on the synthetic corpus)")
     ap.add_argument("--hot-host", action="append", default=None,
                     help="host with operator clearance for full-rate "
                          "salted fetching (repeatable)")
@@ -984,16 +969,10 @@ def main():
 
     from jsonextract_spark.session import build_session
     spark = build_session("jsx-crawl", master=args.master)
-    fetch_kernel = robots_provider = None
-    seed_list = None
+    robots_provider = seed_list = None
     if args.live:
         from jsonextract_spark.crawl.fetch_http import (
             make_fetch_extract_kernel, make_robots_provider)
-        # Thread the CLI politeness knobs into the kernel itself, not
-        # just the scheduler: the kernel's per-host pacer and the
-        # scheduler's gate/pop-cap must key on the SAME delay or the
-        # advertised attributes and the flag diverge (the exact
-        # divergence _resolve_politeness exists to prevent).
         kernel_kwargs = {"hot_hosts": args.hot_host}
         if args.default_delay_sec is not None:
             kernel_kwargs["default_delay_sec"] = args.default_delay_sec
@@ -1001,13 +980,16 @@ def main():
         robots_provider = make_robots_provider(
             cache_path=os.path.join(args.warehouse, "robots_cache"))
         seed_list = args.seeds_url
+    else:
+        # the synthetic corpus's politeness config rides the kernel too
+        fetch_kernel = synth.make_fetch_extract()
+        fetch_kernel.default_delay_sec = args.default_delay_sec or 0.0
+        fetch_kernel.hot_hosts = args.hot_host
     stats = run_crawl(spark, args.warehouse, args.rounds, args.seeds,
                       args.host_budget, args.batch_size,
                       resume=args.resume,
                       seeds=seed_list, fetch_kernel=fetch_kernel,
                       robots_provider=robots_provider,
-                      default_delay_sec=args.default_delay_sec,
-                      hot_hosts=args.hot_host,
                       auto_hot_min_pending=args.auto_hot_min_pending,
                       archive_warc=args.archive_warc)
     for s in stats:

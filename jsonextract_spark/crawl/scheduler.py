@@ -40,8 +40,9 @@ SALT_PARTS = 16
 # gates or paces per-host traffic (scheduler eligibility gate, pop
 # cap, salting exemption, kernel pacer): hosts whose robots.txt is
 # silent about rate are hit at most once per this many seconds. HTTP
-# kernels advertise it on the returned callable and run_round inherits
-# it so the three layers can never disagree; a CUSTOM kernel that
+# kernels advertise it on the returned callable, run_round hands the
+# advertised floor to pop_batch, and every layer reads pop_batch's
+# eff_delay, so they can never disagree; a CUSTOM kernel that
 # advertises nothing also gets this value (polite by default). The
 # only zero-floor path is the synthetic no-network corpus
 # (fetch_kernel=None), where run_round pins 0.0 explicitly.
@@ -129,8 +130,8 @@ def pop_batch(frontier: DataFrame, robots: DataFrame, host_budget: int,
                 (the host's robots Crawl-delay ask in seconds, null when
                 unspecified — carried onto the batch)
     host_stats: host, crawled (cumulative fetch count),
-                optionally last_fetch_ts (epoch seconds of the host's
-                newest fetch). When given, effective priority is
+                last_fetch_ts (epoch seconds of the host's newest
+                fetch). When given, effective priority is
                 discounted by how much of the host's budget history is
                 already spent (north_star: "depth + host-budget
                 scoring").
@@ -148,7 +149,9 @@ def pop_batch(frontier: DataFrame, robots: DataFrame, host_budget: int,
                 resulting per-row ``eff_delay`` (null = unconstrained)
                 drives the cross-round gate and the per-round pop cap
                 here, and single-task routing + within-round pacing in
-                the pipeline/kernel.
+                the pipeline/kernel. This is the ONE place a host's
+                delay is decided; the fetch kernel only lets a per-path
+                robots ask override it.
     auto_hot_min_pending: hosts whose pending frontier rows reach this
                 count are ALSO floor-exempt for the round (automatic
                 hot-host detection — see ``AUTO_HOT_MIN_PENDING``); an
@@ -190,7 +193,7 @@ def pop_batch(frontier: DataFrame, robots: DataFrame, host_budget: int,
                        F.col("priority") /
                        (F.lit(1.0) + F.log1p(
                            F.coalesce(F.col("crawled"), F.lit(0.0))))))
-        if now_ts is not None and "last_fetch_ts" in host_stats.columns:
+        if now_ts is not None:
             # gate ONLY hosts with an effective delay (robots ask or
             # the configured floor): an unconstrained host must never
             # be filtered — a coalesce(delay, 0) form would reduce to

@@ -25,8 +25,8 @@ def main():
     ap.add_argument("--resume", action="store_true")
     ap.add_argument("--default-delay-sec", type=float, default=None,
                     help="politeness floor for hosts whose robots.txt "
-                         "is silent about rate (default: inherit the "
-                         "fetch kernel's advertised value)")
+                         "is silent about rate (default 0 on the "
+                         "synthetic corpus)")
     ap.add_argument("--hot-host", action="append", default=None,
                     help="host cleared for full-rate salted fetching "
                          "(repeatable)")
@@ -37,13 +37,16 @@ def main():
              .config("spark.sql.execution.arrow.pyspark.enabled", "true")
              .getOrCreate())
 
+    from jsonextract_spark.crawl import synth
     from jsonextract_spark.crawl.pipeline import run_crawl
 
+    # the politeness config is the fetch kernel's advertised attributes
+    kernel = synth.make_fetch_extract()
+    kernel.default_delay_sec = args.default_delay_sec or 0.0
+    kernel.hot_hosts = args.hot_host
     stats = run_crawl(spark, args.warehouse, args.rounds, args.seeds,
                       args.host_budget, args.batch_size,
-                      resume=args.resume,
-                      default_delay_sec=args.default_delay_sec,
-                      hot_hosts=args.hot_host)
+                      resume=args.resume, fetch_kernel=kernel)
     for s in stats:
         print(s)
     spark.stop()

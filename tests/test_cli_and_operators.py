@@ -8,10 +8,10 @@ import sys
 import threading
 
 import pytest
-from pyspark.sql import functions as F
 from pyspark.sql.types import StructType, StructField, LongType
 
 from jsonextract_spark import jsonx
+from tests import local_http
 
 
 # -- jsonx CLI ----------------------------------------------------------------
@@ -111,54 +111,17 @@ def test_unmarshal_first(spark):
 # -- HTTP fetch stage ---------------------------------------------------------
 
 @pytest.mark.spark
-def test_http_fetch_stage_respects_robots(spark):
-    """The per-URL fetch surface reports robots-blocked URLs as
-    status-0 rows with err='robots' and never GETs them."""
-    from jsonextract_spark.crawl.fetch_http import (
-        FETCH_HTTP_SCHEMA, make_fetcher)
-
-    paths = []
-
-    class H(http.server.BaseHTTPRequestHandler):
-        def do_GET(self):
-            paths.append(self.path)
-            if self.path == "/robots.txt":
-                body = b"User-agent: *\nDisallow: /p/\n"
-            else:
-                body = b"<script>var p = {pid: 1};</script>"
-            self.send_response(200)
-            self.send_header("Content-Length", str(len(body)))
-            self.end_headers()
-            self.wfile.write(body)
-
-        def log_message(self, *a):
-            pass
-
-    srv = http.server.HTTPServer(("127.0.0.1", 0), H)
-    threading.Thread(target=srv.serve_forever, daemon=True).start()
-    port = srv.server_port
-    try:
-        df = spark.createDataFrame(
-            [(f"http://127.0.0.1:{port}/p/1",),
-             (f"http://127.0.0.1:{port}/q/1",)], "url string")
-        rows = {r["url"]: r for r in df.repartition(1).mapInPandas(
-            make_fetcher(timeout_sec=5), FETCH_HTTP_SCHEMA).collect()}
-        blocked = rows[f"http://127.0.0.1:{port}/p/1"]
-        assert blocked["status"] == 0 and blocked["err"] == "robots"
-        assert rows[f"http://127.0.0.1:{port}/q/1"]["status"] == 200
-        assert "/p/1" not in paths
-    finally:
-        srv.shutdown()
-
-
-@pytest.mark.spark
 def test_http_fetch_stage(spark):
+    """The fused HTTP kernel as a Spark stage over several tasks: every
+    page is fetched and extracted, a 404 is consumed, and an
+    unreachable URL is marked for retry."""
     from jsonextract_spark.crawl.fetch_http import (
-        FETCH_HTTP_SCHEMA, make_fetcher)
+        make_fetch_extract_kernel)
+    from jsonextract_spark.crawl.synth import FETCH_EXTRACT_SCHEMA
 
     class H(http.server.BaseHTTPRequestHandler):
         def do_GET(self):
-            if self.path == "/missing":
+            if self.path in ("/missing", "/robots.txt"):
                 self.send_response(404)
                 self.end_headers()
                 return
@@ -172,28 +135,28 @@ def test_http_fetch_stage(spark):
         def log_message(self, *a):
             pass
 
-    srv = http.server.HTTPServer(("127.0.0.1", 0), H)
-    threading.Thread(target=srv.serve_forever, daemon=True).start()
+    srv = local_http.serve(H)
     port = srv.server_port
     try:
-        urls = [(f"http://127.0.0.1:{port}/p/{i}",) for i in range(12)]
-        urls.append((f"http://127.0.0.1:{port}/missing",))
-        urls.append(("http://127.0.0.1:1/unreachable",))
-        df = spark.createDataFrame(urls, "url string")
+        pages = [f"http://127.0.0.1:{port}/p/{i}" for i in range(12)]
+        missing = f"http://127.0.0.1:{port}/missing"
+        unreachable = "http://127.0.0.1:1/unreachable"
+        urls = pages + [missing, unreachable]
+        df = spark.createDataFrame(
+            [(u, k, u.split("/")[2], 0, 1, k, None)
+             for k, u in enumerate(urls)],
+            "url string, url_hash long, host string, depth int,"
+            " batch_id int, rank long, eff_delay double")
         fetched = df.repartition(4, "url").mapInPandas(
-            make_fetcher(timeout_sec=5), FETCH_HTTP_SCHEMA)
+            make_fetch_extract_kernel(timeout_sec=5),
+            FETCH_EXTRACT_SCHEMA)
         rows = {r["url"]: r for r in fetched.collect()}
-        ok = [r for r in rows.values() if r["status"] == 200]
-        assert len(ok) == 12
-        assert all(b"pid" in bytes(r["html"]) for r in ok)
-        assert rows[f"http://127.0.0.1:{port}/missing"]["err"] is not None
-        assert rows["http://127.0.0.1:1/unreachable"]["err"] is not None
-
-        # extraction over fetched pages end-to-end
-        from jsonextract_spark.functions.udfs import extract_objects_udf
-        n = (fetched.filter("status = 200")
-             .select(F.explode(extract_objects_udf("text"))).count())
-        assert n == 12
+        assert set(rows) == set(urls)
+        assert all(rows[u]["n_objects"] == 1 and rows[u]["bytes"] > 0
+                   and not rows[u]["retry"] for u in pages)
+        assert rows[missing]["bytes"] == 0 and not rows[missing]["retry"]
+        assert rows[unreachable]["retry"]
+        assert not any(r["blocked"] for r in rows.values())
     finally:
         srv.shutdown()
 

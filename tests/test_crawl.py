@@ -10,6 +10,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from jsonextract_spark.crawl import synth
+from tests import local_http
 
 pytestmark = pytest.mark.spark
 
@@ -484,7 +485,6 @@ def test_crawl_over_live_http(spark, tmp_path):
     fetch -> extract -> link discovery -> seen gate across rounds, with
     the same pipeline code as the synthetic corpus."""
     import http.server
-    import threading
 
     from jsonextract_spark.crawl.fetch_http import (
         make_fetch_extract_kernel)
@@ -507,8 +507,7 @@ def test_crawl_over_live_http(spark, tmp_path):
         def log_message(self, *a):
             pass
 
-    srv = http.server.ThreadingHTTPServer(("127.0.0.1", 0), H)
-    threading.Thread(target=srv.serve_forever, daemon=True).start()
+    srv = local_http.serve(H)
     try:
         port = srv.server_port
         seeds = [f"http://127.0.0.1:{port}/p/1",
@@ -530,7 +529,6 @@ def test_live_robots_gate(spark, tmp_path):
     popped) and the fetch kernel's per-path check (subtree disallowed ->
     the URL is never GET'd and yields no fetched row)."""
     import http.server
-    import threading
 
     from jsonextract_spark.crawl.fetch_http import (
         make_fetch_extract_kernel, make_robots_provider)
@@ -560,8 +558,7 @@ def test_live_robots_gate(spark, tmp_path):
             def log_message(self, *a):
                 pass
 
-        srv = http.server.ThreadingHTTPServer(("127.0.0.1", 0), H)
-        threading.Thread(target=srv.serve_forever, daemon=True).start()
+        srv = local_http.serve(H)
         return srv, seen_paths
 
     # per-path rules: /p/ disallowed, /q/ allowed -> host admitted (root
@@ -602,7 +599,6 @@ def _serve(handler_body):
     """Tiny threaded HTTP server; handler_body(path) -> bytes | None
     (None = 404). Returns (server, port, request_log)."""
     import http.server
-    import threading
 
     log = []
 
@@ -626,9 +622,56 @@ def _serve(handler_body):
         def log_message(self, *a):
             pass
 
-    srv = http.server.ThreadingHTTPServer(("127.0.0.1", 0), H)
-    threading.Thread(target=srv.serve_forever, daemon=True).start()
+    srv = local_http.serve(H)
     return srv, srv.server_port, log
+
+
+def test_test_servers_never_reuse_a_port():
+    """Reused Python workers cache robots verdicts per origin, so a
+    later test's server on an earlier server's port would inherit that
+    server's verdict (an allow-all verdict planted in the workers for
+    test_live_robots_gate's port made it fetch the disallowed /p/1).
+    ``local_http.serve`` skips every port it handed out before, even
+    when the OS offers one again."""
+    import http.server
+
+    from jsonextract_spark.crawl import fetch_http
+
+    earlier, port, _ = _serve(lambda p: None)    # 404 robots: allow-all
+    assert fetch_http.robots_verdict(
+        f"http://127.0.0.1:{port}/p/1", "UA") == (True, True)
+    earlier.shutdown()
+    earlier.server_close()
+
+    offered = [port]
+
+    class Reoffer(http.server.ThreadingHTTPServer):
+        """Binds the earlier server's port first, as the OS may."""
+
+        def __init__(self, addr, handler):
+            super().__init__(
+                ("127.0.0.1", offered.pop()) if offered else addr,
+                handler)
+
+    class DisallowAll(http.server.BaseHTTPRequestHandler):
+        def do_GET(self):
+            body = b"User-agent: *\nDisallow: /\n"
+            self.send_response(200)
+            self.send_header("Content-Length", str(len(body)))
+            self.end_headers()
+            self.wfile.write(body)
+
+        def log_message(self, *a):
+            pass
+
+    later = local_http.serve(DisallowAll, server_cls=Reoffer)
+    try:
+        assert not offered and later.server_port != port
+        assert fetch_http.robots_verdict(
+            f"http://127.0.0.1:{later.server_port}/p/1", "UA") \
+            == (False, True)
+    finally:
+        later.shutdown()
 
 
 def test_robots_5xx_is_temporary_disallow():
@@ -658,7 +701,7 @@ def test_robots_5xx_is_temporary_disallow():
         # refetches and allows (per-worker caches must not pin a
         # transient outage)
         healthy.append(True)
-        assert fetch_http.robots_allowed(url, "UA") is False  # cached
+        assert fetch_http.robots_verdict(url, "UA")[0] is False  # cached
         old = fetch_http._ROBOTS_ERR_TTL_SEC
         fetch_http._ROBOTS_ERR_TTL_SEC = 0.0
         try:
@@ -672,7 +715,7 @@ def test_robots_5xx_is_temporary_disallow():
                             else b"hi")
     try:
         url2 = f"http://127.0.0.1:{port2}/page"
-        assert fetch_http.robots_allowed(url2, "UA") is True
+        assert fetch_http.robots_verdict(url2, "UA")[0] is True
         rp2, definitive2, _ts2 = fetch_http._ROBOTS_CACHE[
             f"http://127.0.0.1:{port2}"]
         assert rp2 is None and definitive2 is True
@@ -697,7 +740,8 @@ def test_fused_kernel_defers_on_robots_5xx():
             "url": [f"http://127.0.0.1:{port}/p/{i}" for i in (1, 2)],
             "url_hash": [11, 22],
             "host": ["127.0.0.1"] * 2, "depth": [0, 0],
-            "batch_id": [1, 1], "rank": [1, 2]})
+            "batch_id": [1, 1], "rank": [1, 2],
+            "eff_delay": [None, None]})
         kernel = make_fetch_extract_kernel(timeout_sec=5)
         out = pd.concat(list(kernel([pdf])))
         assert list(out["blocked"]) == [True, True]
@@ -822,7 +866,8 @@ def test_fused_kernel_retries_transient_fetch_failures():
                     for x in ("boom", "ok", "gone")],
             "url_hash": [11, 22, 33],
             "host": ["127.0.0.1"] * 3, "depth": [0] * 3,
-            "batch_id": [1] * 3, "rank": [1, 2, 3]})
+            "batch_id": [1] * 3, "rank": [1, 2, 3],
+            "eff_delay": [None] * 3})
         kernel = make_fetch_extract_kernel(timeout_sec=5)
         out = pd.concat(list(kernel([pdf]))).reset_index(drop=True)
         assert list(out["blocked"]) == [False, False, False]
@@ -964,26 +1009,42 @@ def test_pop_batch_plan_broadcasts_side_tables(spark, tmp_path):
     assert "SortMergeJoin" not in final, final
 
 
+def _kernel_batch(host, n):
+    """A popped batch of ``n`` URLs on ``host`` in the fused kernel's
+    input shape, without ``eff_delay`` (the test sets it)."""
+    import pandas as pd
+
+    return pd.DataFrame({
+        "url": [f"http://{host}/x/{i}" for i in range(n)],
+        "url_hash": list(range(11, 11 + n)),
+        "host": [host] * n, "depth": [0] * n,
+        "batch_id": [1] * n, "rank": list(range(1, n + 1))})
+
+
 def test_fetch_kernel_paces_same_host_by_crawl_delay():
     """Within a task, consecutive requests to a host with
     ``Crawl-delay: 1`` are spaced >= 1s apart (3 URLs -> >= 2s total),
-    enforced by the kernel's per-host pacer."""
+    enforced by the kernel's per-host pacer even when the scheduler
+    cleared the host for full rate (``eff_delay`` null)."""
     import time
 
     import pandas as pd
 
-    from jsonextract_spark.crawl.fetch_http import make_fetcher
+    from jsonextract_spark.crawl.fetch_http import (
+        make_fetch_extract_kernel)
 
     srv, port, log = _serve(
         lambda p: b"User-agent: *\nCrawl-delay: 1\n"
         if p == "/robots.txt" else b"<html>ok</html>")
     try:
-        urls = [f"http://127.0.0.1:{port}/x/{i}" for i in range(3)]
-        fetch = make_fetcher(timeout_sec=5)
+        pdf = _kernel_batch(f"127.0.0.1:{port}", 3).assign(
+            eff_delay=None)
+        kern = make_fetch_extract_kernel(timeout_sec=5)
         t0 = time.time()
-        out = pd.concat(list(fetch([pd.DataFrame({"url": urls})])))
+        out = pd.concat(list(kern([pdf])))
         dt = time.time() - t0
-        assert list(out["status"]) == [200, 200, 200]
+        assert list(out["blocked"]) == [False] * 3
+        assert list(out["retry"]) == [False] * 3
         assert dt >= 2.0, f"crawl-delay not honored: {dt:.2f}s for 3"
     finally:
         srv.shutdown()
@@ -1084,7 +1145,6 @@ def test_robots_cache_fetches_once_per_host(spark, tmp_path):
     (Kernel-side per-path checking is disabled here to isolate the
     provider's requests in the server log.)"""
     import http.server
-    import threading
 
     from jsonextract_spark.crawl.fetch_http import (
         make_fetch_extract_kernel, make_robots_provider)
@@ -1111,8 +1171,7 @@ def test_robots_cache_fetches_once_per_host(spark, tmp_path):
         def log_message(self, *a):
             pass
 
-    srv = http.server.ThreadingHTTPServer(("127.0.0.1", 0), H)
-    threading.Thread(target=srv.serve_forever, daemon=True).start()
+    srv = local_http.serve(H)
     try:
         port = srv.server_port
         stats = run_crawl(
@@ -1654,6 +1713,15 @@ def test_pop_batch_default_delay_floor_gates_silent_hosts(spark):
     assert len(got) == 3
 
 
+def _synth_kernel(default_delay_sec, hot_hosts=None):
+    """The synthetic kernel advertising a politeness config, as
+    ``pipeline.main`` builds it from the CLI flags."""
+    kern = synth.make_fetch_extract()
+    kern.default_delay_sec = default_delay_sec
+    kern.hot_hosts = hot_hosts
+    return kern
+
+
 def test_crawl_default_floor_routes_host_to_single_task(spark, tmp_path):
     """With a politeness floor, every non-hot host's URLs land in ONE
     fetch task (the per-task pacer is then the host's real clock);
@@ -1679,7 +1747,7 @@ def test_crawl_default_floor_routes_host_to_single_task(spark, tmp_path):
         return {r["host"]: (r["p"], r["n"]) for r in rows}
 
     floored = parts_per_host(str(tmp_path / "w_floor"),
-                             default_delay_sec=30.0)
+                             fetch_kernel=_synth_kernel(30.0))
     assert floored and all(p == 1 for p, _n in floored.values())
     salted = parts_per_host(str(tmp_path / "w_salted"))
     # the synthetic seed set puts many URLs on some hosts — without a
@@ -1688,13 +1756,16 @@ def test_crawl_default_floor_routes_host_to_single_task(spark, tmp_path):
     # hot hosts keep full-rate salting even under a floor
     hot = [h for h, (_p, n) in salted.items() if n >= 8]
     hotted = parts_per_host(str(tmp_path / "w_hot"),
-                            default_delay_sec=30.0, hot_hosts=hot)
+                            fetch_kernel=_synth_kernel(30.0, hot))
     assert any(p > 1 for h, (p, n) in hotted.items() if h in hot)
 
 
 def test_fetch_kernel_default_floor_paces_silent_host():
     """A host with NO robots rate ask is still paced by the default
-    floor (3 URLs -> >= 2 * floor), and a hot host is exempt."""
+    floor (3 URLs -> >= 2 * floor), and a hot host is exempt. The rows
+    carry ``eff_delay`` as ``pop_batch`` resolves it from each kernel's
+    advertised config: the floor for the silent host, null for a
+    listed hot host."""
     import time
 
     import pandas as pd
@@ -1707,15 +1778,11 @@ def test_fetch_kernel_default_floor_paces_silent_host():
         if p == "/robots.txt" else b"<html>ok</html>")
     try:
         host = f"127.0.0.1:{port}"
-        pdf = pd.DataFrame({
-            "url": [f"http://{host}/x/{i}" for i in range(3)],
-            "url_hash": [11, 22, 33],
-            "host": [host] * 3, "depth": [0] * 3,
-            "batch_id": [1] * 3, "rank": [1, 2, 3]})
+        pdf = _kernel_batch(host, 3)
         kern = make_fetch_extract_kernel(timeout_sec=5,
                                          default_delay_sec=0.5)
         t0 = time.time()
-        out = pd.concat(list(kern([pdf.copy()])))
+        out = pd.concat(list(kern([pdf.assign(eff_delay=0.5)])))
         dt = time.time() - t0
         assert list(out["blocked"]) == [False] * 3
         assert dt >= 1.0, f"floor not honored: {dt:.2f}s for 3 urls"
@@ -1723,10 +1790,48 @@ def test_fetch_kernel_default_floor_paces_silent_host():
         hot_kern = make_fetch_extract_kernel(
             timeout_sec=5, default_delay_sec=5.0, hot_hosts=[host])
         t0 = time.time()
-        out = pd.concat(list(hot_kern([pdf.copy()])))
+        out = pd.concat(list(hot_kern([pdf.assign(eff_delay=None)])))
         dt = time.time() - t0
         assert list(out["blocked"]) == [False] * 3
         assert dt < 5.0, f"hot host should skip the floor: {dt:.2f}s"
+    finally:
+        srv.shutdown()
+
+
+def test_fetch_kernel_paces_on_eff_delay_not_its_own_config():
+    """The scheduler's ``eff_delay`` is the only delay the kernel paces
+    a robots-silent host on: a kernel built with the host on its hot
+    list still paces rows the scheduler gave a 0.5 s delay, and a
+    kernel built with a 5 s floor does not pace rows the scheduler
+    cleared for full rate."""
+    import time
+
+    import pandas as pd
+
+    from jsonextract_spark.crawl.fetch_http import (
+        make_fetch_extract_kernel)
+
+    srv, port, _ = _serve(
+        lambda p: b"User-agent: *\nDisallow: /private/\n"
+        if p == "/robots.txt" else b"<html>ok</html>")
+    try:
+        host = f"127.0.0.1:{port}"
+        pdf = _kernel_batch(host, 3)
+        hot_kern = make_fetch_extract_kernel(timeout_sec=5,
+                                             hot_hosts=[host])
+        t0 = time.time()
+        out = pd.concat(list(hot_kern([pdf.assign(eff_delay=0.5)])))
+        dt = time.time() - t0
+        assert list(out["blocked"]) == [False] * 3
+        assert dt >= 1.0, f"eff_delay not honored: {dt:.2f}s for 3 urls"
+
+        floor_kern = make_fetch_extract_kernel(timeout_sec=5,
+                                               default_delay_sec=5.0)
+        t0 = time.time()
+        out = pd.concat(list(floor_kern([pdf.assign(eff_delay=None)])))
+        dt = time.time() - t0
+        assert list(out["blocked"]) == [False] * 3
+        assert dt < 5.0, f"kernel floor overrode eff_delay: {dt:.2f}s"
     finally:
         srv.shutdown()
 
@@ -1769,14 +1874,13 @@ def test_robots_cache_is_bounded():
 
 def test_fetch_kernel_advertises_politeness_config():
     """The fused HTTP kernel attaches its floor/hot-host config to the
-    returned callable; run_crawl inherits these when its own politeness
-    args are left unset, so the scheduler's routing/gating and the
-    kernel's pacer cannot silently disagree (a kernel pacing 1 req/s
-    under 8-way salting would deliver 8x the promised rate). The
+    returned callable; run_crawl reads these as the crawl's politeness
+    config, from which pop_batch resolves the eff_delay that both the
+    scheduler's routing/gating and the kernel's pacer read. The
     synthetic kernel advertises nothing -> floor 0."""
     from jsonextract_spark.crawl import synth
     from jsonextract_spark.crawl.fetch_http import (
-        make_fetch_extract_kernel, make_fetcher)
+        make_fetch_extract_kernel)
 
     kern = make_fetch_extract_kernel(default_delay_sec=7.0,
                                      hot_hosts=["hot.example"])
@@ -1785,9 +1889,6 @@ def test_fetch_kernel_advertises_politeness_config():
     assert make_fetch_extract_kernel().default_delay_sec == 1.0
     assert getattr(synth.fetch_extract_partition,
                    "default_delay_sec", 0.0) == 0.0
-    # make_fetcher matches hot hosts by netloc OR origin (it has no
-    # host column); both spellings must work
-    assert make_fetcher(default_delay_sec=3.0) is not None
 
 
 def test_auto_hot_host_detection_matches_manual_list(spark, tmp_path):
@@ -1814,14 +1915,17 @@ def test_auto_hot_host_detection_matches_manual_list(spark, tmp_path):
             spark.read.parquet(wh._path("fetched", 1)).collect())
 
     common = dict(rounds=1, seeds=seeds, host_budget=24,
-                  batch_size=120, default_delay_sec=5.0)
+                  batch_size=120)
     a = str(tmp_path / "manual")
-    run_crawl(spark, a, hot_hosts=["host0.example"], **common)
+    run_crawl(spark, a,
+              fetch_kernel=_synth_kernel(5.0, ["host0.example"]),
+              **common)
     b = str(tmp_path / "auto")
     # threshold below host0's 40 pending rows but above every cold
     # host's few; the manual run keeps the 100k default, so detection
     # is inert there and the hand list is the only hot source
-    run_crawl(spark, b, auto_hot_min_pending=35, **common)
+    run_crawl(spark, b, fetch_kernel=_synth_kernel(5.0),
+              auto_hot_min_pending=35, **common)
     la, lb = ledger(a), ledger(b)
     assert la == lb and len(la) > 0
 
@@ -2231,18 +2335,15 @@ def test_politeness_floor_default_resolution():
     def bare_kernel(batches):   # advertises nothing
         yield from batches
 
-    d, h = P._resolve_politeness(bare_kernel, None, None)
-    assert d == DEFAULT_POLITENESS_FLOOR_SEC == 1.0
-    assert h is None
+    assert P._resolve_politeness(bare_kernel) == (
+        DEFAULT_POLITENESS_FLOOR_SEC, None)
+    assert DEFAULT_POLITENESS_FLOOR_SEC == 1.0
     # synthetic corpus: zero floor
-    assert P._resolve_politeness(None, None, None)[0] == 0.0
-    # explicit argument always wins
-    assert P._resolve_politeness(bare_kernel, 2.5, None)[0] == 2.5
+    assert P._resolve_politeness(None) == (0.0, None)
     # an advertised 0.0 is respected (not clobbered by the floor)
     bare_kernel.default_delay_sec = 0.0
     bare_kernel.hot_hosts = {"h1.example"}
-    d, h = P._resolve_politeness(bare_kernel, None, None)
-    assert d == 0.0 and h == {"h1.example"}
+    assert P._resolve_politeness(bare_kernel) == (0.0, {"h1.example"})
     # HTTP kernels advertise the shared constant
     from jsonextract_spark.crawl import fetch_http as FH
     k = FH.make_fetch_extract_kernel()
@@ -2323,7 +2424,6 @@ def test_live_crawl_follows_real_anchors(spark, tmp_path):
     RELATIVE hrefs, so round 2 fetching the children proves the href
     extractor + base-URL resolution feed the frontier."""
     import http.server
-    import threading
 
     from jsonextract_spark.crawl.fetch_http import (
         make_fetch_extract_kernel)
@@ -2347,8 +2447,7 @@ def test_live_crawl_follows_real_anchors(spark, tmp_path):
         def log_message(self, *a):
             pass
 
-    srv = http.server.ThreadingHTTPServer(("127.0.0.1", 0), H)
-    threading.Thread(target=srv.serve_forever, daemon=True).start()
+    srv = local_http.serve(H)
     try:
         port = srv.server_port
         seeds = [f"http://127.0.0.1:{port}/p/1",
@@ -2369,7 +2468,6 @@ def test_live_crawl_resolves_links_after_redirect(spark, tmp_path):
     resolve against the post-redirect URL (urlopen follows the 301;
     resolving against the requested URL feeds wrong frontier URLs)."""
     import http.server
-    import threading
 
     from jsonextract_spark.crawl.fetch_http import (
         make_fetch_extract_kernel)
@@ -2401,8 +2499,7 @@ def test_live_crawl_resolves_links_after_redirect(spark, tmp_path):
         def log_message(self, *a):
             pass
 
-    srv = http.server.ThreadingHTTPServer(("127.0.0.1", 0), H)
-    threading.Thread(target=srv.serve_forever, daemon=True).start()
+    srv = local_http.serve(H)
     try:
         port = srv.server_port
         # zero politeness floor: round 2 must not depend on round 1

@@ -4,12 +4,12 @@ round (seen-gated, resume-compatible)."""
 
 import gzip
 import http.server
-import threading
 
 import pandas as pd
 import pytest
 
 from jsonextract_spark.crawl import sitemaps as SM
+from tests import local_http
 
 pytestmark = pytest.mark.spark
 
@@ -93,8 +93,7 @@ def _sitemap_server():
         def log_message(self, *a):
             pass
 
-    srv = http.server.ThreadingHTTPServer(("127.0.0.1", 0), H)
-    threading.Thread(target=srv.serve_forever, daemon=True).start()
+    srv = local_http.serve(H)
     return srv
 
 

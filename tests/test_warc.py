@@ -7,6 +7,7 @@ from datetime import datetime
 import pytest
 
 from jsonextract_spark.crawl import warc as W
+from tests import local_http
 
 pytestmark = pytest.mark.spark
 
@@ -164,7 +165,6 @@ def test_fetch_time_archival_live_http(spark, tmp_path):
     from the server, with the ledger's exact timestamps."""
     import http.server
     import os
-    import threading
 
     from jsonextract_spark.crawl.fetch_http import (
         make_fetch_extract_kernel)
@@ -190,8 +190,7 @@ def test_fetch_time_archival_live_http(spark, tmp_path):
         def log_message(self, *a):
             pass
 
-    srv = http.server.ThreadingHTTPServer(("127.0.0.1", 0), H)
-    threading.Thread(target=srv.serve_forever, daemon=True).start()
+    srv = local_http.serve(H)
     try:
         port = srv.server_port
         wdir = str(tmp_path / "whttp")
