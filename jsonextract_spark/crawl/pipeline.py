@@ -22,7 +22,7 @@ import time
 import uuid
 
 from pyspark import InheritableThread
-from pyspark.sql import (DataFrame, Observation, SparkSession,
+from pyspark.sql import (DataFrame, Observation, SparkSession, Window,
                          functions as F, types as T)
 
 from jsonextract_spark.crawl import seen as seen_mod
@@ -30,7 +30,8 @@ from jsonextract_spark.crawl import synth
 from jsonextract_spark.crawl.scheduler import (
     AUTO_HOT_MIN_PENDING, DEFAULT_POLITENESS_FLOOR_SEC, pop_batch,
     priority_of)
-from jsonextract_spark.crawl.tables import FRONTIER_SCHEMA, Warehouse
+from jsonextract_spark.crawl.tables import (FRONTIER_SCHEMA, ROBOTS_SCHEMA,
+                                            Warehouse)
 from jsonextract_spark.functions.udfs import url_identity_udf
 
 DEFAULT_HOST_BUDGET = 5
@@ -180,6 +181,65 @@ def load_host_stats(spark: SparkSession, wh: Warehouse,
                  F.max("last_fetch_ts").alias("last_fetch_ts")))
 
 
+# A definitive robots verdict is reused for this long; a host whose
+# newest definitive verdict is older is resolved again.
+ROBOTS_TTL_SEC = 7 * 24 * 3600.0
+
+
+def load_robots(spark: SparkSession, wh: Warehouse, upto_round: int,
+                hosts: DataFrame | None) -> DataFrame | None:
+    """Each host's newest definitive robots verdict younger than
+    ROBOTS_TTL_SEC as of ``upto_round`` (``tables.ROBOTS_SCHEMA``
+    rows), or None when no robots table exists (a synthetic crawl).
+
+    Sources are the newest ``robots_compact`` checkpoint plus the
+    ``robots`` rounds after it, so a read spans at most COMPACT_EVERY
+    rounds. ``hosts`` (a DataFrame with a ``host`` column; None keeps
+    every host) restricts the rows with a semi-join BEFORE the
+    newest-wins window: a round only needs its frontier's hosts, and
+    windowing every verdict the crawl ever resolved would shuffle
+    O(total hosts) rows every round. Non-definitive rows (robots.txt
+    5xx / no response) are never returned: the round that resolved
+    them used them, and the next round that sees the host resolves it
+    again."""
+    base = _newest_round(wh, "robots_compact", upto_round)
+    paths = ([wh._path("robots_compact", base)] if base >= 0 else []) + [
+        wh._path("robots", r) for r in range(base + 1, upto_round + 1)
+        if wh.exists("robots", r)]
+    if not paths:
+        return None
+    rows = (spark.read.schema(ROBOTS_SCHEMA).parquet(*paths)
+            .filter(F.col("definitive")
+                    & (F.col("fetched_at")
+                       >= F.lit(time.time() - ROBOTS_TTL_SEC))))
+    if hosts is not None:
+        rows = rows.join(hosts.select("host"), "host", "left_semi")
+    newest = Window.partitionBy("host").orderBy(F.col("fetched_at").desc())
+    return (rows.withColumn("_rn", F.row_number().over(newest))
+            .filter(F.col("_rn") == 1).drop("_rn"))
+
+
+def _resolve_round_robots(spark: SparkSession, wh: Warehouse,
+                          round_no: int, frontier: DataFrame,
+                          resolve) -> DataFrame:
+    """The round's robots table (``tables.ROBOTS_SCHEMA``) for a fetch
+    kernel that advertises a robots resolver: ``load_robots``'s
+    reusable verdicts for the frontier's hosts, plus ``resolve`` run
+    executor-side over one (host, url) row per other host — the URL
+    gives the origin, as scheme and port are not in the host column.
+    The resolved rows, non-definitive ones included, are saved as the
+    round's ``robots`` table (one Spark action) and read back:
+    consuming the resolver's plan itself would re-run its GETs."""
+    hosts = frontier.groupBy("host").agg(F.min("url").alias("url"))
+    known = load_robots(spark, wh, round_no - 1, hosts)
+    todo = (hosts if known is None
+            else hosts.join(known, "host", "left_anti"))
+    wh.save(todo.mapInPandas(resolve, ROBOTS_SCHEMA), "robots", round_no)
+    fresh = spark.read.schema(ROBOTS_SCHEMA).parquet(
+        wh._path("robots", round_no))
+    return fresh if known is None else known.unionByName(fresh)
+
+
 def _drop_uncommitted_round_state(wh: Warehouse, round_no: int):
     """Delete state-table debris a FAILED earlier attempt of
     ``round_no`` may have left (the round died after some writes but
@@ -201,10 +261,14 @@ def _drop_uncommitted_round_state(wh: Warehouse, round_no: int):
       empty, the crashed attempt's ledger rows become phantom removals
       in later rounds' frontier replay, phantom fetches in
       ``load_host_stats`` and phantom pages in crawl_order/recrawl;
-    * ``seen_compact`` and ``host_stats_compact`` — the loaders'
-      backward scan would take a checkpoint at the round being re-run
-      as its own base when the re-run recompacts, ignoring the
-      re-run's fresh delta and freezing first-attempt state.
+    * ``robots`` — a maintenance round at the same number writes
+      none, so ``load_robots`` would adopt the crashed attempt's
+      verdicts;
+    * ``seen_compact``, ``host_stats_compact`` and ``robots_compact`` —
+      the loaders' backward scan would take a checkpoint at the round
+      being re-run as its own base when the re-run recompacts,
+      ignoring the re-run's fresh delta and freezing first-attempt
+      state.
 
     Guard: this deletes the round's ``fetched`` ledger rows, so it
     refuses to run on a round the ledger already shows COMMITTED — a
@@ -218,8 +282,8 @@ def _drop_uncommitted_round_state(wh: Warehouse, round_no: int):
         raise ValueError(
             f"refusing to drop state for round {round_no}: the ledger "
             f"shows it committed (stale round number at the call site?)")
-    for table in ("frontier", "frontier_delta", "fetched",
-                  "seen_compact", "host_stats_compact"):
+    for table in ("frontier", "frontier_delta", "fetched", "robots",
+                  "seen_compact", "host_stats_compact", "robots_compact"):
         if wh.exists(table, round_no):
             shutil.rmtree(wh._path(table, round_no))
 
@@ -378,12 +442,15 @@ def compact_state(spark: SparkSession, wh: Warehouse,
       the round that discovered them already wrote their seen delta;
     * ``seen_compact`` — the seen set (checkpoint + deltas since);
     * ``host_stats_compact`` — the previous checkpoint folded with the
-      ledger rounds since (none while nothing has been fetched).
+      ledger rounds since (none while nothing has been fetched);
+    * ``robots_compact`` — ``load_robots`` over every host: the newest
+      definitive in-TTL verdict per host (none in a synthetic crawl,
+      which writes no robots table).
 
     Runs after the round's own writes, so the views include its
-    events. All three read plans are built before any checkpoint
-    lands; the writes touch disjoint tables, so seen and host_stats
-    save on side threads while the frontier saves on this one.
+    events. All read plans are built before any checkpoint lands; the
+    writes touch disjoint tables, so the checkpoints save on side
+    threads while the frontier saves on this one.
     ``InheritableThread``: under PySpark's pinned-thread mode a raw
     thread would not inherit the round's job group (its jobs would
     escape ``spark_jobs`` and group cancellation) nor clean up its
@@ -394,7 +461,8 @@ def compact_state(spark: SparkSession, wh: Warehouse,
     frontier = (load_frontier(spark, wh, round_no)
                 .withColumn("is_new", F.lit(0)))
     side = {"seen_compact": load_seen(spark, wh, round_no),
-            "host_stats_compact": load_host_stats(spark, wh, round_no)}
+            "host_stats_compact": load_host_stats(spark, wh, round_no),
+            "robots_compact": load_robots(spark, wh, round_no, None)}
     errors: list[BaseException] = []
 
     def save(df, table):
@@ -465,9 +533,9 @@ def run_round(spark: SparkSession, wh: Warehouse, round_no: int,
               host_budget: int = DEFAULT_HOST_BUDGET,
               batch_size: int = DEFAULT_BATCH_SIZE,
               fetch_kernel=None,
-              robots_provider=None,
               auto_hot_min_pending: int | None = None,
-              archive_warc: str | None = None) -> dict:
+              archive_warc: str | None = None,
+              static_robots: DataFrame | None = None) -> dict:
     """Execute round ``round_no`` (requires round_no-1 committed).
 
     Politeness comes from ``fetch_kernel``'s advertised config (see
@@ -475,13 +543,25 @@ def run_round(spark: SparkSession, wh: Warehouse, round_no: int,
     ``eff_delay``, which routes a delayed host to one fetch task and
     paces the kernel's requests to it.
 
+    Robots: a kernel that advertises a robots resolver (``.robots``,
+    as ``fetch_http.make_fetch_extract_kernel`` does) gets real
+    verdicts as crawl state. The round reuses ``load_robots``'s
+    verdicts for its frontier hosts, resolves the other hosts and
+    saves them as its ``robots`` table before the pop (see
+    ``_resolve_round_robots``). ``pop_batch`` gates on each host's
+    ``allowed`` and ``crawl_delay``; the popped batch also carries the
+    host's ``robots_txt`` and ``definitive`` for the kernel's per-path
+    check. A kernel without a resolver crawls under the synthetic
+    ``make_robots`` table, or ``static_robots`` when the caller built
+    it once for the whole crawl (``run_crawl`` does).
+
     ``archive_warc`` (a directory) enables FETCH-TIME archival: the
     fetch kernel tees every fetched body into
     ``<archive_warc>/round=N/part-*.warc.gz`` shards inside the fused
     fetch pass itself — no second fetch, no extra Spark action (the
-    write rides the ledger action like the robots delta publish), and
-    the round's ledger entry records the shard manifest. Requires a
-    kernel exposing ``bind_archive`` (both built-in kernels do).
+    write rides the ledger action), and the round's ledger entry
+    records the shard manifest. Requires a kernel exposing
+    ``bind_archive`` (both built-in kernels do).
 
     Fixed Spark-ACTION budget per non-empty round (recorded as the
     ``spark_actions`` metric, counted at the call sites): TWO — the
@@ -489,11 +569,14 @@ def run_round(spark: SparkSession, wh: Warehouse, round_no: int,
     save (A2: this round's additions only, whose ``is_new=1`` slice
     doubles as the seen delta; removals ride the ledger's url_hash
     column — see ``load_frontier``) — plus the amortized writes of
-    ``compact_state`` (frontier base + seen + host_stats checkpoints)
-    every COMPACT_EVERY rounds. Host stats need no write
-    of their own: ``load_host_stats`` derives them from the ledger.
-    An EMPTY round (A1 popped nothing) runs A1 only, plus compaction
-    on the cadence: it writes no frontier state, and its metrics,
+    ``compact_state`` (frontier base + seen + host_stats checkpoints,
+    plus the robots checkpoint in a live crawl) every COMPACT_EVERY
+    rounds. A round whose kernel advertises a robots resolver runs one
+    more: the ``robots`` table save before A1. Host stats need no
+    write of their own: ``load_host_stats`` derives them from the
+    ledger.
+    An EMPTY round (A1 popped nothing) runs A1 only (after the robots
+    save in a live round), plus compaction on the cadence: it writes no frontier state, and its metrics,
     ledger entry (marked ``empty``) and job-group release go through
     the same tail as any round.
     Every per-round write is O(round output); the only O(total-state)
@@ -507,6 +590,7 @@ def run_round(spark: SparkSession, wh: Warehouse, round_no: int,
     round's job group — with AQE enabled that is one job per
     materialized query stage, NOT the action count. The ``sec_*``
     metrics split the round's wall clock at its action boundaries:
+    in a live round, ``sec_robots`` is the robots table save;
     ``sec_pop_fetch_extract`` is the ledger write (A1); on non-empty
     rounds, ``sec_driver_plan`` is the driver building the
     link-discovery, gate and delta plans (no Spark action runs in it)
@@ -527,12 +611,23 @@ def run_round(spark: SparkSession, wh: Warehouse, round_no: int,
     _drop_uncommitted_round_state(wh, round_no)
     frontier = load_frontier(spark, wh, prev)
     seen = load_seen(spark, wh, prev)
-    # robots: synthetic table by default; live crawls pass
-    # fetch_http.make_robots_provider() so the host gate uses real
-    # robots.txt (the fetch kernel additionally enforces per-path rules)
-    robots = (robots_provider(spark, frontier) if robots_provider
-              else make_robots(spark))
     host_stats = load_host_stats(spark, wh, prev)
+    secs: dict = {}
+    n_actions = 0
+    resolve_robots = getattr(fetch_kernel, "robots", None)
+    rules = None
+    if resolve_robots is None:
+        robots = (static_robots if static_robots is not None
+                  else make_robots(spark))
+    else:
+        sc.setJobDescription(f"r{round_no} robots")
+        table = _resolve_round_robots(spark, wh, round_no, frontier,
+                                      resolve_robots)
+        robots = table.select("host", "allowed", "crawl_delay")
+        rules = table.select("host", "robots_txt", "definitive")
+        n_actions += 1
+        secs["sec_robots"] = time.time() - t0
+    t_pop = time.time()
 
     # 1. pop (robots gate + delay eligibility + host-budget discount +
     #    salted per-host top-k + global cap). The pop decides each
@@ -555,6 +650,10 @@ def run_round(spark: SparkSession, wh: Warehouse, round_no: int,
                           auto_hot_min_pending
                           if auto_hot_min_pending is not None
                           else AUTO_HOT_MIN_PENDING))
+    if rules is not None:
+        # the kernel's per-path check reads each host's rules: joined
+        # onto the popped batch (O(batch)), never onto the frontier
+        batch = batch.join(rules, "host", "left")
     batch = batch.withColumn("batch_id", F.lit(round_no)).cache()
 
     # 2. politeness repartition: salted host key spreads an operator-
@@ -637,13 +736,13 @@ def run_round(spark: SparkSession, wh: Warehouse, round_no: int,
                    F.lit(0)).alias("n_retry_marked"))
     sc.setJobDescription(f"r{round_no} A1 ledger: pop+fetch+extract")
     wh.save(fetched, "fetched", round_no)
-    n_actions = 1
+    n_actions += 1
     om = obs_fetch.get
     n_batch, n_objects = int(om["n_batch"]), int(om["n_objects"])
     n_fetched, n_blocked = int(om["n_fetched"]), int(om["n_blocked"])
     n_retry_marked = int(om["n_retry_marked"])
     t_fetch = time.time()
-    secs = {"sec_pop_fetch_extract": t_fetch - t0}
+    secs["sec_pop_fetch_extract"] = t_fetch - t_pop
     n_new = n_deferred = 0
     # try/finally: a failed write must not leak the round's cached RDD
     # blocks — the caches are dropped on the error path before the
@@ -835,7 +934,6 @@ def run_crawl(spark: SparkSession, warehouse: str, rounds: int,
               resume: bool = False,
               fetch_kernel=None,
               seeds: list[str] | None = None,
-              robots_provider=None,
               auto_hot_min_pending: int | None = None,
               archive_warc: str | None = None) -> list[dict]:
     """Run (or resume) a crawl to ``rounds`` committed rounds.
@@ -843,14 +941,15 @@ def run_crawl(spark: SparkSession, warehouse: str, rounds: int,
     ``fetch_kernel`` swaps the fused fetch+extract stage (default: the
     deterministic synthetic corpus; pass
     ``fetch_http.make_fetch_extract_kernel()`` for live HTTP);
-    ``seeds`` overrides the synthetic seed list with explicit URLs;
-    ``robots_provider`` swaps the synthetic robots table for a callable
-    (spark, frontier) -> DataFrame(host, allowed) — live crawls pass
-    ``fetch_http.make_robots_provider()``. The politeness config is the
-    fetch kernel's advertised ``default_delay_sec`` (the per-host floor
-    for hosts whose robots.txt does not ask for a rate) and
-    ``hot_hosts`` (hosts with operator clearance for full-rate salted
-    fetching): ``make_fetch_extract_kernel`` attaches them to the
+    ``seeds`` overrides the synthetic seed list with explicit URLs.
+    Robots follow the kernel too: one that advertises a robots
+    resolver (``.robots``) gets real verdicts, kept as the per-round
+    ``robots`` table (see ``run_round``); any other kernel crawls
+    under the synthetic ``make_robots`` table, built once per crawl.
+    The politeness config is the fetch kernel's advertised
+    ``default_delay_sec`` (the per-host floor for hosts whose
+    robots.txt does not ask for a rate) and ``hot_hosts`` (hosts with
+    operator clearance for full-rate salted fetching): ``make_fetch_extract_kernel`` attaches them to the
     kernel it returns, and a synthetic kernel gets them set as
     attributes (see ``main``). A custom kernel that advertises no
     floor gets ``scheduler.DEFAULT_POLITENESS_FLOOR_SEC``, and only
@@ -870,22 +969,19 @@ def run_crawl(spark: SparkSession, warehouse: str, rounds: int,
     else:
         _check_layout(wh)
     static_robots = None
-    if robots_provider is None and rounds > start + 1:
+    if getattr(fetch_kernel, "robots", None) is None and rounds > start + 1:
         # The synthetic robots table is static per crawl — build (and
         # cache) it once instead of re-running createDataFrame + a
-        # fresh broadcast-build job every round (r10; a live
-        # robots_provider is per-round by design: its verdicts depend
-        # on the round's frontier hosts).
+        # fresh broadcast-build job every round (r10).
         static_robots = make_robots(spark).cache()
-        robots_provider = lambda _s, _f: static_robots  # noqa: E731
     stats = []
     try:
         for r in range(start + 1, rounds + 1):
             s = run_round(spark, wh, r, host_budget, batch_size,
                           fetch_kernel=fetch_kernel,
-                          robots_provider=robots_provider,
                           auto_hot_min_pending=auto_hot_min_pending,
-                          archive_warc=archive_warc)
+                          archive_warc=archive_warc,
+                          static_robots=static_robots)
             stats.append({"round": r, **s})
     finally:
         if static_robots is not None:
@@ -935,9 +1031,11 @@ def main():
                     help="after the crawl, re-open fetched URLs older "
                          "than this many seconds as a maintenance round")
     ap.add_argument("--live", action="store_true",
-                    help="crawl live HTTP (fetch_http kernel + real "
-                         "robots provider) instead of the synthetic "
-                         "corpus; --seeds-url is then required")
+                    help="crawl live HTTP (fetch_http kernel, with "
+                         "real robots.txt verdicts kept as the "
+                         "warehouse's robots table) instead of the "
+                         "synthetic corpus; --seeds-url is then "
+                         "required")
     ap.add_argument("--seeds-url", action="append", default=None,
                     help="explicit seed URL for --live (repeatable)")
     ap.add_argument("--seed-sitemaps", action="store_true",
@@ -969,16 +1067,14 @@ def main():
 
     from jsonextract_spark.session import build_session
     spark = build_session("jsx-crawl", master=args.master)
-    robots_provider = seed_list = None
+    seed_list = None
     if args.live:
         from jsonextract_spark.crawl.fetch_http import (
-            make_fetch_extract_kernel, make_robots_provider)
+            make_fetch_extract_kernel)
         kernel_kwargs = {"hot_hosts": args.hot_host}
         if args.default_delay_sec is not None:
             kernel_kwargs["default_delay_sec"] = args.default_delay_sec
         fetch_kernel = make_fetch_extract_kernel(**kernel_kwargs)
-        robots_provider = make_robots_provider(
-            cache_path=os.path.join(args.warehouse, "robots_cache"))
         seed_list = args.seeds_url
     else:
         # the synthetic corpus's politeness config rides the kernel too
@@ -989,7 +1085,6 @@ def main():
                       args.host_budget, args.batch_size,
                       resume=args.resume,
                       seeds=seed_list, fetch_kernel=fetch_kernel,
-                      robots_provider=robots_provider,
                       auto_hot_min_pending=args.auto_hot_min_pending,
                       archive_warc=args.archive_warc)
     for s in stats:

@@ -3,7 +3,7 @@ lines) — the crawler's second URL-discovery channel besides link
 extraction.
 
 Shape: discovery is a ``mapInPandas`` kernel over the DISTINCT host
-set (like the robots provider — at 10^6-10^7 hosts the GETs must run
+set (like the robots resolver — at 10^6-10^7 hosts the GETs must run
 executor-side, never on the driver), and seeding is a maintenance
 ROUND in the ``schedule_recrawl`` mold: the new URLs are written as a
 fresh full frontier base at ``after_round + 1`` with ``is_new=1`` (so

@@ -61,11 +61,28 @@ host_stats_compact
              derives the cumulative totals as the newest checkpoint
              plus count/max(warc_ts) over the non-blocked ledger rows
              of the rounds after it.
+robots       host, allowed (may the root be fetched), crawl_delay
+             (the host's Crawl-delay/Request-rate ask, null when
+             unspecified), robots_txt (effective rules text: the body
+             on 200, a complete disallow on 5xx, null = allow-all on
+             4xx or no response), definitive (False for 5xx / no
+             response), fetched_at (epoch seconds) — one row per host
+             a live round resolved (the kernel's advertised resolver),
+             only for hosts without a reusable verdict; synthetic
+             crawls write none
+robots_compact
+             the same columns: the newest definitive row per host
+             younger than pipeline.ROBOTS_TTL_SEC, folded from the
+             previous checkpoint and the robots rounds since by
+             pipeline.compact_state every pipeline.COMPACT_EVERY
+             rounds; pipeline.load_robots reads the newest checkpoint
+             plus the robots rounds after it
 metrics      batch_id, key, value (incl. per-phase secs + spark_jobs)
 
-frontier, frontier_delta, fetched, seen_compact and host_stats_compact
-are the per-round state a crashed round attempt can leave behind;
-pipeline._drop_uncommitted_round_state deletes all five at a round
+frontier, frontier_delta, fetched, robots, seen_compact,
+host_stats_compact and robots_compact are the per-round state a
+crashed round attempt can leave behind;
+pipeline._drop_uncommitted_round_state deletes all seven at a round
 that is not committed before the round (or a maintenance round at the
 same number) is run again.
 """
@@ -99,6 +116,15 @@ FRONTIER_SCHEMA = T.StructType([
 ])
 
 SEEN_SCHEMA = T.StructType([T.StructField("url_hash", T.LongType())])
+
+ROBOTS_SCHEMA = T.StructType([
+    T.StructField("host", T.StringType()),
+    T.StructField("allowed", T.BooleanType()),
+    T.StructField("crawl_delay", T.DoubleType()),
+    T.StructField("robots_txt", T.StringType()),
+    T.StructField("definitive", T.BooleanType()),
+    T.StructField("fetched_at", T.DoubleType()),
+])
 
 PAGES_SCHEMA = T.StructType([
     T.StructField("url", T.StringType()),

@@ -1,11 +1,12 @@
 """Local HTTP servers for tests, each on a port no earlier server of the
 test session held.
 
-Python workers are reused across tests, and the fetch stage caches each
-origin's robots.txt verdict per worker (``fetch_http._ROBOTS_CACHE``: an
-hour for a definitive verdict, 120 s for a non-definitive one). A server
-bound to a port that an earlier test's server held would be answered
-from the earlier server's cached verdict, so ports are never reused.
+A test's server is named by the URLs its test crawls: frontier and
+ledger rows, WARC records, and the robots verdict resolved at that
+origin. A server bound to a port that an earlier test's server held
+would answer for URLs the earlier test recorded, so any state that
+outlives a test could mix the two servers. Ports are never reused, so
+a URL names one server per test session.
 """
 
 import http.server

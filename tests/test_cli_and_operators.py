@@ -121,7 +121,7 @@ def test_http_fetch_stage(spark):
 
     class H(http.server.BaseHTTPRequestHandler):
         def do_GET(self):
-            if self.path in ("/missing", "/robots.txt"):
+            if self.path == "/missing":
                 self.send_response(404)
                 self.end_headers()
                 return
@@ -143,10 +143,11 @@ def test_http_fetch_stage(spark):
         unreachable = "http://127.0.0.1:1/unreachable"
         urls = pages + [missing, unreachable]
         df = spark.createDataFrame(
-            [(u, k, u.split("/")[2], 0, 1, k, None)
+            [(u, k, u.split("/")[2], 0, 1, k, None, None, True)
              for k, u in enumerate(urls)],
             "url string, url_hash long, host string, depth int,"
-            " batch_id int, rank long, eff_delay double")
+            " batch_id int, rank long, eff_delay double,"
+            " robots_txt string, definitive boolean")
         fetched = df.repartition(4, "url").mapInPandas(
             make_fetch_extract_kernel(timeout_sec=5),
             FETCH_EXTRACT_SCHEMA)

@@ -438,6 +438,39 @@ def test_resume_accepts_ledger_without_batch(spark, one_round_crawl,
     assert "batch" in wh.ledger()["rounds"][-1]
 
 
+def _synth_robots_kernel(verdict):
+    """The synthetic kernel with a zero politeness floor, advertising a
+    robots resolver that answers each host with ``verdict(host, now)``
+    -> (allowed, definitive, fetched_at)."""
+    kern = _synth_kernel(0.0)
+
+    def resolve(batches):
+        import time
+
+        import pandas as pd
+
+        for pdf in batches:
+            now = time.time()
+            allowed, definitive, stamps = map(list, zip(
+                *[verdict(h, now) for h in pdf["host"]]))
+            yield pd.DataFrame({
+                "host": pdf["host"], "allowed": allowed,
+                "crawl_delay": pd.array([None] * len(pdf),
+                                        dtype="Float64"),
+                "robots_txt": [None if a else "User-agent: *\nDisallow: /"
+                               for a in allowed],
+                "definitive": definitive, "fetched_at": stamps})
+
+    kern.robots = resolve
+    return kern
+
+
+def _deny_all_kernel():
+    """A synthetic kernel whose robots verdicts disallow every host: a
+    round under it pops nothing."""
+    return _synth_robots_kernel(lambda host, now: (False, True, now))
+
+
 def test_empty_round_carries_state_without_writes(spark, tmp_path):
     """An empty round writes NO frontier state at all (the delta-layout
     loaders read a round RANGE and skip rounds without a delta) —
@@ -459,12 +492,9 @@ def test_empty_round_carries_state_without_writes(spark, tmp_path):
     seen_before = sorted(r["url_hash"]
                          for r in P.load_seen(spark, wh, 1).collect())
 
-    def deny_all(spark_, frontier):
-        return (frontier.select("host").distinct()
-                .withColumn("allowed", F.lit(False)))
-
     run_crawl(spark, wdir, rounds=2, resume=True, n_seeds=10,
-              host_budget=3, batch_size=20, robots_provider=deny_all)
+              host_budget=3, batch_size=20,
+              fetch_kernel=_deny_all_kernel())
     led = {r["round"]: r for r in wh.ledger()["rounds"]}
     assert led[2].get("empty")
     # no frontier state written for the empty round
@@ -492,6 +522,10 @@ def test_crawl_over_live_http(spark, tmp_path):
 
     class H(http.server.BaseHTTPRequestHandler):
         def do_GET(self):
+            if self.path == "/robots.txt":   # none: definitive allow-all
+                self.send_response(404)
+                self.end_headers()
+                return
             i = int(self.path.rsplit("/", 1)[-1])
             port = self.server.server_port
             kids = ", ".join(
@@ -525,13 +559,13 @@ def test_crawl_over_live_http(spark, tmp_path):
 
 def test_live_robots_gate(spark, tmp_path):
     """Live crawls honor real robots.txt at both layers: the scheduler's
-    host gate (make_robots_provider: root disallowed -> host never
+    host gate (the round's robots table: root disallowed -> host never
     popped) and the fetch kernel's per-path check (subtree disallowed ->
     the URL is never GET'd and yields no fetched row)."""
     import http.server
 
     from jsonextract_spark.crawl.fetch_http import (
-        make_fetch_extract_kernel, make_robots_provider)
+        make_fetch_extract_kernel)
     from jsonextract_spark.crawl.pipeline import run_crawl
 
     def serve(robots_body: str):
@@ -571,8 +605,7 @@ def test_live_robots_gate(spark, tmp_path):
             seeds=[f"http://127.0.0.1:{port}/p/1",
                    f"http://127.0.0.1:{port}/q/1"],
             host_budget=10, batch_size=10,
-            fetch_kernel=make_fetch_extract_kernel(),
-            robots_provider=make_robots_provider())
+            fetch_kernel=make_fetch_extract_kernel())
         assert stats[0]["fetched"] == 1
         assert f"/q/1" in paths and "/p/1" not in paths
     finally:
@@ -587,8 +620,7 @@ def test_live_robots_gate(spark, tmp_path):
             spark, str(tmp_path / "w_rb_host"), rounds=1,
             seeds=[f"http://127.0.0.1:{port2}/p/1"],
             host_budget=10, batch_size=10,
-            fetch_kernel=make_fetch_extract_kernel(),
-            robots_provider=make_robots_provider())
+            fetch_kernel=make_fetch_extract_kernel())
         assert stats2[0]["fetched"] == 0
         assert all(p == "/robots.txt" for p in paths2)
     finally:
@@ -627,19 +659,14 @@ def _serve(handler_body):
 
 
 def test_test_servers_never_reuse_a_port():
-    """Reused Python workers cache robots verdicts per origin, so a
-    later test's server on an earlier server's port would inherit that
-    server's verdict (an allow-all verdict planted in the workers for
-    test_live_robots_gate's port made it fetch the disallowed /p/1).
-    ``local_http.serve`` skips every port it handed out before, even
-    when the OS offers one again."""
+    """``local_http.serve`` skips every port it handed out before, even
+    when the OS offers one again, so a URL names one server for the
+    whole test session: state recorded under an earlier server's URL
+    (a robots verdict, a frontier row) never reaches a later one."""
     import http.server
+    from urllib.request import urlopen
 
-    from jsonextract_spark.crawl import fetch_http
-
-    earlier, port, _ = _serve(lambda p: None)    # 404 robots: allow-all
-    assert fetch_http.robots_verdict(
-        f"http://127.0.0.1:{port}/p/1", "UA") == (True, True)
+    earlier, port, _ = _serve(lambda p: b"earlier")
     earlier.shutdown()
     earlier.server_close()
 
@@ -653,9 +680,9 @@ def test_test_servers_never_reuse_a_port():
                 ("127.0.0.1", offered.pop()) if offered else addr,
                 handler)
 
-    class DisallowAll(http.server.BaseHTTPRequestHandler):
+    class Later(http.server.BaseHTTPRequestHandler):
         def do_GET(self):
-            body = b"User-agent: *\nDisallow: /\n"
+            body = b"later"
             self.send_response(200)
             self.send_header("Content-Length", str(len(body)))
             self.end_headers()
@@ -664,22 +691,29 @@ def test_test_servers_never_reuse_a_port():
         def log_message(self, *a):
             pass
 
-    later = local_http.serve(DisallowAll, server_cls=Reoffer)
+    later = local_http.serve(Later, server_cls=Reoffer)
     try:
         assert not offered and later.server_port != port
-        assert fetch_http.robots_verdict(
-            f"http://127.0.0.1:{later.server_port}/p/1", "UA") \
-            == (False, True)
+        with urlopen(f"http://127.0.0.1:{later.server_port}/x",
+                     timeout=5) as resp:
+            assert resp.read() == b"later"
     finally:
         later.shutdown()
 
 
-def test_robots_5xx_is_temporary_disallow():
+def test_robots_5xx_is_temporary_disallow(spark, tmp_path):
     """RFC 9309: a 5xx robots.txt means 'unreachable' -> complete
-    disallow, but the verdict is non-definitive (never persisted by the
-    cross-round cache) so a transient outage can't freeze the decision.
-    4xx stays allow-all and definitive."""
-    from jsonextract_spark.crawl import fetch_http
+    disallow, but the verdict is non-definitive: the round's robots
+    table records it and gates the host, no later round reuses it, so
+    once the server heals the next round resolves the host again and
+    crawls it. A 4xx robots.txt is a definitive allow-all; no response
+    at all is a non-definitive allow-all (the documented deviation)."""
+    import pandas as pd
+
+    from jsonextract_spark.crawl.fetch_http import (
+        make_fetch_extract_kernel)
+    from jsonextract_spark.crawl.pipeline import run_crawl
+    from jsonextract_spark.crawl.tables import Warehouse
 
     healthy = []
 
@@ -687,67 +721,72 @@ def test_robots_5xx_is_temporary_disallow():
         if p == "/robots.txt":
             return b"User-agent: *\nAllow: /\n" if healthy \
                 else b"__5xx__"
-        return b"hi"
+        return b"<script>var c = {id: 1, links: []};</script>"
 
-    srv, port, _log = _serve(body)
+    srv, port, log = _serve(body)
     try:
-        url = f"http://127.0.0.1:{port}/page"
-        assert fetch_http.robots_verdict(url, "UA") == (False, False)
-        rp, definitive, _ts = fetch_http._ROBOTS_CACHE[
-            f"http://127.0.0.1:{port}"]
-        assert rp is not None and definitive is False
-        # the broken verdict is cached only for the SHORT error TTL:
-        # once the server heals and the TTL lapses, the next check
-        # refetches and allows (per-worker caches must not pin a
-        # transient outage)
+        wdir = str(tmp_path / "w_5xx")
+        kw = dict(seeds=[f"http://127.0.0.1:{port}/p/1"], host_budget=5,
+                  batch_size=5, fetch_kernel=make_fetch_extract_kernel(
+                      timeout_sec=5, default_delay_sec=0.0))
+        stats = run_crawl(spark, wdir, rounds=1, **kw)
+        assert stats[0]["fetched"] == 0 and "/p/1" not in log
+        wh = Warehouse(wdir)
+        (row,) = wh.load(spark, "robots", 1).collect()
+        assert (row["allowed"], row["definitive"], row["robots_txt"]) \
+            == (False, False, "User-agent: *\nDisallow: /")
+
         healthy.append(True)
-        assert fetch_http.robots_verdict(url, "UA")[0] is False  # cached
-        old = fetch_http._ROBOTS_ERR_TTL_SEC
-        fetch_http._ROBOTS_ERR_TTL_SEC = 0.0
-        try:
-            assert fetch_http.robots_verdict(url, "UA") == (True, True)
-        finally:
-            fetch_http._ROBOTS_ERR_TTL_SEC = old
+        stats = run_crawl(spark, wdir, rounds=2, resume=True, **kw)
+        assert stats[0]["fetched"] == 1
+        assert log.count("/robots.txt") == 2
+        (row,) = wh.load(spark, "robots", 2).collect()
+        assert (row["allowed"], row["definitive"]) == (True, True)
     finally:
         srv.shutdown()
 
-    srv2, port2, _ = _serve(lambda p: None if p == "/robots.txt"
-                            else b"hi")
+    srv2, port2, _ = _serve(lambda p: None)          # 404 for all
     try:
-        url2 = f"http://127.0.0.1:{port2}/page"
-        assert fetch_http.robots_verdict(url2, "UA")[0] is True
-        rp2, definitive2, _ts2 = fetch_http._ROBOTS_CACHE[
-            f"http://127.0.0.1:{port2}"]
-        assert rp2 is None and definitive2 is True
+        pdf = pd.DataFrame({"host": ["gone", "down"],
+                            "url": [f"http://127.0.0.1:{port2}/x",
+                                    "http://127.0.0.1:1/x"]})
+        out = pd.concat(list(make_fetch_extract_kernel().robots([pdf])))
+        got = {h: (bool(a), t, bool(d)) for h, a, t, d in zip(
+            out["host"], out["allowed"], out["robots_txt"],
+            out["definitive"])}
+        assert got == {"gone": (True, None, True),
+                       "down": (True, None, False)}
     finally:
         srv2.shutdown()
 
 
 def test_fused_kernel_defers_on_robots_5xx():
     """The fused kernel must not consume URLs blocked by a robots 5xx:
-    rows come back blocked=True AND retry=True, and the page itself is
-    never GET'd (a momentary robots outage must not blackhole the
-    batch)."""
+    given the round's non-definitive complete-disallow rules, rows come
+    back blocked=True AND retry=True, and the server sees no request at
+    all — neither the pages nor robots.txt (a momentary robots outage
+    must not blackhole the batch)."""
     import pandas as pd
 
     from jsonextract_spark.crawl.fetch_http import (
         make_fetch_extract_kernel)
 
-    srv, port, log = _serve(
-        lambda p: b"__5xx__" if p == "/robots.txt" else b"hi")
+    srv, port, log = _serve(lambda p: b"hi")
     try:
         pdf = pd.DataFrame({
             "url": [f"http://127.0.0.1:{port}/p/{i}" for i in (1, 2)],
             "url_hash": [11, 22],
             "host": ["127.0.0.1"] * 2, "depth": [0, 0],
             "batch_id": [1, 1], "rank": [1, 2],
-            "eff_delay": [None, None]})
+            "eff_delay": [None, None],
+            "robots_txt": ["User-agent: *\nDisallow: /"] * 2,
+            "definitive": [False, False]})
         kernel = make_fetch_extract_kernel(timeout_sec=5)
         out = pd.concat(list(kernel([pdf])))
         assert list(out["blocked"]) == [True, True]
         assert list(out["retry"]) == [True, True]
         assert list(out["bytes"]) == [0, 0]
-        assert all(p == "/robots.txt" for p in log)
+        assert log == []
     finally:
         srv.shutdown()
 
@@ -867,7 +906,8 @@ def test_fused_kernel_retries_transient_fetch_failures():
             "url_hash": [11, 22, 33],
             "host": ["127.0.0.1"] * 3, "depth": [0] * 3,
             "batch_id": [1] * 3, "rank": [1, 2, 3],
-            "eff_delay": [None] * 3})
+            "eff_delay": [None] * 3,
+            "robots_txt": [None] * 3, "definitive": [True] * 3})
         kernel = make_fetch_extract_kernel(timeout_sec=5)
         out = pd.concat(list(kernel([pdf]))).reset_index(drop=True)
         assert list(out["blocked"]) == [False, False, False]
@@ -878,36 +918,32 @@ def test_fused_kernel_retries_transient_fetch_failures():
 
 
 def test_robots_crawl_delay_parsed():
-    """Crawl-delay and Request-rate both surface as a per-host delay
-    ask in seconds (Crawl-delay wins when both are present)."""
-    from jsonextract_spark.crawl import fetch_http
+    """The robots resolver surfaces Crawl-delay and Request-rate as the
+    host's delay ask in seconds (Crawl-delay wins when both are
+    present), null when robots.txt asks for neither."""
+    import pandas as pd
 
-    srv, port, _ = _serve(
-        lambda p: b"User-agent: *\nCrawl-delay: 2\n"
-        if p == "/robots.txt" else b"hi")
-    try:
-        assert fetch_http.robots_crawl_delay(
-            f"http://127.0.0.1:{port}/x", "UA") == 2.0
-    finally:
-        srv.shutdown()
+    from jsonextract_spark.crawl.fetch_http import (
+        make_fetch_extract_kernel)
 
-    srv2, port2, _ = _serve(
-        lambda p: b"User-agent: *\nRequest-rate: 1/5\n"
-        if p == "/robots.txt" else b"hi")
+    bodies = {"both": b"User-agent: *\nCrawl-delay: 2\nRequest-rate: 1/9\n",
+              "rate": b"User-agent: *\nRequest-rate: 1/5\n",
+              "none": b"User-agent: *\nDisallow: /private/\n"}
+    servers = {h: _serve(lambda p, b=b: b if p == "/robots.txt" else b"hi")
+               for h, b in bodies.items()}
     try:
-        assert fetch_http.robots_crawl_delay(
-            f"http://127.0.0.1:{port2}/x", "UA") == 5.0
+        pdf = pd.DataFrame({
+            "host": list(servers),
+            "url": [f"http://127.0.0.1:{port}/x"
+                    for _srv, port, _log in servers.values()]})
+        out = pd.concat(list(make_fetch_extract_kernel().robots([pdf])))
+        got = dict(zip(out["host"], out["crawl_delay"]))
+        assert got["both"] == 2.0 and got["rate"] == 5.0
+        assert pd.isna(got["none"])
+        assert out["allowed"].all() and out["definitive"].all()
     finally:
-        srv2.shutdown()
-
-    srv3, port3, _ = _serve(
-        lambda p: b"User-agent: *\nDisallow: /private/\n"
-        if p == "/robots.txt" else b"hi")
-    try:
-        assert fetch_http.robots_crawl_delay(
-            f"http://127.0.0.1:{port3}/x", "UA") is None
-    finally:
-        srv3.shutdown()
+        for srv, _port, _log in servers.values():
+            srv.shutdown()
 
 
 def test_pop_batch_crawl_delay_gates_hosts_across_rounds(spark):
@@ -1011,52 +1047,61 @@ def test_pop_batch_plan_broadcasts_side_tables(spark, tmp_path):
 
 def _kernel_batch(host, n):
     """A popped batch of ``n`` URLs on ``host`` in the fused kernel's
-    input shape, without ``eff_delay`` (the test sets it)."""
+    input shape, with an allow-all robots verdict and without
+    ``eff_delay`` (the test sets it)."""
     import pandas as pd
 
     return pd.DataFrame({
         "url": [f"http://{host}/x/{i}" for i in range(n)],
         "url_hash": list(range(11, 11 + n)),
         "host": [host] * n, "depth": [0] * n,
-        "batch_id": [1] * n, "rank": list(range(1, n + 1))})
+        "batch_id": [1] * n, "rank": list(range(1, n + 1)),
+        "robots_txt": [None] * n, "definitive": [True] * n})
 
 
-def test_fetch_kernel_paces_same_host_by_crawl_delay():
-    """Within a task, consecutive requests to a host with
-    ``Crawl-delay: 1`` are spaced >= 1s apart (3 URLs -> >= 2s total),
-    enforced by the kernel's per-host pacer even when the scheduler
-    cleared the host for full rate (``eff_delay`` null)."""
+def test_fetch_kernel_paces_same_host_by_crawl_delay(spark, tmp_path):
+    """A host's robots ``Crawl-delay: 1`` reaches the kernel's pacer
+    through the round's robots table and ``pop_batch``'s ``eff_delay``:
+    with the kernel's own floor at 0, consecutive page GETs to the host
+    are still >= 1 s apart on the server's clock (3 URLs)."""
     import time
-
-    import pandas as pd
 
     from jsonextract_spark.crawl.fetch_http import (
         make_fetch_extract_kernel)
+    from jsonextract_spark.crawl.pipeline import run_crawl
 
-    srv, port, log = _serve(
-        lambda p: b"User-agent: *\nCrawl-delay: 1\n"
-        if p == "/robots.txt" else b"<html>ok</html>")
+    hits = []
+
+    def body(p):
+        if p == "/robots.txt":
+            return b"User-agent: *\nCrawl-delay: 1\n"
+        hits.append(time.time())
+        return b"<html>ok</html>"
+
+    srv, port, _log = _serve(body)
     try:
-        pdf = _kernel_batch(f"127.0.0.1:{port}", 3).assign(
-            eff_delay=None)
-        kern = make_fetch_extract_kernel(timeout_sec=5)
-        t0 = time.time()
-        out = pd.concat(list(kern([pdf])))
-        dt = time.time() - t0
-        assert list(out["blocked"]) == [False] * 3
-        assert list(out["retry"]) == [False] * 3
-        assert dt >= 2.0, f"crawl-delay not honored: {dt:.2f}s for 3"
+        stats = run_crawl(
+            spark, str(tmp_path / "w_crawl_delay"), rounds=1,
+            seeds=[f"http://127.0.0.1:{port}/x/{i}" for i in range(3)],
+            host_budget=5, batch_size=5,
+            fetch_kernel=make_fetch_extract_kernel(
+                timeout_sec=5, default_delay_sec=0.0))
+        assert stats[0]["fetched"] == 3
+        page_ts = sorted(hits)
+        gaps = [b - a for a, b in zip(page_ts, page_ts[1:])]
+        assert len(gaps) == 2 and all(g >= 0.9 for g in gaps), gaps
     finally:
         srv.shutdown()
 
 
-def test_robots_cache_ttl_expires_entries(spark, tmp_path):
-    """With ttl_sec=0 every round refetches robots.txt for hosts it
-    sees (cache rows expire immediately); the persisted cache carries
-    the TTL bookkeeping columns."""
+def test_robots_cache_ttl_expires_entries(spark, tmp_path, monkeypatch):
+    """A definitive verdict older than ``ROBOTS_TTL_SEC`` is not reused:
+    with the TTL at 0 every round resolves its hosts again (one robots
+    GET each), and the round's robots table carries the new verdict
+    with a newer ``fetched_at``."""
+    from jsonextract_spark.crawl import pipeline as P
     from jsonextract_spark.crawl.fetch_http import (
-        make_fetch_extract_kernel, make_robots_provider)
-    from jsonextract_spark.crawl.pipeline import run_crawl
+        make_fetch_extract_kernel)
 
     def body(p):
         if p == "/robots.txt":
@@ -1065,32 +1110,22 @@ def test_robots_cache_ttl_expires_entries(spark, tmp_path):
         return (f"<script>var cfg = {{id: {i},"
                 f" links: []}};</script>").encode()
 
+    monkeypatch.setattr(P, "ROBOTS_TTL_SEC", 0.0)
     srv, port, log = _serve(body)
     try:
-        cache = str(tmp_path / "robots_cache_ttl")
-        wh = str(tmp_path / "w_ttl")
-        provider = make_robots_provider(cache_path=cache, ttl_sec=0.0)
-        kern = make_fetch_extract_kernel(respect_robots=False)
-        seeds = [f"http://127.0.0.1:{port}/p/1",
-                 f"http://127.0.0.1:{port}/p/2"]
-        run_crawl(spark, wh, rounds=1, seeds=seeds, host_budget=1,
-                  batch_size=1, fetch_kernel=kern,
-                  robots_provider=provider)
-        cached1 = spark.read.parquet(cache)
-        assert {"host", "allowed", "crawl_delay", "fetched_at",
-                "definitive"} <= set(cached1.columns)
-        t1 = cached1.agg({"fetched_at": "max"}).collect()[0][0]
-        assert log.count("/robots.txt") >= 1
-        run_crawl(spark, wh, rounds=2, resume=True, seeds=seeds,
-                  host_budget=1, batch_size=1, fetch_kernel=kern,
-                  robots_provider=provider)
-        # the ttl=0 row expired, so round 2 re-resolved the host: its
-        # cache row carries a NEW fetched_at stamp. (Asserting on the
-        # server-side GET count is flaky — a transiently failed GET
-        # still re-stamps the row, as a non-definitive verdict.)
-        t2 = (spark.read.parquet(cache)
-              .agg({"fetched_at": "max"}).collect()[0][0])
-        assert t2 > t1, "expired cache row was not refreshed"
+        wdir = str(tmp_path / "w_ttl")
+        P.run_crawl(spark, wdir, rounds=2,
+                    seeds=[f"http://127.0.0.1:{port}/p/1",
+                           f"http://127.0.0.1:{port}/p/2"],
+                    host_budget=1, batch_size=1,
+                    fetch_kernel=make_fetch_extract_kernel(
+                        timeout_sec=5, default_delay_sec=0.0))
+        wh = P.Warehouse(wdir)
+        (r1,), (r2,) = (wh.load(spark, "robots", r).collect()
+                        for r in (1, 2))
+        assert r1["definitive"] and r2["definitive"]
+        assert r2["fetched_at"] > r1["fetched_at"]
+        assert log.count("/robots.txt") == 2
     finally:
         srv.shutdown()
 
@@ -1104,7 +1139,7 @@ def test_all_blocked_batch_does_not_stall_crawl(spark, tmp_path):
     later in pop order (e.g. seeds under a disallowed subtree on a host
     whose root is allowed)."""
     from jsonextract_spark.crawl.fetch_http import (
-        make_fetch_extract_kernel, make_robots_provider)
+        make_fetch_extract_kernel)
     from jsonextract_spark.crawl.pipeline import run_crawl
 
     def body(p):
@@ -1127,8 +1162,7 @@ def test_all_blocked_batch_does_not_stall_crawl(spark, tmp_path):
                    f"http://127.0.0.1:{port}/p/2",
                    f"http://127.0.0.1:{port}/q/1"],
             host_budget=2, batch_size=2,
-            fetch_kernel=make_fetch_extract_kernel(),
-            robots_provider=make_robots_provider())
+            fetch_kernel=make_fetch_extract_kernel())
         assert stats[0]["fetched"] == 0 and stats[0]["blocked"] == 2
         assert stats[1]["fetched"] == 1, \
             "allowed URL starved behind re-popped blocked batch"
@@ -1138,29 +1172,28 @@ def test_all_blocked_batch_does_not_stall_crawl(spark, tmp_path):
         srv.shutdown()
 
 
-def test_robots_cache_fetches_once_per_host(spark, tmp_path):
-    """With cache_path set, the robots provider anti-joins known hosts
-    away: robots.txt is GET'd once per host per CRAWL, not once per
-    round — rounds 2..n schedule ZERO robots fetches for known hosts.
-    (Kernel-side per-path checking is disabled here to isolate the
-    provider's requests in the server log.)"""
+def _two_host_graph():
+    """A local server whose page i links page 2i+1 on 127.0.0.1 and
+    page 2i+2 on localhost (two hosts, one server), up to page 8.
+    Returns the server, the seed URL and a Counter of robots.txt GETs
+    per Host header."""
+    import collections
     import http.server
 
-    from jsonextract_spark.crawl.fetch_http import (
-        make_fetch_extract_kernel, make_robots_provider)
-    from jsonextract_spark.crawl.pipeline import run_crawl
-
-    robots_gets = []
+    robots_gets = collections.Counter()
 
     class H(http.server.BaseHTTPRequestHandler):
         def do_GET(self):
             if self.path == "/robots.txt":
-                robots_gets.append(1)
+                robots_gets[self.headers["Host"]] += 1
                 body = b"User-agent: *\nDisallow: /private/\n"
             else:
                 i = int(self.path.rsplit("/", 1)[-1])
-                kids = (f"'http://127.0.0.1:{self.server.server_port}"
-                        f"/p/{i + 1}'") if i < 6 else ""
+                port = self.server.server_port
+                kids = ", ".join(
+                    f"'http://{h}:{port}/p/{i * 2 + j}'"
+                    for j, h in ((1, "127.0.0.1"), (2, "localhost"))
+                ) if i < 8 else ""
                 body = (f"<script>var cfg = {{id: {i}, "
                         f"links: [{kids}]}};</script>").encode()
             self.send_response(200)
@@ -1172,17 +1205,83 @@ def test_robots_cache_fetches_once_per_host(spark, tmp_path):
             pass
 
     srv = local_http.serve(H)
+    return (srv, f"http://127.0.0.1:{srv.server_port}/p/1",
+            robots_gets)
+
+
+def test_robots_cache_fetches_once_per_host(spark, tmp_path):
+    """Robots verdicts are crawl state: robots.txt is GET'd once per
+    host per TTL, across rounds and across a resume — a 3-round live
+    crawl over two hosts, resumed to round 5, makes exactly one robots
+    GET per host (the fetch kernel never fetches robots.txt). A live
+    round counts its robots save as a third Spark action and times it
+    as ``sec_robots``."""
+    import pyarrow.parquet as pq
+
+    from jsonextract_spark.crawl.fetch_http import (
+        make_fetch_extract_kernel)
+    from jsonextract_spark.crawl.pipeline import run_crawl
+    from jsonextract_spark.crawl.tables import Warehouse
+
+    srv, seed, robots_gets = _two_host_graph()
     try:
         port = srv.server_port
-        stats = run_crawl(
-            spark, str(tmp_path / "w_rbcache"), rounds=3,
-            seeds=[f"http://127.0.0.1:{port}/p/1"],
-            host_budget=10, batch_size=10,
-            fetch_kernel=make_fetch_extract_kernel(respect_robots=False),
-            robots_provider=make_robots_provider(
-                cache_path=str(tmp_path / "robots_cache")))
-        assert sum(s["fetched"] for s in stats) >= 3  # crawl progressed
-        assert len(robots_gets) == 1  # one host -> ONE robots GET total
+        wdir = str(tmp_path / "w_rbcache")
+        kw = dict(seeds=[seed], host_budget=10, batch_size=10,
+                  fetch_kernel=make_fetch_extract_kernel(
+                      timeout_sec=5, default_delay_sec=0.0))
+        stats = run_crawl(spark, wdir, rounds=3, **kw)
+        stats += run_crawl(spark, wdir, rounds=5, resume=True, **kw)
+        assert [s["round"] for s in stats] == [1, 2, 3, 4, 5]
+        assert sum(s["fetched"] for s in stats) >= 7  # crawl progressed
+        assert robots_gets == {f"127.0.0.1:{port}": 1,
+                               f"localhost:{port}": 1}
+        assert stats[0]["spark_actions"] == 3
+        t = pq.read_table(Warehouse(wdir)._path("metrics", 1))
+        secs = {k: v for k, v in zip(t.column("key").to_pylist(),
+                                     t.column("value").to_pylist())
+                if k.startswith("sec_")}
+        assert set(secs) == {"sec_robots", "sec_pop_fetch_extract",
+                             "sec_driver_plan", "sec_frontier_seen"}
+        assert all(v > 0.0 for v in secs.values()), secs
+    finally:
+        srv.shutdown()
+
+
+def test_crash_after_robots_write_resumes_to_uninterrupted_state(
+        spark, tmp_path, monkeypatch):
+    """A live round that crashes right after its robots table lands
+    resumes to the uninterrupted crawl: the same crawl ledger, seen set
+    and frontier. The crashed round 2 resolves localhost, a host round
+    1 discovered, so its robots table is not empty."""
+    from jsonextract_spark.crawl import pipeline as P
+    from jsonextract_spark.crawl.fetch_http import (
+        make_fetch_extract_kernel)
+
+    def state(wdir):
+        return {k: v for k, v in _crawl_state(spark, wdir, 3).items()
+                if k != "host_stats"}   # live warc_ts: wall clock
+
+    def crash(table):
+        if table == "robots":
+            raise _Crash(table)
+
+    srv, seed, _gets = _two_host_graph()
+    try:
+        kw = dict(seeds=[seed], host_budget=10, batch_size=10,
+                  fetch_kernel=make_fetch_extract_kernel(
+                      timeout_sec=5, default_delay_sec=0.0))
+        ref, wdir = str(tmp_path / "ref"), str(tmp_path / "crashed")
+        P.run_crawl(spark, ref, rounds=3, **kw)
+        with monkeypatch.context() as mp:
+            _after_round_calls(mp, 2, crash)
+            with pytest.raises(_Crash):
+                P.run_crawl(spark, wdir, rounds=3, **kw)
+        wh = P.Warehouse(wdir)
+        assert wh.last_committed_round() == 1
+        assert wh.load(spark, "robots", 2).count() == 1
+        P.run_crawl(spark, wdir, rounds=3, resume=True, **kw)
+        assert state(wdir) == state(ref)
     finally:
         srv.shutdown()
 
@@ -1276,8 +1375,6 @@ def test_empty_round_keeps_host_stats_compaction_cadence(
     hold so the loader's round range stays bounded through empty
     stretches), and the loader's totals are unchanged by empty
     rounds."""
-    from pyspark.sql import functions as F
-
     from jsonextract_spark.crawl import pipeline as P
 
     monkeypatch.setattr(P, "COMPACT_EVERY", 3)
@@ -1285,15 +1382,11 @@ def test_empty_round_keeps_host_stats_compaction_cadence(
     P.run_crawl(spark, wh_dir, rounds=2, n_seeds=10, host_budget=3,
                 batch_size=20)
 
-    def deny_all(spark_, frontier):
-        # a robots table that disallows every frontier host forces an
-        # empty popped batch -> the empty-round carry path
-        return (frontier.select("host").distinct()
-                .withColumn("allowed", F.lit(False)))
-
+    # robots verdicts that disallow every frontier host force an empty
+    # popped batch -> the empty-round carry path
     P.run_crawl(spark, wh_dir, rounds=3, resume=True, n_seeds=10,
                 host_budget=3, batch_size=20,
-                robots_provider=deny_all)
+                fetch_kernel=_deny_all_kernel())
     wh = P.Warehouse(wh_dir)
     led = {r["round"]: r for r in wh.ledger()["rounds"]}
     assert led[3].get("empty")
@@ -1836,42 +1929,6 @@ def test_fetch_kernel_paces_on_eff_delay_not_its_own_config():
         srv.shutdown()
 
 
-def test_robots_cache_is_bounded():
-    """The per-worker robots parser cache evicts once it reaches its
-    entry bound: expired entries go first, then the oldest tenth —
-    a reused worker that has seen millions of hosts must not hold one
-    parser per host forever."""
-    from jsonextract_spark.crawl import fetch_http as fh
-
-    saved = dict(fh._ROBOTS_CACHE)
-    try:
-        fh._ROBOTS_CACHE.clear()
-        now = 1_000_000.0
-        cap = fh._ROBOTS_CACHE_MAX
-        # fill to the cap with FRESH definitive entries, oldest first —
-        # every age is far below the TTL, so the expiry pass frees
-        # nothing and the oldest-drop branch must do all the work
-        for i in range(cap):
-            fh._ROBOTS_CACHE[f"http://h{i}.example"] = fh._RobotsEntry(
-                None, True, now - (cap - i) * 0.001)
-        # a handful ARE expired (older than the definitive TTL) — the
-        # expiry pass removes exactly these first
-        for i in range(5, 10):
-            fh._ROBOTS_CACHE[f"http://h{i}.example"] = fh._RobotsEntry(
-                None, True, now - fh._ROBOTS_TTL_SEC - 1)
-        fh._evict_robots_cache(now)
-        assert len(fh._ROBOTS_CACHE) <= cap - max(cap // 10, 1)
-        # newest entries survive; the expired and the oldest-fresh are
-        # both gone (h0 was the oldest fresh entry, h5-h9 expired)
-        assert f"http://h{cap - 1}.example" in fh._ROBOTS_CACHE
-        assert f"http://h{cap // 2}.example" in fh._ROBOTS_CACHE
-        assert "http://h0.example" not in fh._ROBOTS_CACHE
-        assert "http://h7.example" not in fh._ROBOTS_CACHE
-    finally:
-        fh._ROBOTS_CACHE.clear()
-        fh._ROBOTS_CACHE.update(saved)
-
-
 def test_fetch_kernel_advertises_politeness_config():
     """The fused HTTP kernel attaches its floor/hot-host config to the
     returned callable; run_crawl reads these as the crawl's politeness
@@ -1952,7 +2009,7 @@ def test_live_crawl_inherits_kernel_floor_end_to_end(spark, tmp_path):
     import time
 
     from jsonextract_spark.crawl.fetch_http import (
-        make_fetch_extract_kernel, make_robots_provider)
+        make_fetch_extract_kernel)
     from jsonextract_spark.crawl.pipeline import run_crawl
 
     hits = []
@@ -1970,8 +2027,7 @@ def test_live_crawl_inherits_kernel_floor_end_to_end(spark, tmp_path):
             spark, str(tmp_path / "w_floor_e2e"), rounds=1,
             seeds=seeds, host_budget=5, batch_size=5,
             fetch_kernel=make_fetch_extract_kernel(
-                timeout_sec=5, default_delay_sec=0.5),
-            robots_provider=make_robots_provider(timeout_sec=5))
+                timeout_sec=5, default_delay_sec=0.5))
         assert stats[0]["fetched"] == 3
         fetched = spark.read.parquet(
             str(tmp_path / "w_floor_e2e") + "/fetched/round=1")
@@ -1988,105 +2044,97 @@ def test_live_crawl_inherits_kernel_floor_end_to_end(spark, tmp_path):
 
 def test_robots_cache_appends_deltas_and_compacts(spark, tmp_path,
                                                   monkeypatch):
-    """The cross-round robots cache is append-only deltas: each
-    provider call writes ONLY its newly-resolved hosts as a new
-    delta=<uuid> subdir (a full-cache rewrite per round is O(total
-    hosts) I/O at frontier scale), readers take the newest row per
-    host, and the delta list compacts once it exceeds the bound."""
+    """The robots table is append-only per round: a round saves only
+    the hosts it had no reusable verdict for — new hosts, hosts whose
+    definitive verdict passed ``ROBOTS_TTL_SEC`` and hosts whose last
+    verdict was non-definitive. With COMPACT_EVERY = 2, round 2 folds
+    the rounds into ``robots_compact``: one row per host, the newest
+    definitive verdict inside the TTL, and no non-definitive row."""
+    import time
+
+    from jsonextract_spark.crawl import pipeline as P
+    from jsonextract_spark.functions.urlhash import url_host
+
+    monkeypatch.setattr(P, "COMPACT_EVERY", 2)
+    # one seed per host, and round 1 pops the first 5 in url order: the
+    # last two seeds' hosts are still in round 2's frontier
+    stale, flaky = (url_host(u) for u in sorted(synth.seed_urls(10))[-2:])
+    ttl = P.ROBOTS_TTL_SEC
+
+    def round1(host, now):
+        # ``stale``'s verdict is already past the TTL when round 2
+        # reads it; ``flaky``'s is non-definitive
+        return (True, host != flaky,
+                now - 2 * ttl if host == stale else now)
+
+    kw = dict(n_seeds=10, host_budget=1, batch_size=5)
+    wdir = str(tmp_path / "w_rcompact")
+    P.run_crawl(spark, wdir, rounds=1,
+                fetch_kernel=_synth_robots_kernel(round1), **kw)
+    t1 = time.time()
+    P.run_crawl(spark, wdir, rounds=2, resume=True,
+                fetch_kernel=_synth_robots_kernel(
+                    lambda host, now: (True, True, now)), **kw)
+    wh = P.Warehouse(wdir)
+    rounds = {r: {row["host"]: row for row in
+                  wh.load(spark, "robots", r).collect()} for r in (1, 2)}
+    assert {stale, flaky} <= set(rounds[1])
+    assert not rounds[1][flaky]["definitive"]
+    assert set(rounds[1]) & set(rounds[2]) == {stale, flaky}
+    assert wh.exists("robots_compact", 2)
+    compact = wh.load(spark, "robots_compact", 2).collect()
+    hosts = [r["host"] for r in compact]
+    assert len(hosts) == len(set(hosts))
+    assert set(hosts) == set(rounds[1]) | set(rounds[2])
+    assert all(r["definitive"] for r in compact)
+    assert all(r["fetched_at"] >= t1 - ttl for r in compact)
+    newest = {r["host"]: r["fetched_at"] for r in compact}
+    assert newest[stale] == rounds[2][stale]["fetched_at"] > t1
+    assert newest[flaky] == rounds[2][flaky]["fetched_at"]
+
+
+def test_round_robots_bounded_to_round_hosts(spark, tmp_path):
+    """The round's robots table is O(round hosts), not O(hosts ever
+    resolved): ``load_robots`` semi-joins the verdicts to the round's
+    frontier hosts before its newest-wins window. With 500 foreign
+    verdicts planted as an old round's rows, the round reads exactly
+    its one host's row and resolves nothing (no new robots GET). The
+    read takes only the round dirs: a crashed write's ``.tmp-`` dir
+    beside them is ignored and left in place."""
     import os
+    import time
 
-    from jsonextract_spark.crawl import fetch_http as fh
-
-    srv, port, log = _serve(
-        lambda p: b"User-agent: *\nDisallow: /private/\n"
-        if p == "/robots.txt" else b"ok")
-    try:
-        cache = str(tmp_path / "rc_delta")
-        provider = fh.make_robots_provider(cache_path=cache,
-                                           ttl_sec=3600.0,
-                                           timeout_sec=5)
-
-        def frontier(hosts):
-            return spark.createDataFrame(
-                [(h, f"http://{h}/x") for h in hosts],
-                "host string, url string")
-
-        h1 = f"127.0.0.1:{port}"
-        out1 = provider(spark, frontier([h1]))
-        assert {r["host"] for r in out1.collect()} == {h1}
-        deltas = [e for e in os.listdir(cache) if e.startswith("delta=")]
-        assert len(deltas) == 1
-        n_robots_gets = log.count("/robots.txt")
-
-        # second call, same host: answered from the cache (no new GET),
-        # and the appended delta contains ZERO rows — nothing new
-        out2 = provider(spark, frontier([h1]))
-        assert {r["host"] for r in out2.collect()} == {h1}
-        assert log.count("/robots.txt") == n_robots_gets
-        deltas = sorted(e for e in os.listdir(cache)
-                        if e.startswith("delta="))
-        assert len(deltas) == 2
-        sizes = {d: spark.read.parquet(os.path.join(cache, d)).count()
-                 for d in deltas}
-        assert sorted(sizes.values()) == [0, 1]
-
-        # push past the compaction bound: the delta list folds to one
-        monkeypatch.setattr(fh, "ROBOTS_CACHE_COMPACT_DELTAS", 3)
-        for _ in range(4):
-            provider(spark, frontier([h1]))
-        deltas = [e for e in os.listdir(cache) if e.startswith("delta=")]
-        assert len(deltas) <= 3
-        out = provider(spark, frontier([h1]))
-        assert {r["host"] for r in out.collect()} == {h1}
-    finally:
-        srv.shutdown()
-
-
-def test_robots_provider_output_bounded_to_round_hosts(spark, tmp_path):
-    """The round's robots table is O(round hosts), not O(total hosts
-    ever cached): pop_batch BROADCASTS this table, so returning the
-    whole crawl-lifetime cache would grow the broadcast with crawl age.
-    Simulate an old crawl by planting a large cache delta of foreign
-    hosts, then pin that a one-host round gets exactly one output row —
-    answered from the cache with no extra robots GETs."""
-    import time as _time
-
-    from jsonextract_spark.crawl import fetch_http as fh
+    from jsonextract_spark.crawl import pipeline as P
+    from jsonextract_spark.crawl.fetch_http import (
+        make_fetch_extract_kernel)
+    from jsonextract_spark.crawl.tables import ROBOTS_SCHEMA
 
     srv, port, log = _serve(
-        lambda p: b"User-agent: *\n" if p == "/robots.txt" else b"ok")
+        lambda p: b"User-agent: *\n" if p == "/robots.txt"
+        else b"<script>var c = {id: 1, links: []};</script>")
     try:
-        cache = str(tmp_path / "rc_bound")
-        provider = fh.make_robots_provider(cache_path=cache,
-                                           ttl_sec=3600.0,
-                                           timeout_sec=5)
-
-        def frontier(hosts):
-            return spark.createDataFrame(
-                [(h, f"http://{h}/x") for h in hosts],
-                "host string, url string")
-
-        h1 = f"127.0.0.1:{port}"
-        provider(spark, frontier([h1])).collect()
-
-        # plant 500 foreign cached hosts (a long crawl's accumulated
-        # cache) as a delta, bypassing the provider
-        now = _time.time()
+        wdir = str(tmp_path / "w_rbound")
+        kw = dict(seeds=[f"http://127.0.0.1:{port}/p/{i}"
+                         for i in (1, 2)],
+                  host_budget=1, batch_size=1,
+                  fetch_kernel=make_fetch_extract_kernel(
+                      timeout_sec=5, default_delay_sec=0.0))
+        P.run_crawl(spark, wdir, rounds=1, **kw)
+        wh = P.Warehouse(wdir)
         foreign = spark.createDataFrame(
-            [(f"old{i}.example", True, None, now, True)
-             for i in range(500)], fh.ROBOTS_SCHEMA)
-        import os
-        os.makedirs(cache, exist_ok=True)
-        tmp = os.path.join(cache, ".tmp-foreign")
-        foreign.write.mode("overwrite").parquet(tmp)
-        os.replace(tmp, os.path.join(cache, "delta=foreign"))
+            [(f"old{i}.example", True, None, None, True, time.time())
+             for i in range(500)], ROBOTS_SCHEMA)
+        wh.save(foreign, "robots", 0)
+        debris = wh._path("robots", 1) + ".tmp-crashed"
+        foreign.write.parquet(debris)
 
-        n_gets = log.count("/robots.txt")
-        out = provider(spark, frontier([h1])).collect()
-        # exactly the round's host — none of the 500 foreign rows
-        assert [r["host"] for r in out] == [h1]
-        # and it came from the cache: no new robots GET
-        assert log.count("/robots.txt") == n_gets
+        assert P.load_robots(spark, wh, 1, None).count() == 501
+        got = P.load_robots(spark, wh, 1, P.load_frontier(spark, wh, 1))
+        assert [r["host"] for r in got.collect()] == ["127.0.0.1"]
+        P.run_crawl(spark, wdir, rounds=2, resume=True, **kw)
+        assert log.count("/robots.txt") == 1
+        assert wh.load(spark, "robots", 2).count() == 0
+        assert os.path.isdir(debris)
     finally:
         srv.shutdown()
 
@@ -2122,8 +2170,16 @@ def test_recrawl_drops_crashed_round_debris(spark, tmp_path):
             .withColumn("url", F.lit("https://debris.example/f"))
             .withColumn("host", F.lit("debris.example")),
             "fetched", 3)
-
+    # and robots verdicts, as a live round writes them before its pop
     import time as _time
+
+    from jsonextract_spark.crawl.tables import ROBOTS_SCHEMA
+    verdict = spark.createDataFrame(
+        [("debris.example", False, None, "User-agent: *\nDisallow: /",
+          True, _time.time())], ROBOTS_SCHEMA)
+    for table in ("robots", "robots_compact"):
+        wh.save(verdict, table, 3)
+
     n = schedule_recrawl(spark, wh, after_round=2, max_age_sec=0.0,
                          now_ts=_time.time() + 10.0)
     assert n > 0 and wh.last_committed_round() == 3
@@ -2139,6 +2195,7 @@ def test_recrawl_drops_crashed_round_debris(spark, tmp_path):
     reopened = {r["url_hash"]
                 for r in P.load_frontier(spark, wh, 3).collect()}
     assert -777 not in reopened and len(reopened) >= n
+    assert P.load_robots(spark, wh, 3, None) is None
 
 
 def test_validated_kernel_counts_unread_input():
@@ -2266,45 +2323,6 @@ def test_replay_broadcast_hint_on_small_windows(spark, tmp_path):
     assert sorted(joins) == [("host", "LeftOuter"),
                              ("host", "LeftOuter"),
                              ("url_hash", "LeftAnti")], final
-
-
-def test_robots_cache_read_is_pure(spark, tmp_path):
-    """ADVICE r6: the cache read must not mutate the cache dir —
-    crashed .tmp- debris is ignored by ``_load_cache`` (explicit
-    delta-dir listing) and cleared only by the WRITE path (``_clean_cache_dir``, run by the provider, the
-    cache's owning writer). Two crawls sharing a cache dir can then
-    never have a reader deleting under another reader."""
-    import os
-    import time as _time
-
-    from jsonextract_spark.crawl import fetch_http as fh
-
-    cache = str(tmp_path / "rc_pure")
-    os.makedirs(cache)
-    provider = fh.make_robots_provider(cache_path=cache,
-                                       ttl_sec=3600.0)
-    now = _time.time()
-    rows = spark.createDataFrame(
-        [("cached.example", True, None, now, True)], fh.ROBOTS_SCHEMA)
-    tmpdir = os.path.join(cache, ".tmp-write")
-    rows.write.mode("overwrite").parquet(tmpdir)
-    os.replace(tmpdir, os.path.join(cache, "delta=good"))
-
-    # plant debris: a crashed half-write
-    rows.write.mode("overwrite").parquet(
-        os.path.join(cache, ".tmp-crashed"))
-
-    # pure read: returns the delta rows, ignores and PRESERVES debris
-    got = provider._load_cache(spark, cache)
-    assert [r["host"] for r in got.collect()] == ["cached.example"]
-    assert os.path.isdir(os.path.join(cache, ".tmp-crashed"))
-
-    # the write path clears it
-    provider._clean_cache_dir(cache)
-    assert not os.path.exists(os.path.join(cache, ".tmp-crashed"))
-    assert os.path.isdir(os.path.join(cache, "delta=good"))
-    got2 = provider._load_cache(spark, cache)
-    assert [r["host"] for r in got2.collect()] == ["cached.example"]
 
 
 def test_drop_uncommitted_refuses_committed_round(tmp_path):

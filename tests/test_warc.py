@@ -180,6 +180,10 @@ def test_fetch_time_archival_live_http(spark, tmp_path):
 
     class H(http.server.BaseHTTPRequestHandler):
         def do_GET(self):
+            if self.path == "/robots.txt":   # none: definitive allow-all
+                self.send_response(404)
+                self.end_headers()
+                return
             body = body_of(int(self.path.rsplit("/", 1)[-1]),
                            self.server.server_port)
             self.send_response(200)
