@@ -95,48 +95,25 @@ def _with_url_identity(df: DataFrame, url_col: str = "url") -> DataFrame:
             .drop("_uid"))
 
 
-def _seen_delta_path(wh: Warehouse, round_no: int) -> str:
-    """The per-round seen delta IS the ``is_new=1`` partition of the
-    round's frontier DELTA — written in the same job as the frontier
-    update itself (one write job instead of two per round). Rounds
-    that write a full frontier base instead of a delta — init (the
-    round-0 seeds) and sitemap rounds — keep their seen delta in the
-    base's ``is_new=1`` partition, which the fallback reads."""
-    import os
-
-    p = os.path.join(wh._path("frontier_delta", round_no), "is_new=1")
-    if os.path.exists(p) or wh.exists("frontier_delta", round_no):
-        return p
-    return os.path.join(wh._path("frontier", round_no), "is_new=1")
-
-
 COMPACT_EVERY = 16
-
-
-def _newest_round(wh: Warehouse, table: str, upto: int) -> int:
-    """The newest round <= ``upto`` at which ``table`` exists, or -1.
-    ``compact_state`` rewrites each checkpoint table and the frontier
-    base every COMPACT_EVERY rounds, so once one exists the backward
-    scan stops within that many rounds."""
-    return next((r for r in range(upto, -1, -1) if wh.exists(table, r)),
-                -1)
 
 
 def load_seen(spark: SparkSession, wh: Warehouse, upto_round: int):
     """The seen set is stored as per-round DELTAS (append-only, like an
-    Iceberg partition append): loading unions the ``is_new=1`` frontier
-    partitions since the last compaction checkpoint, plus that
-    checkpoint. A full rewrite per round would be O(total-crawled) I/O
-    every round; unbounded delta lists would make round latency grow
-    with crawl age — compaction (see ``compact_state``) bounds the
-    union at COMPACT_EVERY+1 sources."""
-    base_round = _newest_round(wh, "seen_compact", upto_round)
-    paths = ([wh._path("seen_compact", base_round)]
-             if base_round >= 0 else [])
-    for r in range(base_round + 1, upto_round + 1):
-        p = _seen_delta_path(wh, r)
-        if os.path.exists(p):
-            paths.append(p)
+    Iceberg partition append): loading unions the newest
+    ``seen_compact`` checkpoint with the ``is_new=1`` partitions of
+    ``frontier`` and ``frontier_delta`` in the rounds after it. A round
+    writes its delta to one of the two tables, never both (see
+    ``tables``): crawl rounds to the delta, in the same job as the
+    frontier update; init and sitemap rounds to their full base. A
+    full rewrite per round would be O(total-crawled) I/O every round;
+    unbounded delta lists would make round latency grow with crawl
+    age — compaction (see ``compact_state``) bounds the union at
+    COMPACT_EVERY+1 sources."""
+    base = wh.newest("seen_compact", upto_round)
+    paths = ([wh._path("seen_compact", base)] if base >= 0 else []) + [
+        p for t in ("frontier", "frontier_delta")
+        for p in wh.rounds(t, base + 1, upto_round, part="is_new=1")]
     if not paths:
         # empty crawl (explicit seeds=[]): nothing seen yet
         return spark.createDataFrame([], "url_hash long")
@@ -155,10 +132,8 @@ def load_host_stats(spark: SparkSession, wh: Warehouse,
     ``host_stats_compact`` checkpoint, so a read aggregates the newest
     checkpoint plus at most COMPACT_EVERY ledger rounds after it,
     regardless of crawl age."""
-    base = _newest_round(wh, "host_stats_compact", upto_round)
-    ledger_paths = [wh._path("fetched", r)
-                    for r in range(base + 1, upto_round + 1)
-                    if wh.exists("fetched", r)]
+    base = wh.newest("host_stats_compact", upto_round)
+    ledger_paths = wh.rounds("fetched", base + 1, upto_round)
     ckpt = (wh.load(spark, "host_stats_compact", base)
             .select("host", F.col("crawled").cast("double")
                     .alias("crawled"), "last_fetch_ts")
@@ -182,8 +157,9 @@ def load_host_stats(spark: SparkSession, wh: Warehouse,
 
 
 # A definitive robots verdict is reused for this long; a host whose
-# newest definitive verdict is older is resolved again.
-ROBOTS_TTL_SEC = 7 * 24 * 3600.0
+# newest definitive verdict is older is resolved again. RFC 9309 §2.4:
+# a cached robots.txt SHOULD NOT be used for more than 24 hours.
+ROBOTS_TTL_SEC = 24 * 3600.0
 
 
 def load_robots(spark: SparkSession, wh: Warehouse, upto_round: int,
@@ -202,10 +178,9 @@ def load_robots(spark: SparkSession, wh: Warehouse, upto_round: int,
     5xx / no response) are never returned: the round that resolved
     them used them, and the next round that sees the host resolves it
     again."""
-    base = _newest_round(wh, "robots_compact", upto_round)
-    paths = ([wh._path("robots_compact", base)] if base >= 0 else []) + [
-        wh._path("robots", r) for r in range(base + 1, upto_round + 1)
-        if wh.exists("robots", r)]
+    base = wh.newest("robots_compact", upto_round)
+    paths = ([wh._path("robots_compact", base)] if base >= 0 else []
+             ) + wh.rounds("robots", base + 1, upto_round)
     if not paths:
         return None
     rows = (spark.read.schema(ROBOTS_SCHEMA).parquet(*paths)
@@ -238,54 +213,6 @@ def _resolve_round_robots(spark: SparkSession, wh: Warehouse,
     fresh = spark.read.schema(ROBOTS_SCHEMA).parquet(
         wh._path("robots", round_no))
     return fresh if known is None else known.unionByName(fresh)
-
-
-def _drop_uncommitted_round_state(wh: Warehouse, round_no: int):
-    """Delete state-table debris a FAILED earlier attempt of
-    ``round_no`` may have left (the round died after some writes but
-    before its ledger commit — a committed round is never re-entered).
-    This is the one cleanup: ``run_round`` runs it at entry, and the
-    ``schedule_recrawl`` and ``seed_from_sitemaps`` maintenance rounds
-    run it before their own writes. The loaders consult directory
-    existence, so every per-round table a crashed attempt can leave
-    would be trusted:
-
-    * ``frontier_delta`` — an empty re-run writes none, so the
-      survivor would commit phantom additions (and phantom seen
-      entries) with the crashed attempt's removals erased;
-    * ``frontier`` — a full base from a crashed ``schedule_recrawl``
-      or compaction would hijack the replay base, masking every event
-      of the re-run round (both reproduced in review);
-    * ``fetched`` — if the re-run pops a DIFFERENT batch (the
-      crawl-delay eligibility gate is clock-dependent) or commits
-      empty, the crashed attempt's ledger rows become phantom removals
-      in later rounds' frontier replay, phantom fetches in
-      ``load_host_stats`` and phantom pages in crawl_order/recrawl;
-    * ``robots`` — a maintenance round at the same number writes
-      none, so ``load_robots`` would adopt the crashed attempt's
-      verdicts;
-    * ``seen_compact``, ``host_stats_compact`` and ``robots_compact`` —
-      the loaders' backward scan would take a checkpoint at the round
-      being re-run as its own base when the re-run recompacts,
-      ignoring the re-run's fresh delta and freezing first-attempt
-      state.
-
-    Guard: this deletes the round's ``fetched`` ledger rows, so it
-    refuses to run on a round the ledger already shows COMMITTED — a
-    caller holding a stale round number (e.g. ``schedule_recrawl``
-    with an out-of-date ``after_round``) would otherwise silently
-    erase a committed round's replay removals, re-opening
-    already-crawled URLs in every later round's frontier."""
-    committed = {r["round"] for r in wh.ledger()["rounds"]
-                 if r.get("status") == "committed"}
-    if round_no in committed:
-        raise ValueError(
-            f"refusing to drop state for round {round_no}: the ledger "
-            f"shows it committed (stale round number at the call site?)")
-    for table in ("frontier", "frontier_delta", "fetched", "robots",
-                  "seen_compact", "host_stats_compact", "robots_compact"):
-        if wh.exists(table, round_no):
-            shutil.rmtree(wh._path(table, round_no))
 
 
 def _validated_kernel(kernel):
@@ -357,8 +284,10 @@ def load_frontier(spark: SparkSession, wh: Warehouse,
     off-cadence.
 
     A full ``frontier`` table at a round (init, recrawl reopen,
-    sitemap seeding or compaction checkpoint) is a base."""
-    base_round = _newest_round(wh, "frontier", upto_round)
+    sitemap seeding or compaction checkpoint) is a base. The reads
+    name only the rounds after it (``Warehouse.rounds``), with the
+    table root as ``basePath`` so the ``round`` column survives."""
+    base_round = wh.newest("frontier", upto_round)
     if base_round < 0:
         return spark.createDataFrame(
             [], "url string, url_hash long, host string, depth int,"
@@ -366,21 +295,15 @@ def load_frontier(spark: SparkSession, wh: Warehouse,
     base = (wh.load(spark, "frontier", base_round).drop("is_new")
             .select(*_FRONTIER_COLS))
 
-    def _nonempty_delta(r):
-        # a round with a non-empty batch but ZERO additions wrote the
-        # Warehouse's schema-only empty fallback (no is_new= subdirs);
-        # mixing such flat dirs with hive-partitioned ones breaks
-        # partition discovery, and they contribute no events anyway
-        p = wh._path("frontier_delta", r)
-        return any(os.path.isdir(os.path.join(p, f"is_new={v}"))
-                   for v in (0, 1))
-
-    add_paths = [wh._path("frontier_delta", r)
-                 for r in range(base_round + 1, upto_round + 1)
-                 if wh.exists("frontier_delta", r) and _nonempty_delta(r)]
-    rm_paths = [wh._path("fetched", r)
-                for r in range(base_round + 1, upto_round + 1)
-                if wh.exists("fetched", r)]
+    # the delta's is_new partitions, not its round dirs: a round with
+    # a non-empty batch but ZERO additions wrote the Warehouse's
+    # schema-only empty fallback (no partitions), and mixing such a
+    # flat dir with hive-partitioned ones breaks partition discovery
+    lo = base_round + 1
+    add_paths = [p for part in ("is_new=0", "is_new=1")
+                 for p in wh.rounds("frontier_delta", lo, upto_round,
+                                    part=part)]
+    rm_paths = wh.rounds("fetched", lo, upto_round)
     if not add_paths and not rm_paths:
         return base
 
@@ -608,7 +531,7 @@ def run_round(spark: SparkSession, wh: Warehouse, round_no: int,
     prev = round_no - 1
     # a failed earlier attempt of THIS round may have left state-table
     # debris the delta-layout loaders would otherwise trust
-    _drop_uncommitted_round_state(wh, round_no)
+    wh.drop_round(round_no)
     frontier = load_frontier(spark, wh, prev)
     seen = load_seen(spark, wh, prev)
     host_stats = load_host_stats(spark, wh, prev)
@@ -782,7 +705,7 @@ def run_round(spark: SparkSession, wh: Warehouse, round_no: int,
             #    additions (deferred re-adds + fresh discoveries),
             #    hive-partitioned on is_new so the fresh slice doubles
             #    as the round's append-only seen delta (see
-            #    _seen_delta_path). Removals need NO write at all — the
+            #    load_seen). Removals need NO write at all — the
             #    popped rows are already in the fetched ledger (url_hash
             #    column), and ``load_frontier`` replays additions
             #    against removals per url_hash. The pre-r6 form
@@ -1003,8 +926,7 @@ def crawl_order(spark: SparkSession, warehouse: str) -> DataFrame:
     of round count."""
     wh = Warehouse(warehouse)
     last = wh.last_committed_round()
-    paths = [wh._path("fetched", r) for r in range(1, last + 1)
-             if wh.exists("fetched", r)]
+    paths = wh.rounds("fetched", 1, last)
     if not paths:
         return spark.createDataFrame([], "batch_id int, rank long, url string")
     df = (spark.read.parquet(*paths)

@@ -78,28 +78,26 @@ def schedule_recrawl(spark, wh, after_round: int, max_age_sec: float,
     """
     import time as _time
 
-    from jsonextract_spark.crawl.pipeline import (
-        _drop_uncommitted_round_state, _with_url_identity, load_frontier)
+    from jsonextract_spark.crawl.pipeline import (_with_url_identity,
+                                                  load_frontier)
 
     now_ts = _time.time() if now_ts is None else now_ts
-    round_ts = {r["round"]: float(r["ts"])
-                for r in wh.ledger()["rounds"]
-                if r.get("status") == "committed"}
-    committed = [r for r in range(1, after_round + 1)
-                 if wh.exists("fetched", r) and r in round_ts]
-    if not committed:
+    paths = wh.rounds("fetched", 1, after_round)
+    if not paths:
         return 0
-    # ONE scan relation over the committed round dirs (a per-round
-    # Python union loop builds an O(rounds) plan — analysis time grows
-    # with crawl age); ``basePath`` surfaces the hive ``round``
-    # partition column, which a tiny broadcast-joined map turns into
-    # the per-round commit timestamp. Robots-blocked ledger rows were
-    # never fetched — nothing to refresh (they'd only be re-blocked).
+    # ONE scan relation over the round dirs (a per-round Python union
+    # loop builds an O(rounds) plan — analysis time grows with crawl
+    # age); ``basePath`` surfaces the hive ``round`` partition column,
+    # which a tiny broadcast-joined map turns into the per-round commit
+    # timestamp (the inner join drops uncommitted rounds). Robots-
+    # blocked ledger rows were never fetched — nothing to refresh
+    # (they'd only be re-blocked).
     fetched = (spark.read.option("basePath", wh._path("fetched"))
-               .parquet(*[wh._path("fetched", r) for r in committed])
+               .parquet(*paths)
                .filter(~F.coalesce(F.col("blocked"), F.lit(False))))
     ts_df = spark.createDataFrame(
-        [(r, round_ts[r]) for r in committed],
+        [(r["round"], float(r["ts"])) for r in wh.ledger()["rounds"]
+         if r.get("status") == "committed"],
         "round int, fetched_ts double")
     fetched = (fetched
                .join(F.broadcast(ts_df),
@@ -125,7 +123,7 @@ def schedule_recrawl(spark, wh, after_round: int, max_age_sec: float,
     # crawl_order / later recrawl ages; its compaction checkpoints
     # would become the loaders' bases. Same cleanup run_round
     # performs at entry.
-    _drop_uncommitted_round_state(wh, rn)
+    wh.drop_round(rn)
     frontier = load_frontier(spark, wh, after_round)
     merged = (reopen_in_frontier(frontier, refresh)
               .withColumn("is_new", F.lit(0)))

@@ -127,22 +127,32 @@ def make_sitemap_source(timeout_sec: float = 10.0,
     """Build the discovery kernel: mapInPandas over (host, url) rows —
     one representative URL per host supplies the origin — yielding
     (host, url) page rows from the host's sitemaps. Budgets bound
-    every host regardless of what its sitemaps claim."""
+    every host regardless of what its sitemaps claim.
+
+    Rows may also carry ``robots_txt``, the host's robots.txt as the
+    crawl stored it ("" for a 4xx), as ``seed_from_sitemaps`` joins
+    it: the ``Sitemap:`` lines then come from it, and robots.txt is
+    GET'd only for rows where it is null."""
     from jsonextract_spark.crawl.fetch_http import _fetch_one
 
     def kernel(batches: Iterable[pd.DataFrame]
                ) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             hosts_out, urls_out = [], []
-            for host, sample_url in zip(pdf["host"], pdf["url"]):
+            rules = pdf.get("robots_txt", [None] * len(pdf))
+            for host, sample_url, text in zip(pdf["host"], pdf["url"],
+                                              rules):
                 m = re.match(r"^(https?://[^/]+)", str(sample_url))
                 if not m:
                     continue
                 origin = m.group(1)
-                status, body, _err, _furl = _fetch_one(
-                    origin + "/robots.txt", timeout_sec, max_bytes)
-                roots = sitemap_urls_from_robots(
-                    body if status == 200 else b"", origin)
+                if text is not None:
+                    body = text.encode("utf-8")
+                else:
+                    status, body, _err, _furl = _fetch_one(
+                        origin + "/robots.txt", timeout_sec, max_bytes)
+                    body = body if status == 200 else b""
+                roots = sitemap_urls_from_robots(body, origin)
                 queue = [(u, True)
                          for u in roots[:max_sitemaps_per_host]]
                 budget = max_urls_per_host
@@ -191,8 +201,7 @@ def seed_from_sitemaps(spark, wh, after_round: int,
 
     from jsonextract_spark.crawl import seen as seen_mod
     from jsonextract_spark.crawl.pipeline import (
-        _drop_uncommitted_round_state, _with_url_identity, load_frontier,
-        load_seen)
+        _with_url_identity, load_frontier, load_robots, load_seen)
     from jsonextract_spark.crawl.scheduler import priority_of
 
     if source_kernel is None:
@@ -204,16 +213,19 @@ def seed_from_sitemaps(spark, wh, after_round: int,
         # are exactly what would refill it); the fetched ledger
         # supplies a sample URL per crawled host
         cand = frontier.select("host", "url")
-        fetched_dirs = [wh._path("fetched", r["round"])
-                        for r in wh.ledger()["rounds"]
-                        if r.get("status") == "committed"
-                        and not r.get("empty")
-                        and wh.exists("fetched", r["round"])]
+        fetched_dirs = wh.rounds("fetched", 1, after_round)
         if fetched_dirs:
             led = (spark.read.parquet(*fetched_dirs)
                    .select("host", "url"))
             cand = cand.unionByName(led)
         hosts = cand.groupBy("host").agg(F.min("url").alias("url"))
+    # the crawl's reusable robots verdicts ride along, so the source
+    # GETs robots.txt only for hosts without one (null after the join)
+    known = load_robots(spark, wh, after_round, hosts)
+    if known is not None:
+        hosts = hosts.join(known.select(
+            "host", F.coalesce("robots_txt", F.lit("")).alias("robots_txt")),
+            "host", "left")
     raw = hosts.mapInPandas(source_kernel, "host string, url string")
     # the crawl round's gate: one row per unseen hash (per-hash mins,
     # so a hash collision resolves the same way in both places)
@@ -231,7 +243,7 @@ def seed_from_sitemaps(spark, wh, after_round: int,
         fresh.unpersist()
         return 0
     rn = after_round + 1
-    _drop_uncommitted_round_state(wh, rn)
+    wh.drop_round(rn)
     merged = (frontier.withColumn("is_new", F.lit(0))
               .unionByName(fresh.withColumn("is_new", F.lit(1))))
     # rebalance: this base is re-read by EVERY later round's replay —

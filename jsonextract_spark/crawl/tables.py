@@ -79,12 +79,27 @@ robots_compact
              plus the robots rounds after it
 metrics      batch_id, key, value (incl. per-phase secs + spark_jobs)
 
-frontier, frontier_delta, fetched, robots, seen_compact,
-host_stats_compact and robots_compact are the per-round state a
-crashed round attempt can leave behind;
-pipeline._drop_uncommitted_round_state deletes all seven at a round
-that is not committed before the round (or a maintenance round at the
-same number) is run again.
+Round layout
+------------
+Which rounds of a table exist is a Warehouse question: ``rounds``
+lists a table's published round dirs in a range (or one hive
+partition of each), ``newest`` finds the newest round at or below a
+bound. Both stat only the rounds asked for and never list the table,
+so a loader that asks for the rounds since its checkpoint costs the
+same however old the crawl is.
+
+Seen deltas: a round's fresh URLs are the ``is_new=1`` partition of
+the ``frontier`` or the ``frontier_delta`` table at that round, never
+of both. Crawl rounds write them to the delta; init and sitemap
+rounds write a ``frontier`` base and no delta; compaction and recrawl
+bases are all ``is_new=0``. So the seen delta of a round range is the
+two tables' ``is_new=1`` partitions together, with no precedence.
+
+Crash debris: a round that is not committed owns nothing.
+``drop_round`` deletes ``<table>/round=N`` under EVERY table dir of
+the warehouse before round N (or a maintenance round at the same
+number) is run again, so a per-round table added later is covered
+without being named anywhere.
 """
 
 from __future__ import annotations
@@ -222,6 +237,44 @@ class Warehouse:
 
     def exists(self, table: str, round_no: int | None = None) -> bool:
         return os.path.exists(self._path(table, round_no))
+
+    # -- round layout ------------------------------------------------------
+    def rounds(self, table: str, lo: int, hi: int,
+               part: str | None = None) -> list[str]:
+        """The published round dirs of ``table`` in ``[lo, hi]``,
+        ascending; with ``part`` (e.g. ``"is_new=1"``), those rounds'
+        existing ``part`` subdirs instead. One stat per round in the
+        range (see "Round layout"); ``.tmp-`` dirs are never rounds."""
+        paths = (self._path(table, r) for r in range(max(lo, 0), hi + 1))
+        if part is not None:
+            paths = (os.path.join(p, part) for p in paths)
+        return [p for p in paths if os.path.exists(p)]
+
+    def newest(self, table: str, upto: int) -> int:
+        """The newest round <= ``upto`` at which ``table`` exists, or
+        -1. Checkpoint tables are rewritten every
+        ``pipeline.COMPACT_EVERY`` rounds, so once one exists the
+        backward scan stops within that many rounds."""
+        return next((r for r in range(upto, -1, -1)
+                     if self.exists(table, r)), -1)
+
+    def drop_round(self, round_no: int):
+        """Delete round ``round_no`` of every table dir: the debris a
+        FAILED attempt left between its first write and its ledger
+        commit, which the loaders would trust (``.tmp-`` dirs stay; no
+        reader takes them). Refuses a round the ledger shows COMMITTED:
+        a stale round number would erase a committed round's ``fetched``
+        rows, its replay removals, re-opening already-crawled URLs in
+        every later round's frontier."""
+        if any(r["round"] == round_no and r.get("status") == "committed"
+               for r in self.ledger()["rounds"]):
+            raise ValueError(
+                f"refusing to drop state for round {round_no}: the ledger "
+                f"shows it committed (stale round number at the call site?)")
+        for table in os.listdir(self.root):
+            p = self._path(table, round_no)
+            if os.path.isdir(p):
+                shutil.rmtree(p)
 
     def destroy(self):
         shutil.rmtree(self.root, ignore_errors=True)

@@ -477,8 +477,6 @@ def test_empty_round_carries_state_without_writes(spark, tmp_path):
     frontier view and seen set are unchanged across the empty round,
     with no double-counted seen delta and no per-round copy of the
     full frontier (the pre-r6 carry)."""
-    import os
-
     from jsonextract_spark.crawl import pipeline as P
     from jsonextract_spark.crawl.pipeline import run_crawl
     from jsonextract_spark.crawl.tables import Warehouse
@@ -500,7 +498,8 @@ def test_empty_round_carries_state_without_writes(spark, tmp_path):
     # no frontier state written for the empty round
     assert not wh.exists("frontier", 2)
     assert not wh.exists("frontier_delta", 2)
-    assert not os.path.exists(P._seen_delta_path(wh, 2))
+    assert not any(wh.rounds(t, 2, 2, part="is_new=1")
+                   for t in ("frontier", "frontier_delta"))
     # view and seen set unchanged, nothing double-counted
     front_after = {r["url_hash"]
                    for r in P.load_frontier(spark, wh, 2).collect()}
@@ -1128,6 +1127,33 @@ def test_robots_cache_ttl_expires_entries(spark, tmp_path, monkeypatch):
         assert log.count("/robots.txt") == 2
     finally:
         srv.shutdown()
+
+
+def test_robots_ttl_is_24_hours(spark, tmp_path):
+    """RFC 9309 §2.4: a cached robots.txt SHOULD NOT be used for more
+    than 24 hours. A definitive verdict 25 h old is resolved again by
+    the next round that sees its host; one 23 h old is reused."""
+    from jsonextract_spark.crawl import pipeline as P
+    from jsonextract_spark.functions.urlhash import url_host
+
+    assert P.ROBOTS_TTL_SEC == 24 * 3600.0
+    # one seed per host; round 1 pops the first 5 in url order, so the
+    # last two seeds' hosts are still in round 2's frontier
+    old, young = (url_host(u) for u in sorted(synth.seed_urls(10))[-2:])
+    age = {old: 25 * 3600.0, young: 23 * 3600.0}
+    kw = dict(n_seeds=10, host_budget=1, batch_size=5)
+    wdir = str(tmp_path / "w_ttl24")
+    P.run_crawl(spark, wdir, rounds=1,
+                fetch_kernel=_synth_robots_kernel(
+                    lambda host, now: (True, True,
+                                       now - age.get(host, 0.0))), **kw)
+    P.run_crawl(spark, wdir, rounds=2, resume=True,
+                fetch_kernel=_synth_robots_kernel(
+                    lambda host, now: (True, True, now)), **kw)
+    wh = P.Warehouse(wdir)
+    resolved = {r["host"] for r in wh.load(spark, "robots", 2).collect()}
+    assert old in resolved
+    assert young not in resolved
 
 
 def test_all_blocked_batch_does_not_stall_crawl(spark, tmp_path):
@@ -2326,19 +2352,119 @@ def test_replay_broadcast_hint_on_small_windows(spark, tmp_path):
 
 
 def test_drop_uncommitted_refuses_committed_round(tmp_path):
-    """ADVICE r8: _drop_uncommitted_round_state deletes the round's
-    `fetched` ledger rows, so a stale round number pointing at a
-    COMMITTED round must raise instead of silently erasing replay
-    removals (which would re-open already-crawled URLs)."""
-    from jsonextract_spark.crawl import pipeline as P
+    """ADVICE r8: Warehouse.drop_round deletes the round's `fetched`
+    ledger rows, so a stale round number pointing at a COMMITTED round
+    must raise instead of silently erasing replay removals (which
+    would re-open already-crawled URLs)."""
     from jsonextract_spark.crawl.tables import Warehouse
 
     wh = Warehouse(str(tmp_path / "wh"))
     wh.commit_round(3, {"batch": 10})
     with pytest.raises(ValueError, match="committed"):
-        P._drop_uncommitted_round_state(wh, 3)
+        wh.drop_round(3)
     # uncommitted rounds still clean fine (no-op on empty warehouse)
-    P._drop_uncommitted_round_state(wh, 4)
+    wh.drop_round(4)
+
+
+def test_drop_round_drops_every_table(tmp_path):
+    """``drop_round`` needs no list of per-round tables: it removes
+    ``<table>/round=N`` under every table dir (a planted ``metrics``
+    round and one of a made-up ``extra`` table), keeps round N-1 and
+    a crashed write's ``round=N.tmp-`` dir, and still refuses a
+    committed round."""
+    import os
+
+    from jsonextract_spark.crawl.tables import Warehouse
+
+    wh = Warehouse(str(tmp_path / "wh"))
+    keep = [wh._path("metrics", 4), wh._path("extra", 4),
+            wh._path("extra", 5) + ".tmp-x"]
+    for p in keep + [wh._path("metrics", 5), wh._path("extra", 5)]:
+        os.makedirs(p)
+    wh.commit_round(4)
+    wh.drop_round(5)
+    assert sorted(os.listdir(wh.root)) == ["_ledger.json", "extra",
+                                           "metrics"]
+    assert all(os.path.isdir(p) for p in keep)
+    assert not wh.exists("metrics", 5) and not wh.exists("extra", 5)
+    with pytest.raises(ValueError, match="committed"):
+        wh.drop_round(4)
+    assert all(os.path.isdir(p) for p in keep)
+
+
+def test_warehouse_round_reader_is_bounded(tmp_path):
+    """``Warehouse.rounds`` returns the round dirs (or their ``part``
+    subdirs) in the asked range only, ascending, and never a ``.tmp-``
+    dir; ``newest`` scans down from its bound."""
+    import os
+
+    from jsonextract_spark.crawl.tables import Warehouse
+
+    wh = Warehouse(str(tmp_path / "wh"))
+    for r in (0, 2, 3, 7):
+        os.makedirs(wh._path("t", r))
+    os.makedirs(os.path.join(wh._path("t", 3), "is_new=1"))
+    os.makedirs(wh._path("t", 5) + ".tmp-x")
+    assert wh.rounds("t", 1, 5) == [wh._path("t", 2), wh._path("t", 3)]
+    assert wh.rounds("t", -1, 9) == [wh._path("t", r)
+                                     for r in (0, 2, 3, 7)]
+    assert wh.rounds("t", 0, 7, part="is_new=1") == [
+        os.path.join(wh._path("t", 3), "is_new=1")]
+    assert wh.rounds("missing", 0, 7) == []
+    assert [wh.newest("t", u) for u in (9, 6, 1, -1)] == [7, 3, 0, -1]
+    assert wh.newest("missing", 9) == -1
+
+
+def test_no_round_has_seen_delta_in_both_frontier_tables(spark,
+                                                         tmp_path,
+                                                         monkeypatch):
+    """``load_seen`` reads the ``is_new=1`` partitions of ``frontier``
+    and ``frontier_delta`` together, with no precedence, so no round
+    may have one in both. A crawl under COMPACT_EVERY = 2 runs every
+    round kind that writes frontier state — init (0), plain (1, 5),
+    compaction (2, 6), ``schedule_recrawl`` (3) and
+    ``seed_from_sitemaps`` (4) — and each writes its fresh URLs to one
+    table only."""
+    import os
+    import time
+
+    import pandas as pd
+
+    from jsonextract_spark.crawl import pipeline as P
+    from jsonextract_spark.crawl.recrawl import schedule_recrawl
+    from jsonextract_spark.crawl.sitemaps import seed_from_sitemaps
+
+    monkeypatch.setattr(P, "COMPACT_EVERY", 2)
+    kw = dict(n_seeds=10, host_budget=3, batch_size=20)
+    wdir = str(tmp_path / "w_inv")
+    P.run_crawl(spark, wdir, rounds=2, **kw)
+    wh = P.Warehouse(wdir)
+    assert schedule_recrawl(spark, wh, 2, max_age_sec=0.0,
+                            now_ts=time.time() + 10.0) > 0
+    fresh = [synth.url_of(i) for i in (91001, 91002)]
+
+    def source(batches):
+        for pdf in batches:
+            if len(pdf):
+                yield pd.DataFrame({
+                    "host": [u.split("/")[2] for u in fresh],
+                    "url": fresh})
+
+    assert seed_from_sitemaps(spark, wh, 3, source_kernel=source) == 2
+    P.run_crawl(spark, wdir, rounds=6, resume=True, **kw)
+    phases = {r["round"]: r.get("phase") for r in wh.ledger()["rounds"]}
+    assert phases == {0: "init", 1: None, 2: None, 3: "recrawl",
+                      4: "sitemap", 5: None, 6: None}
+
+    def delta_rounds(table):
+        return {int(os.path.basename(os.path.dirname(p))[6:])
+                for p in wh.rounds(table, 0, 6, part="is_new=1")}
+
+    base, delta = delta_rounds("frontier"), delta_rounds("frontier_delta")
+    assert base == {0, 4}
+    assert not base & delta
+    assert {1, 2} <= delta
+    assert wh.exists("frontier", 6) and wh.exists("frontier", 3)
 
 
 def test_politeness_floor_default_resolution():

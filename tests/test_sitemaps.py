@@ -194,3 +194,64 @@ def test_extract_locs_hostile_linear_and_truncation_classes():
     pages, children = SM.extract_sitemap_locs(truncated)
     assert pages == ["https://ex.com/p"]
     assert children == ["https://ex.com/sm.xml"]
+
+
+def test_sitemap_round_reuses_crawl_robots_verdicts(spark, tmp_path):
+    """A sitemap round reads each host's ``Sitemap:`` lines from the
+    crawl's robots verdicts: a 1-round live crawl plus a sitemap round
+    GET robots.txt exactly once per host. The crawled host's verdict
+    comes from round 1's ``robots`` table (its sitemap is still found:
+    the stored rules name it); the host only the frontier knows is
+    resolved by the sitemap source itself."""
+    import collections
+
+    from jsonextract_spark.crawl.fetch_http import (
+        make_fetch_extract_kernel)
+    from jsonextract_spark.crawl.pipeline import run_crawl
+    from jsonextract_spark.crawl.tables import Warehouse
+
+    robots_gets = collections.Counter()
+
+    class H(http.server.BaseHTTPRequestHandler):
+        def do_GET(self):
+            host = self.headers["Host"]
+            port = self.server.server_port
+            if self.path == "/robots.txt":
+                robots_gets[host] += 1
+                body = f"User-agent: *\nSitemap: http://{host}/sm.xml\n"
+            elif self.path == "/sm.xml":
+                body = "<urlset>" + "".join(
+                    f"<url><loc>http://{host}/s/{i}</loc></url>"
+                    for i in (1, 2)) + "</urlset>"
+            elif self.path == "/p/1":
+                body = (f"<script>var cfg = {{id: 1, links: "
+                        f"['http://localhost:{port}/p/2']}};</script>")
+            else:
+                body = "<script>var cfg = {id: 2};</script>"
+            body = body.encode()
+            self.send_response(200)
+            self.send_header("Content-Length", str(len(body)))
+            self.end_headers()
+            self.wfile.write(body)
+
+        def log_message(self, *a):
+            pass
+
+    srv = local_http.serve(H)
+    try:
+        port = srv.server_port
+        wdir = str(tmp_path / "w_smrobots")
+        run_crawl(spark, wdir, rounds=1,
+                  seeds=[f"http://127.0.0.1:{port}/p/1"],
+                  host_budget=5, batch_size=5,
+                  fetch_kernel=make_fetch_extract_kernel(
+                      timeout_sec=5, default_delay_sec=0.0))
+        assert robots_gets == {f"127.0.0.1:{port}": 1}
+        n = SM.seed_from_sitemaps(spark, Warehouse(wdir), 1,
+                                  source_kernel=SM.make_sitemap_source(
+                                      timeout_sec=5))
+        assert n == 4          # s/1 and s/2 on both hosts
+        assert robots_gets == {f"127.0.0.1:{port}": 1,
+                               f"localhost:{port}": 1}
+    finally:
+        srv.shutdown()
