@@ -30,8 +30,10 @@ from jsonextract_spark.crawl import synth
 from jsonextract_spark.crawl.scheduler import (
     AUTO_HOT_MIN_PENDING, DEFAULT_POLITENESS_FLOOR_SEC, pop_batch,
     priority_of)
-from jsonextract_spark.crawl.tables import (FRONTIER_SCHEMA, ROBOTS_SCHEMA,
-                                            Warehouse)
+from jsonextract_spark.crawl.tables import (FRONTIER_SCHEMA, LEDGER_SCHEMA,
+                                            ROBOTS_SCHEMA, SCHEMAS,
+                                            SEEN_SCHEMA, Warehouse,
+                                            local_table)
 from jsonextract_spark.functions.udfs import url_identity_udf
 
 DEFAULT_HOST_BUDGET = 5
@@ -72,13 +74,14 @@ def _write_metrics(wh: Warehouse, round_no: int, kv: dict):
 
 def make_robots(spark: SparkSession) -> DataFrame:
     """Synthetic robots table: host -> allowed, one row per synthetic
-    host. A table built from a local list carries no size statistics,
-    so Spark would plan its join as a shuffle; its size is the
-    constant ``synth.HOSTS``, so it is broadcast unconditionally."""
+    host, built through Arrow (``tables.local_table``): a
+    ``LocalRelation``, which no Python worker computes and whose size
+    Spark knows. Its size is the constant ``synth.HOSTS``, so it is
+    broadcast unconditionally."""
     rows = [(f"host{h}.example", not synth.robots_disallowed_host(h))
             for h in range(synth.HOSTS)]
     return F.broadcast(
-        spark.createDataFrame(rows, "host string, allowed boolean"))
+        local_table(spark, "host string, allowed boolean", rows))
 
 
 def _with_url_identity(df: DataFrame, url_col: str = "url") -> DataFrame:
@@ -109,15 +112,13 @@ def load_seen(spark: SparkSession, wh: Warehouse, upto_round: int):
     full rewrite per round would be O(total-crawled) I/O every round;
     unbounded delta lists would make round latency grow with crawl
     age — compaction (see ``compact_state``) bounds the union at
-    COMPACT_EVERY+1 sources."""
+    COMPACT_EVERY+1 sources. An empty crawl (explicit seeds=[]) has
+    no source: the read of no path is the empty seen set."""
     base = wh.newest("seen_compact", upto_round)
     paths = ([wh._path("seen_compact", base)] if base >= 0 else []) + [
         p for t in ("frontier", "frontier_delta")
         for p in wh.rounds(t, base + 1, upto_round, part="is_new=1")]
-    if not paths:
-        # empty crawl (explicit seeds=[]): nothing seen yet
-        return spark.createDataFrame([], "url_hash long")
-    return spark.read.parquet(*paths).select("url_hash")
+    return spark.read.schema(SEEN_SCHEMA).parquet(*paths)
 
 
 def load_host_stats(spark: SparkSession, wh: Warehouse,
@@ -135,8 +136,6 @@ def load_host_stats(spark: SparkSession, wh: Warehouse,
     base = wh.newest("host_stats_compact", upto_round)
     ledger_paths = wh.rounds("fetched", base + 1, upto_round)
     ckpt = (wh.load(spark, "host_stats_compact", base)
-            .select("host", F.col("crawled").cast("double")
-                    .alias("crawled"), "last_fetch_ts")
             if base >= 0 else None)
     if not ledger_paths:
         # None, or a checkpoint alone (already host-distinct)
@@ -144,7 +143,7 @@ def load_host_stats(spark: SparkSession, wh: Warehouse,
     # one row per fetch, weighted 1.0: the sum below counts them
     # (integer-valued doubles, so the sum is exact) and folds them
     # into the checkpoint's totals in the same aggregate
-    rows = (spark.read.parquet(*ledger_paths)
+    rows = (spark.read.schema(LEDGER_SCHEMA).parquet(*ledger_paths)
             .filter(~F.col("blocked"))
             .select("host", F.lit(1.0).alias("crawled"),
                     F.col("warc_ts").cast("double")
@@ -210,8 +209,7 @@ def _resolve_round_robots(spark: SparkSession, wh: Warehouse,
     todo = (hosts if known is None
             else hosts.join(known, "host", "left_anti"))
     wh.save(todo.mapInPandas(resolve, ROBOTS_SCHEMA), "robots", round_no)
-    fresh = spark.read.schema(ROBOTS_SCHEMA).parquet(
-        wh._path("robots", round_no))
+    fresh = wh.load(spark, "robots", round_no)
     return fresh if known is None else known.unionByName(fresh)
 
 
@@ -289,16 +287,13 @@ def load_frontier(spark: SparkSession, wh: Warehouse,
     table root as ``basePath`` so the ``round`` column survives."""
     base_round = wh.newest("frontier", upto_round)
     if base_round < 0:
-        return spark.createDataFrame(
-            [], "url string, url_hash long, host string, depth int,"
-                " priority double, attempts int")
+        # nothing initialized: the read of no path is the empty frontier
+        return spark.read.schema(FRONTIER_SCHEMA).parquet()
     base = (wh.load(spark, "frontier", base_round).drop("is_new")
             .select(*_FRONTIER_COLS))
 
-    # the delta's is_new partitions, not its round dirs: a round with
-    # a non-empty batch but ZERO additions wrote the Warehouse's
-    # schema-only empty fallback (no partitions), and mixing such a
-    # flat dir with hive-partitioned ones breaks partition discovery
+    # the delta's is_new partitions (a round with a non-empty batch but
+    # ZERO additions publishes a round dir with none)
     lo = base_round + 1
     add_paths = [p for part in ("is_new=0", "is_new=1")
                  for p in wh.rounds("frontier_delta", lo, upto_round,
@@ -308,8 +303,8 @@ def load_frontier(spark: SparkSession, wh: Warehouse,
         return base
 
     def _ranged(paths, table):
-        return (spark.read.option("basePath", wh._path(table))
-                .parquet(*paths))
+        return (spark.read.schema(SCHEMAS[table])
+                .option("basePath", wh._path(table)).parquet(*paths))
 
     row_t = T.StructType([f for f in FRONTIER_SCHEMA.fields])
     adds = (_ranged(add_paths, "frontier_delta")
@@ -416,14 +411,7 @@ def init_state(spark: SparkSession, wh: Warehouse, n_seeds: int,
     # not a silent fallback to the synthetic seeds
     urls = (seed_list if seed_list is not None
             else synth.seed_urls(n_seeds))
-    if urls:
-        import pandas as _pd
-
-        # Arrow path: a large seed list through the row-tuple route pays
-        # per-row Py4J serialization (~12s at 50k seeds; ~1s via Arrow)
-        seeds = spark.createDataFrame(_pd.DataFrame({"url": urls}))
-    else:
-        seeds = spark.createDataFrame([], "url string")
+    seeds = local_table(spark, "url string", [(u,) for u in urls])
     frontier = (_with_url_identity(seeds)
                 .dropDuplicates(["url_hash"])
                 .withColumn("depth", F.lit(0))
@@ -457,8 +445,7 @@ def run_round(spark: SparkSession, wh: Warehouse, round_no: int,
               batch_size: int = DEFAULT_BATCH_SIZE,
               fetch_kernel=None,
               auto_hot_min_pending: int | None = None,
-              archive_warc: str | None = None,
-              static_robots: DataFrame | None = None) -> dict:
+              archive_warc: str | None = None) -> dict:
     """Execute round ``round_no`` (requires round_no-1 committed).
 
     Politeness comes from ``fetch_kernel``'s advertised config (see
@@ -475,8 +462,7 @@ def run_round(spark: SparkSession, wh: Warehouse, round_no: int,
     ``allowed`` and ``crawl_delay``; the popped batch also carries the
     host's ``robots_txt`` and ``definitive`` for the kernel's per-path
     check. A kernel without a resolver crawls under the synthetic
-    ``make_robots`` table, or ``static_robots`` when the caller built
-    it once for the whole crawl (``run_crawl`` does).
+    ``make_robots`` table.
 
     ``archive_warc`` (a directory) enables FETCH-TIME archival: the
     fetch kernel tees every fetched body into
@@ -540,8 +526,7 @@ def run_round(spark: SparkSession, wh: Warehouse, round_no: int,
     resolve_robots = getattr(fetch_kernel, "robots", None)
     rules = None
     if resolve_robots is None:
-        robots = (static_robots if static_robots is not None
-                  else make_robots(spark))
+        robots = make_robots(spark)
     else:
         sc.setJobDescription(f"r{round_no} robots")
         table = _resolve_round_robots(spark, wh, round_no, frontier,
@@ -868,7 +853,7 @@ def run_crawl(spark: SparkSession, warehouse: str, rounds: int,
     Robots follow the kernel too: one that advertises a robots
     resolver (``.robots``) gets real verdicts, kept as the per-round
     ``robots`` table (see ``run_round``); any other kernel crawls
-    under the synthetic ``make_robots`` table, built once per crawl.
+    under the synthetic ``make_robots`` table.
     The politeness config is the fetch kernel's advertised
     ``default_delay_sec`` (the per-host floor for hosts whose
     robots.txt does not ask for a rate) and ``hot_hosts`` (hosts with
@@ -891,24 +876,13 @@ def run_crawl(spark: SparkSession, warehouse: str, rounds: int,
         start = 0
     else:
         _check_layout(wh)
-    static_robots = None
-    if getattr(fetch_kernel, "robots", None) is None and rounds > start + 1:
-        # The synthetic robots table is static per crawl — build (and
-        # cache) it once instead of re-running createDataFrame + a
-        # fresh broadcast-build job every round (r10).
-        static_robots = make_robots(spark).cache()
     stats = []
-    try:
-        for r in range(start + 1, rounds + 1):
-            s = run_round(spark, wh, r, host_budget, batch_size,
-                          fetch_kernel=fetch_kernel,
-                          auto_hot_min_pending=auto_hot_min_pending,
-                          archive_warc=archive_warc,
-                          static_robots=static_robots)
-            stats.append({"round": r, **s})
-    finally:
-        if static_robots is not None:
-            static_robots.unpersist()
+    for r in range(start + 1, rounds + 1):
+        s = run_round(spark, wh, r, host_budget, batch_size,
+                      fetch_kernel=fetch_kernel,
+                      auto_hot_min_pending=auto_hot_min_pending,
+                      archive_warc=archive_warc)
+        stats.append({"round": r, **s})
     return stats
 
 
@@ -923,13 +897,11 @@ def crawl_order(spark: SparkSession, warehouse: str) -> DataFrame:
     Passing the committed leaf dirs (rather than the bare table root)
     both skips crashed ``.tmp-`` dirs and uncommitted rounds, and
     keeps the plan a single relation whose node count is independent
-    of round count."""
+    of round count. With no committed round it reads no path: the
+    empty ledger."""
     wh = Warehouse(warehouse)
-    last = wh.last_committed_round()
-    paths = wh.rounds("fetched", 1, last)
-    if not paths:
-        return spark.createDataFrame([], "batch_id int, rank long, url string")
-    df = (spark.read.parquet(*paths)
+    paths = wh.rounds("fetched", 1, wh.last_committed_round())
+    df = (spark.read.schema(LEDGER_SCHEMA).parquet(*paths)
           .filter(~F.coalesce(F.col("blocked"), F.lit(False))))
     return df.select("batch_id", "rank", "url").orderBy("batch_id", "rank")
 

@@ -17,6 +17,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, functions as F
 
 from jsonextract_spark.crawl.scheduler import priority_of
+from jsonextract_spark.crawl.tables import LEDGER_SCHEMA, local_table
 
 
 def refresh_candidates(fetched: DataFrame, now_ts: float,
@@ -92,13 +93,13 @@ def schedule_recrawl(spark, wh, after_round: int, max_age_sec: float,
     # timestamp (the inner join drops uncommitted rounds). Robots-
     # blocked ledger rows were never fetched — nothing to refresh
     # (they'd only be re-blocked).
-    fetched = (spark.read.option("basePath", wh._path("fetched"))
-               .parquet(*paths)
+    fetched = (spark.read.schema(LEDGER_SCHEMA)
+               .option("basePath", wh._path("fetched")).parquet(*paths)
                .filter(~F.coalesce(F.col("blocked"), F.lit(False))))
-    ts_df = spark.createDataFrame(
+    ts_df = local_table(
+        spark, "round int, fetched_ts double",
         [(r["round"], float(r["ts"])) for r in wh.ledger()["rounds"]
-         if r.get("status") == "committed"],
-        "round int, fetched_ts double")
+         if r.get("status") == "committed"])
     fetched = (fetched
                .join(F.broadcast(ts_df),
                      fetched["round"].cast("int") == ts_df["round"])

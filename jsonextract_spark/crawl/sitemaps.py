@@ -203,6 +203,7 @@ def seed_from_sitemaps(spark, wh, after_round: int,
     from jsonextract_spark.crawl.pipeline import (
         _with_url_identity, load_frontier, load_robots, load_seen)
     from jsonextract_spark.crawl.scheduler import priority_of
+    from jsonextract_spark.crawl.tables import LEDGER_SCHEMA
 
     if source_kernel is None:
         source_kernel = make_sitemap_source()
@@ -215,7 +216,7 @@ def seed_from_sitemaps(spark, wh, after_round: int,
         cand = frontier.select("host", "url")
         fetched_dirs = wh.rounds("fetched", 1, after_round)
         if fetched_dirs:
-            led = (spark.read.parquet(*fetched_dirs)
+            led = (spark.read.schema(LEDGER_SCHEMA).parquet(*fetched_dirs)
                    .select("host", "url"))
             cand = cand.unionByName(led)
         hosts = cand.groupBy("host").agg(F.min("url").alias("url"))

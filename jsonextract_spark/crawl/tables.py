@@ -16,9 +16,18 @@ On a real cluster, swap ``save``/``load`` for
 
 Schemas
 -------
-frontier     FULL frontier BASE: url, url_hash, host, depth, priority,
-             attempts (deferral count, bounded by pipeline.MAX_DEFERS),
-             hive-partitioned on is_new. Written only at init (round
+Each state table's schema is a constant of this module, and ``SCHEMAS``
+maps the table name to it. No reader infers a schema: every read names
+its table's schema (``spark.read.schema(...)``), so a read costs no
+footer-sampling Spark job, and a round dir holding no data file (an
+empty partitioned write publishes ``_SUCCESS`` alone) reads as the
+empty table. Hive partition columns (``round``, ``is_new``) still come
+from the paths.
+
+frontier     FRONTIER_SCHEMA. FULL frontier BASE: url, url_hash,
+             host, depth, priority, attempts (deferral count,
+             bounded by pipeline.MAX_DEFERS), hive-partitioned on
+             is_new. Written only at init (round
              0, where is_new=1 seeds double as the first seen delta),
              at recrawl and sitemap maintenance rounds (a sitemap
              round's is_new=1 URLs are its seen delta), and as the
@@ -27,7 +36,7 @@ frontier     FULL frontier BASE: url, url_hash, host, depth, priority,
              all is_new=0) — never per round. The loader treats any
              of these as a base.
 frontier_delta
-             the round's frontier ADDITIONS only (same columns),
+             FRONTIER_SCHEMA. The round's frontier ADDITIONS only,
              partitioned on is_new: 0 = deferred re-adds, 1 = fresh
              discoveries (the is_new=1 slice IS the round's
              append-only seen delta — one write job for both tables).
@@ -36,34 +45,36 @@ frontier_delta
              and pipeline.load_frontier replays additions against
              removals per url_hash, newest event wins — a round's
              frontier write is O(adds), never O(frontier).
-seen_compact url_hash — periodic compaction of the deltas (the
-             IcebergLite analogue of rewrite_data_files), written by
-             pipeline.compact_state every pipeline.COMPACT_EVERY
-             rounds so load_seen unions a bounded source list
+seen_compact SEEN_SCHEMA. url_hash — periodic compaction of the
+             deltas (the IcebergLite analogue of rewrite_data_files),
+             written by pipeline.compact_state every
+             pipeline.COMPACT_EVERY rounds so load_seen unions a
+             bounded source list
 seen_filter  per-bucket Bloom bitsets written by earlier code; the
              exact seen gate never reads them, so an old warehouse's
              dirs are ignored
-fetched      batch_id, rank, url, url_hash (the frontier key — the
-             round's popped rows double as the frontier-delta removal
-             list, see load_frontier),
-             host, depth, warc_ts, n_objects,
-             n_links, bytes, partition_id (lineage), blocked (popped
-             but stopped by the robots per-path check — never GET'd),
+fetched      LEDGER_SCHEMA. batch_id, rank, url, url_hash (the
+             frontier key — the round's popped rows double as the
+             frontier-delta removal list, see load_frontier), host,
+             depth, warc_ts, n_objects, n_links, bytes, partition_id
+             (lineage), blocked (popped but stopped by the robots
+             per-path check — never GET'd),
              retry (blocked by a NON-definitive verdict, i.e. robots
              5xx/unreachable: returned to the frontier, not consumed)
 host_stats_compact
-             host, crawled (cumulative fetch count), last_fetch_ts
-             (epoch seconds of the host's newest real fetch) — a
-             checkpoint written by pipeline.compact_state every
-             pipeline.COMPACT_EVERY rounds.
+             HOST_STATS_SCHEMA. host, crawled (cumulative fetch
+             count), last_fetch_ts (epoch seconds of the host's
+             newest real fetch) — a checkpoint written by
+             pipeline.compact_state every pipeline.COMPACT_EVERY
+             rounds.
              No per-round host table exists: the fetched ledger
              already holds every fetch, so pipeline.load_host_stats
              derives the cumulative totals as the newest checkpoint
              plus count/max(warc_ts) over the non-blocked ledger rows
              of the rounds after it.
-robots       host, allowed (may the root be fetched), crawl_delay
-             (the host's Crawl-delay/Request-rate ask, null when
-             unspecified), robots_txt (effective rules text: the body
+robots       ROBOTS_SCHEMA. host, allowed (may the root be fetched),
+             crawl_delay (the host's Crawl-delay/Request-rate ask,
+             null when unspecified), robots_txt (effective rules text: the body
              on 200, a complete disallow on 5xx, null = allow-all on
              4xx or no response), definitive (False for 5xx / no
              response), fetched_at (epoch seconds) — one row per host
@@ -71,13 +82,15 @@ robots       host, allowed (may the root be fetched), crawl_delay
              only for hosts without a reusable verdict; synthetic
              crawls write none
 robots_compact
-             the same columns: the newest definitive row per host
+             ROBOTS_SCHEMA. The newest definitive row per host
              younger than pipeline.ROBOTS_TTL_SEC, folded from the
              previous checkpoint and the robots rounds since by
              pipeline.compact_state every pipeline.COMPACT_EVERY
              rounds; pipeline.load_robots reads the newest checkpoint
              plus the robots rounds after it
-metrics      batch_id, key, value (incl. per-phase secs + spark_jobs)
+metrics      batch_id, key, value (incl. per-phase secs + spark_jobs),
+             written driver-side with pyarrow and read with pyarrow,
+             never by Spark
 
 Round layout
 ------------
@@ -110,6 +123,7 @@ import shutil
 import tempfile
 import time
 import uuid
+from collections.abc import Sequence
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
@@ -141,6 +155,41 @@ ROBOTS_SCHEMA = T.StructType([
     T.StructField("fetched_at", T.DoubleType()),
 ])
 
+# the fetched ledger: synth.FETCH_EXTRACT_SCHEMA's scalar columns plus
+# n_links and the fetch task's partition_id, as pipeline.run_round
+# writes them
+LEDGER_SCHEMA = T.StructType([
+    T.StructField("batch_id", T.IntegerType()),
+    T.StructField("rank", T.LongType()),
+    T.StructField("url", T.StringType()),
+    T.StructField("url_hash", T.LongType()),
+    T.StructField("host", T.StringType()),
+    T.StructField("depth", T.IntegerType()),
+    T.StructField("warc_ts", T.TimestampType()),
+    T.StructField("n_objects", T.IntegerType()),
+    T.StructField("n_links", T.IntegerType()),
+    T.StructField("bytes", T.IntegerType()),
+    T.StructField("partition_id", T.IntegerType()),
+    T.StructField("blocked", T.BooleanType()),
+    T.StructField("retry", T.BooleanType()),
+])
+
+HOST_STATS_SCHEMA = T.StructType([
+    T.StructField("host", T.StringType()),
+    T.StructField("crawled", T.DoubleType()),
+    T.StructField("last_fetch_ts", T.DoubleType()),
+])
+
+SCHEMAS = {
+    "frontier": FRONTIER_SCHEMA,
+    "frontier_delta": FRONTIER_SCHEMA,
+    "seen_compact": SEEN_SCHEMA,
+    "fetched": LEDGER_SCHEMA,
+    "host_stats_compact": HOST_STATS_SCHEMA,
+    "robots": ROBOTS_SCHEMA,
+    "robots_compact": ROBOTS_SCHEMA,
+}
+
 PAGES_SCHEMA = T.StructType([
     T.StructField("url", T.StringType()),
     T.StructField("warc_ts", T.TimestampType()),
@@ -148,6 +197,30 @@ PAGES_SCHEMA = T.StructType([
     T.StructField("text", T.StringType()),
     T.StructField("lang", T.StringType()),
 ])
+
+
+def local_table(spark: SparkSession, schema: str,
+                rows: Sequence[tuple] = ()) -> DataFrame:
+    """A small driver-built table: ``rows`` (tuples in the column order
+    of ``schema``, a DDL string; none gives the empty table) handed to
+    Spark as one pyarrow table typed by the schema. It analyzes to a
+    ``LocalRelation``, so no Python worker runs for it.
+
+    ``spark.createDataFrame`` of a list is a PythonRDD, whose runner
+    starts a second Python worker pool (see ``session``). So is an
+    EMPTY pandas frame, which skips the Arrow path, and a pandas frame
+    whose Arrow conversion fails while
+    ``spark.sql.execution.arrow.pyspark.fallback.enabled`` is on. A
+    pyarrow table has no such fallback: a conversion error raises."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    struct = T.DataType.fromDDL(schema)
+    arrow = to_arrow_schema(struct)
+    cols = list(zip(*rows)) if rows else [[] for _ in arrow]
+    return spark.createDataFrame(
+        pa.table([pa.array(c, f.type) for c, f in zip(cols, arrow)],
+                 schema=arrow), struct)
 
 
 class Warehouse:
@@ -206,7 +279,11 @@ class Warehouse:
         r10 profile measured the replay's event scan as a 56-task stage
         whose task count was pure file count). Scale-adaptive by
         construction — at production sizes AQE splits the exchange into
-        advisory-sized files rather than coalescing to one."""
+        advisory-sized files rather than coalescing to one.
+
+        An empty partitioned write publishes a dir holding ``_SUCCESS``
+        alone; every reader names its schema (see "Schemas"), so it
+        reads as the empty table."""
         final = self._path(table, round_no)
         tmp = _tmp_dir_name(final)
         w = df.hint("rebalance") if rebalance else df
@@ -214,26 +291,14 @@ class Warehouse:
         if partition_by is not None:
             writer = writer.partitionBy(partition_by)
         writer.parquet(tmp)
-        if partition_by is not None and not any(
-                f.endswith(".parquet")
-                for _, _, fs in os.walk(tmp) for f in fs):
-            # An EMPTY partitioned write leaves only _SUCCESS — no
-            # schema-bearing part file — and a later read fails with
-            # UNABLE_TO_INFER_SCHEMA. Write an empty frame FROM THE
-            # KNOWN SCHEMA instead (re-running the original plan just to
-            # produce zero rows would double-execute it); readers that
-            # look for partition subdirs correctly see no partitions.
-            shutil.rmtree(tmp)
-            empty = w.sparkSession.createDataFrame(
-                [], w.drop(partition_by).schema)
-            empty.write.mode("overwrite").parquet(tmp)
         if os.path.exists(final):
             shutil.rmtree(final)
         os.replace(tmp, final)
 
     def load(self, spark: SparkSession, table: str,
              round_no: int | None = None) -> DataFrame:
-        return spark.read.parquet(self._path(table, round_no))
+        return (spark.read.schema(SCHEMAS[table])
+                .parquet(self._path(table, round_no)))
 
     def exists(self, table: str, round_no: int | None = None) -> bool:
         return os.path.exists(self._path(table, round_no))

@@ -12,6 +12,16 @@ keep PySpark's daemon: there the package reaches workers through
 ``--py-files`` only after the daemon has started. A cluster that has the
 package importable when the daemon starts can set the same
 ``spark.python.daemon.module``.
+
+A session runs one Python worker pool. Spark starts one worker daemon
+per distinct worker environment, and every SQL Python runner (Arrow
+UDFs, ``mapInPandas``) shares one environment. A PythonRDD, which is
+what ``spark.createDataFrame`` makes of a Python list or of an empty
+pandas frame, runs its workers without the SQL runners'
+``SPARK_SIMPLIFIED_TRACEBACK`` variable, so Spark would start a second
+daemon and a second set of workers for it. The crawl therefore builds
+its small driver-side tables through Arrow
+(``crawl.tables.local_table``), which needs no Python worker at all.
 """
 
 from __future__ import annotations

@@ -249,7 +249,7 @@ def _seen_set(warehouse: str, round_no: int):
 def test_empty_partitioned_save_stays_readable(spark, tmp_path):
     """A drained frontier (zero rows) written with partitionBy must
     still load — Spark's empty partitioned write emits no schema file,
-    so the Warehouse falls back to a plain write."""
+    so the load reads it under the table's named schema."""
     from jsonextract_spark.crawl.tables import Warehouse
 
     wh = Warehouse(str(tmp_path / "w"))
@@ -2663,3 +2663,125 @@ def test_live_crawl_resolves_links_after_redirect(spark, tmp_path):
         assert any(u.endswith("/blog/post/next") for u in urls)
     finally:
         srv.shutdown()
+
+
+@pytest.fixture(scope="module")
+def crawl_path_calls(spark, tmp_path_factory):
+    """Run every crawl path once and record, from package code, each
+    ``SparkContext.parallelize`` call (a PythonRDD, whose runner starts
+    a second Python worker pool) and each ``DataFrameReader.parquet``
+    call made without ``.schema(...)`` (a one-task schema-inference
+    job). The calls are recorded rather than raised, so one run serves
+    both tests below and reports every offender with its stack.
+
+    Paths: a 4-round synthetic crawl that compacts at round 2 and 4,
+    a recrawl round, a sitemap round, an empty crawl (``seeds=[]``),
+    ``crawl_order`` of both, and a 2-round live crawl with the robots
+    resolver."""
+    import http.server
+    import os
+    import time
+    import traceback
+
+    import pandas as pd
+    from pyspark import SparkContext
+    from pyspark.sql import DataFrameReader
+
+    from jsonextract_spark.crawl import pipeline as P
+    from jsonextract_spark.crawl.fetch_http import (
+        make_fetch_extract_kernel)
+    from jsonextract_spark.crawl.recrawl import schedule_recrawl
+    from jsonextract_spark.crawl.sitemaps import seed_from_sitemaps
+
+    pkg = os.sep + "jsonextract_spark" + os.sep
+    calls = {"parallelize": [], "parquet": []}
+
+    def record(kind):
+        stack = traceback.extract_stack()[:-2]
+        if any(pkg in f.filename for f in stack):
+            calls[kind].append("".join(traceback.format_list(stack[-8:])))
+
+    def parallelize(self, *a, **k):
+        record("parallelize")
+        return orig_parallelize(self, *a, **k)
+
+    def schema(self, *a, **k):
+        self._named_schema = True
+        return orig_schema(self, *a, **k)
+
+    def parquet(self, *a, **k):
+        if not getattr(self, "_named_schema", False):
+            record("parquet")
+        return orig_parquet(self, *a, **k)
+
+    class H(http.server.BaseHTTPRequestHandler):
+        def do_GET(self):
+            port = self.server.server_port
+            if self.path == "/robots.txt":
+                body = b"User-agent: *\nDisallow: /private/\n"
+            else:
+                body = (f"<a href='http://127.0.0.1:{port}/b.html'>b</a>"
+                        f"<a href='http://127.0.0.1:{port}/private/x'>x</a>"
+                        f"<script>var c = {{id: 1}};</script>").encode()
+            self.send_response(200)
+            self.send_header("Content-Length", str(len(body)))
+            self.end_headers()
+            self.wfile.write(body)
+
+        def log_message(self, *a):
+            pass
+
+    def one_sitemap_url(batches):
+        for _ in batches:
+            yield pd.DataFrame({"host": ["synth"],
+                                "url": [synth.url_of(91001)]})
+
+    orig_parallelize = SparkContext.parallelize
+    orig_schema, orig_parquet = DataFrameReader.schema, DataFrameReader.parquet
+    srv = local_http.serve(H)
+    root = tmp_path_factory.mktemp("crawl_paths")
+    with pytest.MonkeyPatch.context() as mp:
+        mp.setattr(SparkContext, "parallelize", parallelize)
+        mp.setattr(DataFrameReader, "schema", schema)
+        mp.setattr(DataFrameReader, "parquet", parquet)
+        mp.setattr(P, "COMPACT_EVERY", 2)
+        try:
+            synth_wh = str(root / "synth")
+            P.run_crawl(spark, synth_wh, rounds=4, n_seeds=10,
+                        host_budget=3, batch_size=20)
+            wh = P.Warehouse(synth_wh)
+            assert schedule_recrawl(spark, wh, 4, max_age_sec=0.0,
+                                    now_ts=time.time() + 10.0) > 0
+            assert seed_from_sitemaps(
+                spark, wh, 5, source_kernel=one_sitemap_url) == 1
+            P.crawl_order(spark, synth_wh).collect()
+
+            empty_wh = str(root / "empty")
+            P.run_crawl(spark, empty_wh, rounds=2, seeds=[])
+            assert P.crawl_order(spark, empty_wh).collect() == []
+
+            url = f"http://127.0.0.1:{srv.server_port}/a.html"
+            stats = P.run_crawl(
+                spark, str(root / "live"), rounds=2, seeds=[url],
+                fetch_kernel=make_fetch_extract_kernel(
+                    default_delay_sec=0.0))
+            assert [s["fetched"] for s in stats] == [1, 1]
+        finally:
+            srv.shutdown()
+    return calls
+
+
+def test_crawl_runs_no_python_rdd(crawl_path_calls):
+    """No crawl path builds a table through a PythonRDD: the driver's
+    small tables go through ``tables.local_table`` (Arrow), so one
+    Python worker pool serves the whole crawl."""
+    assert not crawl_path_calls["parallelize"], "\n\n".join(
+        crawl_path_calls["parallelize"])
+
+
+def test_state_reads_name_their_schema(crawl_path_calls):
+    """Every crawl state read names its table's schema, so no read
+    runs a schema-inference job and an empty round dir reads as the
+    empty table."""
+    assert not crawl_path_calls["parquet"], "\n\n".join(
+        crawl_path_calls["parquet"])
