@@ -3,7 +3,7 @@ link discovery → seen update → frontier update → atomic commit.
 
 Each round is one deterministic batch job (north_rule: batch-incremental,
 checkpoint-resumable). State tables are versioned per round in the
-Warehouse; a round only becomes visible at the ledger commit, so a kill
+Warehouse; a round only becomes visible at its commit record, so a kill
 at any point resumes cleanly from the previous round.
 
 Determinism contract (pinned by tests):
@@ -70,6 +70,17 @@ def _write_metrics(wh: Warehouse, round_no: int, kv: dict):
         "value": pa.array([float(v) for v in kv.values()], pa.float64()),
     })
     _write_parquet_driver_side(wh, "metrics", round_no, tbl)
+
+
+def _codegen_compiles(spark: SparkSession) -> int:
+    """Classes the JVM has compiled from generated code so far: its
+    codegen cache misses (in a local master the executors share the
+    driver's JVM). A round's ``codegen_compiles`` metric is the
+    difference across the round. The class is looked up by its full
+    name: one Py4J call, where attribute steps cost one per package."""
+    metrics = getattr(spark.sparkContext._jvm,
+                      "org.apache.spark.metrics.source.CodegenMetrics")
+    return int(metrics.METRIC_COMPILATION_TIME().getCount())
 
 
 def make_robots(spark: SparkSession) -> DataFrame:
@@ -468,7 +479,7 @@ def run_round(spark: SparkSession, wh: Warehouse, round_no: int,
     fetch kernel tees every fetched body into
     ``<archive_warc>/round=N/part-*.warc.gz`` shards inside the fused
     fetch pass itself — no second fetch, no extra Spark action (the
-    write rides the ledger action), and the round's ledger entry
+    write rides the ledger action), and the round's commit record
     records the shard manifest. Requires a kernel exposing
     ``bind_archive`` (both built-in kernels do).
 
@@ -486,7 +497,7 @@ def run_round(spark: SparkSession, wh: Warehouse, round_no: int,
     ledger.
     An EMPTY round (A1 popped nothing) runs A1 only (after the robots
     save in a live round), plus compaction on the cadence: it writes no frontier state, and its metrics,
-    ledger entry (marked ``empty``) and job-group release go through
+    commit record (marked ``empty``) and job-group release go through
     the same tail as any round.
     Every per-round write is O(round output); the only O(total-state)
     writes are the amortized re-materializations. All scalar
@@ -497,7 +508,10 @@ def run_round(spark: SparkSession, wh: Warehouse, round_no: int,
     driver-side re-reads of just-written parquet. The separate
     ``spark_jobs`` metric is what the Spark scheduler counted for the
     round's job group — with AQE enabled that is one job per
-    materialized query stage, NOT the action count. The ``sec_*``
+    materialized query stage, NOT the action count.
+    ``codegen_compiles`` counts the classes the JVM compiled from
+    generated code during the round: 0 once the session's codegen
+    cache holds the round's plans (see ``session``). The ``sec_*``
     metrics split the round's wall clock at its action boundaries:
     in a live round, ``sec_robots`` is the robots table save;
     ``sec_pop_fetch_extract`` is the ledger write (A1); on non-empty
@@ -510,6 +524,7 @@ def run_round(spark: SparkSession, wh: Warehouse, round_no: int,
     the same two actions amortize over millions of URLs."""
     t0 = time.time()
     sc = spark.sparkContext
+    compiles0 = _codegen_compiles(spark)
     # unique per call: a second crawl in the same session must not count
     # the jobs an earlier crawl ran under the same round number
     job_group = f"crawl-round-{round_no}-{uuid.uuid4().hex[:8]}"
@@ -765,7 +780,7 @@ def run_round(spark: SparkSession, wh: Warehouse, round_no: int,
         # loaders read a round RANGE, so it carries state forward for
         # free. Compaction follows the round's own writes and keeps
         # its cadence through empty stretches, so the loaders' source
-        # lists stay bounded; it must land before the ledger commit
+        # lists stay bounded; it must land before the commit record
         # makes the round visible.
         t_state = time.time()
         n_compact = compact_state(spark, wh, round_no)
@@ -791,7 +806,9 @@ def run_round(spark: SparkSession, wh: Warehouse, round_no: int,
         "robots_deferred": float(n_deferred),
         "new_urls": float(n_new), "sec": sec,
         "spark_actions": float(n_actions),
-        "spark_jobs": float(n_jobs), **secs})
+        "spark_jobs": float(n_jobs),
+        "codegen_compiles": float(_codegen_compiles(spark) - compiles0),
+        **secs})
     # ``batch`` = this round's TOTAL ledger rows (popped URLs incl.
     # blocked/retry), the replay removal count
     commit_info = {"fetched": n_fetched, "new": n_new,
@@ -803,8 +820,9 @@ def run_round(spark: SparkSession, wh: Warehouse, round_no: int,
         commit_info["empty"] = True
     if warc_round_dir is not None:
         # shard manifest: the archive write rode the ledger action
-        # (executor-side, atomic per shard); the ledger records what
-        # was published so operators can audit/replicate round output
+        # (executor-side, atomic per shard); the commit record lists
+        # what was published so operators can audit/replicate round
+        # output
         shards = sorted(
             f for f in (os.listdir(warc_round_dir)
                         if os.path.isdir(warc_round_dir) else [])
@@ -824,13 +842,18 @@ def run_round(spark: SparkSession, wh: Warehouse, round_no: int,
 
 def _check_layout(wh: Warehouse):
     """Refuse to resume a warehouse in a layout this code does not
-    read. There is one layout: seen deltas in the frontier tables'
-    ``is_new=1`` partitions, and host_stats checkpoints plus the
-    ledger. A legacy single ``seen`` or ``host_stats`` table would be
-    ignored silently, losing its state. Old ``seen_filter`` dirs (of
-    any codec) are harmless: nothing reads them."""
+    read. There is one layout: per-round commit records, seen deltas
+    in the frontier tables' ``is_new=1`` partitions, and host_stats
+    checkpoints plus the ledger. A legacy single ``seen`` or
+    ``host_stats`` table would be ignored silently, losing its state,
+    and so would a legacy ``_ledger.json`` round ledger: its rounds
+    would read as uncommitted and the crawl would restart. Old
+    ``seen_filter`` dirs (of any codec) are harmless: nothing reads
+    them."""
     problems = [f"legacy {t!r} table" for t in ("seen", "host_stats")
                 if wh.exists(t)]
+    if os.path.exists(os.path.join(wh.root, "_ledger.json")):
+        problems.append("legacy '_ledger.json' round ledger")
     if problems:
         raise ValueError("unsupported warehouse layout: "
                          + "; ".join(problems))
@@ -864,18 +887,18 @@ def run_crawl(spark: SparkSession, warehouse: str, rounds: int,
     the synthetic no-network corpus (``fetch_kernel=None``) runs with
     floor 0 (see ``_resolve_politeness``). ``archive_warc`` tees every
     fetched body into per-round WARC shards inside the fetch pass (see
-    ``run_round``); each round's ledger entry records the shard
+    ``run_round``); each round's commit record records the shard
     manifest."""
     wh = Warehouse(warehouse)
-    if not resume:
+    if resume:
+        _check_layout(wh)
+    else:
         wh.destroy()
         wh = Warehouse(warehouse)
     start = wh.last_committed_round()
     if start < 0:
         init_state(spark, wh, n_seeds, seed_list=seeds)
         start = 0
-    else:
-        _check_layout(wh)
     stats = []
     for r in range(start + 1, rounds + 1):
         s = run_round(spark, wh, r, host_budget, batch_size,

@@ -72,7 +72,7 @@ def schedule_recrawl(spark, wh, after_round: int, max_age_sec: float,
     the newest fetch wins per URL. The refreshed frontier is written as
     a new round version with an EMPTY seen delta (``is_new=0``
     everywhere — recrawl re-opens URLs, it never forgets them) and its
-    own ledger entry — the original rounds' deltas, stats and resume
+    own commit record — the original rounds' deltas, stats and resume
     points stay intact.
     Intended to run every N rounds like seen compaction, not per round.
     Returns the number of re-opened URLs.
@@ -98,8 +98,7 @@ def schedule_recrawl(spark, wh, after_round: int, max_age_sec: float,
                .filter(~F.coalesce(F.col("blocked"), F.lit(False))))
     ts_df = local_table(
         spark, "round int, fetched_ts double",
-        [(r["round"], float(r["ts"])) for r in wh.ledger()["rounds"]
-         if r.get("status") == "committed"])
+        [(r["round"], float(r["ts"])) for r in wh.ledger()["rounds"]])
     fetched = (fetched
                .join(F.broadcast(ts_df),
                      fetched["round"].cast("int") == ts_df["round"])
@@ -140,6 +139,8 @@ def schedule_recrawl(spark, wh, after_round: int, max_age_sec: float,
     # nothing else to carry: reopened URLs stay in the exact seen set
     # (the gate's only input), and host_stats' loader reads a round
     # RANGE of the ledger
-    wh.commit_round(rn, {"phase": "recrawl", "reopened": n})
+    # spark_actions: the count above and this base write
+    wh.commit_round(rn, {"phase": "recrawl", "reopened": n,
+                         "spark_actions": 2})
     refresh.unpersist()
     return n

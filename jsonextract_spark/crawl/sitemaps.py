@@ -8,8 +8,9 @@ executor-side, never on the driver), and seeding is a maintenance
 ROUND in the ``schedule_recrawl`` mold: the new URLs are written as a
 fresh full frontier base at ``after_round + 1`` with ``is_new=1`` (so
 the same write doubles as their seen delta, exactly like round-0
-seeds, so later links to them are gated away), and the ledger records
-``phase="sitemap"`` with a ``seeds`` count.
+seeds, so later links to them are gated away), and the round's commit
+record carries ``phase="sitemap"``, a ``seeds`` count and its
+``spark_actions``.
 
 Parsing is crawl-grade: a bounded regex scan for ``<loc>`` values
 inside ``<sitemap>`` (index entries) vs elsewhere (page URLs) — no XML
@@ -253,6 +254,8 @@ def seed_from_sitemaps(spark, wh, after_round: int,
     # REBALANCE form is safe here)
     wh.save(merged, "frontier", rn, partition_by="is_new",
             rebalance=True)
-    wh.commit_round(rn, {"phase": "sitemap", "seeds": n})
+    # spark_actions: the count above and this base write
+    wh.commit_round(rn, {"phase": "sitemap", "seeds": n,
+                         "spark_actions": 2})
     fresh.unpersist()
     return n

@@ -2,13 +2,13 @@
 
 Production target is Iceberg (atomic snapshot commits, partition pruning
 on ``bucket(url_hash)`` / ``batch_id``). This sandbox has no Iceberg jars,
-so the same contract is implemented over plain parquet with an atomic
-ledger file — "IcebergLite":
+so the same contract is implemented over plain parquet with one atomic
+commit record per round — "IcebergLite":
 
 * every crawl round writes its outputs under ``<table>/round=<n>/``;
-* a round becomes visible only when the ledger JSON is atomically
-  replaced (``os.replace``) with the round marked committed;
-* resume = read the ledger, load state at the last committed round.
+* a round becomes visible only when its commit record
+  ``_commits/<n>.json`` is published (see "Round layout");
+* resume = find the last committed round, load state at it.
 
 On a real cluster, swap ``save``/``load`` for
 ``df.writeTo("cat.db.tbl").overwritePartitions()`` /
@@ -94,6 +94,25 @@ metrics      batch_id, key, value (incl. per-phase secs + spark_jobs),
 
 Round layout
 ------------
+Commits: round N is committed once ``_commits/N.json`` exists. The
+record (round, status, ts, plus the round's info: counts, phase,
+``spark_actions`` of a maintenance round, a WARC manifest) is written
+to a ``.tmp-`` file in ``_commits`` and renamed to its fresh final
+name. Rounds commit contiguously from 0 (a round runs only after the
+one before it committed), so the last committed round is found by
+stat probes alone: exponential up from round 0, then binary between
+the last hit and the first miss — O(log rounds) stats, no file opened,
+no byte parsed. ``commit_round`` writes one small file and
+``drop_round``'s committed-round guard is one stat, whatever the
+crawl's age. Why fresh names: the single ``_ledger.json`` that earlier
+code rewrote and ``os.replace``d over itself cost O(rounds) bytes per
+commit, and ext4 flushes a file renamed over an existing one to disk
+(auto_da_alloc): ~50 ms per commit on a 4-core ext4 host, against
+well under 1 ms for a whole commit under a fresh name. ``commit_round``
+therefore never renames over an existing file: a record is written
+once. ``ledger()`` reads the records back, in round order, for the
+callers that want every round (recrawl's fetch ages, tests).
+
 Which rounds of a table exist is a Warehouse question: ``rounds``
 lists a table's published round dirs in a range (or one hive
 partition of each), ``newest`` finds the newest round at or below a
@@ -120,13 +139,16 @@ from __future__ import annotations
 import json
 import os
 import shutil
-import tempfile
 import time
 import uuid
 from collections.abc import Sequence
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
+
+
+# the commit records' dir under the warehouse root (see "Round layout")
+COMMITS = "_commits"
 
 
 def _tmp_dir_name(final: str) -> str:
@@ -227,30 +249,50 @@ class Warehouse:
     def __init__(self, root: str):
         self.root = root
         os.makedirs(root, exist_ok=True)
-        self._ledger_path = os.path.join(root, "_ledger.json")
+        self._commits = os.path.join(root, COMMITS)
 
-    # -- ledger ----------------------------------------------------------
-    def ledger(self) -> dict:
-        if not os.path.exists(self._ledger_path):
-            return {"rounds": []}
-        with open(self._ledger_path) as f:
-            return json.load(f)
+    # -- commits -----------------------------------------------------------
+    def _commit_path(self, round_no: int) -> str:
+        return os.path.join(self._commits, f"{round_no}.json")
+
+    def is_committed(self, round_no: int) -> bool:
+        return os.path.exists(self._commit_path(round_no))
 
     def last_committed_round(self) -> int:
-        rounds = [r["round"] for r in self.ledger()["rounds"]
-                  if r.get("status") == "committed"]
-        return max(rounds) if rounds else -1
+        """The newest committed round, or -1: exponential then binary
+        stat probes over the contiguous records (see "Round layout")."""
+        if not self.is_committed(0):
+            return -1
+        lo, hi = 0, 1
+        while self.is_committed(hi):
+            lo, hi = hi, hi * 2
+        while hi - lo > 1:          # lo committed, hi not
+            mid = (lo + hi) // 2
+            lo, hi = (mid, hi) if self.is_committed(mid) else (lo, mid)
+        return lo
+
+    def ledger(self) -> dict:
+        """Every committed round's record, in round order."""
+        rounds = []
+        for r in range(self.last_committed_round() + 1):
+            with open(self._commit_path(r)) as f:
+                rounds.append(json.load(f))
+        return {"rounds": rounds}
 
     def commit_round(self, round_no: int, info: dict | None = None):
-        led = self.ledger()
-        led["rounds"] = [r for r in led["rounds"] if r["round"] != round_no]
-        led["rounds"].append({"round": round_no, "status": "committed",
-                              "ts": time.time(), **(info or {})})
-        led["rounds"].sort(key=lambda r: r["round"])
-        fd, tmp = tempfile.mkstemp(dir=self.root, suffix=".ledger")
-        with os.fdopen(fd, "w") as f:
-            json.dump(led, f, indent=1)
-        os.replace(tmp, self._ledger_path)  # atomic commit point
+        """Publish round ``round_no``'s commit record: written to a
+        ``.tmp-`` file, then renamed to its fresh name (the atomic
+        commit point). A round is committed once; committing it again
+        raises."""
+        if self.is_committed(round_no):
+            raise ValueError(f"round {round_no} is already committed")
+        final = self._commit_path(round_no)
+        os.makedirs(self._commits, exist_ok=True)
+        tmp = _tmp_dir_name(final)
+        with open(tmp, "w") as f:
+            json.dump({"round": round_no, "status": "committed",
+                       "ts": time.time(), **(info or {})}, f)
+        os.rename(tmp, final)
 
     # -- table IO ----------------------------------------------------------
     def _path(self, table: str, round_no: int | None = None) -> str:
@@ -325,17 +367,16 @@ class Warehouse:
 
     def drop_round(self, round_no: int):
         """Delete round ``round_no`` of every table dir: the debris a
-        FAILED attempt left between its first write and its ledger
-        commit, which the loaders would trust (``.tmp-`` dirs stay; no
-        reader takes them). Refuses a round the ledger shows COMMITTED:
+        FAILED attempt left between its first write and its commit,
+        which the loaders would trust (``.tmp-`` dirs stay; no reader
+        takes them). Refuses a COMMITTED round:
         a stale round number would erase a committed round's ``fetched``
         rows, its replay removals, re-opening already-crawled URLs in
         every later round's frontier."""
-        if any(r["round"] == round_no and r.get("status") == "committed"
-               for r in self.ledger()["rounds"]):
+        if self.is_committed(round_no):
             raise ValueError(
-                f"refusing to drop state for round {round_no}: the ledger "
-                f"shows it committed (stale round number at the call site?)")
+                f"refusing to drop state for round {round_no}: it is "
+                f"committed (stale round number at the call site?)")
         for table in os.listdir(self.root):
             p = self._path(table, round_no)
             if os.path.isdir(p):

@@ -22,6 +22,31 @@ pandas frame, runs its workers without the SQL runners'
 daemon and a second set of workers for it. The crawl therefore builds
 its small driver-side tables through Arrow
 (``crawl.tables.local_table``), which needs no Python worker at all.
+
+Two defaults remove fixed per-call costs that a steady crawl round
+paid without doing any crawl work:
+
+* ``spark.sql.codegen.cache.maxEntries`` is ``CODEGEN_CACHE_ENTRIES``
+  (Spark's default is 100). The JVM caches each class it compiles from
+  generated code, keyed by its class loader and source. One crawl
+  fills more than 100 entries, so the cache thrashed: the rounds of a
+  repeated crawl recompiled 23-57 classes each, although every source
+  had been compiled before. The size covers the measured working set
+  of a crawl plus ``bench.py``'s crawl and datapipe leaves, with
+  headroom; the crawl's ``codegen_compiles`` round metric shows
+  whether it still holds. It is a STATIC conf, read once per JVM when
+  code is first generated: it takes effect only if ``build_session``
+  creates the JVM's first session.
+* ``spark.python.sql.dataFrameDebugging.enabled`` is ``false``. When on
+  (PySpark's default), every DataFrame and Column function call looks
+  up the active session, reads a conf, sets and clears the JVM's
+  Python call-site origin, and tries to import IPython: several
+  extra Python-to-JVM calls per function, about half of a crawl
+  round's Py4J traffic. The cost of turning it off: an analysis
+  error's DataFrame query context no longer names the Python call
+  site.
+
+A caller's ``extra_conf`` overrides both.
 """
 
 from __future__ import annotations
@@ -29,6 +54,12 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import SparkSession
+
+# the codegen cache size (see above). Measured working set, in entries
+# an unbounded cache filled on 4 cores: 134 for perfbench's 4-round
+# crawl-revisit crawl; 455 after bench.py's crawl, compaction, pop-skew
+# and datapipe leaves (sf0.001) ran in the same session
+CODEGEN_CACHE_ENTRIES = 1000
 
 
 def build_session(app: str = "jsonextract_spark",
@@ -66,6 +97,9 @@ def build_session(app: str = "jsonextract_spark",
                 os.environ.get("SPARK_DRIVER_MEMORY", "8g"))
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.ui.enabled", "false")
+        .config("spark.sql.codegen.cache.maxEntries",
+                str(CODEGEN_CACHE_ENTRIES))
+        .config("spark.python.sql.dataFrameDebugging.enabled", "false")
     )
     if master == "local" or master.startswith("local["):
         # the package root is on PYTHONPATH (above), so the daemon

@@ -353,24 +353,47 @@ def test_round_sec_metrics_are_never_zero(one_round_crawl):
     assert all(v > 0.0 for v in secs.values()), secs
 
 
-@pytest.mark.parametrize("table", ["seen", "host_stats"])
+@pytest.mark.parametrize("table", ["seen", "host_stats", "_ledger.json"])
 def test_resume_rejects_unsupported_layout(spark, one_round_crawl,
                                            tmp_path, table):
     """A warehouse with a legacy single ``seen`` or ``host_stats``
-    table fails the resume loudly instead of having that state ignored
-    silently."""
+    table, or with the legacy ``_ledger.json`` round ledger in place
+    of commit records, fails the resume loudly instead of having that
+    state ignored silently."""
+    import json
     import os
     import shutil
 
     from jsonextract_spark.crawl.pipeline import run_crawl
-    from jsonextract_spark.crawl.tables import Warehouse
+    from jsonextract_spark.crawl.tables import COMMITS, Warehouse
 
     wdir = str(tmp_path / "wh")
     shutil.copytree(one_round_crawl, wdir)
-    os.makedirs(Warehouse(wdir)._path(table, 1))
+    if table == "_ledger.json":
+        led = Warehouse(wdir).ledger()
+        shutil.rmtree(os.path.join(wdir, COMMITS))
+        with open(os.path.join(wdir, table), "w") as f:
+            json.dump(led, f, indent=1)
+    else:
+        os.makedirs(Warehouse(wdir)._path(table, 1))
     with pytest.raises(ValueError, match="unsupported warehouse layout"):
         run_crawl(spark, wdir, rounds=2, resume=True, n_seeds=10,
                   host_budget=3, batch_size=20)
+
+
+def _copy_recommitted(src: str, dst: str, edit):
+    """Copy warehouse ``src`` to ``dst``, committing each of its rounds
+    again with ``edit(record)`` as the commit info (the record's own
+    ``ts`` is kept)."""
+    import shutil
+
+    from jsonextract_spark.crawl.tables import COMMITS, Warehouse
+
+    shutil.copytree(src, dst, ignore=shutil.ignore_patterns(COMMITS))
+    wh = Warehouse(dst)
+    for rec in Warehouse(src).ledger()["rounds"]:
+        wh.commit_round(rec["round"], edit(rec))
+    return wh
 
 
 def test_resume_ignores_old_seen_filter(spark, one_round_crawl,
@@ -379,16 +402,14 @@ def test_resume_ignores_old_seen_filter(spark, one_round_crawl,
     round-0 ``filter_kind`` of another codec in the ledger — resumes,
     and its crawl ledger equals an uninterrupted crawl's: the exact
     gate never reads the filter rows, whatever their bytes."""
-    import json
-    import shutil
-
     from jsonextract_spark.crawl.pipeline import crawl_order, run_crawl
-    from jsonextract_spark.crawl.tables import Warehouse
 
     kw = dict(n_seeds=10, host_budget=3, batch_size=20)
     wdir = str(tmp_path / "wh")
-    shutil.copytree(one_round_crawl, wdir)
-    wh = Warehouse(wdir)
+    wh = _copy_recommitted(
+        one_round_crawl, wdir,
+        lambda rec: ({**rec, "filter_kind": "cuckoo"}
+                     if rec["round"] == 0 else rec))
     for r in (0, 1):
         # all-ones bitsets: a Bloom prune reading them would flag
         # every candidate as maybe-seen
@@ -396,10 +417,6 @@ def test_resume_ignores_old_seen_filter(spark, one_round_crawl,
             [(b, b"\xff" * 64, 512, 7, 1) for b in range(4)],
             "bucket int, bits binary, m int, k int, n long"),
             "seen_filter", r)
-    led = wh.ledger()
-    led["rounds"][0]["filter_kind"] = "cuckoo"
-    with open(wh._ledger_path, "w") as f:
-        json.dump(led, f)
     stats = run_crawl(spark, wdir, rounds=3, resume=True, **kw)
     assert [s["round"] for s in stats] == [2, 3]
     assert not wh.exists("seen_filter", 2)
@@ -417,20 +434,12 @@ def test_resume_accepts_ledger_without_batch(spark, one_round_crawl,
     """The ledger's per-round ``batch`` count is written but no longer
     read: a warehouse whose ledger lacks it resumes and runs its next
     round."""
-    import json
-    import shutil
-
     from jsonextract_spark.crawl.pipeline import run_crawl
-    from jsonextract_spark.crawl.tables import Warehouse
 
     wdir = str(tmp_path / "wh")
-    shutil.copytree(one_round_crawl, wdir)
-    wh = Warehouse(wdir)
-    led = wh.ledger()
-    for r in led["rounds"]:
-        r.pop("batch", None)
-    with open(wh._ledger_path, "w") as f:
-        json.dump(led, f)
+    wh = _copy_recommitted(
+        one_round_crawl, wdir,
+        lambda rec: {k: v for k, v in rec.items() if k != "batch"})
     stats = run_crawl(spark, wdir, rounds=2, resume=True, n_seeds=10,
                       host_budget=3, batch_size=20)
     assert [s["round"] for s in stats] == [2]
@@ -545,9 +554,14 @@ def test_crawl_over_live_http(spark, tmp_path):
         port = srv.server_port
         seeds = [f"http://127.0.0.1:{port}/p/1",
                  f"http://127.0.0.1:{port}/p/2"]
+        # no politeness floor, as in the other multi-round live tests:
+        # under the default 1 s floor round 2 pops nothing (correctly)
+        # whenever it starts within 1 s of round 1's last fetch of the
+        # one host
         stats = run_crawl(spark, str(tmp_path / "whttp"), rounds=2,
                           seeds=seeds, host_budget=100, batch_size=50,
-                          fetch_kernel=make_fetch_extract_kernel())
+                          fetch_kernel=make_fetch_extract_kernel(
+                              default_delay_sec=0.0))
         assert stats[0]["fetched"] == 2
         assert stats[0]["objects"] == 2      # one JS object per page
         assert stats[0]["new"] == 4          # links of pages 1 and 2
@@ -2383,13 +2397,130 @@ def test_drop_round_drops_every_table(tmp_path):
         os.makedirs(p)
     wh.commit_round(4)
     wh.drop_round(5)
-    assert sorted(os.listdir(wh.root)) == ["_ledger.json", "extra",
+    assert sorted(os.listdir(wh.root)) == ["_commits", "extra",
                                            "metrics"]
     assert all(os.path.isdir(p) for p in keep)
     assert not wh.exists("metrics", 5) and not wh.exists("extra", 5)
     with pytest.raises(ValueError, match="committed"):
         wh.drop_round(4)
     assert all(os.path.isdir(p) for p in keep)
+
+
+def test_commit_round_publishes_fresh_records(tmp_path, monkeypatch):
+    """``commit_round`` publishes each round's record under a fresh
+    name: no rename or replace lands on an existing file (ext4 flushes
+    a file renamed over another to disk), a second commit of a round
+    raises instead of replacing its record, and the stat probe finds
+    the last committed round after every commit."""
+    import os
+
+    from jsonextract_spark.crawl.tables import COMMITS, Warehouse
+
+    targets = []
+
+    def recording(real):
+        def move(src, dst, *a, **kw):
+            targets.append((dst, os.path.exists(dst)))
+            return real(src, dst, *a, **kw)
+        return move
+
+    monkeypatch.setattr(os, "rename", recording(os.rename))
+    monkeypatch.setattr(os, "replace", recording(os.replace))
+    wh = Warehouse(str(tmp_path / "wh"))
+    assert wh.last_committed_round() == -1
+    for r in range(34):
+        wh.commit_round(r, {"batch": r})
+        assert wh.last_committed_round() == r
+    with pytest.raises(ValueError, match="already committed"):
+        wh.commit_round(5, {"batch": -1})
+    assert len(targets) == 34
+    assert not [dst for dst, existed in targets if existed]
+    assert [x["batch"] for x in wh.ledger()["rounds"]] == list(range(34))
+    assert sorted(os.listdir(os.path.join(wh.root, COMMITS))) == sorted(
+        f"{r}.json" for r in range(34))
+
+
+def test_commit_work_is_independent_of_crawl_age(tmp_path, monkeypatch):
+    """With 10,000 committed rounds (commit records, no table data) a
+    round's warehouse bookkeeping — ``last_committed_round``,
+    ``drop_round``'s committed-round guard and ``commit_round`` —
+    opens and parses exactly what it does at 10 rounds: one file
+    written, no byte parsed. Finding the last round costs O(log
+    rounds) stats."""
+    import builtins
+    import json
+    import os
+
+    from jsonextract_spark.crawl.tables import Warehouse
+
+    def work(n):
+        wh = Warehouse(str(tmp_path / f"wh{n}"))
+        for r in range(n):
+            wh.commit_round(r, {"batch": r})
+        opened, parsed, stats = [], [], []
+        real_open, real_loads = builtins.open, json.loads
+        real_exists = os.path.exists
+
+        def counting_open(file, *a, **kw):
+            opened.append(file)
+            return real_open(file, *a, **kw)
+
+        def counting_loads(s, *a, **kw):
+            parsed.append(len(s))
+            return real_loads(s, *a, **kw)
+
+        def counting_load(fp, *a, **kw):
+            return counting_loads(fp.read(), *a, **kw)
+
+        def counting_exists(path):
+            stats.append(path)
+            return real_exists(path)
+
+        with monkeypatch.context() as m:
+            m.setattr(builtins, "open", counting_open)
+            m.setattr(json, "load", counting_load)
+            m.setattr(json, "loads", counting_loads)
+            m.setattr(os.path, "exists", counting_exists)
+            last = wh.last_committed_round()
+            with pytest.raises(ValueError, match="committed"):
+                wh.drop_round(last)
+            wh.drop_round(last + 1)
+            wh.commit_round(last + 1, {"batch": 0})
+        assert last == n - 1 and wh.last_committed_round() == n
+        return len(opened), sum(parsed), len(stats)
+
+    small, big = work(10), work(10_000)
+    assert small[:2] == big[:2] == (1, 0)
+    assert big[2] <= 2 * (10_000).bit_length() + 8, big
+
+
+def test_steady_crawl_compiles_no_generated_code(spark, tmp_path):
+    """Once the session's codegen cache holds a crawl's plans, an
+    identical crawl compiles nothing: each round of the second crawl
+    records ``codegen_compiles`` 0 (under Spark's default 100-entry
+    cache its rounds 2-4 recompiled 51-66 classes each). The counter
+    itself moves on a plan with a source the cache has not seen."""
+    import random
+
+    import pyarrow.parquet as pq
+
+    from jsonextract_spark.crawl import pipeline as P
+    from jsonextract_spark.crawl.tables import Warehouse
+
+    kw = dict(rounds=4, n_seeds=20, host_budget=3, batch_size=60)
+    P.run_crawl(spark, str(tmp_path / "a"), **kw)
+    wh = Warehouse(str(tmp_path / "b"))
+    P.run_crawl(spark, wh.root, **kw)
+    compiles = []
+    for r in range(1, 5):
+        t = pq.read_table(wh._path("metrics", r)).to_pydict()
+        compiles.append(dict(zip(t["key"], t["value"]))["codegen_compiles"])
+    assert compiles == [0.0] * 4, compiles
+
+    before = P._codegen_compiles(spark)
+    k = random.randrange(1 << 40)
+    spark.range(3).selectExpr(f"id * {k} + 1 AS x").collect()
+    assert P._codegen_compiles(spark) > before
 
 
 def test_warehouse_round_reader_is_bounded(tmp_path):
@@ -2596,9 +2727,11 @@ def test_live_crawl_follows_real_anchors(spark, tmp_path):
         port = srv.server_port
         seeds = [f"http://127.0.0.1:{port}/p/1",
                  f"http://127.0.0.1:{port}/p/2"]
+        # no politeness floor (see test_crawl_over_live_http)
         stats = run_crawl(spark, str(tmp_path / "whref"), rounds=2,
                           seeds=seeds, host_budget=100, batch_size=50,
-                          fetch_kernel=make_fetch_extract_kernel())
+                          fetch_kernel=make_fetch_extract_kernel(
+                              default_delay_sec=0.0))
         assert stats[0]["fetched"] == 2
         assert stats[0]["objects"] == 0      # no JSON on these pages
         assert stats[0]["new"] == 4          # hrefs of pages 1 and 2

@@ -150,6 +150,8 @@ def test_seed_from_sitemaps_round(spark, tmp_path):
 
     n = SM.seed_from_sitemaps(spark, wh, 2, source_kernel=fake_kernel)
     assert n == 3                      # known urls seen-gated away
+    # its two actions: the fresh-URL count and the frontier base write
+    assert wh.ledger()["rounds"][3]["spark_actions"] == 2
     after = P.load_frontier(spark, wh, 3)
     assert after.count() == before + 3
     got = {r["url"] for r in after.collect()}

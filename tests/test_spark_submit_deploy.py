@@ -5,7 +5,6 @@ spark-submit --py-files ... at N and 4N executors"). The test builds
 the zip, launches spark-submit from a directory that does NOT contain
 the package, and checks a committed round."""
 
-import json
 import os
 import shutil
 import subprocess
@@ -44,7 +43,9 @@ def test_spark_submit_pyfiles_crawl(tmp_path):
     assert out.returncode == 0, out.stderr[-3000:]
     assert "'round': 1" in out.stdout
 
-    ledger = json.load(open(os.path.join(wh, "_ledger.json")))
+    from jsonextract_spark.crawl.tables import Warehouse
+
+    ledger = Warehouse(wh).ledger()
     committed = [r["round"] for r in ledger["rounds"]
                  if r["status"] == "committed"]
     assert committed == [0, 1]

@@ -70,6 +70,8 @@ def test_schedule_recrawl_roundtrip(spark, tmp_path):
     n = schedule_recrawl(spark, wh, after_round=2, max_age_sec=0)
     assert n == len(early)                      # everything went stale
     assert wh.last_committed_round() == 3       # maintenance round
+    # its two actions: the stale-URL count and the frontier base write
+    assert wh.ledger()["rounds"][3]["spark_actions"] == 2
     assert seen_set() == seen_before            # recrawl never forgets
 
     run_crawl(spark, wdir, rounds=4, resume=True, n_seeds=12,
